@@ -212,6 +212,24 @@ def test_geo_statistics_per_row_group_and_malformed(tmp_path):
     assert ms[1].geo_statistics is None
 
 
+def test_geo_statistics_none_for_trailing_bytes(tmp_path):
+    """A WKB value whose geometry parses but leaves bytes over is
+    unparseable as a whole: its chunk gets no stats rather than a bbox
+    from the parsed prefix, and the other chunk keeps its stats."""
+    vals = ([_wkb_point(1.0, 2.0)] * 4
+            + [_wkb_point(500.0, 500.0) + _wkb_point(-500.0, -500.0)]
+            + [_wkb_point(3.0, 4.0)] * 5)
+    t = pa.table({"g": pa.array(vals, pa.binary())})
+    p = str(tmp_path / "g.parquet")
+    write_parquet(t, p, row_group_rows=5, geometry_columns={"g"})
+    ms = [m for rg in read_footer_native(p)["row_groups"] for m in rg]
+    assert ms[0].geo_statistics is None
+    assert ms[1].geo_statistics == {
+        "bbox": {"xmin": 3.0, "xmax": 3.0, "ymin": 4.0, "ymax": 4.0},
+        "types": [1]}
+    assert read_table_arrow_native(p).column("g").to_pylist() == vals
+
+
 def test_geo_types_are_top_level_only(tmp_path):
     """A MultiPoint column's geospatial_types is [4], not [1, 4] — each
     value contributes its OWN type code (review fix)."""

@@ -42,6 +42,42 @@ def test_bitpack_roundtrip(width, n):
     assert (out == v).all()
 
 
+def _int_reference_pack(values: np.ndarray, width: int) -> bytes:
+    """Independent LSB-first layout: value i occupies bits [i*w, (i+1)*w)."""
+    acc = 0
+    for i, x in enumerate(values.tolist()):
+        acc |= int(x) << (i * width)
+    return acc.to_bytes((len(values) * width + 7) // 8, "little")
+
+
+@pytest.mark.parametrize("width", range(65))
+def test_bitpack_layout_matches_int_reference(width):
+    """Pins the bit layout itself: a symmetric change to pack and unpack
+    would still round-trip, but not match this."""
+    for n in (0, 1, 7, 8, 9, 15, 16, 17, 63, 64, 65, 1001):
+        v = RNG.integers(0, 2**63, size=n, dtype=np.uint64)
+        v = (v << np.uint64(1)) | (v >> np.uint64(62))  # reach bit 63 too
+        if width < 64:
+            v &= np.uint64((1 << width) - 1)
+        packed = bitpack.pack(v, width)
+        assert packed == _int_reference_pack(v, width), (width, n)
+        assert (bitpack.unpack(packed, width, n) == v).all(), (width, n)
+
+
+@pytest.mark.parametrize("width", [1, 5, 8, 13, 31, 59, 63, 64])
+def test_bitpack_unpack_buffer_kinds(width):
+    """unpack reads a memoryview with trailing bytes and a uint8 ndarray (as
+    delta's grouped gather passes), and rejects a short buffer."""
+    n = 37
+    v = RNG.integers(0, 2**63, size=n, dtype=np.uint64) & np.uint64((1 << width) - 1)
+    packed = bitpack.pack(v, width)
+    mv = memoryview(b"\xff" * 5 + packed + b"\xff" * 11)[5:]
+    assert (bitpack.unpack(mv, width, n) == v).all()
+    assert (bitpack.unpack(np.frombuffer(packed, np.uint8), width, n) == v).all()
+    with pytest.raises(ValueError):
+        bitpack.unpack(packed[:-1], width, n)
+
+
 def test_bit_length():
     v = np.array([0, 1, 2, 3, 4, 255, 256, 2**63, 2**64 - 1], np.uint64)
     expect = np.array([0, 1, 2, 2, 3, 8, 9, 64, 64])
@@ -80,6 +116,72 @@ def test_rle_roundtrip(values):
 def test_rle_compresses_runs():
     v = np.full(10_000, 7, np.uint64)
     assert len(rle.encode(v, 3)) < 10
+
+
+# a width-9 stream of four spans: bit-packed(10), RLE(20 x 300),
+# bit-packed(5), RLE(30 x 511) — the last run's value takes 2 bytes
+SPAN_VALUES = np.concatenate([
+    np.arange(10, dtype=np.uint64) * 37 % 512, np.full(20, 300, np.uint64),
+    np.arange(5, dtype=np.uint64) + 100, np.full(30, 511, np.uint64)])
+
+
+def test_rle_encode_pinned_bytes():
+    """The span layout on disk, pinned byte for byte."""
+    enc = rle.encode(SPAN_VALUES, 9)
+    assert enc.hex() == "15004a2879432997b781289b02282c010b64ca983983063cff01"
+    assert (rle.decode(enc, 9, len(SPAN_VALUES)) == SPAN_VALUES).all()
+
+
+def _spec_stream(width: int) -> tuple[bytes, np.ndarray]:
+    """Spec RLE hybrid stream: bit-packed(2 groups) | RLE(11 x 5) |
+    bit-packed(1 group, last 3 values past n)."""
+    head = np.arange(16, dtype=np.uint64) % 8
+    tail = np.array([1, 2, 3, 4, 5, 0, 0, 0], np.uint64)
+    stream = (write_uvarint(2 << 1 | 1) + bitpack.pack(head, width)
+              + write_uvarint(11 << 1) + (5).to_bytes((width + 7) // 8, "little")
+              + write_uvarint(1 << 1 | 1) + bitpack.pack(tail, width))
+    return stream, np.concatenate([head, np.full(11, 5, np.uint64), tail[:5]])
+
+
+@pytest.mark.parametrize("width", [3, 9])
+def test_rle_decode_spec_multi_span(width):
+    stream, want = _spec_stream(width)
+    assert (rle.decode_spec(stream, width, len(want)) == want).all()
+
+
+def _truncation_case(name: str):
+    if name == "rle":
+        return rle.encode(SPAN_VALUES, 9), lambda b: rle.decode(b, 9, len(SPAN_VALUES))
+    if name == "rle_spec":
+        spec, want = _spec_stream(9)
+        return spec, lambda b: rle.decode_spec(b, 9, len(want))
+    v = np.cumsum(RNG.integers(-500, 1000, 1000)).astype(np.int64)
+    return delta.encode(v), lambda b: delta.decode(b, len(v))
+
+
+@pytest.mark.parametrize("name", ["rle", "rle_spec", "delta"])
+def test_truncated_streams_raise_value_error(name):
+    """A stream cut at any byte raises ValueError — never wrong values and
+    never a bare IndexError from inside the parser."""
+    stream, decode = _truncation_case(name)
+    decode(stream)
+    for cut in range(len(stream)):
+        with pytest.raises(ValueError):
+            decode(stream[:cut])
+
+
+def test_uvarint_truncated_raises_value_error():
+    with pytest.raises(ValueError):
+        read_uvarint(write_uvarint(300)[:1], 0)
+    with pytest.raises(ValueError):
+        read_uvarint(b"", 0)
+
+
+def test_delta_rejects_bad_miniblock_header():
+    for block, mbcount in ((128, 0), (0, 4), (128, 3), (36, 4)):
+        bad = write_uvarint(block) + write_uvarint(mbcount) + write_uvarint(10) + write_uvarint(0)
+        with pytest.raises(ValueError):
+            delta.decode(bad + bytes(64), 10)
 
 
 def test_validity():

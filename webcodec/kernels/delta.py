@@ -19,6 +19,7 @@ import numpy as np
 from webcodec.kernels import bitpack
 from webcodec.kernels.varint import (
     read_uvarint,
+    unzigzag64,
     unzigzag_int,
     write_uvarint,
     zigzag_int,
@@ -103,7 +104,9 @@ def encode(values: np.ndarray) -> bytes:
         idx = np.flatnonzero(widths == w)
         packed = np.frombuffer(bitpack.pack(mbs[idx].reshape(-1), w), dtype=np.uint8)
         per = MB_VALUES * w // 8
-        out[mb_dst[idx, None] + np.arange(per)] = packed.reshape(len(idx), per)
+        # row i of this window is the per-byte payload starting at byte i
+        window = np.ndarray((total - per + 1, per), dtype=np.uint8, buffer=out, strides=(1, 1))
+        window[mb_dst[idx]] = packed.reshape(len(idx), per)
     return out.tobytes()
 
 
@@ -132,37 +135,46 @@ def decode_stream(
         return np.empty(0, dtype=_I64), pos
     if n == 1:
         return np.array([first], dtype=_I64), pos
-    mb_values = block // mbcount
+    mb_values = block // mbcount if mbcount else 0
+    if mb_values == 0 or mb_values * mbcount != block or mb_values % 8:
+        raise ValueError(f"delta stream: block of {block} values in {mbcount} miniblocks "
+                         "is not a whole number of 8-value groups per miniblock")
     nd = n - 1
     nblocks = (nd + block - 1) // block
-    nmb = nblocks * mbcount
+    # every block holds at least a min-delta byte and its width bytes
+    if nblocks * (1 + mbcount) > len(buf) - pos:
+        raise ValueError(f"delta stream truncated: {n} values need {nblocks} blocks, "
+                         f"{len(buf) - pos} bytes remain")
     # spec: trailing miniblocks of the last block that hold no values have
     # their width byte present but NO payload, and readers must tolerate a
-    # nonzero byte there — clamp them to zero
+    # nonzero byte there — they are left out of the walk and clamped to zero
     needed_mb = (nd + mb_values - 1) // mb_values
-    mins = np.empty(nblocks, dtype=_I64)
-    widths = np.empty(nmb, dtype=np.uint8)
-    mb_off = np.empty(nmb, dtype=np.int64)
-    # pass 1 — walk the stream once recording each miniblock's (width,
-    # payload offset); the varint headers force sequential parsing, but the
-    # body is a handful of int ops per block (the former per-MINIBLOCK
-    # bitpack.unpack calls were ~20 MB/s; see pass 2)
-    for b in range(nblocks):
+    zigzag_mins = []
+    wpos = []
+    # pass 1 — walk the stream once, one python step per BLOCK: the varint
+    # min-delta forces sequential parsing, and a block's payload length is
+    # mb_values * (sum of its widths) / 8 (mb_values is a multiple of 8).
+    # Only the last block can have trailing empty miniblocks.
+    live = [mbcount] * (nblocks - 1) + [needed_mb - (nblocks - 1) * mbcount]
+    for lv in live:
         zz, pos = read_uvarint(buf, pos)
-        mins[b] = unzigzag_int(zz)
-        wrow = bytearray(buf[pos : pos + mbcount])
-        pos += mbcount
-        base = b * mbcount
-        for m in range(mbcount):
-            if base + m >= needed_mb:
-                wrow[m] = 0
-            mb_off[base + m] = pos
-            pos += (mb_values * wrow[m]) >> 3
-        widths[base : base + mbcount] = np.frombuffer(bytes(wrow), dtype=np.uint8)
-    # pass 2 — decode grouped BY WIDTH (mirror of encode): one fancy-index
-    # gather + ONE bulk unpack per distinct width instead of a kernel call
-    # per miniblock — 4700-block chunks drop from ~19k unpack calls to <=65
+        zigzag_mins.append(zz)
+        wpos.append(pos)
+        pos += mbcount + ((mb_values * sum(buf[pos : pos + lv])) >> 3)
+    if pos > len(buf):
+        raise ValueError(f"delta stream truncated: payload ends at byte {pos}, "
+                         f"buffer has {len(buf)}")
     allbytes = np.frombuffer(buf, dtype=np.uint8)
+    wstart = np.array(wpos, dtype=np.int64)
+    widths = allbytes[wstart[:, None] + np.arange(mbcount)].reshape(-1)
+    widths[needed_mb:] = 0
+    # miniblock payload offsets: one exclusive cumsum per block
+    sizes = (widths.astype(np.int64) * mb_values // 8).reshape(nblocks, mbcount)
+    mb_off = ((wstart + mbcount)[:, None] + np.cumsum(sizes, axis=1) - sizes).reshape(-1)
+    nmb = nblocks * mbcount
+    # pass 2 — decode grouped BY WIDTH (mirror of encode): one row gather
+    # + ONE bulk unpack per distinct width instead of a kernel call per
+    # miniblock — 4700-block chunks drop from ~19k unpack calls to <=65
     enc = np.empty((nmb, mb_values), dtype=_U64)
     for w in np.unique(widths):
         w = int(w)
@@ -171,9 +183,13 @@ def decode_stream(
             enc[idx] = 0
             continue
         per = mb_values * w // 8
-        gathered = allbytes[mb_off[idx, None] + np.arange(per)]
+        # row i of this window is the per-byte payload starting at byte i
+        window = np.ndarray((len(allbytes) - per + 1, per), dtype=np.uint8,
+                            buffer=allbytes, strides=(1, 1))
+        gathered = window[mb_off[idx]]
         vals = bitpack.unpack(gathered.reshape(-1), w, len(idx) * mb_values)
         enc[idx] = vals.reshape(len(idx), mb_values)
+    mins = unzigzag64(np.array(zigzag_mins, dtype=_U64))
     deltas = enc.reshape(-1) + np.repeat(mins.astype(_U64), block)
     out = np.empty(n, dtype=_U64)
     out[0] = np.int64(first).astype(_U64)

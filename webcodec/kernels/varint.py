@@ -31,11 +31,15 @@ def write_uvarint(x: int) -> bytes:
 
 
 def read_uvarint(buf: bytes | memoryview, pos: int) -> tuple[int, int]:
-    """Read one ULEB128 varint; returns (value, new_pos)."""
+    """Read one ULEB128 varint; returns (value, new_pos). A varint cut off
+    by the end of ``buf`` raises ``ValueError``."""
     result = 0
     shift = 0
     while True:
-        b = buf[pos]
+        try:
+            b = buf[pos]
+        except IndexError:
+            raise ValueError(f"varint truncated at byte {pos} of {len(buf)}") from None
         pos += 1
         result |= (b & 0x7F) << shift
         if not (b & 0x80):

@@ -1300,8 +1300,9 @@ def _wkb_geo_stats(arr) -> dict | None:
     Geospatial.md): bbox over x/y (+z/m when present) and the set of WKB
     geometry type codes. Walks standard ISO WKB — Point, LineString,
     Polygon, the Multi* variants and GeometryCollection, XY/XYZ/XYM/XYZM,
-    both byte orders. Unparseable values make the whole chunk's stats
-    None (conservative: no stats beats wrong stats). NaN/empty-point
+    both byte orders. Unparseable values, including values with bytes
+    left over after the geometry, make the whole chunk's stats None
+    (conservative: no stats beats wrong stats). NaN/empty-point
     coordinates are skipped like parquet-java's NaN stats rule."""
     mins = [math.inf] * 4  # x, y, z, m
     maxs = [-math.inf] * 4
@@ -1366,7 +1367,9 @@ def _wkb_geo_stats(arr) -> dict | None:
             b = v.as_py()
             if not b:
                 continue
-            walk(memoryview(b), 0, top=True)
+            if walk(memoryview(b), 0, top=True) != len(b):
+                # trailing bytes: the parse of a prefix is not this value
+                return None
             any_val = True
     except (ValueError, struct.error, IndexError):
         return None
