@@ -9,6 +9,10 @@ headers, v1 data pages, PLAIN, (PLAIN_/RLE_)DICTIONARY, DELTA_BINARY_PACKED,
 DELTA_LENGTH_BYTE_ARRAY, DELTA_BYTE_ARRAY and BYTE_STREAM_SPLIT encodings,
 RLE-encoded definition levels — and decodes them using ONLY webcodec kernels
 (``rle.decode_spec``, ``bitpack``, ``delta``, ``bss``, numpy plain readers).
+BYTE_ARRAY / FIXED_LEN_BYTE_ARRAY values never become Python objects: each
+page decodes to an Arrow binary array (offsets over the page bytes) that
+travels through dictionary gathers, page joins and null placement to the
+output column.
 A value-for-value match against the reference reader is kernel-level format
 parity.
 
@@ -146,7 +150,97 @@ def _decompress(payload: bytes, codec: str, usize: int) -> bytes:
     return pa.decompress(payload, decompressed_size=usize, codec=codec, asbytes=True)
 
 
+_U32 = struct.Struct("<I")
+_I32_MAX = 2**31 - 1
+
+
+def _binary_from_offsets(offsets: np.ndarray, data, validity=None):
+    """Arrow binary array of ``len(offsets) - 1`` values over ``data``
+    (zero-copy) at int64 ``offsets``; ``large_binary`` once the offsets
+    pass 2**31 - 1."""
+    import pyarrow as pa
+
+    if offsets[-1] > _I32_MAX:
+        typ, offsets = pa.large_binary(), offsets.astype(np.int64, copy=False)
+    else:
+        typ, offsets = pa.binary(), offsets.astype(np.int32)
+    return pa.Array.from_buffers(
+        typ, len(offsets) - 1,
+        [validity, pa.py_buffer(offsets), pa.py_buffer(data)])
+
+
+def _binary_offsets(arr) -> tuple[np.ndarray, object]:
+    """(int64 offsets, data buffer) of a binary / large_binary array; the
+    offsets are its own ``len(arr) + 1`` entries into the data buffer."""
+    import pyarrow as pa
+
+    _, offs, data = arr.buffers()
+    dt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offsets = np.frombuffer(offs, dt)[arr.offset : arr.offset + len(arr) + 1]
+    return offsets.astype(np.int64), data
+
+
+def _concat_binary(parts: list):
+    """Join per-page binary arrays; large_binary when the values of the
+    chunk pass 2**31 - 1 bytes."""
+    import pyarrow as pa
+
+    if len(parts) == 1:
+        return parts[0]
+    total = 0
+    for p in parts:
+        offsets, _ = _binary_offsets(p)
+        total += int(offsets[-1] - offsets[0])
+    if total > _I32_MAX:
+        parts = [p.cast(pa.large_binary()) for p in parts]
+    return pa.concat_arrays(parts)
+
+
+def _plain_byte_array(body: memoryview, n: int):
+    """PLAIN BYTE_ARRAY: n (u32 length, bytes) pairs. Python reads only the
+    lengths; the body is then viewed zero-copy as the 2n-element binary
+    array ``[prefix_0, value_0, prefix_1, value_1, ...]`` and one Arrow take
+    of the odd elements compacts the values in C++."""
+    import pyarrow as pa
+
+    lens: list = []
+    append = lens.append
+    pos = 0
+    try:
+        for _ in range(n):
+            (ln,) = _U32.unpack_from(body, pos)
+            append(ln)
+            pos += 4 + ln
+    except struct.error:
+        raise ValueError(
+            f"PLAIN BYTE_ARRAY page truncated: length prefix of value "
+            f"{len(lens)} of {n} at byte {pos} runs past the "
+            f"{len(body)}-byte body") from None
+    if pos > len(body):
+        raise ValueError(
+            f"PLAIN BYTE_ARRAY page truncated: {n} values need {pos} bytes, "
+            f"the body has {len(body)}")
+    pieces = np.full(2 * n, 4, np.int64)
+    pieces[1::2] = lens
+    offsets = np.zeros(2 * n + 1, np.int64)
+    np.cumsum(pieces, out=offsets[1:])
+    pairs = _binary_from_offsets(offsets, body)
+    return pairs.take(pa.array(np.arange(1, 2 * n, 2)))
+
+
+def _pool_array(n: int, dtype) -> np.ndarray:
+    """Writable, uninitialized numpy array on a buffer from Arrow's memory
+    pool. Numeric output columns wrap these zero-copy, so they reuse pages
+    the pool already holds instead of taking fresh malloc pages."""
+    import pyarrow as pa
+
+    dtype = np.dtype(dtype)
+    return np.frombuffer(pa.allocate_buffer(n * dtype.itemsize), dtype)
+
+
 def _plain_values(body: memoryview, n: int, phys: str, tlen: int = 0):
+    """PLAIN values: numpy arrays for numeric types, one Arrow binary array
+    for BYTE_ARRAY / FIXED_LEN_BYTE_ARRAY."""
     if phys == "INT32":
         return np.frombuffer(body, dtype=np.int32, count=n)
     if phys == "INT64":
@@ -156,19 +250,17 @@ def _plain_values(body: memoryview, n: int, phys: str, tlen: int = 0):
     if phys == "DOUBLE":
         return np.frombuffer(body, dtype=np.float64, count=n)
     if phys == "BYTE_ARRAY":
-        out = []
-        pos = 0
-        for _ in range(n):
-            (ln,) = struct.unpack_from("<I", body, pos)
-            pos += 4
-            out.append(bytes(body[pos : pos + ln]))
-            pos += ln
-        return out
+        return _plain_byte_array(body, n)
     if phys == "BOOLEAN":  # PLAIN booleans: LSB-first bit-packed
         bits = np.frombuffer(body, dtype=np.uint8, count=(n + 7) // 8)
         return np.unpackbits(bits, bitorder="little")[:n].astype(bool)
     if phys == "FIXED_LEN_BYTE_ARRAY" and tlen > 0:
-        return [bytes(body[i * tlen : (i + 1) * tlen]) for i in range(n)]
+        if n * tlen > len(body):
+            raise ValueError(
+                f"FIXED_LEN_BYTE_ARRAY page truncated: {n} values of {tlen} "
+                f"bytes need {n * tlen}, the body has {len(body)}")
+        return _binary_from_offsets(np.arange(n + 1, dtype=np.int64) * tlen,
+                                    body)
     if phys == "INT96":
         # legacy parquet-java timestamps: 8B LE nanos-in-day + 4B LE julian
         # day; converted to epoch nanoseconds (julian epoch day = 2440588)
@@ -179,16 +271,46 @@ def _plain_values(body: memoryview, n: int, phys: str, tlen: int = 0):
     raise NotImplementedError(f"physical type {phys}")
 
 
-def _delta_length_byte_array(body: memoryview, n: int) -> list:
+def _delta_length_byte_array(body: memoryview, n: int):
     """DELTA_LENGTH_BYTE_ARRAY: a DELTA_BINARY_PACKED stream of lengths,
-    immediately followed by the concatenated value bytes."""
+    immediately followed by the concatenated value bytes — a binary array
+    over that blob at the lengths' running sum."""
     from webcodec.kernels import delta
 
     lens, off = delta.decode_stream(body, n)
     blob = body[off:]
-    ends = np.cumsum(lens)
-    starts = ends - lens
-    return [bytes(blob[s:e]) for s, e in zip(starts, ends)]
+    # max first: a hostile length must not overflow the sum
+    if n and (lens.min() < 0 or lens.max() > len(blob)
+              or lens.sum() > len(blob)):
+        raise ValueError(
+            f"DELTA_LENGTH_BYTE_ARRAY page truncated or corrupt: {n} "
+            f"lengths do not fit the {len(blob)} value bytes")
+    offsets = np.zeros(n + 1, np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    return _binary_from_offsets(offsets, blob)
+
+
+def _delta_byte_array(body: memoryview, n: int):
+    """DELTA_BYTE_ARRAY: prefix lengths (delta stream), then the suffixes as
+    DELTA_LENGTH_BYTE_ARRAY; value i = value[i-1][:prefix_i] + suffix_i."""
+    import pyarrow as pa
+
+    from webcodec.kernels import delta
+
+    prefix_lens, off = delta.decode_stream(body, n)
+    suffixes = _delta_length_byte_array(body[off:], n)
+    offsets, _ = _binary_offsets(suffixes)
+    full_lens = prefix_lens + np.diff(offsets)
+    prev_lens = np.concatenate(([0], full_lens[:-1]))
+    if n and ((prefix_lens < 0) | (prefix_lens > prev_lens)).any():
+        raise ValueError(
+            "DELTA_BYTE_ARRAY page: prefix longer than the previous value")
+    vals = []
+    prev = b""
+    for plen, suf in zip(prefix_lens.tolist(), suffixes.to_pylist()):
+        prev = prev[:plen] + suf
+        vals.append(prev)
+    return pa.array(vals, pa.binary())
 
 
 # Deprecated BIT_PACKED rep/def levels: the ecosystem DIVERGED on bit order.
@@ -212,11 +334,15 @@ def _read_leaf_entries(buf: memoryview, meta, phys: str, max_rep: int,
                        dict_values=None, verify_crc: bool = False):
     """Decode one LEAF column chunk to Dremel entry streams using only
     webcodec kernels: (values, rep, def) where ``values`` holds the present
-    values only (np array or python list of bytes), ``rep``/``def`` are
+    values only (a numpy array; for BYTE_ARRAY / FIXED_LEN_BYTE_ARRAY one
+    Arrow binary array built from the page buffers without per-value
+    objects, large_binary past 2**31 - 1 value bytes), ``rep``/``def`` are
     int64 per-ENTRY level arrays (``rep`` is None when max_rep == 0;
     ``def`` is None when max_def == 0). ``dict_values`` injects a
     pre-decoded dictionary page for page-selective reads that start past
     the chunk's own dictionary page."""
+    import pyarrow as pa
+
     codec = meta.compression
     start = meta.dictionary_page_offset
     if start is None:
@@ -358,13 +484,19 @@ def _read_leaf_entries(buf: memoryview, meta, phys: str, max_rep: int,
         else:
             raise NotImplementedError(f"page type {ptype}")
         if enc in (_ENC_PLAIN_DICT, _ENC_RLE_DICT):
+            if dict_values is None:
+                raise ValueError(
+                    f"dictionary-encoded page in chunk "
+                    f"{getattr(meta, 'path', '?')!r} has no dictionary page")
             width = body[0]
             idx = rle.decode_spec(body[1:], width, n_nonnull)
-            vals = (
-                [dict_values[i] for i in idx]
-                if isinstance(dict_values, list)
-                else dict_values[idx.astype(np.int64)]
-            )
+            if len(idx) and idx.max() >= len(dict_values):
+                raise ValueError(
+                    f"dictionary index {idx.max()} out of range for the "
+                    f"{len(dict_values)}-entry dictionary of chunk "
+                    f"{getattr(meta, 'path', '?')!r}")
+            vals = (dict_values[idx] if isinstance(dict_values, np.ndarray)
+                    else dict_values.take(pa.array(idx)))
         elif enc == _ENC_PLAIN:
             vals = _plain_values(body, n_nonnull, phys, type_length)
         elif enc == _ENC_DELTA_BP:
@@ -376,15 +508,7 @@ def _read_leaf_entries(buf: memoryview, meta, phys: str, max_rep: int,
         elif enc == _ENC_DELTA_LEN_BA:
             vals = _delta_length_byte_array(body, n_nonnull)
         elif enc == _ENC_DELTA_BA:
-            from webcodec.kernels import delta
-
-            prefix_lens, off = delta.decode_stream(body, n_nonnull)
-            suffixes = _delta_length_byte_array(body[off:], n_nonnull)
-            vals = []
-            prev = b""
-            for plen, suf in zip(prefix_lens, suffixes):
-                prev = prev[: int(plen)] + suf
-                vals.append(prev)
+            vals = _delta_byte_array(body, n_nonnull)
         elif enc == _ENC_BSS:
             from webcodec.kernels import bss
 
@@ -402,10 +526,12 @@ def _read_leaf_entries(buf: memoryview, meta, phys: str, max_rep: int,
             def_parts.append(np.asarray(defs, np.int64))
         entries += n_values
 
-    if vals_parts and isinstance(vals_parts[0], list):
-        values: object = [v for part in vals_parts for v in part]
+    if vals_parts and isinstance(vals_parts[0], pa.Array):
+        values: object = _concat_binary(vals_parts)
     elif vals_parts:
-        values = np.concatenate(vals_parts)
+        values = _pool_array(sum(map(len, vals_parts)),
+                             np.result_type(*vals_parts))
+        np.concatenate(vals_parts, out=values)
     else:
         values = np.zeros(0, np.int64)
     reps_all = np.concatenate(rep_parts) if rep_parts else None
@@ -415,7 +541,10 @@ def _read_leaf_entries(buf: memoryview, meta, phys: str, max_rep: int,
 
 def read_column_chunk(path: str, row_group: int, column: int) -> list:
     """Decode one FLAT column chunk of a real parquet file to a python list
-    (None for nulls) using only webcodec kernels for levels/RLE/bit-pack."""
+    (None for nulls; bytes for BYTE_ARRAY / FLBA) using only webcodec
+    kernels for levels/RLE/bit-pack."""
+    import pyarrow as pa
+
     ft = read_footer_native(path)
     buf = ft["buf"]
     lf = ft["leaves"][column]
@@ -423,17 +552,11 @@ def read_column_chunk(path: str, row_group: int, column: int) -> list:
     max_def = lf["max_def"]
     vals, _, defs = _read_leaf_entries(
         buf, meta, lf["phys"], 0, max_def, type_length=lf["tlen"])
+    vals = vals.to_pylist() if isinstance(vals, pa.Array) else vals.tolist()
     if defs is None:
-        return [v.item() if isinstance(v, np.generic) else v for v in vals]
-    out: list = []
+        return vals
     it = iter(vals)
-    for ok in defs == max_def:
-        if ok:
-            v = next(it)
-            out.append(v.item() if isinstance(v, np.generic) else v)
-        else:
-            out.append(None)
-    return out
+    return [next(it) if ok else None for ok in defs == max_def]
 
 
 # --------------------------- nested assembly ----------------------------------
@@ -459,63 +582,78 @@ def _validity_buf(validity: np.ndarray):
     return pa.py_buffer(np.packbits(validity, bitorder="little").tobytes())
 
 
+def _decimal_arrow(vals, present, target_type):
+    """decimal128/256 array built straight into its little-endian value
+    buffer. Binary values (FLBA / BYTE_ARRAY) are big-endian two's-complement
+    unscaled ints (parquet spec): reversed and sign-extended. INT32/INT64
+    values ARE the unscaled int — a plain arrow cast would scale 5 to 5.00
+    instead of 0.05."""
+    import pyarrow as pa
+
+    width = 32 if pa.types.is_decimal256(target_type) else 16
+    if isinstance(vals, pa.Array):
+        offsets, data = _binary_offsets(vals)
+        raw = np.frombuffer(data, np.uint8)
+        ends = offsets[1:]
+        lens = ends - offsets[:-1]
+        longest = int(lens.max()) if len(lens) else 0
+        if longest > width:
+            raise ValueError(
+                f"{longest}-byte decimal value does not fit {target_type}")
+        neg = np.zeros(len(lens), bool)
+        nonempty = lens > 0
+        neg[nonempty] = raw[offsets[:-1][nonempty]] >= 0x80
+        le = np.zeros((len(lens), width), np.uint8)
+        le[neg] = 0xFF
+        for j in range(longest):  # byte j counted from the low end
+            m = lens > j
+            le[m, j] = raw[ends[m] - 1 - j]
+    else:
+        v = np.asarray(vals).astype(np.int64)
+        lanes = np.empty((len(v), width // 8), np.int64)
+        lanes[:, 0] = v
+        lanes[:, 1:] = (v >> 63)[:, None]
+        le = lanes.view(np.uint8)
+    validity = None
+    if present is not None:
+        full = np.zeros((len(present), width), np.uint8)
+        full[present] = le
+        le, validity = full, _validity_buf(present)
+    return pa.Array.from_buffers(target_type, len(le),
+                                 [validity, pa.py_buffer(le)])
+
+
 def _leaf_arrow(vals, defs, max_def, target_type):
     """Leaf entry stream -> arrow array (one slot per entry; null when
-    def < max_def), cast to the schema's leaf type."""
+    def < max_def), cast to the schema's leaf type. ``vals`` holds only the
+    present values: a numpy array, or for BYTE_ARRAY / FLBA one Arrow binary
+    array. Nulls go in by re-spacing that array's offsets over the same data
+    buffer (a null slot is an empty span) plus a validity bitmap; no value
+    becomes a Python object."""
     import pyarrow as pa
 
     present = (defs == max_def) if defs is not None else None
-    if isinstance(vals, list):  # BYTE_ARRAY / FLBA
-        if pa.types.is_decimal(target_type):
-            # FLBA big-endian two's-complement unscaled int (parquet spec)
-            import decimal as _dec
-
-            sc = target_type.scale
-
-            def conv(b):
-                return _dec.Decimal(
-                    int.from_bytes(b, "big", signed=True)).scaleb(-sc)
-
-            if present is None:
-                py = [conv(v) for v in vals]
-            else:
-                it = iter(vals)
-                py = [conv(next(it)) if p else None for p in present]
-            return pa.array(py, target_type)
-        if pa.types.is_float16(target_type):
-            # Float16 logical annotation: FLBA(2), IEEE 754 half,
-            # little-endian (parquet-format LogicalTypes.md) — binary->
-            # halffloat has no arrow cast, so reinterpret the raw bytes
-            half = np.frombuffer(b"".join(vals), dtype="<f2")
-            if present is None:
-                return pa.array(half)
-            full = np.zeros(len(present), dtype=np.float16)
-            full[present] = half
-            return pa.array(full, mask=~present)
-        if present is None:
-            arr = pa.array(vals, pa.binary())
-        else:
-            it = iter(vals)
-            arr = pa.array([next(it) if p else None for p in present],
-                           pa.binary())
-        if pa.types.is_string(target_type) or pa.types.is_large_string(target_type):
-            return arr.cast(target_type)
-        return arr.cast(target_type) if target_type != arr.type else arr
-    vals = np.asarray(vals)
+    if present is not None and present.all():
+        present = None
     if pa.types.is_decimal(target_type):
-        # INT32/INT64-backed DECIMAL (precision <= 18): stored ints are the
-        # UNSCALED value — a plain arrow cast would scale 5 to 5.00 instead
-        # of 0.05
-        import decimal as _dec
-
-        sc = target_type.scale
-        if present is None:
-            py = [_dec.Decimal(int(v)).scaleb(-sc) for v in vals]
-        else:
-            it = iter(vals)
-            py = [_dec.Decimal(int(next(it))).scaleb(-sc) if p else None
-                  for p in present]
-        return pa.array(py, target_type)
+        return _decimal_arrow(vals, present, target_type)
+    if isinstance(vals, pa.Array) and pa.types.is_float16(target_type):
+        # Float16 logical annotation: FLBA(2), IEEE 754 half, little-endian
+        # (parquet-format LogicalTypes.md) — binary->halffloat has no arrow
+        # cast, so reinterpret the raw bytes
+        offsets, data = _binary_offsets(vals)
+        vals = np.frombuffer(data, "<f2", count=len(vals),
+                             offset=int(offsets[0]))
+    if isinstance(vals, pa.Array):  # BYTE_ARRAY / FLBA
+        if present is not None:
+            offsets, data = _binary_offsets(vals)
+            spaced = np.zeros(len(present) + 1, np.int64)
+            spaced[0] = offsets[0]
+            spaced[1:][present] = np.diff(offsets)
+            np.cumsum(spaced, out=spaced)
+            vals = _binary_from_offsets(spaced, data, _validity_buf(present))
+        return vals.cast(target_type) if vals.type != target_type else vals
+    vals = np.asarray(vals)
     if (pa.types.is_date32(target_type) or pa.types.is_time32(target_type)) \
             and vals.dtype != np.int32:
         # v2 pages delta-decode INT32 leaves to int64; arrow has no
@@ -531,7 +669,8 @@ def _leaf_arrow(vals, defs, max_def, target_type):
     if present is None:
         arr = pa.array(vals)
     else:
-        full = np.zeros(len(present), dtype=vals.dtype)
+        full = _pool_array(len(present), vals.dtype)
+        full.fill(0)
         full[present] = vals
         arr = pa.array(full, mask=~present)
     return arr.cast(target_type) if arr.type != target_type else arr
@@ -864,11 +1003,14 @@ def _leaf_arrow_type(e: dict):
     conv = e.get(6)
     logical = e.get(10) or {}
     tlen = e.get(2, 0)
-    if 5 in logical:  # DECIMAL via LogicalType(scale, precision)
-        dec = logical[5]
-        return pa.decimal128(dec.get(2, e.get(8)), dec.get(1, e.get(7, 0)))
-    if conv == 5:  # DECIMAL via ConvertedType + scale/precision fields
-        return pa.decimal128(e[8], e.get(7, 0))
+    if 5 in logical or conv == 5:
+        # DECIMAL via LogicalType(scale, precision), else via ConvertedType
+        # + the element's scale/precision fields
+        dec = logical.get(5, {})
+        precision = dec.get(2, e.get(8))
+        scale = dec.get(1, e.get(7, 0))
+        return (pa.decimal256 if precision > 38 else pa.decimal128)(
+            precision, scale)
     if phys == 0:
         return pa.bool_()
     if phys == 1:  # INT32
@@ -1568,7 +1710,8 @@ def read_table_arrow_native(path: str, columns: list[str] | None = None,
                 arr = pa.concat_arrays(
                     [arr.slice(lo, hi - lo) for lo, hi in ranges])
             parts.append(arr)
-        cols[name] = (pa.concat_arrays(parts) if parts
+        cols[name] = (parts[0] if len(parts) == 1
+                      else pa.concat_arrays(parts) if parts
                       else pa.array([], type=field.type))
     for vp in ft.get("variant_shredded", ()):
         if vp[0] in cols:  # reassemble shredded VARIANT storage
