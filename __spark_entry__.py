@@ -630,10 +630,9 @@ def _rt_documents_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     out = tempfile.mkdtemp(prefix="wcq_compact_")
-    # salted mode explicitly: guarantees multiple small files so the merge
-    # actually exercises the multi-group byte-append path
-    encode_table(df, os.path.join(out, "t"), num_partitions=6, write_metrics=False,
-                 mode="salted")
+    # six scan partitions -> six small files, so the merge actually
+    # exercises the multi-group byte-append path
+    encode_table(df.repartition(6), os.path.join(out, "t"), write_metrics=False)
     compact(os.path.join(out, "t"), target_bytes=1 << 30)
     return read_encoded(spark, os.path.join(out, "t")).select(
         "doc_id", "text", "lang", "source", "n_chars"

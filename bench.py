@@ -331,7 +331,7 @@ def run_bench(sf_dir: str, cpus: int, rows: int, repeats: int) -> dict:
     snap_arch = SnapshotTable(os.path.join(work, "wp_archive")).read_snapshot()
     extras["archive_compressed_bytes"] = snap_arch["total_compressed_bytes"]
 
-    # -- clustered mode (north_rule skew path: salted domain clustering via
+    # -- clustered mode (north_rule skew path: range domain clustering via
     #    the Arrow-native two-phase shuffle, zero JVM transfer) --
     def run_clustered(r):
         import shutil
@@ -349,29 +349,26 @@ def run_bench(sf_dir: str, cpus: int, rows: int, repeats: int) -> dict:
     snap_cl = SnapshotTable(os.path.join(work, "wp_clustered")).read_snapshot()
     extras["clustered_compressed_bytes"] = snap_cl["total_compressed_bytes"]
 
-    # -- salted-repartition mode (pure Spark-shuffle reference point;
-    #    explicit opt-in — bridge-bound, kept for comparison) --
-    n_parts = max(4 * cpus, 16)
-
-    def run_salted(r):
+    # -- clustered mode over a NON-file DataFrame: phase A spills from
+    #    mapInArrow (rows cross the JVM bridge once) and the domain
+    #    histogram comes from a seeded Spark sample --
+    def run_clustered_df(r):
         import shutil
 
-        d = os.path.join(work, "wp_salted")
+        d = os.path.join(work, "wp_clustered_df")
         if r:
             shutil.rmtree(d, ignore_errors=True)
         encode_table(
-            df, d, url_col="url", mode="salted",
-            config=EncoderConfig.speed(), num_partitions=n_parts,
-            write_metrics=False,
+            df.where(F.col("url").isNotNull()), d, url_col="url",
+            mode="clustered", config=EncoderConfig.speed(), write_metrics=False,
         )
 
-    # shuffle-bound and noisy run-to-run: report the best of 2 like the
-    # other encode paths instead of a single draw
-    # best-of-3: the JVM-bridge shuffle path swings 7-21s draw-to-draw on
-    # this VM (documented non-scale reference point; extra repeat keeps the
-    # recorded number from landing on a hypervisor-noise outlier)
-    queries["encode_webpages_salted"] = best_of(run_salted, 3)
-    extras["encode_salted_gbps"] = raw_bytes / queries["encode_webpages_salted"] / 1e9
+    queries["encode_webpages_clustered_df"] = best_of(run_clustered_df, 2)
+    extras["encode_clustered_df_gbps"] = (
+        raw_bytes / queries["encode_webpages_clustered_df"] / 1e9
+    )
+    snap_cdf = SnapshotTable(os.path.join(work, "wp_clustered_df")).read_snapshot()
+    extras["clustered_df_compressed_bytes"] = snap_cdf["total_compressed_bytes"]
 
     # -- decode webpages (full-materialization agg) --
     def dec_run(_r):
@@ -420,7 +417,7 @@ def run_bench(sf_dir: str, cpus: int, rows: int, repeats: int) -> dict:
         pq.write_table(li_t, li_path, compression="zstd",
                        row_group_size=max(li_t.num_rows // (2 * cpus), 4096))
         dfl = spark.read.parquet(li_path)
-        # metrics pass FIRST: doubles as the warm-up (the preceding salted
+        # metrics pass FIRST: doubles as the warm-up (the preceding clustered
         # phase leaves allocator/page-cache pressure that penalizes the first
         # lineitem encode by ~30%), and its lineage gives the kernel rate
         encode_table(dfl, os.path.join(work, "li_m"), sort_key="l_orderkey",

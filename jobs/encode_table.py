@@ -30,8 +30,10 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="parquet file/dir to encode")
     ap.add_argument("--output", required=True, help="webcodec table dir")
-    ap.add_argument("--mode", default="files", choices=["files", "clustered", "scan", "salted"])
-    ap.add_argument("--url-col", default=None, help="salting/sort column (salted mode)")
+    ap.add_argument("--mode", default="files", choices=["files", "clustered", "scan"])
+    ap.add_argument("--url-col", default=None,
+                    help="url column: domain clustering key (clustered mode) "
+                         "and default sort key")
     ap.add_argument("--sort-key", default=None)
     ap.add_argument("--compression", default="zstd")
     ap.add_argument("--target-partition-mb", type=int, default=128)

@@ -200,8 +200,7 @@ def test_export_parquet_encrypted_output(spark, tmp_path):
     pq2.write_table(t, src)
     df = spark.read.parquet(src)
     tdir = str(tmp_path / "t")
-    encode_table(df, tdir, mode="salted", num_partitions=2,
-                 write_metrics=False,
+    encode_table(df.repartition(2), tdir, write_metrics=False,
                  config=EncoderConfig(encryption_key=src_key))
     exp = str(tmp_path / "exp")
     res = export_parquet(spark, tdir, exp, encryption_key=src_key,

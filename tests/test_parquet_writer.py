@@ -76,7 +76,7 @@ def test_export_parquet_spark_readable(spark, tmp_path):
     pq.write_table(webpages(3_000), src)
     df = spark.read.parquet(src)
     tdir = str(tmp_path / "t")
-    encode_table(df, tdir, url_col="url", mode="salted", num_partitions=3,
+    encode_table(df, tdir, url_col="url", mode="clustered", num_partitions=3,
                  write_metrics=False)
     out = str(tmp_path / "export")
     res = export_parquet(spark, tdir, out)

@@ -236,13 +236,13 @@ def test_delete_pos_cache_lru_eviction(tmp_path):
 
 
 def test_hot_domain_sampling_scales_with_row_groups(tmp_path):
-    """sample_hot_domains_from_files with max_row_groups=None samples a
-    quarter of the row groups (clamped [8, 64]) — a hot domain spread over a
+    """sample_domain_histogram with max_row_groups=None samples a quarter of
+    the row groups (clamped [8, 64]) — a hot domain spread over a
     32-row-group file is detected, and the evenly-spaced stride covers the
     back half of the table."""
     import pyarrow.parquet as pq
 
-    from webcodec.spark.encode_job import sample_hot_domains_from_files
+    from webcodec.spark.encode_job import sample_domain_histogram
 
     rows_per_group = 500
     tables = []
@@ -258,6 +258,6 @@ def test_hot_domain_sampling_scales_with_row_groups(tmp_path):
         writer.write_table(t, row_group_size=rows_per_group)
     writer.close()
     assert pq.ParquetFile(path).metadata.num_row_groups == 32
-    hot_counts = sample_hot_domains_from_files([path], "url",
-                                               rows_per_partition=1_000)
-    assert hot_counts.get("hot.example", 0) > 1  # salted, not missed
+    head = sample_domain_histogram([path], "url", min_est_rows=1_001)
+    # 16 groups x 250 hot rows; 8 sampled groups, 4 of them in the back half
+    assert head == {"hot.example": 4_000}

@@ -141,7 +141,7 @@ def test_phase_b_reads_single_bucket_index_shard(spark, tmp_path):
 
     from webcodec.spark.encode_job import (
         _make_bucket_encode_fn, _make_bucket_index_fn, _make_spill_fn,
-        plan_file_splits)
+        plan_domain_ranges, plan_file_splits, sample_domain_histogram)
 
     src = str(tmp_path / "s.parquet")
     pq.write_table(webpages(2_000), src)
@@ -153,7 +153,8 @@ def test_phase_b_reads_single_bucket_index_shard(spark, tmp_path):
         def __init__(self, v):
             self.value = v
 
-    spill = _make_spill_fn(shuffle_dir, "url", 5, ([], {}), frozenset(), _BC(splits))
+    ranges = plan_domain_ranges(sample_domain_histogram([src], "url", 1), 5)
+    spill = _make_spill_fn(shuffle_dir, "url", ranges, frozenset(), _BC(splits))
     seg_rows = []
     for i in range(len(splits)):
         batch = pa.RecordBatch.from_pydict({"id": pa.array([i], pa.int64())})

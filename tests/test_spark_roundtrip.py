@@ -78,28 +78,29 @@ def test_projection_and_predicate(spark, webpages_parquet, tmp_path):
 
 def test_resume_skips_committed_partitions(spark, webpages_parquet, tmp_path):
     """north_rule: resumable from snapshot checkpoint, no re-encode of
-    committed partitions."""
-    df = spark.read.parquet(webpages_parquet)
+    committed partitions. Clustered mode over a NON-file DataFrame: the
+    seeded Spark-side domain sample and the row-count sizing repeat on the
+    rerun, so bucket ids are stable and committed buckets are skipped."""
+    df = spark.read.parquet(webpages_parquet).where(F.col("url").isNotNull())
     out = str(tmp_path / "wc_table")
-    # first run encodes only pids 0,1 (simulate a partial/killed job)
-    from webcodec.spark.encode_job import salted_partition_ids
-
-    dfp = salted_partition_ids(df, "url", 4, 2_000)
-    part = dfp.filter(F.col("_pid") < 2).drop("_pid")
-    # salted mode explicitly: its partition ids are content-derived (url-hash),
-    # so a resumed run over a DIFFERENT DataFrame maps rows to the same pids
-    snap1 = encode_table(part, out, url_col="url", num_partitions=4, resume=True,
-                         mode="salted")
-    done1 = {f["partition_id"] for f in snap1["files"]}
-    files1 = {f["partition_id"]: f["path"] for f in snap1["files"]}
-    # resumed full run
-    snap2 = encode_table(df, out, url_col="url", num_partitions=4, resume=True,
-                         mode="salted")
-    assert snap2["total_rows"] == 8_000
-    # committed partitions were NOT re-encoded (same file paths survive)
-    for pid in done1:
-        f2 = next(f for f in snap2["files"] if f["partition_id"] == pid)
-        assert f2["path"] == files1[pid]
+    kw = dict(url_col="url", num_partitions=4, mode="clustered", write_metrics=False)
+    full = encode_table(df, out, **kw)
+    assert len(full["files"]) >= 3
+    # simulate a killed run: only the first two buckets had committed
+    tbl = SnapshotTable(out)
+    kept = full["files"][:2]
+    tbl.commit(kept, full["schema"], replace=True)
+    for f in full["files"][2:]:
+        os.remove(os.path.join(out, f["path"]))
+    mtimes = {f["path"]: os.path.getmtime(os.path.join(out, f["path"])) for f in kept}
+    # resumed run over the same input
+    snap = encode_table(df, out, **kw)
+    assert snap["total_rows"] == 8_000
+    assert len(snap["files"]) == len(full["files"])
+    # committed buckets were NOT re-encoded (same files, untouched)
+    assert set(mtimes) <= {f["path"] for f in snap["files"]}
+    for p, m in mtimes.items():
+        assert os.path.getmtime(os.path.join(out, p)) == m
     res = verify_roundtrip(spark, df, out, ["url"])
     assert res["ok"], res
 
@@ -138,11 +139,11 @@ def test_time_travel_read(spark, webpages_parquet, tmp_path):
     df = spark.read.parquet(webpages_parquet)
     out = str(tmp_path / "wc_table")
     first = df.limit(3_000)
-    encode_table(first, out, url_col="url", num_partitions=2, mode="salted",
+    encode_table(first, out, url_col="url", num_partitions=2, mode="clustered",
                  resume=False, write_metrics=False)
     tbl = SnapshotTable(out)
     s1 = tbl.current_snapshot_id()
-    encode_table(df, out, url_col="url", num_partitions=4, mode="salted",
+    encode_table(df, out, url_col="url", num_partitions=4, mode="clustered",
                  resume=False, write_metrics=False)
     s2 = tbl.current_snapshot_id()
     assert s2 > s1
@@ -164,8 +165,8 @@ def test_schema_evolution_add_column(spark, tmp_path):
                    "n": pa.array(list(range(100)), pa.int64())})
     src1 = str(tmp_path / "v1.parquet")
     pq.write_table(t1, src1)
-    encode_table(spark.read.parquet(src1), out, num_partitions=1, mode="salted",
-                 resume=False, write_metrics=False)
+    encode_table(spark.read.parquet(src1).repartition(1), out, resume=False,
+                 write_metrics=False)
     t2 = pa.table({"url": [f"v{i}" for i in range(50)],
                    "n": pa.array(list(range(100, 150)), pa.int64()),
                    "lang": ["en"] * 50})

@@ -1,22 +1,23 @@
 """Distributed encode: DataFrame -> webcodec table (SURVEY.md §3.4 lifecycle).
 
 Spark-first design: Catalyst plans the relational parts; the encode engine is
-a leaf. Four modes, all with explicit target partition sizing, lineage rows
+a leaf. Three modes, all with explicit target partition sizing, lineage rows
 (input splits, codec choices, sizes, encode secs -> metrics table) and resume
 via committed-partition-id skip (north_rule requirements):
 
 - ``files``  — Spark distributes (file, row-group) splits; workers read
   parquet directly with pyarrow and encode. Zero shuffle, zero JVM->Python
   transfer (the bridge moves ~4 MB/s/core; direct reads run 100x that).
-- ``clustered`` — range domain clustering at ~files-mode speed: phase A
-  scatters rows into per-bucket Arrow IPC spills on shared storage, buckets
-  holding CONTIGUOUS lexicographic domain intervals from a sampled
-  histogram (hot domains salt across k adjacent buckets; cold domains stay
-  whole); phase B encodes one bucket per task, sorted by url — so committed
-  files carry disjoint url ranges and the manifest prunes range scans.
-- ``salted`` — the same semantics as one Spark shuffle: salted
-  repartition on hash(url)-domain + groupBy(_pid).applyInArrow. Reference
-  implementation; bridge-bound.
+  Bare parquet scans only.
+- ``clustered`` — range domain clustering, the one clustering path, for any
+  DataFrame: phase A scatters rows into per-bucket Arrow IPC spills on
+  shared storage, buckets holding CONTIGUOUS lexicographic domain intervals
+  from a sampled histogram (hot domains salt across k adjacent buckets;
+  cold domains stay whole); phase B encodes one bucket per task, sorted by
+  url — so committed files carry disjoint url ranges and the manifest
+  prunes range scans. A bare parquet scan feeds phase A from direct split
+  reads (zero JVM transfer); any other DataFrame feeds it from mapInArrow
+  (rows cross the bridge once).
 - ``scan``   — mapInArrow over scan partitions (no shuffle, any source,
   rows cross the bridge once).
 """
@@ -45,15 +46,16 @@ LINEAGE_SCHEMA = (
 
 def estimate_partitions(
     df: DataFrame, target_partition_bytes: int, sample_rows: int = 2_000
-) -> tuple[int, float]:
-    """(num_partitions, avg_row_bytes) from a driver-side head sample.
+) -> tuple[int, float, int]:
+    """(num_partitions, avg_row_bytes, total_rows); row width from a
+    driver-side head sample.
 
     Row count comes from parquet footer metadata when the source is a file
     scan (no extra job); only non-file sources pay a count() — a full second
     scan at 100 TB just to size partitions would be unacceptable."""
     sample = df.limit(sample_rows).toPandas()
     if len(sample) == 0:
-        return 1, 0.0
+        return 1, 0.0, 0
     avg = float(
         sum(
             sample[c].map(lambda v: len(v) if isinstance(v, (str, bytes)) else 8).sum()
@@ -61,48 +63,14 @@ def estimate_partitions(
         )
         / len(sample)
     )
-    paths = [p.removeprefix("file://") for p in df.inputFiles()]
-    if paths and all(p.endswith(".parquet") for p in paths) and _is_pure_scan(df):
+    if _is_pure_scan(df):
         import pyarrow.parquet as pq
 
-        total = sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
+        total = sum(pq.ParquetFile(p).metadata.num_rows for p in _input_paths(df))
     else:
         total = df.count()
     n = max(1, int(total * avg / target_partition_bytes + 0.5))
-    return n, avg
-
-
-def salted_partition_ids(
-    df: DataFrame,
-    url_col: str,
-    num_partitions: int,
-    rows_per_partition: int,
-    hot_sample_fraction: float = 0.01,
-    seed: int = 42,
-) -> DataFrame:
-    """Add a ``_pid`` column: hash(domain, salt) % N with per-domain salt count
-    k = ceil(domain_rows / rows_per_partition) from a sampled histogram.
-
-    Cold domains (k=1) cluster fully -> max prefix/dict compression; hot
-    domains split across k partitions -> no straggler (SURVEY.md §4.3).
-    """
-    domain = F.substring_index(F.substring_index(F.col(url_col), "://", -1), "/", 1)
-    dfd = df.withColumn("_domain", domain)
-    frac = min(1.0, hot_sample_fraction)
-    hist = (
-        dfd.sample(frac, seed=seed)
-        .groupBy("_domain")
-        .count()
-        .withColumn("_k", F.greatest(F.lit(1), F.ceil(F.col("count") / F.lit(max(int(rows_per_partition * frac), 1)))))
-        .filter(F.col("_k") > 1)
-        .select("_domain", "_k")
-    )
-    dfj = dfd.join(F.broadcast(hist), on="_domain", how="left").withColumn(
-        "_k", F.coalesce(F.col("_k"), F.lit(1))
-    )
-    salt = F.pmod(F.xxhash64(F.col(url_col), F.lit(seed)), F.col("_k"))
-    pid = F.pmod(F.xxhash64(F.col("_domain"), salt), F.lit(num_partitions)).cast("int")
-    return dfj.withColumn("_pid", pid).drop("_domain", "_k")
+    return n, avg, total
 
 
 def _lineage_row(pid: int, fname: str, footer: dict, secs: float,
@@ -407,7 +375,8 @@ def sample_domain_histogram(
     ``max_row_groups=None`` scales the sample with the table — a quarter of
     the row groups, clamped to [8, 64]: a fixed 8 at 100 TB would be a
     ~0.001% sample that misses hot domains entirely (each missed hot domain
-    is a straggler bucket in clustered mode)."""
+    is a straggler bucket in clustered mode). Zero-row row groups are never
+    chosen, so the histogram is non-empty whenever the input has rows."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -416,9 +385,10 @@ def sample_domain_histogram(
     for path in sorted(paths):
         md = pq.ParquetFile(path).metadata
         for i in range(md.num_row_groups):
-            rgs.append((path, i, md.row_group(i).num_rows))
-            total_rows += md.row_group(i).num_rows
-    if not rgs or total_rows == 0:
+            if md.row_group(i).num_rows:
+                rgs.append((path, i, md.row_group(i).num_rows))
+                total_rows += md.row_group(i).num_rows
+    if not rgs:
         return {}
     if max_row_groups is None:
         max_row_groups = min(64, max(8, len(rgs) // 4))
@@ -439,18 +409,28 @@ def sample_domain_histogram(
     return out
 
 
-def sample_hot_domains_from_files(
-    paths: list[str], url_col: str, rows_per_partition: int,
-    max_row_groups: int | None = None,
+def spark_domain_histogram(
+    df: DataFrame, url_col: str, total_rows: int, sample_rows: int = 1 << 18,
 ) -> dict[str, int]:
-    """Hot-domain salt counts (domain -> k buckets) from the sampled
-    histogram head: k = ceil(est_rows / rows_per_partition), reported only
-    when k > 1."""
-    hist = sample_domain_histogram(
-        paths, url_col, rows_per_partition + 1, max_row_groups)
-    return {
-        d: int(-(-est // max(rows_per_partition, 1))) for d, est in hist.items()
-    }
+    """Domain histogram (estimated rows per domain) of any DataFrame from a
+    seeded Spark sample of its url domains — a JVM-only job, no rows cross
+    the Python bridge. The fraction targets ``sample_rows`` of the
+    ``total_rows`` the caller already counted, so inputs up to that size are
+    read whole (exact histogram) and larger ones get an expected
+    ``sample_rows``-row sample. Domains are extracted like
+    :func:`_domains_of` does executor-side (strip ``scheme://``, keep up to
+    the first ``/``), so hot-domain span keys match the router's."""
+    if total_rows <= 0:
+        return {}
+    frac = min(1.0, sample_rows / total_rows)
+    dom = F.substring_index(
+        F.regexp_replace(F.col(url_col), r"^[a-zA-Z][a-zA-Z0-9+.-]*://", ""), "/", 1)
+    doms = df.select(dom.alias("d"))
+    if frac < 1.0:
+        # fixed seed: a resumed run re-plans the same buckets
+        doms = doms.sample(fraction=frac, seed=42)
+    return {r["d"]: int(r["count"] / frac)
+            for r in doms.groupBy("d").count().collect()}
 
 
 def plan_domain_ranges(
@@ -528,157 +508,150 @@ def plan_domain_ranges(
     return cuts, spans
 
 
-def sample_hot_domains(
-    df: DataFrame, url_col: str, rows_per_partition: int,
-    sample_fraction: float = 0.01, seed: int = 42,
-) -> dict[str, int]:
-    """Driver-side sampled domain histogram -> salt counts for hot domains.
-    JVM-only job over the url column (no Python bridge). Fallback for
-    non-parquet sources; parquet scans use the cheaper
-    :func:`sample_hot_domains_from_files`."""
-    domain = F.substring_index(F.substring_index(F.col(url_col), "://", -1), "/", 1)
-    frac = min(1.0, sample_fraction)
-    denom = max(int(rows_per_partition * frac), 1)
-    rows = (
-        df.select(domain.alias("d"))
-        .sample(frac, seed=seed)
-        .groupBy("d")
-        .count()
-        .withColumn("k", F.greatest(F.lit(1), F.ceil(F.col("count") / F.lit(denom))))
-        .filter(F.col("k") > 1)
-        .collect()
-    )
-    return {r["d"]: int(r["k"]) for r in rows}
+# a spill cut from a DataFrame partition is id'd (partition << SPILL_SEQ_BITS)
+# + sequence number, so a retried task rewrites the same spill names; 2^24
+# spills of ~128 MB is 2 PB per Spark partition
+SPILL_SEQ_BITS = 24
 
 
-def _make_spill_fn(shuffle_dir: str, url_col: str, n_buckets: int,
+def _make_spill_fn(shuffle_dir: str, url_col: str,
                    ranges: tuple[list[str], dict[str, tuple[int, int]]],
-                   done: frozenset[int], splits_bc, seed: int = 42,
-                   spill_compression: str | None = "lz4"):
-    """Phase A of the Arrow-native shuffle: each task reads its parquet split
-    directly and scatters rows into per-bucket Arrow IPC spill files on shared
-    storage. ``ranges`` (from :func:`plan_domain_ranges`) routes each domain
-    by lexicographic RANGE — buckets hold contiguous domain intervals, so
-    committed files carry disjoint url min/max and the manifest prunes a
-    url-range scan to the few files that can match; hot domains salt by
-    hash(url) over their k adjacent buckets, cold domains stay whole. Zero
-    JVM transfer."""
+                   done: frozenset[int], splits_bc=None,
+                   spill_compression: str | None = "lz4",
+                   flush_bytes: int = 128 << 20):
+    """Phase A of the Arrow-native shuffle: scatter rows into per-bucket
+    Arrow IPC spill files on shared storage. ``ranges`` (from
+    :func:`plan_domain_ranges`) routes each domain by lexicographic RANGE —
+    buckets hold contiguous domain intervals, so committed files carry
+    disjoint url min/max and the manifest prunes a url-range scan to the few
+    files that can match; hot domains salt by hash(url) over their k
+    adjacent buckets, cold domains stay whole.
 
-    def spill_split(batches):
+    Two sources feed the same spill body. With ``splits_bc`` the function
+    runs over :func:`_range_tasks` ids and each task reads its parquet
+    splits directly (zero JVM transfer; spill id = split id). Without it the
+    function runs as ``df.mapInArrow`` over any DataFrame and cuts a spill
+    every ~``flush_bytes`` of incoming batches (bounded memory, never the
+    whole Spark partition), id'd by partition and sequence number."""
+
+    def tables(batches, ctx):
+        if splits_bc is not None:
+            import pyarrow.parquet as pq
+
+            splits = splits_bc.value
+            for b in batches:
+                for i in b.column("id").to_pylist():
+                    s = splits[i]
+                    yield i, pq.ParquetFile(s["path"]).read_row_groups(s["row_groups"])
+            return
+        base = (ctx.partitionId() if ctx else 0) << SPILL_SEQ_BITS
+        seq, buf, nbytes = 0, [], 0
+        for b in batches:
+            if b.num_rows:
+                buf.append(b)
+                nbytes += b.nbytes
+            if nbytes >= flush_bytes:
+                yield base + seq, pa.Table.from_batches(buf)
+                seq, buf, nbytes = seq + 1, [], 0
+        if buf:
+            yield base + seq, pa.Table.from_batches(buf)
+
+    def spill(batches):
+        import bisect
+
         import numpy as np
         import pyarrow.compute as pc
         import pyarrow.ipc as ipc
-        import pyarrow.parquet as pq
 
         from pyspark import TaskContext
         from webcodec.kernels.md5v import md5_u64le_arrow
 
-        ctx = TaskContext.get()
-        task = ctx.taskAttemptId() if ctx else 0  # None only in unit tests
-        splits = splits_bc.value
-        for b in batches:
-            for i in b.column("id").to_pylist():
-                row = splits[i]
-                table = pq.ParquetFile(row["path"]).read_row_groups(
-                    row["row_groups"]
-                )
-                # null urls route to the ""-domain cold bucket (a null
-                # dictionary index would otherwise turn into INT64_MIN on
-                # to_numpy and crash the gather below)
-                urls = pc.fill_null(table.column(url_col).combine_chunks(), "")
-                dom = _domains_of(urls)  # vectorized: strip scheme, take netloc
-                # Arrow C++ dictionary encode: per-UNIQUE-domain work only
-                if isinstance(dom, pa.ChunkedArray):
-                    dom = dom.combine_chunks()
-                de = dom.dictionary_encode()
-                uniq = de.dictionary
-                inv = de.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-                # RANGE routing (plan_domain_ranges): every domain — sampled
-                # or not — lands in the bucket of its lexicographic interval
-                # via bisect on the O(n_buckets) cut list; per-UNIQUE-domain
-                # work only. Hot domains pick one of their k ADJACENT span
-                # buckets by url hash (md5 kernel: process-stable, python
-                # hash() is salted per process), so one url always lands in
-                # one bucket (dedup/prefix locality preserved).
-                import bisect
-
-                cuts, spans = ranges
-                ud = uniq.to_pylist()
-                if cuts:
-                    # None domain (null url) routes as "" — bucket 0
-                    ubase = np.array(
-                        [max(bisect.bisect_right(cuts, d or "") - 1, 0)
-                         for d in ud],
-                        dtype=np.int64,
-                    ) if ud else np.zeros(0, np.int64)
-                else:
-                    # defensive fallback (empty histogram): hash domains
-                    h = md5_u64le_arrow(pc.binary_join_element_wise(
-                        uniq, pa.scalar(f"#{seed}"), ""))
-                    ubase = (h % np.uint64(n_buckets)).astype(np.int64)
-                bucket = ubase[inv] if len(ud) else np.zeros(len(urls), np.int64)
-                for ui, d in enumerate(ud):
-                    sp = spans.get(d)
-                    if sp is None:
-                        continue
-                    sbase, k = sp
-                    mask = inv == ui
-                    pu = urls.filter(pa.array(mask))
-                    piece = md5_u64le_arrow(pu) % np.uint64(k)
-                    bucket[mask] = sbase + piece.astype(np.int64)
-                # ONE consolidated spill per SPLIT (Spark sort-shuffle file
-                # layout): per-bucket IPC stream segments back-to-back in a
-                # single .arrow file. Per-(task, bucket) files would be
-                # tasks x buckets — ~10^9 files at 100 TB, an inode/DFS-
-                # metadata explosion; this is 1 file per split. Files are
-                # named by SPLIT id, written via attempt-unique temps and
-                # renamed into place: a task retried after a post-write
-                # crash — or a speculative duplicate attempt — OVERWRITES
-                # with byte-identical content instead of leaving a second
-                # discoverable spill that phase B would double-read.
-                # Segment locations travel through the SIDE CHANNEL (one
-                # metadata row per (split, bucket) segment) and are
-                # consolidated into per-BUCKET index shards by a tiny Spark
-                # metadata shuffle — phase B never lists the spill dir or
-                # opens O(splits) index files (at ~800k splits that would be
-                # hundreds of millions of small reads cluster-wide).
-                fname = f"s{int(i):07d}"
-                dpath = os.path.join(shuffle_dir, fname + ".arrow")
-                tmp_sfx = f".{task}-{uuid.uuid4().hex[:8]}.tmp"  # attempt-unique
-                wrote = []
-                with open(dpath + tmp_sfx, "wb") as f:
-                    for bk in np.unique(bucket):
-                        if int(bk) in done:
-                            continue
-                        sub = table.filter(pa.array(bucket == bk))
-                        sink = pa.BufferOutputStream()
-                        with ipc.new_stream(
-                            sink, sub.schema,
-                            # spills are transient: favor compress SPEED
-                            # over ratio (lz4 frame ~5x faster than zstd
-                            # for ~1.2x the bytes; None = raw)
-                            options=ipc.IpcWriteOptions(
-                                compression=spill_compression),
-                        ) as w:
-                            w.write_table(sub)
-                        seg = sink.getvalue()
-                        wrote.append((int(bk), f.tell(), len(seg), sub.num_rows))
-                        f.write(seg)
-                if not wrote:
-                    os.remove(dpath + tmp_sfx)
+        ctx = TaskContext.get()  # None only in unit tests
+        task = ctx.taskAttemptId() if ctx else 0
+        cuts, spans = ranges
+        cuts = cuts or [""]  # empty histogram = empty input: one bucket
+        for split, table in tables(batches, ctx):
+            # null urls route to the ""-domain cold bucket (a null
+            # dictionary index would otherwise turn into INT64_MIN on
+            # to_numpy and crash the gather below)
+            urls = pc.fill_null(table.column(url_col).combine_chunks(), "")
+            dom = _domains_of(urls)  # vectorized: strip scheme, take netloc
+            # Arrow C++ dictionary encode: per-UNIQUE-domain work only
+            if isinstance(dom, pa.ChunkedArray):
+                dom = dom.combine_chunks()
+            de = dom.dictionary_encode()
+            inv = de.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+            # RANGE routing (plan_domain_ranges): every domain — sampled or
+            # not — lands in the bucket of its lexicographic interval via
+            # bisect on the O(n_buckets) cut list (cuts[0] == ""); per-
+            # UNIQUE-domain work only. Hot domains pick one of their k
+            # ADJACENT span buckets by url hash (md5 kernel: process-stable,
+            # python hash() is salted per process), so one url always lands
+            # in one bucket (dedup/prefix locality preserved).
+            ud = de.dictionary.to_pylist()
+            ubase = np.array([bisect.bisect_right(cuts, d) - 1 for d in ud],
+                             dtype=np.int64)
+            bucket = ubase[inv]
+            for ui, d in enumerate(ud):
+                sp = spans.get(d)
+                if sp is None:
                     continue
-                os.rename(dpath + tmp_sfx, dpath)
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "bucket": pa.array([b for b, _, _, _ in wrote], pa.int32()),
-                        "split": pa.array([int(i)] * len(wrote), pa.int64()),
-                        "off": pa.array([o for _, o, _, _ in wrote], pa.int64()),
-                        "len": pa.array([ln for _, _, ln, _ in wrote], pa.int64()),
-                        "rows": pa.array([r for _, _, _, r in wrote], pa.int64()),
-                    }
-                )
+                sbase, k = sp
+                mask = inv == ui
+                pu = urls.filter(pa.array(mask))
+                piece = md5_u64le_arrow(pu) % np.uint64(k)
+                bucket[mask] = sbase + piece.astype(np.int64)
+            # ONE consolidated spill per SPLIT (Spark sort-shuffle file
+            # layout): per-bucket IPC stream segments back-to-back in a
+            # single .arrow file. Per-(task, bucket) files would be
+            # tasks x buckets — ~10^9 files at 100 TB, an inode/DFS-
+            # metadata explosion; this is 1 file per split. Files are
+            # named by SPLIT id, written via attempt-unique temps and
+            # renamed into place: a task retried after a post-write
+            # crash — or a speculative duplicate attempt — OVERWRITES
+            # with byte-identical content instead of leaving a second
+            # discoverable spill that phase B would double-read.
+            # Segment locations travel through the SIDE CHANNEL (one
+            # metadata row per (split, bucket) segment) and are
+            # consolidated into per-BUCKET index shards by a tiny Spark
+            # metadata shuffle — phase B never lists the spill dir or
+            # opens O(splits) index files (at ~800k splits that would be
+            # hundreds of millions of small reads cluster-wide).
+            dpath = os.path.join(shuffle_dir, f"s{int(split):07d}.arrow")
+            tmp = f"{dpath}.{task}-{uuid.uuid4().hex[:8]}.tmp"  # attempt-unique
+            wrote = []
+            with open(tmp, "wb") as f:
+                for bk in np.unique(bucket):
+                    if int(bk) in done:
+                        continue
+                    sub = table.filter(pa.array(bucket == bk))
+                    sink = pa.BufferOutputStream()
+                    with ipc.new_stream(
+                        sink, sub.schema,
+                        # spills are transient: favor compress SPEED over
+                        # ratio (lz4 frame ~5x faster than zstd for ~1.2x
+                        # the bytes; None = raw)
+                        options=ipc.IpcWriteOptions(compression=spill_compression),
+                    ) as w:
+                        w.write_table(sub)
+                    seg = sink.getvalue()
+                    wrote.append((int(bk), f.tell(), len(seg), sub.num_rows))
+                    f.write(seg)
+            if not wrote:
+                os.remove(tmp)
+                continue
+            os.rename(tmp, dpath)
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "bucket": pa.array([b for b, _, _, _ in wrote], pa.int32()),
+                    "split": pa.array([int(split)] * len(wrote), pa.int64()),
+                    "off": pa.array([o for _, o, _, _ in wrote], pa.int64()),
+                    "len": pa.array([ln for _, _, ln, _ in wrote], pa.int64()),
+                    "rows": pa.array([r for _, _, _, r in wrote], pa.int64()),
+                }
+            )
 
-    return spill_split
+    return spill
 
 
 SPILL_SEGMENT_SCHEMA = "bucket int, split long, off long, len long, rows long"
@@ -769,19 +742,6 @@ def _make_bucket_encode_fn(data_dir: str, shuffle_dir: str, config: EncoderConfi
     return encode_bucket
 
 
-def _make_encode_fn(data_dir: str, config: EncoderConfig, sort_key: str | None):
-    """Grouped-map Arrow UDF: one group (= one _pid) -> one .wcd file + lineage row."""
-
-    def encode_group(keys: tuple, table: pa.Table) -> pa.Table:
-        from webcodec import filefmt  # executor-side import
-
-        pid = keys[0].as_py()
-        table = table.drop_columns(["_pid"])
-        return _write_one(data_dir, pid, table, config, sort_key)
-
-    return encode_group
-
-
 def _completed_ids(tbl: SnapshotTable, partitioned: bool) -> frozenset[int]:
     """Resume skip-set, aliasing-safe: fanout pids ((split << PID_SHIFT) +
     rank) and plain split ids share the integer domain (fanout split 0 emits
@@ -803,12 +763,17 @@ def _completed_ids(tbl: SnapshotTable, partitioned: bool) -> frozenset[int]:
     )
 
 
+def _input_paths(df: DataFrame) -> list[str]:
+    return [p.removeprefix("file://") for p in df.inputFiles()]
+
+
 def _is_pure_scan(df: DataFrame) -> bool:
-    """True when ``df`` is a bare file-source relation (safe for files mode:
-    no Spark-side transformation would be silently dropped by reading the
-    source files directly)."""
+    """True when ``df`` is a bare parquet file-source relation (safe for
+    files mode and clustered split reads: no Spark-side transformation would
+    be silently dropped by reading the source files directly)."""
     try:
-        if not df.inputFiles():
+        paths = _input_paths(df)
+        if not paths or not all(p.endswith(".parquet") for p in paths):
             return False
         cls = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
         return "Relation" in cls
@@ -851,26 +816,34 @@ def encode_table(
     ``mode`` (default ``None`` = auto: ``"files"`` when ``df`` is a pure
     parquet scan, else ``"scan"`` — the zero-JVM-transfer path is the default
     because the JVM->Python bridge is the scale bottleneck):
-    - ``"salted"`` (explicit opt-in): one shuffle — salted repartition on
-      hash(url) domain with explicit target sizing (north_rule skew handling),
-      then one Arrow UDF per partition. Maximum compression: same-domain rows
-      cluster, so url prefix/dict pages win. Cost at scale: the whole table
-      crosses one shuffle AND the JVM->Python Arrow bridge.
     - ``"files"``: ZERO shuffle, ZERO JVM transfer — Spark distributes only
       (file, row-group) splits sized to target_partition_bytes; each Python
       worker reads its split directly with pyarrow C++ and encodes. This is
       the 100 TB fast path (the JVM->Python bridge caps at ~4 MB/s/core;
       direct reads run at several hundred MB/s/core). Skew is a non-issue:
-      splits are uniform bytes by construction.
+      splits are uniform bytes by construction. Requires a bare parquet scan
+      (raises otherwise: reading the source files would drop the
+      DataFrame's transformations).
+    - ``"clustered"`` (requires ``url_col``): url-domain clustering, any
+      DataFrame. Rows are range-bucketed by domain through an Arrow-native
+      two-phase spill on shared storage (hot domains salted over adjacent
+      buckets), then each bucket encodes sorted by url — maximum url
+      prefix/dict compression and disjoint per-file url ranges. A bare
+      parquet scan spills from direct split reads (zero JVM transfer);
+      anything else spills from ``df.mapInArrow`` (rows cross the bridge
+      once) with the domain histogram from a seeded Spark sample.
     - ``"scan"``: ZERO shuffle but rows still cross the JVM->Python bridge —
       mapInArrow straight over the scan partitions (sizing via
       spark.sql.files.maxPartitionBytes). Use when the input is not parquet
-      (e.g. an upstream transformation feeds the encoder).
+      (e.g. an upstream transformation feeds the encoder). For N small
+      files, encode ``df.repartition(N)``.
     """
+    if mode not in (None, "files", "clustered", "scan"):
+        raise ValueError(
+            f"unknown mode {mode!r}: use 'files', 'clustered' or 'scan' "
+            "(or None for auto)")
     config = config or EncoderConfig()
     spark = df.sparkSession
-    tbl = SnapshotTable(table_dir)
-    tbl.init()
 
     spec: list[dict] | None = None
     if partition_by:
@@ -890,21 +863,29 @@ def encode_table(
         df = df.repartition(n_part, *spark_partition_exprs(spec))
         mode = "scan"  # the shuffle output is no longer a pure file scan
 
+    # files mode (and clustered's split reads) read the source parquet
+    # directly, so they are only valid when df is the bare scan (no
+    # Project/Filter/... on top)
+    pure = mode != "scan" and _is_pure_scan(df)
     if mode is None:
-        # files mode reads the source parquet directly, so it is only valid
-        # when df is the bare scan (no Project/Filter/... on top)
-        mode = "files" if _is_pure_scan(df) else "scan"
+        mode = "files" if pure else "scan"
+    if mode == "files" and not pure:
+        raise ValueError(
+            "mode='files' needs a bare parquet scan: this DataFrame is "
+            "transformed or not parquet-backed, and reading its source files "
+            "would drop that (use mode='scan' or leave mode unset)")
+    if mode == "clustered" and url_col is None:
+        raise ValueError("mode='clustered' requires url_col")
     if spec and mode not in ("files", "scan"):
         raise ValueError(
             f"partition_by is supported with modes 'files'/'scan', not {mode!r} "
-            "(clustered/salted define their own url-domain placement)"
+            "(clustered defines its own url-domain placement)"
         )
+    tbl = SnapshotTable(table_dir)
+    tbl.init()
 
     if mode == "files":
-        paths = [p.removeprefix("file://") for p in df.inputFiles()]
-        if not paths:
-            raise ValueError("mode='files' requires a parquet-backed DataFrame")
-        splits = plan_file_splits(paths, target_partition_bytes)
+        splits = plan_file_splits(_input_paths(df), target_partition_bytes)
         done = _completed_ids(tbl, bool(spec)) if resume else frozenset()
         todo = [s for s in splits if s["split_id"] not in done]
         if not todo:
@@ -916,19 +897,30 @@ def encode_table(
                        write_metrics, spec)
 
     if mode == "clustered":
-        # Arrow-native two-phase shuffle: salted domain clustering at
-        # files-mode speed — bytes never cross the JVM. Phase A scatters rows
-        # into per-bucket Arrow IPC spills on shared storage; phase B encodes
-        # one bucket per task. At cluster scale the spill dir lives on the DFS
+        # Arrow-native two-phase shuffle: phase A scatters rows into
+        # per-bucket Arrow IPC spills on shared storage; phase B encodes one
+        # bucket per task. At cluster scale the spill dir lives on the DFS
         # (same durability class as Spark's own shuffle files).
         import shutil
 
-        if url_col is None:
-            raise ValueError("mode='clustered' requires url_col")
-        paths = [p.removeprefix("file://") for p in df.inputFiles()]
-        if not paths:
-            raise ValueError("mode='clustered' requires a parquet-backed DataFrame")
-        splits = plan_file_splits(paths, target_partition_bytes)
+        if pure:
+            # bytes never cross the JVM: split reads + a driver-side sample
+            # of the url column straight from the parquet row groups. FULL
+            # sampled histogram (min_est_rows=1): range boundaries need the
+            # whole sampled mass, not just the head. Driver memory is
+            # bounded by the sample itself (quarter of row groups, clamped
+            # [8, 64]); what ships to executors is only O(n_buckets) cuts +
+            # hot spans.
+            paths = _input_paths(df)
+            splits = plan_file_splits(paths, target_partition_bytes)
+            total_bytes = sum(s["num_bytes"] for s in splits)
+            hist = sample_domain_histogram(paths, url_col, 1)
+            sdf, bc = _range_tasks(spark, splits)
+        else:
+            _, avg_row, total_rows = estimate_partitions(df, target_partition_bytes)
+            total_bytes = int(total_rows * avg_row)
+            hist = spark_domain_histogram(df, url_col, total_rows)
+            sdf, bc = df, None
         if num_partitions is None:
             # bucket count = max(size target, 4x cluster parallelism). The
             # size target (~128MB OUTPUT files, C4 parity) dominates at
@@ -938,14 +930,8 @@ def encode_table(
             # enough phase-B tasks for the size-descending launch order to
             # pack the waves evenly; 4x measured best at local[32] (1x->2
             # uneven waves; 8x pays per-segment spill overhead in phase A).
-            total_bytes = sum(s["num_bytes"] for s in splits)
             num_partitions = max(total_bytes // (128 << 20) + 1, 2,
                                  4 * spark.sparkContext.defaultParallelism)
-        # FULL sampled histogram (min_est_rows=1): range boundaries need the
-        # whole sampled mass, not just the head. Driver memory is bounded by
-        # the sample itself (quarter of row groups, clamped [8, 64]), and
-        # what ships to executors is only O(n_buckets) cuts + hot spans.
-        hist = sample_domain_histogram(paths, url_col, 1)
         ranges = plan_domain_ranges(hist, num_partitions)
         done = _completed_ids(tbl, False) if resume else frozenset()
         shuffle_dir = os.path.join(table_dir, "_shuffle")
@@ -957,9 +943,8 @@ def encode_table(
         shutil.rmtree(shuffle_dir, ignore_errors=True)
         os.makedirs(shuffle_dir, exist_ok=True)
 
-        sdf, bc = _range_tasks(spark, splits)
-        spill = _make_spill_fn(shuffle_dir, url_col, num_partitions, ranges,
-                               done, bc, spill_compression=spill_compression)
+        spill = _make_spill_fn(shuffle_dir, url_col, ranges, done, bc,
+                               spill_compression=spill_compression)
         # the (split, bucket, off, len) segment map is pure metadata but
         # O(splits x touched-buckets) — at 100 TB (~800k splits x thousands
         # of buckets) that is millions of entries, too many for a driver
@@ -995,37 +980,11 @@ def encode_table(
         shutil.rmtree(shuffle_dir, ignore_errors=True)
         return snap
 
-    if mode == "scan":
-        done = _completed_ids(tbl, bool(spec)) if resume else frozenset()
-        fn = _make_scan_encode_fn(tbl.data_dir, config, sort_key or url_col, done, spec)
-        lineage = df.mapInArrow(fn, LINEAGE_SCHEMA)
-        rows = lineage.collect()
-        return _commit(spark, tbl, table_dir, rows, df, sort_key or url_col,
-                       write_metrics, spec)
-
-    if num_partitions is None:
-        num_partitions, avg_row = estimate_partitions(df, target_partition_bytes)
-    else:
-        _, avg_row = 0, 0.0
-    rows_per_partition = int(target_partition_bytes / max(avg_row, 1.0)) if avg_row else 1 << 20
-
-    if url_col is not None:
-        dfp = salted_partition_ids(df, url_col, num_partitions, rows_per_partition)
-        sort_key = sort_key or url_col
-    else:
-        first = df.columns[0]
-        dfp = df.withColumn(
-            "_pid", F.pmod(F.xxhash64(F.col(first)), F.lit(num_partitions)).cast("int")
-        )
-
-    done = _completed_ids(tbl, False) if resume else frozenset()
-    if done:
-        dfp = dfp.filter(~F.col("_pid").isin(list(done)))
-
-    fn = _make_encode_fn(tbl.data_dir, config, sort_key)
-    lineage = dfp.groupBy("_pid").applyInArrow(fn, LINEAGE_SCHEMA)
-    rows = lineage.collect()
-    return _commit(spark, tbl, table_dir, rows, df, sort_key, write_metrics)
+    done = _completed_ids(tbl, bool(spec)) if resume else frozenset()
+    fn = _make_scan_encode_fn(tbl.data_dir, config, sort_key or url_col, done, spec)
+    rows = df.mapInArrow(fn, LINEAGE_SCHEMA).collect()
+    return _commit(spark, tbl, table_dir, rows, df, sort_key or url_col,
+                   write_metrics, spec)
 
 
 def _commit(
