@@ -841,10 +841,9 @@ def _rt_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _rt_nested_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary-depth nesting (E1/E2 full Dremel scope, r3): a
     struct<inner:struct<lg,ln>, tok:array<array<string>>> column — struct-in-
-    struct AND a two-repetition-level list inside a struct — shredded by the
-    recursive dispatcher (webcodec/filefmt.py _encode_any_chunks), round-
-    tripped through the DataSource, then folded to scalars for the driver
-    compare."""
+    struct AND a two-repetition-level list inside a struct — stored as
+    Dremel leaves (webcodec.dremel.shred, one chunk per leaf), round-tripped
+    through the DataSource, then folded to scalars for the driver compare."""
     from webcodec.spark.datasource import WebcodecDataSource
 
     _prep(spark)

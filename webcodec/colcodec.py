@@ -11,7 +11,7 @@ import pyarrow as pa
 
 from webcodec.kernels import alp, bitpack, bss, delta, deltalength, dictionary, fsst, plain, prefix, rle
 from webcodec.kernels.varint import read_uvarint, write_uvarint
-from webcodec.types import IS_VARLEN, NUMPY_OF, Encoding, PhysType, widen_array, widened
+from webcodec.types import IS_VARLEN, NUMPY_OF, Encoding, PhysType
 
 
 def varlen_parts(arr: pa.Array) -> tuple[np.ndarray, bytes]:
@@ -45,7 +45,8 @@ def fixed_values(arr: pa.Array, phys: PhysType) -> np.ndarray:
 
 
 def child_fallback(child_phys: PhysType) -> Encoding:
-    """Fixed child encoding per primitive type inside a generic LIST."""
+    """Fixed encoding of a Dremel leaf under a list (filefmt): chosen by
+    type alone, no sampled selection."""
     if child_phys in IS_VARLEN:
         return Encoding.DELTA_LENGTH
     if child_phys in (PhysType.FLOAT32, PhysType.FLOAT64):
@@ -57,8 +58,8 @@ def child_fallback(child_phys: PhysType) -> Encoding:
 
 def rebuild_with_nulls(values: pa.Array, mask: np.ndarray, arrow_type: pa.DataType) -> pa.Array:
     """Expand a null-free decoded array to full length with a validity bitmap
-    (mask True = valid). Shared by page-level null rebuild (filefmt) and the
-    generic-list child path."""
+    (mask True = valid). Shared by page-level null rebuild and Dremel leaf
+    assembly (filefmt)."""
     n = len(mask)
     bitmap = pa.py_buffer(bitpack.pack_bools(mask))
     if pa.types.is_boolean(arrow_type):
@@ -147,35 +148,6 @@ def encode_values(
         lens_enc = delta.encode(np.diff(offsets))
         return write_uvarint(len(lens_enc)) + lens_enc + bss.encode(child)
 
-    if phys == PhysType.LIST:
-        # generic one-level list<primitive>: lengths FOR+delta + child
-        # validity (RLE) + child values in the child's fallback encoding
-        if isinstance(arr, pa.ChunkedArray):
-            arr = arr.combine_chunks()
-        from webcodec.types import phys_type_of
-
-        offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32, count=arr.offset + n + 1)
-        offsets = offsets[arr.offset :].astype(np.int64)
-        child = arr.flatten()
-        child_phys = phys_type_of(child.type)
-        cw = widened(child.type)  # narrow child stores widened, like flat cols
-        if cw is not None:
-            child = widen_array(child, cw)
-        lens_enc = delta.encode(np.diff(offsets))
-        if child.null_count:
-            import pyarrow.compute as pc
-
-            mask = pc.is_valid(child).to_numpy(zero_copy_only=False).astype(bool)
-            validity = rle.encode_validity(mask)
-            child = child.drop_null()
-        else:
-            validity = b""
-        child_enc = encode_values(child, child_phys, child_fallback(child_phys), fsst_sample)
-        return (
-            write_uvarint(len(validity)) + validity
-            + write_uvarint(len(lens_enc)) + lens_enc + child_enc
-        )
-
     if phys in IS_VARLEN:
         offsets, data = varlen_parts(arr)
         if encoding == Encoding.DELTA_LENGTH:
@@ -232,35 +204,6 @@ def decode_values(
             np.cumsum(lens, out=offsets[1:])
         child_arr = pa.array(child, type=pa.float32())
         return pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), child_arr)
-
-    if phys == PhysType.LIST:
-        from webcodec.types import phys_type_of
-
-        child_type = arrow_type.value_type
-        child_phys = phys_type_of(child_type)
-        child_type = widened(child_type) or child_type  # final list cast narrows
-        buf = memoryview(data)
-        vlen, pos = read_uvarint(buf, 0)
-        validity = buf[pos : pos + vlen]
-        pos += vlen
-        ll, pos2 = read_uvarint(buf, pos)
-        lens = delta.decode(buf[pos2 : pos2 + ll], n)
-        child_n = int(lens.sum()) if n else 0
-        if vlen:
-            mask = rle.decode_validity(validity, child_n)
-            n_valid = int(mask.sum())
-        else:
-            mask, n_valid = None, child_n
-        child_arr = decode_values(
-            buf[pos2 + ll :], child_phys, child_fallback(child_phys), n_valid, child_type
-        )
-        if mask is not None:
-            child_arr = rebuild_with_nulls(child_arr, mask, child_type)
-        offsets = np.zeros(n + 1, dtype=np.int32)
-        if n:
-            np.cumsum(lens, out=offsets[1:])
-        out = pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), child_arr)
-        return out.cast(arrow_type) if out.type != arrow_type else out
 
     if phys in IS_VARLEN:
         if encoding == Encoding.DELTA_LENGTH:

@@ -18,10 +18,20 @@ encoding — C5 parity).
 
 Page payload (uncompressed):
     u32 validity_len | [validity RLE-hybrid bytes if n_nulls>0] | value bytes
+
+Nested and decimal columns are stored as Dremel leaves (webcodec.dremel):
+one footer entry per column (its Arrow type and leaf names, no pages), then
+one chunk per leaf, ``<col>\x1f<dotted leaf path>``. A leaf page puts the
+leaf's levels where a flat page puts its validity — rep (leaves under a
+list) then def, each bit-packed at the bit length of its max level — and
+stores the valid values only; its header counts entries, its footer meta
+adds the top-level ``n_rows``. All leaves of a column cut pages at the same
+top-level rows.
 """
 
 from __future__ import annotations
 
+import base64
 import io
 import json
 import os
@@ -33,7 +43,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from webcodec import colcodec, selector
+from webcodec import colcodec, dremel, selector
 from webcodec.config import DEFAULT_CONFIG, EncoderConfig
 from webcodec.kernels import dictionary, rle
 from webcodec.stats import page_stats, raw_byte_size, sample_stats
@@ -205,8 +215,15 @@ def _encode_chunk(
     config: EncoderConfig,
     out: io.BufferedIOBase,
     offset0: int,
+    leaf_pages: list[tuple] | None = None,
+    fixed: bool = False,
 ) -> tuple[dict, int]:
-    """Encode one column chunk; writes pages; returns (chunk_meta, new_offset)."""
+    """Encode one column chunk; writes pages; returns (chunk_meta, new_offset).
+
+    With ``leaf_pages`` (a :func:`_leaf_pages` plan) the chunk is a Dremel
+    leaf: ``arr`` holds its valid values and each page its levels in place
+    of validity; no bloom, no page stats. A ``fixed`` leaf skips sampled
+    selection for :func:`colcodec.child_fallback`."""
     orig_t = arr.type
     if isinstance(arr, pa.ChunkedArray) and arr.num_chunks == 1:
         arr = arr.chunk(0)  # zero-copy unwrap
@@ -224,11 +241,6 @@ def _encode_chunk(
             else:
                 raise
     phys = phys_type_of(arr.type)
-    if phys == PhysType.LIST_FLOAT32 and arr.flatten().null_count:
-        # the BSS fast path has no child-validity stream (embeddings never
-        # have null elements); null children must take the generic LIST
-        # layout or they'd silently round-trip as NaN
-        phys = PhysType.LIST
     # narrow types (int8/16, uint8/16/32, float16) store WIDENED — the
     # parquet INT_8-over-INT32 stance; the footer keeps the original type
     # and decode casts back (types.widened). orig_t predates any >2GB
@@ -247,9 +259,12 @@ def _encode_chunk(
     )
     n = len(arr)
     raw = raw_byte_size(arr)
-    stats = sample_stats(arr, phys, config.selector_sample_values)
-    encoding = selector.choose(name, phys, stats, config)
     fb = selector.fallback_encoding(phys)
+    if fixed:
+        encoding = fb = colcodec.child_fallback(phys)
+    else:
+        stats = sample_stats(arr, phys, config.selector_sample_values)
+        encoding = selector.choose(name, phys, stats, config)
     trial_fsst_table = None
     if encoding == Encoding.FSST and config.encoding_for(name) == "auto":
         trial_fsst_table = _fsst_trial(
@@ -268,8 +283,11 @@ def _encode_chunk(
         "dict": None,
     }
 
-    avg_bytes = raw / max(n, 1)
-    ranges = _page_ranges(n, avg_bytes, config)
+    flat = leaf_pages is None
+    # per page: (values start, end, first row, rows, entries, levels)
+    pages = leaf_pages if not flat else [
+        (s, e, s, e - s, e - s, None)
+        for s, e in _page_ranges(n, raw / max(n, 1), config)]
 
     dict_values = None
     indices = None
@@ -310,6 +328,7 @@ def _encode_chunk(
     # chunk back from DICT: the distinct set is encoding-independent.)
     if (
         config.bloom_filter_enabled
+        and flat
         and phys in IS_VARLEN
         and n > 0
         and stats.avg_len <= config.bloom_filter_max_avg_len
@@ -333,18 +352,21 @@ def _encode_chunk(
     alp_hint = None  # one (mode, e, f) plan per chunk, shared by all pages
     pages_out: list[_PageOut] = []
     i = 0
-    while i < len(ranges):
-        s, e = ranges[i]
+    while i < len(pages):
+        s, e, first_row, n_rows, n_entries, levels = pages[i]
         sl = arr.slice(s, e - s)
-        mask, n_nulls = _validity_of(sl)
-        validity = rle.encode_validity(mask) if mask is not None else b""
+        if flat:
+            mask, n_nulls = _validity_of(sl)
+            validity = rle.encode_validity(mask) if mask is not None else b""
+        else:
+            mask, n_nulls, validity = None, n_entries - (e - s), levels
         if encoding == Encoding.DICT:
             page_idx = indices[s:e]
             if mask is not None:
                 page_idx = page_idx[mask]  # only non-null slots are stored
             values = colcodec.encode_dict_indices(page_idx, len(dict_values))
         else:
-            nonnull = sl.drop_null() if n_nulls else sl
+            nonnull = sl.drop_null() if mask is not None else sl
             if encoding == Encoding.FSST and fsst_table is None:
                 from webcodec.kernels import fsst as _fsst
 
@@ -362,7 +384,7 @@ def _encode_chunk(
             )
         # A7 guard on the FIRST page: encoded (+dict) must beat raw, else fall back
         if i == 0 and not tried_fallback:
-            page_raw = raw_byte_size(sl)
+            page_raw = raw_byte_size(sl) + (0 if flat else len(levels))
             dict_sz = chunk["dict"]["uncompressed_size"] if chunk["dict"] else 0
             if not selector.is_compression_satisfying(page_raw + 1, len(values) + len(validity), dict_sz):
                 encoding = fb
@@ -371,11 +393,15 @@ def _encode_chunk(
                 dict_values = None
                 continue  # re-encode page 0 with the fallback
         st = page_stats(sl, phys, config.statistics_truncate_length,
-                        unsigned64=orig_t.equals(pa.uint64())) if config.statistics_enabled else None
+                        unsigned64=orig_t.equals(pa.uint64())) if (
+                            flat and config.statistics_enabled) else None
         p = _build_page(
-            PAGE_DATA, encoding, codec, phys, e - s, n_nulls, validity, values,
-            s, st, config.write_page_checksum, level, fcrypto, aad_base,
+            PAGE_DATA, encoding, codec, phys, n_entries, n_nulls, validity,
+            values, first_row, st, config.write_page_checksum, level, fcrypto,
+            aad_base,
         )
+        if not flat:
+            p.meta["n_rows"] = n_rows
         pages_out.append(p)
         encoded_total += len(values) + len(validity)
         i += 1
@@ -414,601 +440,169 @@ def _encode_chunk(
     return chunk, offset
 
 
-_STRUCT_SEP = "\x1f"  # footer-internal child-chunk name separator
+_LEAF_SEP = "\x1f"  # "<col>\x1f<dotted leaf path>" names a Dremel leaf chunk
+_PHYS_CODES = set(PhysType)
 
 
-def _encode_any_chunks(
-    name: str, arr: pa.Array, config: EncoderConfig, out: io.BufferedIOBase, offset0: int
-) -> tuple[list[dict], int]:
-    """Recursive shredding dispatcher (SURVEY §2 E1, full Dremel scope):
-    struct / map / list<struct> / list<list|map> parents shred into aligned
-    child chunks and RECURSE through this dispatcher, so arbitrary nesting
-    (struct<struct<...>>, list<list<list<...>>>, struct<list<struct>>,
-    map<_, struct>, list<map>) composes from the same four constructions.
-    Every emitted chunk keeps the top-level row count, so page pruning,
-    keep-masks and row-range splits apply unchanged at any depth."""
-    if isinstance(arr, pa.ChunkedArray):
-        if arr.num_chunks == 1:
-            arr = arr.chunk(0)  # zero-copy unwrap — combine would copy
-        else:
-            try:
-                arr = arr.combine_chunks()
-            except pa.ArrowInvalid:
-                # >2GB varlen column (32-bit offset overflow): _encode_chunk
-                # handles the large_* widening itself — pass the chunked array
-                # through (it only dispatches on .type here)
-                if not (pa.types.is_binary(arr.type) or pa.types.is_string(arr.type)):
-                    raise
+def _is_dremel(arr: pa.Array) -> bool:
+    """Nested and decimal columns store as Dremel leaves, except the
+    LIST_FLOAT32 fast path: list<float32> (or a variant), no null elements."""
     t = arr.type
-    if (pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t)) and (
-        pa.types.is_struct(t.value_type) or pa.types.is_map(t.value_type)
-        or pa.types.is_list(t.value_type) or pa.types.is_decimal(t.value_type)
-    ):
-        # offset-width/fixed-length variants of NESTED lists normalize to
-        # plain list<> so the recursive handlers below engage; they decode
-        # as list<> (the flat-primitive variants restore exactly via the
-        # chunk type — types.widened)
-        arr = arr.cast(pa.list_(t.value_field))
-        t = arr.type
-    if pa.types.is_decimal(t):
-        return _encode_decimal_chunks(name, arr, config, out, offset0)
-    if pa.types.is_list(t) and pa.types.is_decimal(t.value_type):
-        # list<decimal128> gets its own lo/hi-lane shredding; every other
-        # nested-decimal composition reduces to it through the recursive
-        # handlers below (map items/keys and list<list> #flat values are
-        # re-wrapped as lists and re-dispatched here)
-        return _encode_list_decimal_chunks(name, arr, config, out, offset0)
-    if pa.types.is_struct(t):
-        return _encode_struct_chunks(name, arr, config, out, offset0)
-    if pa.types.is_map(t):
-        return _encode_map_chunks(name, arr, config, out, offset0)
-    if pa.types.is_list(t) and pa.types.is_struct(t.value_type):
-        return _encode_list_struct_chunks(name, arr, config, out, offset0)
-    if pa.types.is_list(t) and (
-        pa.types.is_list(t.value_type) or pa.types.is_map(t.value_type)
-    ):
-        return _encode_list_list_chunks(name, arr, config, out, offset0)
-    chunk, offset = _encode_chunk(name, arr, config, out, offset0)
-    return [chunk], offset
+    return pa.types.is_decimal(t) or pa.types.is_nested(t) and not (
+        (widened(t) or t).equals(pa.list_(pa.float32()))
+        and pc.list_flatten(arr).null_count == 0)
 
 
-def _decode_any_chunks(
-    buf: memoryview, group: dict, chunk: dict, verify_crc: bool, keep: np.ndarray | None
-) -> pa.Array:
-    """Decode twin of :func:`_encode_any_chunks` — dispatch on parent meta."""
-    if chunk.get("decimal"):
-        return _decode_decimal_chunks(buf, group, chunk, verify_crc, keep)
-    if chunk.get("struct"):
-        return _decode_struct_chunks(buf, group, chunk, verify_crc, keep)
-    if chunk.get("map"):
-        return _decode_map_chunks(buf, group, chunk, verify_crc, keep)
-    if chunk.get("liststruct"):
-        return _decode_list_struct_chunks(buf, group, chunk, verify_crc, keep)
-    if chunk.get("listlist"):
-        return _decode_list_list_chunks(buf, group, chunk, verify_crc, keep)
-    if chunk.get("listdecimal"):
-        return _decode_list_decimal_chunks(buf, group, chunk, verify_crc, keep)
-    return _decode_chunk(buf, chunk, verify_crc, keep=keep)
+def _leaf_pages(lf: dict, cuts: np.ndarray) -> list[tuple]:
+    """:func:`_encode_chunk` page plan of a ``dremel.shred`` leaf, cut at the
+    column's top-level row boundaries ``cuts`` (a row starts at a rep-0 entry)."""
+    defs, rep = lf["defs"], lf["rep"]
+    starts = np.flatnonzero(rep == 0) if rep is not None else np.arange(len(defs))
+    ent = np.append(starts, len(defs))[cuts]
+    val = np.concatenate(([0], np.cumsum(defs == lf["max_def"])))[ent]
+    pages = []
+    for i in range(len(cuts) - 1):
+        es, ee = int(ent[i]), int(ent[i + 1])
+        levels = dremel.pack_levels(rep[es:ee] if rep is not None else None,
+                                    defs[es:ee], lf["max_rep"], lf["max_def"])
+        pages.append((int(val[i]), int(val[i + 1]), int(cuts[i]),
+                      int(cuts[i + 1] - cuts[i]), ee - es, levels))
+    return pages
 
 
-def _encode_decimal_chunks(
-    name: str, arr: pa.Array, config: EncoderConfig, out: io.BufferedIOBase, offset0: int
+def _decimal_lanes(values: pa.Array) -> list[pa.Array]:
+    """The little-endian int64 lanes of a decimal128/256 array (2 or 4):
+    the low lane IS the value for |v| < 2^63 and FOR+delta eats it; the
+    others are then pure sign extension and collapse under RLE/dictionary."""
+    k = values.type.byte_width // 8
+    m = np.frombuffer(values.buffers()[1], "<i8", count=k * (values.offset + len(values)))
+    m = m[k * values.offset:].reshape(-1, k)
+    return [pa.array(np.ascontiguousarray(m[:, j])) for j in range(k)]
+
+
+def _encode_dremel(
+    name: str, arr: pa.ChunkedArray, config: EncoderConfig, out: io.BufferedIOBase, offset: int
 ) -> tuple[list[dict], int]:
-    """decimal128(p,s) shredding (parquet stores decimals as int32/int64/FLBA
-    by precision; we split the 128-bit little-endian unscaled value into two
-    aligned int64 LANE chunks instead): the low lane IS the value for
-    |v| < 2^63 and FOR+delta eats it; the high lane is pure sign extension
-    there, so RLE collapses it to bytes. Full 38-digit precision round-trips
-    bit-identically. Parent chunk carries validity + (precision, scale)."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    validity = arr.is_valid()
-    parent, offset = _encode_chunk(name, validity, config, out, offset0)
-    parent["decimal"] = {
-        "precision": arr.type.precision,
-        "scale": arr.type.scale,
-        "null_count": int(arr.null_count),
-    }
-    parent["raw_bytes"] = 16 * len(arr)
-    lanes = np.frombuffer(
-        arr.buffers()[1], dtype="<i8", count=2 * (arr.offset + len(arr))
-    )[2 * arr.offset :]
-    chunks = [parent]
-    for suffix, lane in (("#lo", lanes[0::2]), ("#hi", lanes[1::2])):
-        c, offset = _encode_chunk(
-            f"{name}{_STRUCT_SEP}{suffix}",
-            pa.array(np.ascontiguousarray(lane), pa.int64()),
-            config, out, offset,
-        )
-        c["raw_bytes"] = 0  # raw accounted on the parent (16B/value)
-        chunks.append(c)
-    return chunks, offset
-
-
-def _decode_decimal_chunks(
-    buf: memoryview, group: dict, parent: dict, verify_crc: bool, keep: np.ndarray | None
-) -> pa.Array:
-    meta = parent["decimal"]
-    name = parent["name"]
-    lo = _decode_chunk(buf, _child_chunk(group, name, "#lo"), verify_crc, keep=keep)
-    hi = _decode_chunk(buf, _child_chunk(group, name, "#hi"), verify_crc, keep=keep)
-    n = len(lo)
-    data = np.empty(2 * n, dtype="<i8")
-    data[0::2] = lo.to_numpy(zero_copy_only=False)
-    data[1::2] = hi.to_numpy(zero_copy_only=False)
-    vbuf = None
-    if meta["null_count"]:
-        valid = _decode_chunk(buf, parent, verify_crc, keep=keep)
-        m = np.asarray(valid, dtype=bool)
-        vbuf = pa.py_buffer(np.packbits(m, bitorder="little").tobytes())
-    return pa.Array.from_buffers(
-        pa.decimal128(meta["precision"], meta["scale"]), n,
-        [vbuf, pa.py_buffer(data.tobytes())],
-    )
-
-
-def _encode_list_decimal_chunks(
-    name: str, arr: pa.Array, config: EncoderConfig, out: io.BufferedIOBase, offset0: int
-) -> tuple[list[dict], int]:
-    """list<decimal128(p,s)> shredding: outer validity as BOOL parent; the
-    values' lo/hi int64 lanes (same split as :func:`_encode_decimal_chunks`)
-    wrapped as generic-LIST chunks SHARING the outer offsets, so FOR+delta
-    and RLE apply per lane exactly as at top level; value validity travels
-    as an aligned list<bool> when present. map<_, decimal> and
-    list<list<decimal>> reduce to this through the map/list-list handlers'
-    recursion. The #lo list's own offsets restore the outer offsets on
-    decode (same trick as list<list>'s #lens chunk)."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    values = arr.values  # DecimalArray, absolute w.r.t. arr.offsets
-    validity = arr.is_valid()
-    parent, offset = _encode_chunk(name, validity, config, out, offset0)
-    parent["listdecimal"] = {
-        "elem_name": arr.type.value_field.name,
-        "elem_nullable": arr.type.value_field.nullable,
-        "precision": values.type.precision,
-        "scale": values.type.scale,
-        "null_count": int(arr.null_count),
-        "value_null_count": int(values.null_count),
-    }
-    parent["raw_bytes"] = 16 * len(values)
-    lanes = np.frombuffer(
-        values.buffers()[1], dtype="<i8", count=2 * (values.offset + len(values))
-    )[2 * values.offset :]
-    off = arr.offsets
-    chunks = [parent]
-    if values.null_count:
-        vv = pa.ListArray.from_arrays(off, values.is_valid())
-        c, offset = _encode_chunk(f"{name}{_STRUCT_SEP}#valid", vv, config, out, offset)
-        chunks.append(c)
-    for suffix, lane in (("#lo", lanes[0::2]), ("#hi", lanes[1::2])):
-        ll = pa.ListArray.from_arrays(
-            off, pa.array(np.ascontiguousarray(lane), pa.int64())
-        )
-        c, offset = _encode_chunk(f"{name}{_STRUCT_SEP}{suffix}", ll, config, out, offset)
-        c["raw_bytes"] = 0  # raw accounted on the parent (16B/value)
-        chunks.append(c)
-    return chunks, offset
-
-
-def _decode_list_decimal_chunks(
-    buf: memoryview, group: dict, parent: dict, verify_crc: bool, keep: np.ndarray | None
-) -> pa.Array:
-    meta = parent["listdecimal"]
-    name = parent["name"]
-    lo_l = _decode_chunk(buf, _child_chunk(group, name, "#lo"), verify_crc, keep=keep)
-    hi_l = _decode_chunk(buf, _child_chunk(group, name, "#hi"), verify_crc, keep=keep)
-    lo = np.asarray(lo_l.flatten(), dtype=np.int64)
-    hi = np.asarray(hi_l.flatten(), dtype=np.int64)
-    n = len(lo)
-    data = np.empty(2 * n, dtype="<i8")
-    data[0::2] = lo
-    data[1::2] = hi
-    vbuf = None
-    if meta["value_null_count"]:
-        vv = _decode_chunk(buf, _child_chunk(group, name, "#valid"), verify_crc, keep=keep)
-        m = np.asarray(vv.flatten(), dtype=bool)
-        vbuf = pa.py_buffer(np.packbits(m, bitorder="little").tobytes())
-    values = pa.Array.from_buffers(
-        pa.decimal128(meta["precision"], meta["scale"]), n,
-        [vbuf, pa.py_buffer(data.tobytes())],
-    )
-    validity_buf = None
-    if meta["null_count"]:
-        valid = _decode_chunk(buf, parent, verify_crc, keep=keep)
-        m = np.asarray(valid, dtype=bool)
-        validity_buf = pa.py_buffer(np.packbits(m, bitorder="little").tobytes())
-    ltype = pa.list_(
-        pa.field(meta["elem_name"], values.type, nullable=meta["elem_nullable"])
-    )
-    return pa.Array.from_buffers(
-        ltype, len(lo_l), [validity_buf, lo_l.buffers()[1]], children=[values]
-    )
-
-
-def _encode_struct_chunks(
-    name: str, arr: pa.Array, config: EncoderConfig, out: io.BufferedIOBase, offset0: int
-) -> tuple[list[dict], int]:
-    """One-level Dremel-style struct shredding (SURVEY §2 E1 subset): the
-    parent chunk stores the struct's own validity as BOOL pages plus child
-    field metadata; every child field becomes an ordinary column chunk
-    (name-spaced) with its OWN codec selection — a dict-coded child next to
-    a delta-coded one, exactly like top-level columns. Children are encoded
-    raw (values under null parents included), so round-trip is bit-identical."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if arr.type.num_fields == 0:
-        raise TypeError(f"empty struct column unsupported: {name}")
-    fnames = [arr.type.field(i).name for i in range(arr.type.num_fields)]
-    if len(set(fnames)) != len(fnames):
-        # Arrow permits duplicate struct field names; our child chunks are
-        # name-spaced, so duplicates would all decode from the FIRST field's
-        # chunk — silent wrong data. Refuse loudly.
-        raise TypeError(
-            f"struct column {name!r} has duplicate field names {fnames}; "
-            "rename the fields before encoding"
-        )
-    validity = arr.is_valid()
-    parent, offset = _encode_chunk(name, validity, config, out, offset0)
-    parent["struct"] = {
-        "fields": [
-            {"name": f.name, "nullable": f.nullable} for f in arr.type
-        ],
-        "null_count": int(arr.null_count),
-    }
-    parent["raw_bytes"] = 0  # raw accounting lives on the children
-    chunks = [parent]
-    for i, f in enumerate(arr.type):
-        cs, offset = _encode_any_chunks(
-            f"{name}{_STRUCT_SEP}{f.name}", arr.field(i), config, out, offset
-        )
-        chunks.extend(cs)
-    return chunks, offset
-
-
-def _decode_struct_chunks(
-    buf: memoryview, group: dict, parent: dict, verify_crc: bool, keep: np.ndarray | None
-) -> pa.Array:
-    """Reassemble a shredded struct column: decode the parent validity (BOOL)
-    and every child chunk under the same keep-mask (row-range sync holds —
-    all chunks of a group share page row numbering), then rebuild the exact
-    original type via StructArray.from_arrays(fields=...)."""
-    meta = parent["struct"]
-    name = parent["name"]
-    children, fields = [], []
-    for fm in meta["fields"]:
-        cname = f"{name}{_STRUCT_SEP}{fm['name']}"
-        cchunk = next(c for c in group["chunks"] if c["name"] == cname)
-        child = _decode_any_chunks(buf, group, cchunk, verify_crc, keep)
-        children.append(child)
-        fields.append(pa.field(fm["name"], child.type, nullable=fm["nullable"]))
-    mask = None
-    if meta["null_count"]:
-        import pyarrow.compute as _pc
-
-        valid = _decode_chunk(buf, parent, verify_crc, keep=keep)
-        mask = _pc.invert(valid)
-    return pa.StructArray.from_arrays(children, fields=fields, mask=mask)
-
-
-def _encode_map_chunks(
-    name: str, arr: pa.Array, config: EncoderConfig, out: io.BufferedIOBase, offset0: int
-) -> tuple[list[dict], int]:
-    """Map shredding (map = list<struct<key,value>> in Arrow): the parent
-    chunk stores the map's own validity as BOOL pages; keys and values
-    become two generic-LIST chunks SHARING the parent's offsets (lengths
-    FOR+delta + child payload, independent codec selection per side — a
-    dict-coded key column next to delta-coded values). Null maps are stored
-    as empty entry lists; the parent validity restores them on decode."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    validity = arr.is_valid()
-    parent, offset = _encode_chunk(name, validity, config, out, offset0)
-    parent["map"] = {
-        "null_count": int(arr.null_count),
-        "item_nullable": arr.type.item_field.nullable,
-    }
-    parent["raw_bytes"] = 0  # raw accounting lives on the key/item chunks
-    # MapArray subclasses ListArray: .offsets honors slicing, .values is the
-    # entries struct (absolute — consistent with the offsets)
-    entries = arr.values
-    kl = pa.ListArray.from_arrays(arr.offsets, entries.field(0))
-    il = pa.ListArray.from_arrays(arr.offsets, entries.field(1))
-    chunks = [parent]
-    for suffix, child in (("keys", kl), ("items", il)):
-        cs, offset = _encode_any_chunks(
-            f"{name}{_STRUCT_SEP}{suffix}", child, config, out, offset
-        )
-        chunks.extend(cs)
-    return chunks, offset
-
-
-def _decode_map_chunks(
-    buf: memoryview, group: dict, parent: dict, verify_crc: bool, keep: np.ndarray | None
-) -> pa.Array:
-    """Reassemble a shredded map column: decode the keys/items lists under
-    the same keep-mask, zip them back into the entries struct, and rebuild
-    the MapArray from buffers (validity bitmap + the keys list's offsets)."""
-    name = parent["name"]
-    kl = _decode_any_chunks(
-        buf, group,
-        next(c for c in group["chunks"] if c["name"] == f"{name}{_STRUCT_SEP}keys"),
-        verify_crc, keep,
-    )
-    il = _decode_any_chunks(
-        buf, group,
-        next(c for c in group["chunks"] if c["name"] == f"{name}{_STRUCT_SEP}items"),
-        verify_crc, keep,
-    )
-    entries = pa.StructArray.from_arrays(
-        [kl.flatten(), il.flatten()],
-        fields=[
-            pa.field("key", kl.type.value_type, nullable=False),
-            pa.field("value", il.type.value_type, nullable=parent["map"]["item_nullable"]),
-        ],
-    )
-    validity_buf = None
-    if parent["map"]["null_count"]:
-        valid = _decode_chunk(buf, parent, verify_crc, keep=keep)
-        mask = np.asarray(valid, dtype=bool)
-        validity_buf = pa.py_buffer(np.packbits(mask, bitorder="little").tobytes())
-    mtype = pa.map_(entries.type.field(0), entries.type.field(1))
-    return pa.Array.from_buffers(
-        mtype, len(kl), [validity_buf, kl.buffers()[1]], children=[entries]
-    )
-
-
-def _encode_list_struct_chunks(
-    name: str, arr: pa.Array, config: EncoderConfig, out: io.BufferedIOBase, offset0: int
-) -> tuple[list[dict], int]:
-    """list<struct<primitives>> shredding (E2/E3 analogue of Dremel repeated
-    groups): the parent chunk stores the outer validity as BOOL pages; each
-    struct field becomes a generic-LIST chunk SHARING the outer offsets, so
-    per-field codec selection still applies. Entry (inner struct) validity,
-    when present, travels as an aligned list<bool> chunk."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    st = arr.type.value_type
-    fnames = [st.field(i).name for i in range(st.num_fields)]
-    if len(set(fnames)) != len(fnames):
-        raise TypeError(
-            f"list<struct> column {name!r} has duplicate field names "
-            f"{fnames}; rename the fields before encoding"
-        )
-    validity = arr.is_valid()
-    parent, offset = _encode_chunk(name, validity, config, out, offset0)
-    entries = arr.values  # StructArray, absolute w.r.t. arr.offsets
-    off = arr.offsets
-    parent["liststruct"] = {
-        "elem_name": arr.type.value_field.name,
-        "elem_nullable": arr.type.value_field.nullable,
-        "entry_null_count": int(entries.null_count),
-        "null_count": int(arr.null_count),
-        "fields": [{"name": f.name, "nullable": f.nullable} for f in entries.type],
-    }
-    parent["raw_bytes"] = 0
-    chunks = [parent]
-    if entries.null_count:
-        ev = pa.ListArray.from_arrays(off, entries.is_valid())
-        c, offset = _encode_chunk(f"{name}{_STRUCT_SEP}#valid", ev, config, out, offset)
-        chunks.append(c)
-    for i, f in enumerate(entries.type):
-        # each field wrapped as a list sharing the outer offsets; nested
-        # field types recurse through the dispatcher (list<struct<...>>,
-        # list<list<...>>, list<map<...>>)
-        fl = pa.ListArray.from_arrays(off, entries.field(i))
-        cs, offset = _encode_any_chunks(
-            f"{name}{_STRUCT_SEP}{f.name}", fl, config, out, offset
-        )
-        chunks.extend(cs)
-    return chunks, offset
-
-
-def _decode_list_struct_chunks(
-    buf: memoryview, group: dict, parent: dict, verify_crc: bool, keep: np.ndarray | None
-) -> pa.Array:
-    meta = parent["liststruct"]
-    name = parent["name"]
-    flats, fields = [], []
-    first_list = None
-    for fm in meta["fields"]:
-        fl = _decode_any_chunks(
-            buf, group,
-            next(c for c in group["chunks"] if c["name"] == f"{name}{_STRUCT_SEP}{fm['name']}"),
-            verify_crc, keep,
-        )
-        if first_list is None:
-            first_list = fl
-        flat = fl.flatten()
-        flats.append(flat)
-        fields.append(pa.field(fm["name"], flat.type, nullable=fm["nullable"]))
-    mask = None
-    if meta["entry_null_count"]:
-        ev = _decode_chunk(
-            buf,
-            next(c for c in group["chunks"] if c["name"] == f"{name}{_STRUCT_SEP}#valid"),
-            verify_crc, keep=keep,
-        )
-        mask = pa.array(~np.asarray(ev.flatten(), dtype=bool))
-    entries = pa.StructArray.from_arrays(flats, fields=fields, mask=mask)
-    validity_buf = None
-    if meta["null_count"]:
-        valid = _decode_chunk(buf, parent, verify_crc, keep=keep)
-        m = np.asarray(valid, dtype=bool)
-        validity_buf = pa.py_buffer(np.packbits(m, bitorder="little").tobytes())
-    ltype = pa.list_(pa.field(meta["elem_name"], entries.type, nullable=meta["elem_nullable"]))
-    return pa.Array.from_buffers(
-        ltype, len(first_list), [validity_buf, first_list.buffers()[1]], children=[entries]
-    )
-
-
-def _encode_list_list_chunks(
-    name: str, arr: pa.Array, config: EncoderConfig, out: io.BufferedIOBase, offset0: int
-) -> tuple[list[dict], int]:
-    """list<list<primitive>> shredding (E3, two repetition levels): outer
-    validity as BOOL parent; inner lengths as an aligned list<int32> chunk
-    (FOR+delta eats the small ints); inner validity as an aligned list<bool>
-    when present; values two-level-flattened into an aligned list<primitive>
-    chunk. All four chunks share outer row numbering, so page pruning and
-    keep-masks compose for free."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    validity = arr.is_valid()
-    parent, offset = _encode_chunk(name, validity, config, out, offset0)
-    # inner repeated level: ListArray OR MapArray (same offsets layout),
-    # absolute w.r.t. arr.offsets
-    inner = arr.values
-    inner_is_map = pa.types.is_map(inner.type)
-    off_np = np.asarray(arr.offsets, dtype=np.int64)
-    inner_off_np = np.frombuffer(
-        inner.buffers()[1], dtype=np.int32, count=inner.offset + len(inner) + 1
-    )[inner.offset :].astype(np.int64)
-    parent["listlist"] = {
-        "elem_name": arr.type.value_field.name,
-        "elem_nullable": arr.type.value_field.nullable,
-        "inner_kind": "map" if inner_is_map else "list",
-        "inner_elem_name": "entries" if inner_is_map else inner.type.value_field.name,
-        "inner_elem_nullable": (
-            inner.type.item_field.nullable if inner_is_map
-            else inner.type.value_field.nullable
-        ),
-        "inner_null_count": int(inner.null_count),
-        "null_count": int(arr.null_count),
-    }
-    parent["raw_bytes"] = 0
-    chunks = [parent]
-    lens_child = pa.array(np.diff(inner_off_np).astype(np.int32), pa.int32())
-    lens_l = pa.ListArray.from_arrays(arr.offsets, lens_child)
-    c, offset = _encode_chunk(f"{name}{_STRUCT_SEP}#lens", lens_l, config, out, offset)
-    chunks.append(c)
-    if inner.null_count:
-        iv = pa.ListArray.from_arrays(arr.offsets, inner.is_valid())
-        c, offset = _encode_chunk(f"{name}{_STRUCT_SEP}#valid", iv, config, out, offset)
-        chunks.append(c)
-    flat_off = inner_off_np[off_np].astype(np.int32)
-    flat_l = pa.ListArray.from_arrays(pa.array(flat_off, pa.int32()), inner.values)
-    # two-level-flattened values: primitives land in one generic-LIST chunk;
-    # deeper nesting (list<list<list>>, list<map>, struct values) recurses
-    cs, offset = _encode_any_chunks(f"{name}{_STRUCT_SEP}#flat", flat_l, config, out, offset)
-    chunks.extend(cs)
-    return chunks, offset
-
-
-def _decode_list_list_chunks(
-    buf: memoryview, group: dict, parent: dict, verify_crc: bool, keep: np.ndarray | None
-) -> pa.Array:
-    meta = parent["listlist"]
-    name = parent["name"]
-    lens_l = _decode_chunk(
-        buf, next(c for c in group["chunks"] if c["name"] == f"{name}{_STRUCT_SEP}#lens"),
-        verify_crc, keep=keep,
-    )
-    flat_l = _decode_any_chunks(
-        buf, group,
-        next(c for c in group["chunks"] if c["name"] == f"{name}{_STRUCT_SEP}#flat"),
-        verify_crc, keep,
-    )
-    lens_flat = np.asarray(lens_l.flatten(), dtype=np.int64)
-    inner_off = np.zeros(len(lens_flat) + 1, dtype=np.int32)
-    inner_off[1:] = np.cumsum(lens_flat)
-    inner_validity = None
-    if meta["inner_null_count"]:
-        iv = _decode_chunk(
-            buf, next(c for c in group["chunks"] if c["name"] == f"{name}{_STRUCT_SEP}#valid"),
-            verify_crc, keep=keep,
-        )
-        inner_validity = np.asarray(iv.flatten(), dtype=bool)
-    if meta.get("inner_kind") == "map":
-        entries = flat_l.flatten()  # struct<key,value>
-        itype = pa.map_(
-            entries.type.field(0).with_nullable(False),
-            entries.type.field(1).with_nullable(meta["inner_elem_nullable"]),
-        )
-        vbuf = (
-            pa.py_buffer(np.packbits(inner_validity, bitorder="little").tobytes())
-            if inner_validity is not None
-            else None
-        )
-        inner = pa.Array.from_buffers(
-            itype, len(lens_flat),
-            [vbuf, pa.py_buffer(inner_off.tobytes())], children=[entries],
-        )
-    else:
-        mask = pa.array(~inner_validity) if inner_validity is not None else None
-        inner = pa.ListArray.from_arrays(
-            pa.array(inner_off, pa.int32()), flat_l.flatten(), mask=mask
-        )
-        itype = pa.list_(
-            pa.field(meta["inner_elem_name"], flat_l.type.value_type,
-                     nullable=meta["inner_elem_nullable"])
-        )
-        if inner.type != itype:
-            inner = inner.cast(itype)
-    validity_buf = None
-    if meta["null_count"]:
-        valid = _decode_chunk(buf, parent, verify_crc, keep=keep)
-        m = np.asarray(valid, dtype=bool)
-        validity_buf = pa.py_buffer(np.packbits(m, bitorder="little").tobytes())
-    ltype = pa.list_(pa.field(meta["elem_name"], itype, nullable=meta["elem_nullable"]))
-    return pa.Array.from_buffers(
-        ltype, len(lens_l), [validity_buf, lens_l.buffers()[1]], children=[inner]
-    )
-
-
-def _child_chunk(group: dict, parent_name: str, suffix: str) -> dict:
-    return next(
-        c for c in group["chunks"]
-        if c["name"] == f"{parent_name}{_STRUCT_SEP}{suffix}"
-    )
-
-
-def _chunk_arrow_type(group: dict, chunk: dict) -> pa.DataType:
-    """Arrow type of a chunk as projected to the user — nested parents
-    rebuild their type from the child chunks, recursively."""
-    if chunk.get("decimal"):
-        return pa.decimal128(chunk["decimal"]["precision"], chunk["decimal"]["scale"])
-    if chunk.get("struct"):
-        fields = []
-        for fm in chunk["struct"]["fields"]:
-            cc = _child_chunk(group, chunk["name"], fm["name"])
-            fields.append(
-                pa.field(fm["name"], _chunk_arrow_type(group, cc), nullable=fm["nullable"])
+    """Encode a nested or decimal column as Dremel leaves (module docstring).
+    A decimal leaf's value codec is its int64 lanes: lane 0 in the leaf
+    chunk, lanes 1.. in ``#1``.. chunks with the same pages. A leaf under no
+    list gets sampled selection, one under a list the fixed child encoding."""
+    arr = arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
+    t_out = dremel.plain_lists(arr.type, nested_only=True)
+    t = dremel.plain_lists(arr.type)
+    leaves = dremel.shred(name, arr.cast(t) if t != arr.type else arr,
+                          all_optional=False)
+    names = [f"{name}{_LEAF_SEP}{'.'.join(lf['path'])}" for lf in leaves]
+    if len(set(names)) != len(names):
+        raise TypeError(f"column {name!r} has duplicate field names (leaf paths "
+                        f"{names}); rename the fields before encoding")
+    n = len(arr)
+    raw = raw_byte_size(arr)
+    cuts = np.array([s for s, _ in _page_ranges(n, raw / max(n, 1), config)] + [n])
+    schema = pa.schema([pa.field(name, t_out)]).serialize()
+    chunks = [{
+        "name": name, "type": arrow_type_json(t_out),
+        "dremel": {"schema": base64.b64encode(schema).decode(), "leaves": names},
+        "raw_bytes": int(raw), "encoded_bytes": 0, "compressed_bytes": 0,
+        "encoding": None, "pages": [], "dict": None,
+        "stats": {"min": None, "max": None, "null_count": int(arr.null_count)},
+    }]
+    for lname, lf in zip(names, leaves):
+        pages = _leaf_pages(lf, cuts)
+        lanes = (_decimal_lanes(lf["leaf"]) if pa.types.is_decimal(lf["type"])
+                 else [lf["leaf"]])
+        for j, lane in enumerate(lanes):
+            c, offset = _encode_chunk(
+                f"{lname}#{j}" if j else lname, lane, config, out, offset,
+                pages if j == 0 else [p[:4] + (p[1] - p[0], b"") for p in pages],
+                fixed=lf["max_rep"] > 0,
             )
-        return pa.struct(fields)
-    if chunk.get("map"):
-        kt = _chunk_arrow_type(group, _child_chunk(group, chunk["name"], "keys")).value_type
-        vt = _chunk_arrow_type(group, _child_chunk(group, chunk["name"], "items")).value_type
-        return pa.map_(
-            pa.field("key", kt, nullable=False),
-            pa.field("value", vt, nullable=chunk["map"]["item_nullable"]),
-        )
-    if chunk.get("liststruct"):
-        meta = chunk["liststruct"]
-        fields = []
-        for fm in meta["fields"]:
-            ct = _chunk_arrow_type(
-                group, _child_chunk(group, chunk["name"], fm["name"])
-            ).value_type
-            fields.append(pa.field(fm["name"], ct, nullable=fm["nullable"]))
-        return pa.list_(
-            pa.field(meta["elem_name"], pa.struct(fields), nullable=meta["elem_nullable"])
-        )
-    if chunk.get("listlist"):
-        meta = chunk["listlist"]
-        vt = _chunk_arrow_type(
-            group, _child_chunk(group, chunk["name"], "#flat")
-        ).value_type
-        if meta.get("inner_kind") == "map":
-            itype = pa.map_(
-                vt.field(0).with_nullable(False),
-                vt.field(1).with_nullable(meta["inner_elem_nullable"]),
-            )
-        else:
-            itype = pa.list_(
-                pa.field(meta["inner_elem_name"], vt, nullable=meta["inner_elem_nullable"])
-            )
-        return pa.list_(pa.field(meta["elem_name"], itype, nullable=meta["elem_nullable"]))
+            c["raw_bytes"] = 0  # raw accounted on the column entry
+            if j == 0:
+                c["levels"] = [lf["max_rep"], lf["max_def"]]
+            chunks.append(c)
+    return chunks, offset
+
+
+def _column_chunk(group: dict, name: str) -> dict:
+    """The footer entry of column ``name``; ``ValueError`` when the file
+    lacks it or keeps a retired layout: an unknown phys code, or a BOOL
+    entry with child chunks (the shape-specific nested layouts' parent)."""
+    chunk = next((c for c in group["chunks"] if c["name"] == name), None)
+    if chunk is None:
+        raise ValueError(f"column {name!r} is not in the file")
+    if "dremel" not in chunk and (chunk["phys"] not in _PHYS_CODES or (
+            chunk["phys"] == PhysType.BOOL and any(
+                c["name"].startswith(name + _LEAF_SEP) for c in group["chunks"]))):
+        raise ValueError(f"column {name!r} is stored in a retired nested "
+                         "layout; re-encode the file")
+    return chunk
+
+
+def _column_type(chunk: dict) -> pa.DataType:
+    if "dremel" in chunk:
+        schema = base64.b64decode(chunk["dremel"]["schema"])
+        return pa.ipc.read_schema(pa.py_buffer(schema)).field(0).type
     return arrow_type_from_json(chunk["type"])
+
+
+def _read_leaf(buf: memoryview, group: dict, chunk: dict, t: pa.DataType,
+               kept: list[int], verify_crc: bool) -> dict:
+    """A leaf's entry stream over its ``kept`` pages (at least one), for
+    ``dremel.assemble``; levels that disagree with their page raise ``ValueError``."""
+    max_rep, max_def = chunk["levels"]
+    reps, defs = [], []
+
+    def values(c, check_levels):
+        parts = []
+        for pm, arr, n, n_nulls, levels in _data_pages(buf, c, verify_crc, kept):
+            parts.append(arr)
+            if not check_levels:
+                continue
+            rep, dfn = dremel.unpack_levels(levels, n, max_rep, max_def)
+            rows = n if rep is None else int(np.count_nonzero(rep == 0))
+            if (n != pm["n_values"] or rows != pm["n_rows"]
+                    or np.count_nonzero(dfn == max_def) != n - n_nulls):
+                raise ValueError(f"leaf {c['name']!r} page at offset "
+                                 f"{pm['offset']}: levels do not match the page")
+            reps.append(rep)
+            defs.append(dfn)
+        return pa.concat_arrays(parts) if len(parts) > 1 else parts[0]
+
+    vals = values(chunk, True)
+    if pa.types.is_decimal(t):
+        lanes = [vals] + [values(_column_chunk(group, f"{chunk['name']}#{j}"), False)
+                          for j in range(1, t.byte_width // 8)]
+        vals = np.stack([lane.to_numpy(zero_copy_only=False) for lane in lanes], axis=1)
+    return {"vals": vals, "def": np.concatenate(defs),
+            "rep": np.concatenate(reps) if max_rep else None}
+
+
+def _decode_dremel(
+    buf: memoryview, group: dict, col: dict, verify_crc: bool, keep: np.ndarray | None
+) -> pa.Array:
+    """Read a column written by :func:`_encode_dremel`: decode only the pages
+    holding a kept row, assemble them, then drop the rows ``keep`` excludes."""
+    t_out = _column_type(col)
+    t = dremel.plain_lists(t_out)
+    types = dremel.leaf_types(t)
+    leaves = [_column_chunk(group, nm) for nm in col["dremel"]["leaves"]]
+    if len(leaves) != len(types):
+        raise ValueError(f"column {col['name']!r}: {len(leaves)} leaf chunks "
+                         f"for {len(types)} leaves")
+    spans = [(pm["first_row"], pm["first_row"] + pm["n_rows"]) for pm in leaves[0]["pages"]]
+    kept = [i for i, (s, e) in enumerate(spans) if keep is None or keep[s:e].any()]
+    if not kept:
+        return pa.array([], t_out)
+    arr = dremel.assemble(t, [_read_leaf(buf, group, c, lt, kept, verify_crc)
+                              for c, lt in zip(leaves, types)])
+    if len(arr) != sum(spans[i][1] - spans[i][0] for i in kept):
+        raise ValueError(f"column {col['name']!r}: leaves disagree on row count")
+    if keep is not None:
+        sub = np.concatenate([keep[spans[i][0] : spans[i][1]] for i in kept])
+        if not sub.all():
+            arr = arr.filter(pa.array(sub))
+    return arr.cast(t_out) if t != t_out else arr
 
 
 def _encode_group(
@@ -1016,15 +610,20 @@ def _encode_group(
 ) -> tuple[list[dict], int]:
     chunks: list[dict] = []
     for name in table.column_names:
-        if _STRUCT_SEP in name:
-            # 0x1F namespaces shredded child chunks in the footer; a column
+        if _LEAF_SEP in name:
+            # 0x1F namespaces Dremel leaf chunks in the footer; a column
             # carrying it would be filtered out on read (silent data loss)
-            # or collide with a sibling struct's child chunk
+            # or collide with another column's leaf chunk
             raise ValueError(
                 f"column name {name!r} contains the reserved separator "
                 "U+001F; rename the column"
             )
-        cs, offset = _encode_any_chunks(name, table.column(name), config, out, offset)
+        col = table.column(name)
+        if _is_dremel(col):
+            cs, offset = _encode_dremel(name, col, config, out, offset)
+        else:
+            c, offset = _encode_chunk(name, col, config, out, offset)
+            cs = [c]
         chunks.extend(cs)
     return chunks, offset
 
@@ -1427,10 +1026,7 @@ def append_files(dst: str, sources: list[str]) -> dict:
             "created_by": "webcodec-0.1",
             "metadata": {"compacted_from": len(sources)},
         }
-        fj = json.dumps(footer, separators=(",", ":")).encode()
-        out.write(fj)
-        out.write(struct.pack("<II", len(fj), zlib.crc32(fj)))
-        out.write(MAGIC)
+        _write_footer(out, footer)
     return footer
 
 
@@ -1451,6 +1047,8 @@ def read_footer(data: bytes | memoryview,
 
 def _read_page(buf: memoryview, offset: int, verify_crc: bool = True,
                crypto=None, aad_base: bytes = b""):
+    if offset + PAGE_HEADER.size > len(buf):
+        raise ValueError(f"page header at offset {offset} is past the file end")
     h = PAGE_HEADER.unpack(buf[offset : offset + PAGE_HEADER.size])
     (ptype, enc, codec, phys, n_values, n_nulls, usize, csize, crc, first_row) = h
     payload = buf[offset + PAGE_HEADER.size : offset + PAGE_HEADER.size + csize]
@@ -1465,17 +1063,19 @@ def _read_page(buf: memoryview, offset: int, verify_crc: bool = True,
                                 encoding=enc, codec=codec, n_nulls=n_nulls,
                                 usize=usize)
         )
-    body = decompress(payload, Codec(codec), usize)
+    try:
+        body = decompress(payload, Codec(codec), usize)
+    except (OSError, zlib.error) as e:  # a cut or damaged compressed page
+        raise ValueError(f"page at offset {offset}: {e}") from None
+    if len(body) != usize or usize < 4:
+        raise ValueError(
+            f"page at offset {offset}: body is {len(body)} bytes, header says {usize}")
     (vlen,) = struct.unpack("<I", body[:4])
+    if vlen > usize - 4:
+        raise ValueError(f"page at offset {offset}: validity overruns the page")
     validity = body[4 : 4 + vlen]
     values = memoryview(body)[4 + vlen :]
     return ptype, Encoding(enc), PhysType(phys), n_values, n_nulls, validity, values, first_row
-
-
-def _rebuild_with_nulls(values: pa.Array, mask: np.ndarray, arrow_type: pa.DataType) -> pa.Array:
-    """Expand a null-free decoded array to full length with a validity bitmap
-    (implementation shared with the generic-list child path in colcodec)."""
-    return colcodec.rebuild_with_nulls(values, mask, arrow_type)
 
 
 def _chunk_crypto(chunk: dict):
@@ -1499,31 +1099,18 @@ def _decode_dict_page_only(buf: memoryview, chunk: dict, verify_crc: bool = True
     )
 
 
-def _decode_chunk(
-    buf: memoryview, chunk: dict, verify_crc: bool = True, keep: np.ndarray | None = None
-) -> pa.Array:
-    """Decode a column chunk. With ``keep`` (group-relative boolean row mask),
-    pages with no surviving rows are SKIPPED entirely and surviving pages are
-    row-filtered — D3 row-range synchronization: every column of the group
-    returns exactly the kept rows in order."""
+def _data_pages(buf: memoryview, chunk: dict, verify_crc: bool, page_ids: list[int]):
+    """Decode the listed data pages of a chunk. Yields (page meta, null-free
+    values at the storage type, n_values, n_nulls, validity or levels)."""
     arrow_type = arrow_type_from_json(chunk["type"])
-    # narrow types decode at their widened storage type, cast back at the end
     work_type = widened(arrow_type) or arrow_type
     phys = PhysType(chunk["phys"])
     fc, ab = _chunk_crypto(chunk)
-    dict_values = None
-    if chunk.get("dict"):
-        d = chunk["dict"]
-        _, inner, _, dn, _, _, dvals, _ = _read_page(buf, d["offset"], verify_crc, fc, ab)
-        dict_values = colcodec.decode_dict_page(dvals, phys, inner, dn, work_type)
-    parts: list[pa.Array] = []
-    for pm in chunk["pages"]:
-        sub = None
-        if keep is not None:
-            sub = keep[pm["first_row"] : pm["first_row"] + pm["n_values"]]
-            if not sub.any():
-                continue  # page-level skip: no IO-decode for this page
-        ptype, enc, _, n_values, n_nulls, validity, values, _ = _read_page(
+    dict_values = (_decode_dict_page_only(buf, chunk, verify_crc)
+                   if chunk.get("dict") and page_ids else None)
+    for i in page_ids:
+        pm = chunk["pages"][i]
+        _, enc, _, n_values, n_nulls, validity, values, _ = _read_page(
             buf, pm["offset"], verify_crc, fc, ab)
         n_valid = n_values - n_nulls
         if enc == Encoding.DICT:
@@ -1533,13 +1120,32 @@ def _decode_chunk(
                 arr = arr.cast(work_type)
         else:
             arr = colcodec.decode_values(values, phys, enc, n_valid, work_type)
+        yield pm, arr, n_values, n_nulls, validity
+
+
+def _decode_chunk(
+    buf: memoryview, chunk: dict, verify_crc: bool = True, keep: np.ndarray | None = None
+) -> pa.Array:
+    """Decode a flat column chunk. With ``keep`` (group-relative boolean row
+    mask), pages with no surviving rows are SKIPPED entirely and surviving
+    pages are row-filtered — D3 row-range synchronization: every column of
+    the group returns exactly the kept rows in order."""
+    arrow_type = arrow_type_from_json(chunk["type"])
+    # narrow types decode at their widened storage type, cast back at the end
+    work_type = widened(arrow_type) or arrow_type
+    spans = [(pm["first_row"], pm["first_row"] + pm["n_values"]) for pm in chunk["pages"]]
+    ids = [i for i, (s, e) in enumerate(spans) if keep is None or keep[s:e].any()]
+    parts: list[pa.Array] = []
+    for pm, arr, n_values, n_nulls, validity in _data_pages(buf, chunk, verify_crc, ids):
         if n_nulls:
             mask = rle.decode_validity(validity, n_values)
-            arr = _rebuild_with_nulls(arr, mask, work_type)
+            arr = colcodec.rebuild_with_nulls(arr, mask, work_type)
         if arr.type != arrow_type:
             arr = restore_array(arr, arrow_type)
-        if sub is not None and not sub.all():
-            arr = arr.filter(pa.array(sub))
+        if keep is not None:
+            sub = keep[pm["first_row"] : pm["first_row"] + pm["n_values"]]
+            if not sub.all():
+                arr = arr.filter(pa.array(sub))
         parts.append(arr)
     if not parts:
         return pa.array([], type=arrow_type)
@@ -1662,6 +1268,12 @@ def match_positions(
     return np.flatnonzero(mask.to_numpy(zero_copy_only=False))
 
 
+def _empty_table(group: dict, names: list[str]) -> pa.Table:
+    return pa.schema(
+        [pa.field(n, _column_type(_column_chunk(group, n))) for n in names]
+    ).empty_table()
+
+
 def read_table(
     source: str | bytes | memoryview,
     columns: list[str] | None = None,
@@ -1709,11 +1321,11 @@ def read_table(
                 for c in g["chunks"]:
                     c["_crypto"] = fcr
                     c["_crypto_group"] = gi
-    # child chunks of shredded structs are footer-internal, not columns.
+    # Dremel leaf chunks are footer-internal, not columns.
     # columns=[] means ZERO columns (e.g. a pure null-fill read of columns
     # added after this file) — `or` would silently decode the whole file
     names = columns if columns is not None else [
-        c["name"] for c in groups[0]["chunks"] if _STRUCT_SEP not in c["name"]
+        c["name"] for c in groups[0]["chunks"] if _LEAF_SEP not in c["name"]
     ]
 
     conjuncts = predmod.normalize(predicate)
@@ -1725,11 +1337,7 @@ def read_table(
         missing_terms = [t for t in conjuncts if t[0] not in present]
         if missing_terms:
             if any(op != "isnull" for _, op, _ in missing_terms):
-                fields = []
-                for name in names:
-                    chunk = next(c for c in groups[0]["chunks"] if c["name"] == name)
-                    fields.append(pa.field(name, _chunk_arrow_type(groups[0], chunk)))
-                return pa.schema(fields).empty_table()
+                return _empty_table(groups[0], names)
             conjuncts = [t for t in conjuncts if t[0] in present] or None
     # predicate columns are decoded even when not projected (the residual
     # filter needs them for exactness), then dropped before returning
@@ -1746,37 +1354,30 @@ def read_table(
             term_keep = np.zeros(footer["num_rows"], dtype=bool)
             row_base = 0
             for g in groups:
-                pc_chunk = next(c for c in g["chunks"] if c["name"] == col)
-                if any(pc_chunk.get(k) for k in
-                       ("struct", "map", "liststruct", "listlist", "decimal")):
-                    raise ValueError(
-                        f"predicates on nested/decimal columns unsupported: {col!r}"
-                    )
+                pc_chunk = _column_chunk(g, col)
+                if "dremel" in pc_chunk:
+                    # no pruning tier reads a Dremel column; null tests stay
+                    # exact through the residual filter
+                    if op not in ("isnull", "notnull"):
+                        raise ValueError(
+                            f"predicates on nested/decimal columns unsupported: {col!r}"
+                        )
+                    term_keep[row_base : row_base + g["num_rows"]] = True
+                    row_base += g["num_rows"]
+                    continue
                 pred_phys = PhysType(pc_chunk["phys"])
                 eq_values = [value] if op == "==" else (list(value) if op == "in" else None)
-                if eq_values is not None and pc_chunk.get("bloom"):
-                    if not _bloom_may_contain(pc_chunk, eq_values):
-                        any_skipped = True  # whole group provably term-free
-                        row_base += g["num_rows"]
-                        continue
-                if (
-                    eq_values is not None
-                    and pc_chunk.get("dict")
-                    and Encoding(pc_chunk["encoding"]) == Encoding.DICT
-                ):
-                    if not _values_in_dict(buf, pc_chunk, eq_values, verify_crc):
-                        any_skipped = True
-                        row_base += g["num_rows"]
-                        continue
-                if (
-                    op in predmod.STRING_OPS
-                    and pc_chunk.get("dict")
-                    and Encoding(pc_chunk["encoding"]) == Encoding.DICT
-                ):
-                    if not _string_op_hits_dict(buf, pc_chunk, op, value, verify_crc):
-                        any_skipped = True
-                        row_base += g["num_rows"]
-                        continue
+                dict_coded = (pc_chunk.get("dict")
+                              and Encoding(pc_chunk["encoding"]) == Encoding.DICT)
+                if (eq_values is not None and pc_chunk.get("bloom")
+                        and not _bloom_may_contain(pc_chunk, eq_values)
+                        or eq_values is not None and dict_coded
+                        and not _values_in_dict(buf, pc_chunk, eq_values, verify_crc)
+                        or op in predmod.STRING_OPS and dict_coded
+                        and not _string_op_hits_dict(buf, pc_chunk, op, value, verify_crc)):
+                    any_skipped = True  # whole group provably term-free
+                    row_base += g["num_rows"]
+                    continue
                 for pm in pc_chunk["pages"]:
                     if predmod.term_matches(pm, op, value, pred_phys, pm["n_values"]):
                         s = row_base + pm["first_row"]
@@ -1802,11 +1403,7 @@ def read_table(
 
     if keep_rows is not None and not keep_rows.any():
         # every group provably predicate-free (or empty range): no decode work
-        fields = []
-        for name in names:
-            chunk = next(c for c in groups[0]["chunks"] if c["name"] == name)
-            fields.append(pa.field(name, _chunk_arrow_type(groups[0], chunk)))
-        return pa.schema(fields).empty_table()
+        return _empty_table(groups[0], names)
 
     arrays = []
     fields = []
@@ -1814,15 +1411,17 @@ def read_table(
         parts = []
         row_base = 0
         for g in groups:
-            chunk = next(c for c in g["chunks"] if c["name"] == name)
+            chunk = _column_chunk(g, name)
             keep = (
                 keep_rows[row_base : row_base + g["num_rows"]]
                 if keep_rows is not None
                 else None
             )
-            parts.append(_decode_any_chunks(buf, g, chunk, verify_crc, keep))
+            parts.append(_decode_dremel(buf, g, chunk, verify_crc, keep)
+                         if "dremel" in chunk else
+                         _decode_chunk(buf, chunk, verify_crc, keep=keep))
             row_base += g["num_rows"]
-        arr = pa.concat_arrays([p.combine_chunks() if isinstance(p, pa.ChunkedArray) else p for p in parts]) if len(parts) > 1 else parts[0]
+        arr = pa.concat_arrays(parts) if len(parts) > 1 else parts[0]
         arrays.append(arr)
         fields.append(pa.field(name, arr.type))
     table = pa.Table.from_arrays(arrays, schema=pa.schema(fields))

@@ -23,8 +23,9 @@ and the thrift compact protocol spec (field delta/type nibbles, zigzag
 varints).
 
 Scope: flat AND arbitrarily-nested schemas (list / struct / map in any
-composition — full Dremel assembly from rep/def levels in
-``read_column_arrow``, honoring required/optional per the arrow schema),
+composition — full Dremel assembly from rep/def levels by
+``webcodec.dremel.assemble``, honoring required/optional per the arrow
+schema),
 footers parsed by the SAME thrift compact reader as the page headers
 (``read_footer_native`` — schema tree, logical/converted annotations,
 leaf rep/def levels, chunk offsets; no pyarrow metadata machinery, so
@@ -47,6 +48,7 @@ import struct
 
 import numpy as np
 
+from webcodec import dremel
 from webcodec.kernels import rle
 from webcodec.kernels.varint import read_uvarint
 
@@ -559,27 +561,7 @@ def read_column_chunk(path: str, row_group: int, column: int) -> list:
     return [next(it) if ok else None for ok in defs == max_def]
 
 
-# --------------------------- nested assembly ----------------------------------
-
-
-def _n_leaves(t) -> int:
-    import pyarrow as pa
-
-    if pa.types.is_list(t):
-        return _n_leaves(t.value_type)
-    if pa.types.is_struct(t):
-        return sum(_n_leaves(t.field(i).type) for i in range(t.num_fields))
-    if pa.types.is_map(t):
-        return 1 + _n_leaves(t.item_type)
-    return 1
-
-
-def _validity_buf(validity: np.ndarray):
-    import pyarrow as pa
-
-    if validity.all():
-        return None
-    return pa.py_buffer(np.packbits(validity, bitorder="little").tobytes())
+# ------------------- leaf values for dremel.assemble --------------------------
 
 
 def _decimal_arrow(vals, present, target_type):
@@ -618,7 +600,7 @@ def _decimal_arrow(vals, present, target_type):
     if present is not None:
         full = np.zeros((len(present), width), np.uint8)
         full[present] = le
-        le, validity = full, _validity_buf(present)
+        le, validity = full, dremel.validity_buf(present)
     return pa.Array.from_buffers(target_type, len(le),
                                  [validity, pa.py_buffer(le)])
 
@@ -651,7 +633,7 @@ def _leaf_arrow(vals, defs, max_def, target_type):
             spaced[0] = offsets[0]
             spaced[1:][present] = np.diff(offsets)
             np.cumsum(spaced, out=spaced)
-            vals = _binary_from_offsets(spaced, data, _validity_buf(present))
+            vals = _binary_from_offsets(spaced, data, dremel.validity_buf(present))
         return vals.cast(target_type) if vals.type != target_type else vals
     vals = np.asarray(vals)
     if (pa.types.is_date32(target_type) or pa.types.is_time32(target_type)) \
@@ -674,88 +656,6 @@ def _leaf_arrow(vals, defs, max_def, target_type):
         full[present] = vals
         arr = pa.array(full, mask=~present)
     return arr.cast(target_type) if arr.type != target_type else arr
-
-
-def _assemble(t, d: int, r: int, streams: list[dict], nullable: bool = True):
-    """Recursive Dremel record assembly: returns an arrow array of type
-    ``t`` with ONE slot per level-``r`` item in the entry streams (items =
-    entries with rep <= r); slots whose first-entry def < the node's defined
-    level come out null (covers both null-at-this-node and terminated
-    ancestors — the parent's offsets/validity slice them correctly).
-    ``d`` is the def level EARNED entering the node; the node itself adds
-    one when ``nullable``."""
-    import pyarrow as pa
-
-    d1 = d + (1 if nullable else 0)
-    s0 = streams[0]
-    rep0 = (s0["rep"] if s0["rep"] is not None
-            else np.zeros(len(s0["def"]), np.int64))
-
-    if pa.types.is_list(t) or pa.types.is_map(t):
-        dfn0 = s0["def"]
-        starts = np.flatnonzero(rep0 <= r)
-        n_items = len(starts)
-        first_def = dfn0[starts] if n_items else np.zeros(0, np.int64)
-        validity = first_def >= d1
-        thresh = d1 + 1  # element occurrence level
-        em = ((rep0 <= r + 1) & (dfn0 >= thresh)).astype(np.int64)
-        counts = (np.add.reduceat(em, starts) if n_items
-                  else np.zeros(0, np.int64))
-        # reduceat quirk: a start at the last index reduces a single slot —
-        # correct here since spans are [start_i, start_{i+1})
-        offsets = np.zeros(n_items + 1, np.int32)
-        np.cumsum(counts, out=offsets[1:])
-
-        def filt(s):
-            keep = s["def"] >= thresh
-            return {
-                "vals": s["vals"],
-                "rep": s["rep"][keep] if s["rep"] is not None else None,
-                "def": s["def"][keep],
-            }
-
-        sub = [filt(s) for s in streams]
-        if pa.types.is_list(t):
-            child = _assemble(t.value_type, d1 + 1, r + 1, sub,
-                              t.value_field.nullable)
-            return pa.Array.from_buffers(
-                t, n_items,
-                [_validity_buf(validity), pa.py_buffer(offsets.tobytes())],
-                children=[child])
-        # map: key (required leaf) + value subtree
-        keys = _assemble(t.key_type, d1 + 1, r + 1, sub[:1], nullable=False)
-        items = _assemble(t.item_type, d1 + 1, r + 1, sub[1:],
-                          t.item_field.nullable)
-        kv = pa.StructArray.from_arrays(
-            [keys, items],
-            fields=[pa.field("key", t.key_type, nullable=False),
-                    pa.field("value", t.item_type)])
-        return pa.Array.from_buffers(
-            t, n_items,
-            [_validity_buf(validity), pa.py_buffer(offsets.tobytes())],
-            children=[kv])
-
-    if pa.types.is_struct(t):
-        dfn0 = s0["def"]
-        starts = np.flatnonzero(rep0 <= r)
-        n_items = len(starts)
-        first_def = dfn0[starts] if n_items else np.zeros(0, np.int64)
-        validity = first_def >= d1
-        children = []
-        li = 0
-        for i in range(t.num_fields):
-            f = t.field(i)
-            nl = _n_leaves(f.type)
-            children.append(
-                _assemble(f.type, d1, r, streams[li : li + nl], f.nullable))
-            li += nl
-        return pa.Array.from_buffers(
-            t, n_items, [_validity_buf(validity)], children=children)
-
-    if pa.types.is_nested(t):
-        raise NotImplementedError(f"assembly of {t}")
-    # primitive leaf: every entry is an item; present iff def == d1
-    return _leaf_arrow(s0["vals"], s0["def"], d1, t)
 
 
 def read_column_arrow(path: str, row_group: int, column_name: str):
@@ -781,7 +681,7 @@ def read_column_arrow(path: str, row_group: int, column_name: str):
         if defs is None:  # required flat leaf: synthesize def 0s
             defs = np.zeros(meta.num_values, np.int64)
         streams.append({"vals": vals, "rep": reps, "def": defs})
-    arr = _assemble(field.type, 0, 0, streams, field.nullable)
+    arr = dremel.assemble(field.type, streams, _leaf_arrow, field.nullable)
     for vp in ft.get("variant_shredded", ()):
         if vp[0] == column_name:
             from . import variant_shred
@@ -1615,9 +1515,9 @@ def _read_flat_ranges(buf, meta, field, lf, ranges, n_rows,
             dict_values=dict_values, verify_crc=verify_crc)
         if defs is None:
             defs = np.zeros(run_rows, np.int64)
-        arr = _assemble(field.type, 0, 0,
-                        [{"vals": vals, "rep": reps, "def": defs}],
-                        field.nullable)
+        arr = dremel.assemble(field.type,
+                              [{"vals": vals, "rep": reps, "def": defs}],
+                              _leaf_arrow, field.nullable)
         s, e = firsts[p0], ends[p1]
         for lo, hi in ranges:
             lo2, hi2 = max(lo, s), min(hi, e)
@@ -1705,7 +1605,7 @@ def read_table_arrow_native(path: str, columns: list[str] | None = None,
                 if defs is None:
                     defs = np.zeros(meta.num_values, np.int64)
                 streams.append({"vals": vals, "rep": reps, "def": defs})
-            arr = _assemble(field.type, 0, 0, streams, field.nullable)
+            arr = dremel.assemble(field.type, streams, _leaf_arrow, field.nullable)
             if ranges is not None:  # no page index on this column: slice
                 arr = pa.concat_arrays(
                     [arr.slice(lo, hi - lo) for lo, hi in ranges])

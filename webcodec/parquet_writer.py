@@ -15,7 +15,7 @@ tail layout) and the thrift compact protocol spec.
 
 Scope: flat schemas plus ARBITRARY-depth nesting — any composition of
 list / struct / map (3-level LIST and MAP key_value groups, full Dremel
-rep/def shredding via the vectorized entry-state walker ``_shred_column``),
+rep/def shredding by ``webcodec.dremel.shred``),
 decimal128(p, s) as FIXED_LEN_BYTE_ARRAY (minimal length for the precision,
 parquet-java's sizing) big-endian two's complement —
 one or more row groups (``row_group_rows``), PLAIN or PLAIN_DICTIONARY data
@@ -46,6 +46,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from webcodec import dremel
 from webcodec.kernels import bitpack
 from webcodec.kernels.varint import write_uvarint
 
@@ -968,131 +969,9 @@ def _write_shredded_chunk(out, offset: int, path_names: list[str],
     )
 
 
-class _Nst:
-    """Dremel shredding state over the column's ENTRY list: one slot per
-    output (rep, def) entry. Terminated entries (null/empty somewhere up the
-    path) carry their final def in ``dfn``; live entries continue into the
-    subtree and their values sit, in entry order, in ``values`` (length =
-    live.sum())."""
-
-    __slots__ = ("rep", "dfn", "live", "values")
-
-    def __init__(self, rep, dfn, live, values):
-        self.rep, self.dfn, self.live, self.values = rep, dfn, live, values
-
-
-def _nst_optional(st: _Nst, d: int) -> _Nst:
-    """Nullability step: null values terminate at def ``d``; valid values
-    continue (having earned def d+1)."""
-    n = len(st.live)
-    if len(st.values) == 0:
-        return st
-    v = pc.is_valid(st.values).to_numpy(zero_copy_only=False).astype(bool)
-    full = np.zeros(n, bool)
-    full[st.live] = v
-    dfn = st.dfn.copy()
-    dfn[st.live & ~full] = d
-    return _Nst(st.rep, dfn, st.live & full, st.values.drop_null())
-
-
-def _nst_repeated(st: _Nst, d: int, r: int) -> _Nst:
-    """List-expansion step (values must be a valid-only ListArray): each
-    live entry becomes its element entries (first keeps the entry's rep,
-    the rest get rep ``r``); empty lists terminate at def ``d`` (the
-    defined-but-empty level)."""
-    arr = st.values
-    n = len(st.live)
-    lens = (pc.list_value_length(arr).to_numpy(zero_copy_only=False)
-            .astype(np.int64) if len(arr) else np.zeros(0, np.int64))
-    lens_full = np.zeros(n, np.int64)
-    lens_full[st.live] = lens
-    counts = np.maximum(lens_full, 1)  # terminated/empty entries keep 1 slot
-    idx = np.repeat(np.arange(n), counts)
-    total = int(counts.sum())
-    new_rep = st.rep[idx].copy()
-    starts = np.cumsum(counts) - counts
-    first = np.zeros(total, bool)
-    first[starts] = True
-    new_rep[~first] = r
-    new_dfn = st.dfn[idx].copy()
-    empty = st.live & (lens_full == 0)
-    new_dfn[starts[empty]] = d
-    new_live = st.live[idx] & (lens_full[idx] > 0)
-    return _Nst(new_rep, new_dfn, new_live, arr.flatten())
-
-
-def _map_as_list(t: pa.DataType) -> pa.DataType:
-    """map<K, V> viewed as its physical list<struct<key (required), value>>."""
-    return pa.list_(pa.struct([
-        pa.field("key", t.key_type, nullable=False),
-        pa.field("value", t.item_type),
-    ]))
-
-
-def _shred_column(name: str, arr: pa.Array) -> list[dict]:
-    """Arbitrary-depth Dremel shredding of one nested column: returns one
-    dict per LEAF — {path, leaf (valid values only), rep, defs, max_rep,
-    max_def, required} — entry arrays ready for :func:`_write_shredded_chunk`.
-    Traversal order mirrors :func:`_nested_elems` exactly (parquet requires
-    row-group chunks in depth-first schema order). All nodes are written
-    OPTIONAL except map keys (spec: required)."""
-    n = len(arr)
-    leaves: list[dict] = []
-
-    def leaf(st: _Nst, t, path, d, r, required):
-        if required:
-            dfn = st.dfn.copy()
-            dfn[st.live] = d
-            vals, rep = st.values, st.rep
-            max_def = d
-        else:
-            st2 = _nst_optional(st, d)
-            dfn = st2.dfn.copy()
-            dfn[st2.live] = d + 1
-            vals, rep = st2.values, st2.rep
-            max_def = d + 1
-        leaves.append({
-            "path": path, "leaf": vals, "rep": rep if r > 0 else None,
-            "defs": dfn, "max_rep": r, "max_def": max_def, "type": t,
-        })
-
-    def walk(st: _Nst, t, name, prefix, d, r, required=False):
-        path = prefix + [name]
-        if pa.types.is_map(t):
-            if pa.types.is_nested(t.key_type):
-                raise TypeError("parquet_writer: nested map keys unsupported")
-            st1 = _nst_optional(st, d)
-            st1 = _Nst(st1.rep, st1.dfn, st1.live,
-                       st1.values.cast(_map_as_list(t)))
-            st2 = _nst_repeated(st1, d + 1, r + 1)
-            kv = st2.values  # struct<key, value>, entries never null
-            walk(_Nst(st2.rep, st2.dfn, st2.live, kv.field(0)), t.key_type,
-                 "key", path + ["key_value"], d + 2, r + 1, required=True)
-            walk(_Nst(st2.rep, st2.dfn, st2.live, kv.field(1)), t.item_type,
-                 "value", path + ["key_value"], d + 2, r + 1)
-        elif pa.types.is_list(t):
-            st1 = _nst_optional(st, d)
-            st2 = _nst_repeated(st1, d + 1, r + 1)
-            walk(st2, t.value_type, "element", path + ["list"], d + 2, r + 1)
-        elif pa.types.is_struct(t):
-            st1 = _nst_optional(st, d)
-            for i in range(t.num_fields):
-                walk(_Nst(st1.rep, st1.dfn, st1.live, st1.values.field(i)),
-                     t.field(i).type, t.field(i).name, path, d + 1, r)
-        elif pa.types.is_nested(t):
-            raise TypeError(f"parquet_writer: unsupported nested type {t}")
-        else:
-            leaf(st, t, path, d, r, required)
-
-    st0 = _Nst(np.zeros(n, np.uint32), np.zeros(n, np.uint32),
-               np.ones(n, bool), arr)
-    walk(st0, arr.type, name, [], 0, 0)
-    return leaves
-
-
 def _nested_elems(name: str, t: pa.DataType) -> list[bytes]:
     """SchemaElement subtree for one (possibly nested) field — depth-first,
-    case order mirroring :func:`_shred_column`."""
+    case order mirroring :func:`webcodec.dremel.shred`."""
     if pa.types.is_map(t):
         return (
             [_schema_element(name, conv=_CT_MAP, num_children=1),
@@ -1396,38 +1275,6 @@ def _geo_crs_map(cols) -> dict[str, str | None]:
     return {c: None for c in cols}
 
 
-def _list_levels(arr: pa.Array) -> tuple[pa.Array, np.ndarray, np.ndarray]:
-    """(leaf values where def==3, rep, def) for an optional list<optional
-    primitive> column under the 3-level LIST encoding: def 0 = null list,
-    1 = empty list, 2 = present list/null element, 3 = present element;
-    rep 0 starts a row, 1 continues the row's list."""
-    n = len(arr)
-    if n == 0 or arr.buffers()[1] is None:
-        return (pa.array([], arr.type.value_type),
-                np.zeros(0, np.uint64), np.zeros(0, np.uint64))
-    lmask = pc.is_valid(arr).to_numpy(zero_copy_only=False).astype(bool)
-    offs = np.frombuffer(arr.buffers()[1], dtype=np.int32,
-                         count=arr.offset + n + 1)[arr.offset:].astype(np.int64)
-    lens = np.where(lmask, np.diff(offs), 0)
-    n_entries = np.maximum(lens, 1)  # null/empty lists still emit one entry
-    total = int(n_entries.sum())
-    starts = np.cumsum(n_entries) - n_entries
-    rep = np.ones(total, dtype=np.uint64)
-    rep[starts] = 0
-    defs = np.zeros(total, dtype=np.uint64)
-    flat = arr.flatten()  # honors list validity: only present lists' elements
-    emask = pc.is_valid(flat).to_numpy(zero_copy_only=False).astype(bool)
-    has = lens > 0
-    # rows with elements: def = 2 + element-validity; empty list = 1; null = 0
-    entry_row = np.repeat(np.arange(n), n_entries)
-    is_elem = np.zeros(total, dtype=bool)
-    elem_rows = np.repeat(has, n_entries)  # entries of rows that HAVE elements
-    is_elem[elem_rows] = True
-    defs[is_elem] = 2 + emask.astype(np.uint64)
-    defs[~is_elem] = lmask[entry_row[~is_elem]].astype(np.uint64)  # 1=empty, 0=null
-    return flat.drop_null(), rep, defs
-
-
 def write_parquet(table: pa.Table, path: str, codec: str = "zstd",
                   use_dictionary: bool = True,
                   row_group_rows: int | None = None,
@@ -1586,7 +1433,7 @@ def write_parquet(table: pa.Table, path: str, codec: str = "zstd",
                 if pa.types.is_nested(t):
                     # arbitrary-depth Dremel shredding (list/struct/map,
                     # any composition): one chunk per leaf, depth-first
-                    for ls in _shred_column(name, arr):
+                    for ls in dremel.shred(name, arr):
                         cm, offset = _write_shredded_chunk(
                             out, offset, ls["path"], ls["leaf"], ls["rep"],
                             ls["defs"], ls["max_rep"], ls["max_def"], codec,

@@ -41,8 +41,6 @@ def fallback_encoding(phys: PhysType) -> Encoding:
         return Encoding.PLAIN
     if phys == PhysType.LIST_FLOAT32:
         return Encoding.BYTE_STREAM_SPLIT
-    if phys == PhysType.LIST:
-        return Encoding.PLAIN  # container marker; layout fixed (lens+child)
     return Encoding.PLAIN
 
 
@@ -92,9 +90,6 @@ def choose(column: str, phys: PhysType, stats: SampleStats, config: EncoderConfi
 
     if phys == PhysType.LIST_FLOAT32:
         return Encoding.BYTE_STREAM_SPLIT
-
-    if phys == PhysType.LIST:
-        return Encoding.PLAIN  # generic list container (lens + child fallback)
 
     if phys in (PhysType.INT32, PhysType.INT64, PhysType.TIMESTAMP_US, PhysType.DATE32):
         if dict_ok and stats.ndv_ratio < 0.05 and stats.n >= 64:

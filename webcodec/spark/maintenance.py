@@ -737,7 +737,7 @@ def export_parquet(
     so any reference reader can consume the result. One Spark task per
     source file, bytes never cross the JVM. Scope: flat primitive columns
     plus ARBITRARY-depth nesting — any composition of list/struct/map
-    (full Dremel rep/def shredding, webcodec.parquet_writer._shred_column),
+    (full Dremel rep/def shredding, webcodec.dremel.shred),
     decimal128 as FLBA(16) (SURVEY §2.E1, C5). With ``carry_encodings``
     (default),
     columns the .wcd selector

@@ -69,7 +69,7 @@ def sample_stats(arr: pa.Array, phys: PhysType, sample_n: int = 4096) -> SampleS
     n = len(s)
     if n == 0:
         return SampleStats(0, 1.0, 1.0, 8.0, 0.0, 0.0, 0.0)
-    if phys in (PhysType.LIST_FLOAT32, PhysType.LIST):  # nested: BSS path, no distinct-count kernel
+    if phys == PhysType.LIST_FLOAT32:  # nested: BSS path, no distinct-count kernel
         return SampleStats(n, 1.0, 1.0, 8.0, 0.0, 0.0, 0.0)
     ndv = pc.count_distinct(s).as_py()
     total_nonnull = len(arr) - arr.null_count
@@ -129,7 +129,7 @@ def sample_stats(arr: pa.Array, phys: PhysType, sample_n: int = 4096) -> SampleS
 
     if phys == PhysType.BOOL:
         v = s.to_numpy(zero_copy_only=False).astype(np.uint8)
-    elif phys in (PhysType.LIST_FLOAT32, PhysType.LIST):
+    elif phys == PhysType.LIST_FLOAT32:
         return SampleStats(n, ndv_ratio, 1.0, 8.0, 0.0, 0.0, 0.0)
     else:
         v = s.to_numpy(zero_copy_only=False).view(NUMPY_OF[phys])
@@ -197,7 +197,7 @@ def _encode_stat(v, phys: PhysType, truncate: int, is_max: bool = False):
         if hasattr(v, "toordinal"):
             return v.toordinal() - 719_163  # days since epoch
         return int(v)
-    if phys in (PhysType.LIST_FLOAT32, PhysType.LIST):
+    if phys == PhysType.LIST_FLOAT32:
         return None
     if phys in (PhysType.FLOAT32, PhysType.FLOAT64):
         return float(v)
@@ -242,7 +242,7 @@ def page_stats(arr: pa.Array, phys: PhysType, truncate: int = 64,
     domain or a page with values around 2^63 mis-orders and mis-prunes."""
     null_count = arr.null_count
     valid = arr.drop_null()
-    if len(valid) == 0 or phys in (PhysType.LIST_FLOAT32, PhysType.LIST):
+    if len(valid) == 0 or phys == PhysType.LIST_FLOAT32:
         return {"min": None, "max": None, "null_count": int(null_count)}
     if unsigned64:
         import numpy as np

@@ -19,8 +19,6 @@ class PhysType(enum.IntEnum):
     TIMESTAMP_US = 7
     LIST_FLOAT32 = 8  # embeddings support: offsets delta + child BSS
     DATE32 = 9
-    LIST = 10  # generic one-level list<primitive>: offsets delta + child
-               # validity + child values in the child's fallback encoding
 
 
 class Encoding(enum.IntEnum):
@@ -164,32 +162,7 @@ def phys_type_of(t: pa.DataType) -> PhysType:
             return pt
     if pa.types.is_timestamp(t):
         return PhysType.TIMESTAMP_US
-    if pa.types.is_list(t):
-        # generic one-level list of a supported primitive (float32 lists take
-        # the specialized LIST_FLOAT32 path above)
-        child = phys_type_of(t.value_type)
-        if child in (PhysType.LIST, PhysType.LIST_FLOAT32):
-            raise TypeError(f"nested lists unsupported: {t}")
-        return PhysType.LIST
     raise TypeError(f"unsupported arrow type: {t}")
-
-
-def arrow_type_of(pt: PhysType, original: pa.DataType | None = None) -> pa.DataType:
-    if original is not None:
-        return original
-    return {
-        PhysType.BOOL: pa.bool_(),
-        PhysType.INT32: pa.int32(),
-        PhysType.INT64: pa.int64(),
-        PhysType.FLOAT32: pa.float32(),
-        PhysType.FLOAT64: pa.float64(),
-        PhysType.STRING: pa.string(),
-        PhysType.BINARY: pa.binary(),
-        PhysType.TIMESTAMP_US: pa.timestamp("us"),
-        PhysType.LIST_FLOAT32: pa.list_(pa.float32()),
-        PhysType.DATE32: pa.date32(),
-        PhysType.LIST: pa.list_(pa.int64()),  # placeholder; footer type wins
-    }[pt]
 
 
 NUMPY_OF = {
