@@ -3,10 +3,16 @@
 The engine's own .wcd format deliberately deviates from parquet bytes
 (SURVEY.md §7.0), so this module proves the kernels understand the reference
 byte format in BOTH directions: it emits real PAR1 files — thrift
-compact-protocol page headers and footer, v1 data pages, PLAIN values,
-spec-conformant RLE def levels — that the reference reader
+compact-protocol page headers and footer, v1 or v2 data pages of ~1 MiB,
+dictionary, PLAIN or forced spec encodings, RLE rep/def levels, chunk
+statistics and page indexes — that the reference reader
 (pyarrow/parquet-java) decodes value-for-value. The differential tests
 round-trip through ``pq.read_table`` (webcodec_interop -> reference).
+
+One leaf writer (``_write_leaf_chunk``) writes every column chunk: a flat
+column is one Dremel leaf (max_rep 0, max_def 1), a nested column is the
+leaves ``webcodec.dremel.shred`` makes, and all of them share the same
+page loop.
 
 Format evidence (public): parquet-format spec (Thrift definitions in
 parquet.thrift: SchemaElement/ColumnMetaData/RowGroup/FileMetaData/
@@ -16,12 +22,12 @@ tail layout) and the thrift compact protocol spec.
 Scope: flat schemas plus ARBITRARY-depth nesting — any composition of
 list / struct / map (3-level LIST and MAP key_value groups, full Dremel
 rep/def shredding by ``webcodec.dremel.shred``),
-decimal128(p, s) as FIXED_LEN_BYTE_ARRAY (minimal length for the precision,
-parquet-java's sizing) big-endian two's complement —
-one or more row groups (``row_group_rows``), PLAIN or PLAIN_DICTIONARY data
-pages, all columns written as OPTIONAL (map keys REQUIRED, per spec) with
-RLE def levels; types bool/int32/int64/float/double/string/binary/
-timestamp[us]/date32/decimal128/fixed_size_binary (true FLBA(n) leaves)/
+decimal128/decimal256(p, s) as FIXED_LEN_BYTE_ARRAY (minimal length for the
+precision, parquet-java's sizing) big-endian two's complement —
+one or more row groups (``row_group_rows``), all columns written as
+OPTIONAL (map keys REQUIRED, per spec); types bool/int32/int64/float/
+double/string/binary/timestamp[us]/date32/decimal/fixed_size_binary
+(true FLBA(n) leaves)/
 float16 (FLBA(2) + FLOAT16 annotation); opt-in logical annotations for
 UUID (FLBA(16), ``uuid_columns``), GEOMETRY/GEOGRAPHY over WKB bytes
 (``geometry_columns``/``geography_columns``, optional crs) and Spark
@@ -258,25 +264,17 @@ def _plain_bytes(valid: pa.Array) -> bytes:
         v = valid.to_numpy(zero_copy_only=False).astype(bool)
         return bitpack.pack_bools(v)
     if pa.types.is_string(t) or pa.types.is_binary(t):
-        lens = pc.binary_length(valid).to_numpy(zero_copy_only=False).astype(np.uint32)
-        offs = np.frombuffer(valid.buffers()[1], dtype=np.int32, count=len(valid) + 1 + valid.offset)
-        offs = offs[valid.offset :].astype(np.int64)
-        data = np.frombuffer(valid.buffers()[2], dtype=np.uint8, count=int(offs[-1])) if valid.buffers()[2] else np.zeros(0, np.uint8)
-        payload = data[int(offs[0]) : int(offs[-1])]
-        # interleave u32 length + bytes via one flat scatter
-        total = 4 * len(valid) + int(lens.sum())
-        out = np.empty(total, dtype=np.uint8)
-        starts = np.cumsum(lens.astype(np.int64) + 4) - (lens.astype(np.int64) + 4)
-        out_view = out
-        lb = lens.view(np.uint8).reshape(len(valid), 4)
-        for k in range(4):  # 4 scatter passes for the length prefixes
-            out_view[starts + k] = lb[:, k]
-        if len(payload):
-            within = np.arange(int(lens.sum()), dtype=np.int64) - np.repeat(
-                np.cumsum(lens.astype(np.int64)) - lens, lens
-            )
-            out_view[np.repeat(starts + 4, lens) + within] = payload
-        return out.tobytes()
+        # each value behind its u32 length: Arrow's join kernel interleaves
+        # a binary(4) array of the length prefixes with the values
+        n = len(valid)
+        if n == 0:
+            return b""
+        lens = pc.binary_length(valid).to_numpy(zero_copy_only=False).astype("<u4")
+        prefixes = pa.Array.from_buffers(pa.binary(), n, [
+            None, pa.py_buffer(np.arange(0, 4 * n + 1, 4, dtype=np.int32)),
+            pa.py_buffer(lens)])
+        joined = pc.binary_join_element_wise(prefixes, valid.cast(pa.binary()), b"")
+        return joined.buffers()[2][:4 * n + int(lens.sum())].to_pybytes()
     if pa.types.is_fixed_size_binary(t):
         w = t.byte_width
         b = np.frombuffer(valid.buffers()[1], dtype=np.uint8,
@@ -285,18 +283,18 @@ def _plain_bytes(valid: pa.Array) -> bytes:
     if pa.types.is_float16(t):
         return valid.to_numpy(zero_copy_only=False).astype("<f2").tobytes()
     if pa.types.is_decimal(t):
-        # decimal128 -> FLBA(minimal-for-precision): arrow stores 16-byte
-        # LITTLE-endian two's complement; parquet DECIMAL FLBA is BIG-endian
-        # — reverse per value, then keep the low (last) tlen bytes; the
-        # value fits by precision so the truncation preserves sign
-        # (the buffer slice honors the array offset)
-        n = len(valid)
+        # decimal128/256 -> FLBA(minimal-for-precision): arrow stores
+        # byte_width LITTLE-endian two's complement bytes; parquet DECIMAL
+        # FLBA is BIG-endian — reverse per value, then keep the low (last)
+        # tlen bytes; the value fits by precision so the truncation
+        # preserves sign (the buffer slice honors the array offset)
+        n, w = len(valid), t.byte_width
         tl = _decimal_flba_len(t.precision)
         b = np.frombuffer(valid.buffers()[1], dtype=np.uint8,
-                          count=(valid.offset + n) * 16)
-        b = b[valid.offset * 16:]
+                          count=(valid.offset + n) * w)
+        b = b[valid.offset * w:]
         return np.ascontiguousarray(
-            b.reshape(n, 16)[:, ::-1][:, 16 - tl:]
+            b.reshape(n, w)[:, ::-1][:, w - tl:]
         ).tobytes()
     valid = _storage_cast(valid)
     return valid.to_numpy(zero_copy_only=False).tobytes()
@@ -312,10 +310,6 @@ def _rle_spec_encode(values: np.ndarray, width: int) -> bytes:
     padded = np.zeros(groups * 8, dtype=np.uint64)
     padded[:n] = values.astype(np.uint64)
     return write_uvarint((groups << 1) | 1) + bitpack.pack(padded, width)
-
-
-def _rle_def_levels(mask: np.ndarray) -> bytes:
-    return _rle_spec_encode(mask.astype(np.uint64), 1)
 
 
 def _compress(data: bytes, codec: str) -> bytes:
@@ -412,7 +406,7 @@ def _dict_page_header(n_values: int, usize: int, csize: int,
 # --------------------------------- writer -------------------------------------
 
 
-def _delta_bp_bytes(valid: pa.Array, ptype: int) -> bytes:
+def _delta_bp_bytes(valid: pa.Array) -> bytes:
     """Spec DELTA_BINARY_PACKED stream of the non-null values — the SAME
     kernel the .wcd format uses (webcodec/kernels/delta.py implements the
     parquet-format layout exactly), so a pyarrow read of this page is the
@@ -424,7 +418,7 @@ def _delta_bp_bytes(valid: pa.Array, ptype: int) -> bytes:
     reproduce them exactly — every delta then fits 32 bits."""
     from webcodec.kernels import delta
 
-    t = valid.type
+    ptype = _phys_of(valid.type)[0]
     valid = _storage_cast(valid)
     ints = valid.to_numpy(zero_copy_only=False).astype(np.int64)
     if ptype == _T_INT32 and len(ints) > 1:
@@ -493,9 +487,32 @@ def _dba_bytes(valid: pa.Array) -> bytes:
 def _bss_bytes(valid: pa.Array) -> bytes:
     from webcodec.kernels import bss
 
-    t = valid.type
     valid = _storage_cast(valid)
     return bss.encode(valid.to_numpy(zero_copy_only=False))
+
+
+def _rle_bool_bytes(valid: pa.Array) -> bytes:
+    """v2 writer-version booleans: a u32-prefixed RLE hybrid stream (width
+    1) instead of PLAIN bit packing."""
+    rb = _rle_spec_encode(
+        valid.to_numpy(zero_copy_only=False).astype(np.uint64), 1)
+    return struct.pack("<I", len(rb)) + rb
+
+
+# data-page value encoders of the non-null values (dictionary indices are
+# encoded in the page loop: they slice the chunk-wide index stream)
+_VALUE_ENCODERS = {_ENC_PLAIN: _plain_bytes, _ENC_RLE: _rle_bool_bytes,
+                   _ENC_DELTA_BP: _delta_bp_bytes, _ENC_BSS: _bss_bytes,
+                   _ENC_DLBA: _dlba_bytes, _ENC_DBA: _dba_bytes}
+
+# column_encoding name -> (encoding, physical types it takes, their name)
+_FORCED_ENCODINGS = {
+    "delta_binary_packed": (_ENC_DELTA_BP, (_T_INT32, _T_INT64), "an INT32/INT64"),
+    "byte_stream_split": (_ENC_BSS, (_T_INT32, _T_INT64, _T_FLOAT, _T_DOUBLE),
+                          "a fixed-width"),
+    "delta_length_byte_array": (_ENC_DLBA, (_T_BYTE_ARRAY,), "a string/binary"),
+    "delta_byte_array": (_ENC_DBA, (_T_BYTE_ARRAY,), "a string/binary"),
+}
 
 
 # ------------------------------ statistics -----------------------------------
@@ -697,276 +714,141 @@ def _page_bounds(n_rows: int, est_bytes: int) -> list[tuple[int, int]]:
     return [(a, min(a + rows_pp, n_rows)) for a in range(0, n_rows, rows_pp)]
 
 
-def _flat_page(out, offset: int, pg: int, n_page: int, n_valid: int,
-               lvl: bytes, pvals: bytes, enc: int, codec: str,
-               ectx: dict | None, page_version: int) -> tuple[int, int]:
-    """Emit one FLAT-column data page (v1 prefixed-levels body, or v2 with
-    uncompressed level region + values-only compression); returns
-    (new_offset, uncompressed bytes added)."""
-    if page_version == 2:
-        comp = _compress(pvals, codec)
-        payload = lvl + comp
-        usz = len(lvl) + len(pvals)
-        header = _page_header_v2(n_page, n_page - n_valid, n_page, enc,
-                                 len(lvl), 0, usz,
-                                 len(payload) + (32 if ectx else 0),
-                                 crc=None if ectx else _crc_i32(payload))
-    else:
-        body = struct.pack("<I", len(lvl)) + lvl + pvals
-        payload = _compress(body, codec)
-        usz = len(body)
-        header = _page_header(n_page, usz,
-                              len(payload) + (32 if ectx else 0), enc,
-                              crc=None if ectx else _crc_i32(payload))
-    offset = _emit_page(out, offset, header, payload, ectx,
-                        is_dict=False, page_ord=pg)
-    return offset, len(header) + usz
+def _raw_bytes(leaf: pa.Array, n_entries: int) -> int:
+    """Raw size a leaf's pages are cut by: the Arrow bytes of its entries as
+    one flat array — the present values plus, per missing entry, a validity
+    bit and a value slot (an offset for byte arrays). For a flat column that
+    is the column's own ``nbytes``."""
+    t = leaf.type
+    bits = 32 if pa.types.is_string(t) or pa.types.is_binary(t) else t.bit_width
+
+    def slots(k):
+        return -(-k // 8) + -(-k * bits // 8)
+    return leaf.nbytes + slots(n_entries) - slots(len(leaf))
 
 
-def _write_column_chunk(out, offset: int, name: str, arr: pa.Array, codec: str,
-                        use_dictionary: bool, encoding: str | None = None,
-                        ectx: dict | None = None,
-                        page_version: int = 1) -> tuple[dict, int]:
-    """One column chunk of one row group: optional dict page + one v1 data
-    page; returns (col_meta, new_offset). ``encoding`` forces
-    delta_binary_packed / byte_stream_split instead of dict/PLAIN."""
-    n_rows = len(arr)
-    ptype, conv = _phys_of(arr.type)
-    extra: dict = {"path": [name], "max_def": 1, "max_rep": 0}
-    if pa.types.is_decimal(arr.type):
-        extra.update(tlen=_decimal_flba_len(arr.type.precision),
-                     prec=arr.type.precision, scale=arr.type.scale)
-    elif pa.types.is_fixed_size_binary(arr.type):
-        extra.update(tlen=arr.type.byte_width)
-    mask = pc.is_valid(arr).to_numpy(zero_copy_only=False).astype(bool)
-    valid = arr.drop_null()
-    extra["stats"] = _chunk_stats(valid, n_rows - len(valid))
+def _write_leaf_chunk(out, offset: int, path: list[str], leaf: pa.Array,
+                      rep: np.ndarray | None, defs: np.ndarray, max_rep: int,
+                      max_def: int, codec: str, use_dictionary: bool,
+                      encoding: str | None, ectx: dict | None,
+                      page_version: int) -> tuple[dict, int]:
+    """One column chunk of one row group for one Dremel leaf; returns
+    (col_meta, new_offset). ``leaf`` holds only the present values (def ==
+    max_def); ``defs``/``rep`` are per-ENTRY levels (``rep`` is None when
+    max_rep is 0). A flat column is the leaf with max_rep 0, max_def 1 and
+    its validity as ``defs``.
 
+    Values are the forced ``encoding`` (a ``_FORCED_ENCODINGS`` name), else
+    a PLAIN dictionary page plus bit-packed index pages when the leaf has at
+    most 65536 distinct values and no more than half its value count, else
+    PLAIN (RLE booleans on v2 pages). Data pages hold ~1 MiB raw
+    (``_page_bounds``) counted in top-level rows, so every page starts at a
+    ``rep == 0`` entry and OffsetIndex first_row_index is a row number. A v1
+    page body is [u32-prefixed RLE rep levels (max_rep > 0)] [u32-prefixed
+    RLE def levels] [values]; v2 pages carry the level streams uncompressed
+    ahead of the values. num_values counts entries, not rows."""
+    t = leaf.type
+    ptype, conv = _phys_of(t)
+    n_entries, n_valid = len(defs), len(leaf)
+    meta: dict = {"name": path[0], "path": path, "type": ptype, "conv": conv,
+                  "max_rep": max_rep, "max_def": max_def,
+                  "num_values": n_entries, "pv": page_version, "_ectx": ectx,
+                  # null_count counts entries missing at the leaf (null or
+                  # terminated above it), matching parquet-java's num_nulls
+                  "stats": _chunk_stats(leaf, n_entries - n_valid)}
+    if pa.types.is_decimal(t):
+        meta.update(tlen=_decimal_flba_len(t.precision), prec=t.precision,
+                    scale=t.scale)
+    elif pa.types.is_fixed_size_binary(t):
+        meta.update(tlen=t.byte_width)
+    # SizeStatistics level histograms (parquet-java semantics: rep when
+    # repeated, def only when not derivable from null_count, i.e. max_def > 1)
+    if max_rep > 0:
+        meta["rep_hist"] = np.bincount(rep, minlength=max_rep + 1).tolist()
+    if max_def > 1:
+        meta["def_hist"] = np.bincount(defs, minlength=max_def + 1).tolist()
+
+    enc = _ENC_RLE if page_version == 2 and ptype == _T_BOOLEAN else _ENC_PLAIN
+    idx = None
     if encoding is not None:
-        enc_name = encoding.lower()
-        if enc_name == "delta_binary_packed":
-            if ptype not in (_T_INT32, _T_INT64):
-                raise TypeError(
-                    f"delta_binary_packed needs an INT32/INT64 column, not {arr.type}")
-            enc = _ENC_DELTA_BP
-        elif enc_name == "byte_stream_split":
-            if ptype not in (_T_INT32, _T_INT64, _T_FLOAT, _T_DOUBLE):
-                raise TypeError(
-                    f"byte_stream_split needs a fixed-width column, not {arr.type}")
-            enc = _ENC_BSS
-        elif enc_name == "delta_length_byte_array":
-            if ptype != _T_BYTE_ARRAY:
-                raise TypeError(
-                    f"delta_length_byte_array needs a string/binary column, not {arr.type}")
-            enc = _ENC_DLBA
-        elif enc_name == "delta_byte_array":
-            if ptype != _T_BYTE_ARRAY:
-                raise TypeError(
-                    f"delta_byte_array needs a string/binary column, not {arr.type}")
-            enc = _ENC_DBA
-        else:
+        forced = _FORCED_ENCODINGS.get(encoding.lower())
+        if forced is None:
             raise ValueError(f"unsupported parquet export encoding {encoding!r}")
-        data_page_offset, usize = offset, 0
-        pages_meta: list[dict] = []
-        for pg, (a, b) in enumerate(_page_bounds(n_rows, arr.nbytes)):
-            vs = arr.slice(a, b - a).drop_null()
-            if enc == _ENC_DELTA_BP:
-                vb = _delta_bp_bytes(vs, ptype)
-            elif enc == _ENC_BSS:
-                vb = _bss_bytes(vs)
-            elif enc == _ENC_DLBA:
-                vb = _dlba_bytes(vs)
-            else:
-                vb = _dba_bytes(vs)
-            lv = _rle_def_levels(mask[a:b])
-            page_off = offset
-            offset, u = _flat_page(out, offset, pg, b - a, len(vs), lv, vb,
-                                   enc, codec, ectx, page_version)
-            usize += u
-            pages_meta.append({
-                "off": page_off, "csize": offset - page_off, "first_row": a,
-                "n_valid": len(vs),
-                "stats": _chunk_stats(vs, (b - a) - len(vs)),
-                **({"var_bytes": _var_data_bytes(vs)}
-                   if ptype == _T_BYTE_ARRAY else {})})
-        return (
-            {
-                "name": name, "type": ptype, "conv": conv,
-                "num_values": n_rows,
-                "usize": usize,
-                "pages": pages_meta,
-                "csize": offset - data_page_offset,
-                "offset": data_page_offset,
-                "dict_offset": None,
-                "enc": enc,
-                "pv": page_version,
-                "_ectx": ectx,
-                **extra,
-            },
-            offset,
-        )
-
-    # dictionary-encode low-cardinality non-bool columns
-    # (PLAIN_DICTIONARY: PLAIN dict page + bit-width-prefixed RLE
-    # indices — the reference v1 writer's default); FLBA (decimal/fixed-size-binary) stays PLAIN
-    dict_bytes = None
-    if (use_dictionary and not pa.types.is_boolean(arr.type)
-            and not pa.types.is_decimal(arr.type)
-            and not pa.types.is_fixed_size_binary(arr.type)
-            and not pa.types.is_float16(arr.type) and len(valid)):
-        de = valid.dictionary_encode()
+        enc, ptypes, kind = forced
+        if ptype not in ptypes:
+            raise TypeError(f"{encoding.lower()} needs {kind} column, not {t}")
+    elif use_dictionary and ptype not in (_T_BOOLEAN, _T_FLBA) and n_valid:
+        de = leaf.dictionary_encode()
         ndv = len(de.dictionary)
-        if ndv <= 65536 and ndv <= max(len(valid) // 2, 1):
-            dict_bytes = _plain_bytes(de.dictionary.cast(arr.type))
-            width = max((ndv - 1).bit_length(), 1)
+        if ndv <= 65536 and ndv <= max(n_valid // 2, 1):
             idx = de.indices.to_numpy(zero_copy_only=False).astype(np.uint64)
-            n_dict = ndv
+            width = max((ndv - 1).bit_length(), 1)
+            # v2 writer versions pair a PLAIN dict page with RLE_DICTIONARY
+            # data pages; v1 keeps the legacy PLAIN_DICTIONARY pair
+            enc = _ENC_RLE_DICT if page_version == 2 else _ENC_PLAIN_DICT
 
-    dict_page_offset = None
-    chunk_start = offset
-    usize = 0
-    if dict_bytes is not None:
+    usize, chunk_start, dict_offset = 0, offset, None
+    if idx is not None:
+        dict_bytes = _plain_bytes(de.dictionary)
         dcomp = _compress(dict_bytes, codec)
         dheader = _dict_page_header(
-            n_dict, len(dict_bytes), len(dcomp) + (32 if ectx else 0),
+            ndv, len(dict_bytes), len(dcomp) + (32 if ectx else 0),
             enc=_ENC_PLAIN if page_version == 2 else _ENC_PLAIN_DICT,
             crc=None if ectx else _crc_i32(dcomp))
-        dict_page_offset = offset
+        dict_offset = offset
         offset = _emit_page(out, offset, dheader, dcomp, ectx, is_dict=True)
-        # v2 writer versions pair a PLAIN dict page with RLE_DICTIONARY
-        # data pages; v1 keeps the legacy PLAIN_DICTIONARY pair
-        enc = _ENC_RLE_DICT if page_version == 2 else _ENC_PLAIN_DICT
         usize += len(dheader) + len(dict_bytes)
-        # per-page slicing of the whole-chunk index stream: valid-position
-        # prefix counts map each page's row range onto its index run
-        vpos = np.zeros(n_rows + 1, dtype=np.int64)
-        np.cumsum(mask, out=vpos[1:])
-    elif page_version == 2 and pa.types.is_boolean(arr.type):
-        # v2 writer-version convention: boolean values as a u32-prefixed
-        # RLE hybrid stream (width 1) instead of PLAIN bit packing
-        enc = _ENC_RLE
-    else:
-        enc = _ENC_PLAIN
-    data_page_offset = offset
+    data_offset = offset
     # page sizing follows what the pages will actually hold: bit-packed
-    # dictionary indices are ~width/8 bytes per row, not the raw value bytes
-    est = (n_rows * width // 8) if dict_bytes is not None else arr.nbytes
-    pages_meta: list[dict] = []
+    # dictionary indices are ~width/8 bytes per entry, not the raw values
+    est = n_entries * width // 8 if idx is not None else _raw_bytes(leaf, n_entries)
+    # entry index where each top-level row starts (flat: entries are rows)
+    row_entry = np.append(np.flatnonzero(rep == 0), n_entries) if max_rep else None
+    n_rows = len(row_entry) - 1 if max_rep else n_entries
+    w_rep, w_def = max(max_rep.bit_length(), 1), max(max_def.bit_length(), 1)
+    pages: list[dict] = []
+    va = 0  # first value of the page
     for pg, (a, b) in enumerate(_page_bounds(n_rows, est)):
-        pvalid = arr.slice(a, b - a).drop_null()
-        if dict_bytes is not None:
-            pidx = idx[int(vpos[a]): int(vpos[b])]
-            pvals = bytes([width]) + _rle_spec_encode(pidx, width)
-        elif enc == _ENC_RLE:
-            rb = _rle_spec_encode(
-                pvalid.to_numpy(zero_copy_only=False).astype(np.uint64), 1)
-            pvals = struct.pack("<I", len(rb)) + rb
+        ea, eb = (int(row_entry[a]), int(row_entry[b])) if max_rep else (a, b)
+        pdefs = defs[ea:eb]
+        vb = va + int(np.count_nonzero(pdefs == max_def))
+        vals = leaf.slice(va, vb - va)
+        n_nulls = (eb - ea) - (vb - va)
+        if idx is not None:
+            body = bytes([width]) + _rle_spec_encode(idx[va:vb], width)
         else:
-            pvals = _plain_bytes(pvalid)
-        lv = _rle_def_levels(mask[a:b])
+            body = _VALUE_ENCODERS[enc](vals)
+        rep_b = _rle_spec_encode(rep[ea:eb], w_rep) if max_rep else b""
+        def_b = _rle_spec_encode(pdefs, w_def)
+        if page_version == 2:
+            payload = rep_b + def_b + _compress(body, codec)
+            usz = len(rep_b) + len(def_b) + len(body)
+            header = _page_header_v2(eb - ea, n_nulls, b - a, enc,
+                                     len(def_b), len(rep_b), usz,
+                                     len(payload) + (32 if ectx else 0),
+                                     crc=None if ectx else _crc_i32(payload))
+        else:
+            raw = ((struct.pack("<I", len(rep_b)) + rep_b if max_rep else b"")
+                   + struct.pack("<I", len(def_b)) + def_b + body)
+            payload = _compress(raw, codec)
+            usz = len(raw)
+            header = _page_header(eb - ea, usz,
+                                  len(payload) + (32 if ectx else 0), enc,
+                                  crc=None if ectx else _crc_i32(payload))
         page_off = offset
-        offset, u = _flat_page(out, offset, pg, b - a, len(pvalid), lv,
-                               pvals, enc, codec, ectx, page_version)
-        usize += u
-        pages_meta.append({
+        offset = _emit_page(out, offset, header, payload, ectx,
+                            is_dict=False, page_ord=pg)
+        usize += len(header) + usz
+        pages.append({
             "off": page_off, "csize": offset - page_off, "first_row": a,
-            "n_valid": len(pvalid),
-            "stats": _chunk_stats(pvalid, (b - a) - len(pvalid)),
-            **({"var_bytes": _var_data_bytes(pvalid)}
+            "n_valid": vb - va,
+            "stats": _chunk_stats(vals, n_nulls),
+            **({"var_bytes": _var_data_bytes(vals)}
                if ptype == _T_BYTE_ARRAY else {})})
-    return (
-        {
-            "name": name, "type": ptype, "conv": conv,
-            "num_values": n_rows,
-            "usize": usize,
-            "pages": pages_meta,
-            "csize": offset - chunk_start,
-            "offset": data_page_offset,
-            "dict_offset": dict_page_offset,
-            "enc": enc,
-            "pv": page_version,
-            "_ectx": ectx,
-            **extra,
-        },
-        offset,
-    )
-
-
-def _write_shredded_chunk(out, offset: int, path_names: list[str],
-                          leaf: pa.Array, rep: np.ndarray | None,
-                          defs: np.ndarray, max_rep: int, max_def: int,
-                          codec: str, ectx: dict | None = None,
-                          page_version: int = 1) -> tuple[dict, int]:
-    """One leaf column chunk with EXPLICIT Dremel levels (nested columns):
-    ``leaf`` holds only the present values (def == max_def), ``defs``/``rep``
-    are per-ENTRY level arrays. v1 page body = [4-byte-prefixed RLE rep
-    levels (when max_rep > 0)] [4-byte-prefixed RLE def levels] [PLAIN
-    values]; num_values is the ENTRY count (spec: levels count, not rows)."""
-    ptype, conv = _phys_of(leaf.type)
-    extra: dict = {"path": path_names, "max_def": max_def, "max_rep": max_rep,
-                   # null_count counts entries missing at the leaf (null or
-                   # terminated above it), matching parquet-java's num_nulls
-                   "stats": _chunk_stats(leaf, len(defs) - len(leaf))}
-    if pa.types.is_decimal(leaf.type):
-        extra.update(tlen=_decimal_flba_len(leaf.type.precision),
-                     prec=leaf.type.precision, scale=leaf.type.scale)
-    elif pa.types.is_fixed_size_binary(leaf.type):
-        extra.update(tlen=leaf.type.byte_width)
-    rep_b = (_rle_spec_encode(rep, max(max_rep.bit_length(), 1))
-             if max_rep > 0 else b"")
-    def_b = _rle_spec_encode(defs, max(max_def.bit_length(), 1))
-    vals = _plain_bytes(leaf)
-    n_values = len(defs)
-    if page_version == 2:
-        comp = _compress(vals, codec)
-        payload = rep_b + def_b + comp
-        usz = len(rep_b) + len(def_b) + len(vals)
-        n_rows = int((rep == 0).sum()) if max_rep > 0 else n_values
-        header = _page_header_v2(n_values, n_values - len(leaf), n_rows,
-                                 _ENC_PLAIN, len(def_b), len(rep_b), usz,
-                                 len(payload) + (32 if ectx else 0),
-                                 crc=None if ectx else _crc_i32(payload))
-    else:
-        parts = []
-        if max_rep > 0:
-            parts.append(struct.pack("<I", len(rep_b)) + rep_b)
-        parts.append(struct.pack("<I", len(def_b)) + def_b)
-        parts.append(vals)
-        body = b"".join(parts)
-        payload = _compress(body, codec)
-        usz = len(body)
-        header = _page_header(n_values, usz,
-                              len(payload) + (32 if ectx else 0), _ENC_PLAIN,
-                              crc=None if ectx else _crc_i32(payload))
-    data_page_offset = offset
-    offset = _emit_page(out, offset, header, payload, ectx, is_dict=False)
-    return (
-        {
-            "name": path_names[0], "type": ptype, "conv": conv,
-            "num_values": n_values,
-            "usize": len(header) + usz,
-            "csize": offset - data_page_offset,
-            "offset": data_page_offset,
-            "dict_offset": None,
-            "enc": _ENC_PLAIN,
-            "pv": page_version,
-            "_ectx": ectx,
-            "pages": [{"off": data_page_offset,
-                       "csize": offset - data_page_offset, "first_row": 0,
-                       "n_valid": len(leaf), "stats": extra["stats"],
-                       **({"var_bytes": _var_data_bytes(leaf)}
-                          if ptype == _T_BYTE_ARRAY else {})}],
-            # SizeStatistics level histograms (parquet-java semantics:
-            # rep when repeated, def only when not derivable from
-            # null_count, i.e. max_def > 1)
-            **({"rep_hist": np.bincount(rep, minlength=max_rep + 1)
-                .tolist()} if max_rep > 0 else {}),
-            **({"def_hist": np.bincount(defs, minlength=max_def + 1)
-                .tolist()} if max_def > 1 else {}),
-            **extra,
-        },
-        offset,
-    )
+        va = vb
+    meta.update(usize=usize, pages=pages, csize=offset - chunk_start,
+                offset=data_offset, dict_offset=dict_offset, enc=enc)
+    return meta, offset
 
 
 def _nested_elems(name: str, t: pa.DataType) -> list[bytes]:
@@ -1291,20 +1173,29 @@ def write_parquet(table: pa.Table, path: str, codec: str = "zstd",
                   encryption_master_id: str = "webcodec",
                   data_page_version: int = 1,
                   shred_variants: bool = False) -> None:
-    """Write ``table`` as a standard parquet file (PLAIN or PLAIN_DICTIONARY
-    per column chunk, optional columns with RLE def levels) using only
-    webcodec kernels + the thrift serialization written here.
+    """Write ``table`` as a standard parquet file using only webcodec
+    kernels + the thrift serialization written here. Every leaf column chunk
+    gets a dictionary page when its distinct values are few enough
+    (``use_dictionary``), else PLAIN values, in ~1 MiB v1 or v2
+    (``data_page_version``) data pages cut at top-level row boundaries.
 
     ``row_group_rows`` splits the output into multiple row groups of that
     many rows (reference C4 sizing: large exports must not balloon into one
     giant group — readers parallelize and page-skip per group); None keeps
     one group. ``column_encoding`` maps column -> "delta_binary_packed"
-    (INT32/INT64/timestamp/date) or "byte_stream_split" (fixed-width) to
-    emit those spec encodings from webcodec's own kernels — the write-side
-    half of the delta/BSS differential tests (the reference reader must
-    decode our bytes)."""
+    (INT32/INT64/timestamp/date), "byte_stream_split" (fixed-width),
+    "delta_length_byte_array" or "delta_byte_array" (string/binary) to
+    emit those spec encodings from webcodec's own kernels instead of
+    dictionary/PLAIN — the write-side half of the delta/BSS differential
+    tests (the reference reader must decode our bytes). For a nested column
+    the encoding applies to every leaf, and a leaf of another physical type
+    raises ``TypeError``; an unknown column raises ``KeyError``."""
     if data_page_version not in (1, 2):
         raise ValueError(f"data_page_version must be 1 or 2, got {data_page_version!r}")
+    column_encoding = column_encoding or {}
+    for name in column_encoding:
+        if table.schema.get_field_index(name) < 0:
+            raise KeyError(f"column_encoding column {name!r} not in table")
     for name, kind in (annotation_columns or {}).items():
         # fail before any bytes land: unknown column / kind / wrong type
         idx = table.schema.get_field_index(name)
@@ -1420,36 +1311,34 @@ def write_parquet(table: pa.Table, path: str, codec: str = "zstd",
                     arr = arr.combine_chunks()
                 t = arr.type
                 ck = col_keys.get(name)
-
-                def _ectx():
-                    # per-COLUMN key (the reference writer's shape: a
-                    # shared footer-key decryptor races under the C++
-                    # reader's threaded path, per-column decryptors don't)
-                    if ck is None:
-                        return None
-                    return {"gcm": ck[0], "aad_unique": aad_unique,
-                            "rg": rg_i, "col": len(col_meta),
-                            "key_md": ck[1]}
                 if pa.types.is_nested(t):
                     # arbitrary-depth Dremel shredding (list/struct/map,
                     # any composition): one chunk per leaf, depth-first
-                    for ls in dremel.shred(name, arr):
-                        cm, offset = _write_shredded_chunk(
-                            out, offset, ls["path"], ls["leaf"], ls["rep"],
-                            ls["defs"], ls["max_rep"], ls["max_def"], codec,
-                            ectx=_ectx(), page_version=data_page_version)
-                        col_meta.append(cm)
+                    leaves = dremel.shred(name, arr)
                 else:
-                    cm, offset = _write_column_chunk(
-                        out, offset, name, arr, codec, use_dictionary,
-                        (column_encoding or {}).get(name), ectx=_ectx(),
-                        page_version=data_page_version,
-                    )
-                    if name in bloom_cols:
-                        cm["bloom_hashes"] = _bloom_hashes(arr)
-                    if name in geo_stat_names:
-                        cm["geo_stats"] = _wkb_geo_stats(arr)
+                    leaves = [{"path": [name], "leaf": arr.drop_null(), "rep": None,
+                               "defs": pc.is_valid(arr).to_numpy(zero_copy_only=False),
+                               "max_rep": 0, "max_def": 1}]
+                for ls in leaves:
+                    # per-COLUMN key (the reference writer's shape: a
+                    # shared footer-key decryptor races under the C++
+                    # reader's threaded path, per-column decryptors don't)
+                    ectx = None if ck is None else {
+                        "gcm": ck[0], "aad_unique": aad_unique, "rg": rg_i,
+                        "col": len(col_meta), "key_md": ck[1]}
+                    cm, offset = _write_leaf_chunk(
+                        out, offset, ls["path"], ls["leaf"], ls["rep"],
+                        ls["defs"], ls["max_rep"], ls["max_def"], codec,
+                        use_dictionary, column_encoding.get(name), ectx,
+                        data_page_version)
                     col_meta.append(cm)
+                if name in bloom_cols:
+                    cm["bloom_hashes"] = _bloom_hashes(arr)
+                if name in geo_stat_names:
+                    cm["geo_stats"] = _wkb_geo_stats(arr)
+                # held through the next column's encode, this column's
+                # leaves raise the export's peak RSS (lineitem: +3 MB)
+                del leaves, ls
             for cm in col_meta:
                 cm["rows"] = sl.num_rows
             groups_meta.append(col_meta)
