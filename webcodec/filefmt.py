@@ -578,6 +578,23 @@ def _read_leaf(buf: memoryview, group: dict, chunk: dict, t: pa.DataType,
             "rep": np.concatenate(reps) if max_rep else None}
 
 
+def _row_spans(group: dict, chunk: dict) -> list[tuple[int, int]]:
+    """Group-relative [first, end) rows of each page of a column."""
+    if "dremel" in chunk:
+        pages = _column_chunk(group, chunk["dremel"]["leaves"][0])["pages"]
+        return [(pm["first_row"], pm["first_row"] + pm["n_rows"]) for pm in pages]
+    return [(pm["first_row"], pm["first_row"] + pm["n_values"]) for pm in chunk["pages"]]
+
+
+def _filter_rows(arr: pa.Array, keep: np.ndarray) -> pa.Array:
+    """``arr`` without the rows the boolean mask ``keep`` drops, passed as a
+    packed bitmap (``pa.array`` of a numpy mask costs more than the filter)."""
+    if keep.all():
+        return arr
+    bits = pa.py_buffer(np.packbits(keep, bitorder="little"))
+    return arr.filter(pa.Array.from_buffers(pa.bool_(), len(keep), [None, bits]))
+
+
 def _decode_dremel(
     buf: memoryview, group: dict, col: dict, verify_crc: bool, keep: np.ndarray | None
 ) -> pa.Array:
@@ -590,7 +607,7 @@ def _decode_dremel(
     if len(leaves) != len(types):
         raise ValueError(f"column {col['name']!r}: {len(leaves)} leaf chunks "
                          f"for {len(types)} leaves")
-    spans = [(pm["first_row"], pm["first_row"] + pm["n_rows"]) for pm in leaves[0]["pages"]]
+    spans = _row_spans(group, col)
     kept = [i for i, (s, e) in enumerate(spans) if keep is None or keep[s:e].any()]
     if not kept:
         return pa.array([], t_out)
@@ -599,9 +616,7 @@ def _decode_dremel(
     if len(arr) != sum(spans[i][1] - spans[i][0] for i in kept):
         raise ValueError(f"column {col['name']!r}: leaves disagree on row count")
     if keep is not None:
-        sub = np.concatenate([keep[spans[i][0] : spans[i][1]] for i in kept])
-        if not sub.all():
-            arr = arr.filter(pa.array(sub))
+        arr = _filter_rows(arr, np.concatenate([keep[spans[i][0] : spans[i][1]] for i in kept]))
     return arr.cast(t_out) if t != t_out else arr
 
 
@@ -1079,7 +1094,7 @@ def _read_page(buf: memoryview, offset: int, verify_crc: bool = True,
 
 
 def _chunk_crypto(chunk: dict):
-    """(crypto, aad_base) of a chunk — read_table injects the per-read
+    """(crypto, aad_base) of a chunk — :func:`_open` injects the per-read
     context as ``_crypto`` (+ ``_crypto_group`` ordinal) into every footer
     chunk dict (plaintext files carry none)."""
     fc = chunk.get("_crypto")
@@ -1089,14 +1104,16 @@ def _chunk_crypto(chunk: dict):
 
 
 def _decode_dict_page_only(buf: memoryview, chunk: dict, verify_crc: bool = True) -> pa.Array:
-    """Decode just a chunk's dictionary page (for dictionary-level pruning)."""
-    d = chunk["dict"]
-    fc, ab = _chunk_crypto(chunk)
-    _, inner, _, dn, _, _, dvals, _ = _read_page(buf, d["offset"], verify_crc, fc, ab)
-    t = arrow_type_from_json(chunk["type"])
-    return colcodec.decode_dict_page(
-        dvals, PhysType(chunk["phys"]), inner, dn, widened(t) or t
-    )
+    """Decode a chunk's dictionary page once per read: the dictionary tier
+    and the data pages share the values kept on the per-read chunk dict."""
+    if "_dict_values" not in chunk:
+        fc, ab = _chunk_crypto(chunk)
+        _, inner, _, dn, _, _, dvals, _ = _read_page(
+            buf, chunk["dict"]["offset"], verify_crc, fc, ab)
+        t = arrow_type_from_json(chunk["type"])
+        chunk["_dict_values"] = colcodec.decode_dict_page(
+            dvals, PhysType(chunk["phys"]), inner, dn, widened(t) or t)
+    return chunk["_dict_values"]
 
 
 def _data_pages(buf: memoryview, chunk: dict, verify_crc: bool, page_ids: list[int]):
@@ -1143,9 +1160,7 @@ def _decode_chunk(
         if arr.type != arrow_type:
             arr = restore_array(arr, arrow_type)
         if keep is not None:
-            sub = keep[pm["first_row"] : pm["first_row"] + pm["n_values"]]
-            if not sub.all():
-                arr = arr.filter(pa.array(sub))
+            arr = _filter_rows(arr, keep[pm["first_row"] : pm["first_row"] + pm["n_values"]])
         parts.append(arr)
     if not parts:
         return pa.array([], type=arrow_type)
@@ -1227,51 +1242,166 @@ def match_positions(
     """GLOBAL row positions matching ``predicate`` (webcodec.predicate
     algebra) — the produce side of merge-on-read deletes: a delete job
     records these positions in a sidecar instead of rewriting the file.
-    Decodes only the predicate's columns, whole file (positions must index
-    the physical row space, so no pruning shortcuts). ``aliases`` (current
-    name -> older names) localizes renamed columns to this file's chunk
-    names; a column with no chunk here (added after the file) matches as
-    all-null — no positions."""
+    They are the late tier's positions (:func:`_late_tier`), exact because
+    pruning is conservative. ``aliases`` (current name -> older names)
+    localizes renamed columns to this file's chunk names; a column with no
+    chunk here (added after the file) matches as all-null — no positions."""
     from webcodec import predicate as predmod
+    from webcodec.spark.decode_job import local_names
 
     conjuncts = predmod.normalize(predicate)
     if conjuncts is None:
         raise ValueError("match_positions requires a predicate")
+    buf, footer, groups = _open(source, encryption_key)
     # ALWAYS localize — even with no renames, a column ADDED to the table
     # after this file was written has no chunk here and must read as
-    # all-null (isnull matches every row, anything else matches none),
-    # never as a bare StopIteration from the projection
-    from webcodec.spark.decode_job import _chunk_names, local_names
-
-    src = source if isinstance(source, str) else memoryview(source)
-    lmap = local_names(
-        _chunk_names(src, encryption_key=encryption_key),
-        [c for c, _, _ in conjuncts], aliases or {},
-    )
+    # all-null (isnull matches every row, anything else matches none)
+    lmap = local_names({c["name"] for c in groups[0]["chunks"]},
+                       [c for c, _, _ in conjuncts], aliases or {})
     localized = []
     for c, op, v in conjuncts:
         if c in lmap:
             localized.append((lmap[c], op, v))
-        elif op == "isnull":
-            continue  # column added after this file: all-null, all match
-        else:
+        elif op != "isnull":
             return np.empty(0, dtype=np.int64)  # all-null matches nothing
-    if not localized:
-        footer = (read_footer_path(src, encryption_key) if isinstance(src, str)
-                  else read_footer(src, encryption_key))
-        return np.arange(int(footer["num_rows"]), dtype=np.int64)
-    conjuncts = localized
-    cols = sorted({c for c, _, _ in conjuncts})
-    t = read_table(source, columns=cols, verify_crc=False,
-                   encryption_key=encryption_key)
-    mask = predmod.match_mask(t, conjuncts)
-    return np.flatnonzero(mask.to_numpy(zero_copy_only=False))
+    n = footer["num_rows"]
+    if not localized:  # only isnull terms on added columns: every row
+        return np.arange(n, dtype=np.int64)
+    table, _ = _late_tier(buf, groups, n, localized,
+                          _stats_keep(buf, groups, n, localized, None, False), False)
+    return np.asarray(table.column(_POS), dtype=np.int64)
 
 
 def _empty_table(group: dict, names: list[str]) -> pa.Table:
     return pa.schema(
         [pa.field(n, _column_type(_column_chunk(group, n))) for n in names]
     ).empty_table()
+
+
+def _open(source: str | bytes | memoryview, encryption_key: bytes | None):
+    """(buffer, footer, groups) of a file. Each group dict gets its first
+    global row as ``_base``; each chunk dict of an encrypted file gets the
+    per-read decryption context and its group ordinal (the AAD chain)."""
+    if isinstance(source, str):
+        with open(source, "rb") as f:
+            source = f.read()
+    buf = memoryview(source)
+    footer = read_footer(buf, encryption_key)
+    groups = footer.get("groups") or [footer]
+    fcr = None
+    if footer.get("encryption") or encryption_key is not None:
+        from webcodec import crypto as wcrypto
+
+        fcr = wcrypto.reader_context(footer, encryption_key)
+    base = 0
+    for gi, g in enumerate(groups):
+        g["_base"], base = base, base + g["num_rows"]
+        for c in g["chunks"] if fcr is not None else ():
+            c["_crypto"], c["_crypto_group"] = fcr, gi
+    return buf, footer, groups
+
+
+def _stats_keep(buf: memoryview, groups: list[dict], num_rows: int,
+                conjuncts: list[tuple], keep_rows: np.ndarray | None,
+                verify_crc: bool) -> np.ndarray | None:
+    """``keep_rows`` (global mask, None = all) narrowed by the bloom,
+    dictionary and page-stat tiers; conservative, never drops a match."""
+    from webcodec import predicate as predmod
+
+    any_skipped = False
+    stats_keep = np.ones(num_rows, dtype=bool)
+    for col, op, value in conjuncts:
+        term_keep = np.zeros(num_rows, dtype=bool)
+        for g in groups:
+            pc_chunk = _column_chunk(g, col)
+            if "dremel" in pc_chunk:
+                # no pruning tier reads a Dremel column; null tests stay
+                # exact through the residual filter
+                if op not in ("isnull", "notnull"):
+                    raise ValueError(
+                        f"predicates on nested/decimal columns unsupported: {col!r}")
+                term_keep[g["_base"] : g["_base"] + g["num_rows"]] = True
+                continue
+            pred_phys = PhysType(pc_chunk["phys"])
+            eq_values = [value] if op == "==" else (list(value) if op == "in" else None)
+            dict_coded = (pc_chunk.get("dict")
+                          and Encoding(pc_chunk["encoding"]) == Encoding.DICT)
+            if (eq_values is not None and pc_chunk.get("bloom")
+                    and not _bloom_may_contain(pc_chunk, eq_values)
+                    or eq_values is not None and dict_coded
+                    and not _values_in_dict(buf, pc_chunk, eq_values, verify_crc)
+                    or op in predmod.STRING_OPS and dict_coded
+                    and not _string_op_hits_dict(buf, pc_chunk, op, value, verify_crc)):
+                any_skipped = True  # whole group provably term-free
+                continue
+            for pm in pc_chunk["pages"]:
+                if predmod.term_matches(pm, op, value, pred_phys, pm["n_values"]):
+                    s = g["_base"] + pm["first_row"]
+                    term_keep[s : s + pm["n_values"]] = True
+                else:
+                    any_skipped = True
+        stats_keep &= term_keep
+    if not any_skipped:
+        return keep_rows
+    return stats_keep if keep_rows is None else keep_rows & stats_keep
+
+
+def _decode_column(buf: memoryview, groups: list[dict], name: str,
+                   keep_rows: np.ndarray | None, verify_crc: bool) -> pa.Array:
+    """Column ``name`` over the rows ``keep_rows`` (global mask, None = all)
+    keeps, in file order; pages with no kept row are never read."""
+    parts = []
+    for g in groups:
+        chunk = _column_chunk(g, name)
+        keep = None if keep_rows is None else keep_rows[g["_base"] : g["_base"] + g["num_rows"]]
+        parts.append(_decode_dremel(buf, g, chunk, verify_crc, keep)
+                     if "dremel" in chunk else
+                     _decode_chunk(buf, chunk, verify_crc, keep=keep))
+    return pa.concat_arrays(parts) if len(parts) > 1 else parts[0]
+
+
+def _pages_kept(groups: list[dict], name: str, keep_rows: np.ndarray | None) -> int:
+    """How many pages of column ``name`` hold a row ``keep_rows`` keeps."""
+    return sum(keep_rows is None or bool(keep_rows[g["_base"] + s : g["_base"] + e].any())
+               for g in groups for s, e in _row_spans(g, _column_chunk(g, name)))
+
+
+def _by_cost(groups: list[dict], conjuncts: list[tuple]) -> list[str]:
+    """The predicate's columns, cheapest first by footer ``compressed_bytes``."""
+    def cost(col):
+        return sum(c["compressed_bytes"] for g in groups for c in g["chunks"]
+                   if c["name"] == col or c["name"].startswith(col + _LEAF_SEP))
+
+    return sorted(dict.fromkeys(c for c, _, _ in conjuncts), key=cost)
+
+
+# the late tier's row-position column: no column name carries the separator
+_POS = _LEAF_SEP + "pos"
+
+
+def _late_tier(buf: memoryview, groups: list[dict], num_rows: int,
+               conjuncts: list[tuple], keep_rows: np.ndarray | None,
+               verify_crc: bool) -> tuple[pa.Table, np.ndarray | None]:
+    """Late materialization: decode each predicate column, cheapest first,
+    over the rows ``keep_rows`` still keeps, then filter it exactly by its
+    conjuncts; an emptied mask stops the loop. Returns the predicate columns
+    over the matching rows, their global positions in ``_POS``, and the
+    keep mask of those rows."""
+    from webcodec import predicate as predmod
+
+    pos = np.arange(num_rows) if keep_rows is None else np.flatnonzero(keep_rows)
+    table = pa.Table.from_arrays([pos], names=[_POS])
+    for col in _by_cost(groups, conjuncts):
+        if not table.num_rows:
+            break
+        n = table.num_rows
+        table = predmod.residual_filter(
+            table.append_column(col, _decode_column(buf, groups, col, keep_rows, verify_crc)),
+            [t for t in conjuncts if t[0] == col])
+        if table.num_rows < n:
+            keep_rows = np.zeros(num_rows, dtype=bool)
+            keep_rows[table.column(_POS).to_numpy()] = True
+    return table, keep_rows
 
 
 def read_table(
@@ -1288,9 +1418,12 @@ def read_table(
     ``columns``: projection — only those chunks are decoded (D6 parity; free by
     columnar layout). ``predicate``: a (col, op, value) tuple or a LIST of
     them, ANDed (webcodec.predicate algebra: ==/</<=/>/>=, in, isnull,
-    notnull, startswith — D4 parity with FilterApi/Operators). Pages that
-    cannot match any conjunct are skipped across ALL columns via row-range
-    sync (D3 parity), then the residual filter is applied exactly.
+    notnull, startswith — D4 parity with FilterApi/Operators). Tiers: bloom,
+    dictionary and page stats skip pages across ALL columns (D3 row-range
+    sync); then the late tier (:func:`_late_tier`) runs the residual filter
+    exactly on the predicate columns alone, and the other columns read only
+    pages holding a matching row. If each keeps at most one page, there is
+    nothing to skip: all columns decode and the residual filter runs once.
     ``row_range``: half-open [lo, hi) row slice of the file — only pages
     overlapping the range are decoded (same keep-mask machinery), enabling
     intra-file parallel reads: N tasks can scan one large file on disjoint
@@ -1301,26 +1434,8 @@ def read_table(
     """
     from webcodec import predicate as predmod
 
-    if isinstance(source, str):
-        with open(source, "rb") as f:
-            data = f.read()
-    else:
-        data = source
-    buf = memoryview(data)
-    footer = read_footer(buf, encryption_key)
-    groups = footer.get("groups") or [footer]
-    if footer.get("encryption") or encryption_key is not None:
-        from webcodec import crypto as wcrypto
-
-        fcr = wcrypto.reader_context(footer, encryption_key)
-        if fcr is not None:
-            # inject the per-read context into every chunk dict so the whole
-            # decode tree (nested chunks included) decrypts transparently;
-            # the group ordinal re-enters the AAD chain here
-            for gi, g in enumerate(groups):
-                for c in g["chunks"]:
-                    c["_crypto"] = fcr
-                    c["_crypto_group"] = gi
+    buf, footer, groups = _open(source, encryption_key)
+    num_rows = footer["num_rows"]
     # Dremel leaf chunks are footer-internal, not columns.
     # columns=[] means ZERO columns (e.g. a pure null-fill read of columns
     # added after this file) — `or` would silently decode the whole file
@@ -1339,94 +1454,35 @@ def read_table(
             if any(op != "isnull" for _, op, _ in missing_terms):
                 return _empty_table(groups[0], names)
             conjuncts = [t for t in conjuncts if t[0] in present] or None
-    # predicate columns are decoded even when not projected (the residual
-    # filter needs them for exactness), then dropped before returning
-    decode_names = list(names)
-    if conjuncts is not None:
-        for c, _, _ in conjuncts:
-            if c not in decode_names:
-                decode_names.append(c)
+
     keep_rows: np.ndarray | None = None
-    if conjuncts is not None:
-        keep_rows = np.ones(footer["num_rows"], dtype=bool)
-        any_skipped = False
-        for col, op, value in conjuncts:
-            term_keep = np.zeros(footer["num_rows"], dtype=bool)
-            row_base = 0
-            for g in groups:
-                pc_chunk = _column_chunk(g, col)
-                if "dremel" in pc_chunk:
-                    # no pruning tier reads a Dremel column; null tests stay
-                    # exact through the residual filter
-                    if op not in ("isnull", "notnull"):
-                        raise ValueError(
-                            f"predicates on nested/decimal columns unsupported: {col!r}"
-                        )
-                    term_keep[row_base : row_base + g["num_rows"]] = True
-                    row_base += g["num_rows"]
-                    continue
-                pred_phys = PhysType(pc_chunk["phys"])
-                eq_values = [value] if op == "==" else (list(value) if op == "in" else None)
-                dict_coded = (pc_chunk.get("dict")
-                              and Encoding(pc_chunk["encoding"]) == Encoding.DICT)
-                if (eq_values is not None and pc_chunk.get("bloom")
-                        and not _bloom_may_contain(pc_chunk, eq_values)
-                        or eq_values is not None and dict_coded
-                        and not _values_in_dict(buf, pc_chunk, eq_values, verify_crc)
-                        or op in predmod.STRING_OPS and dict_coded
-                        and not _string_op_hits_dict(buf, pc_chunk, op, value, verify_crc)):
-                    any_skipped = True  # whole group provably term-free
-                    row_base += g["num_rows"]
-                    continue
-                for pm in pc_chunk["pages"]:
-                    if predmod.term_matches(pm, op, value, pred_phys, pm["n_values"]):
-                        s = row_base + pm["first_row"]
-                        term_keep[s : s + pm["n_values"]] = True
-                    else:
-                        any_skipped = True
-                row_base += g["num_rows"]
-            keep_rows &= term_keep
-        if not any_skipped:
-            keep_rows = None  # nothing prunable; decode everything
-
     if row_range is not None:
-        lo = max(int(row_range[0]), 0)
-        hi = min(int(row_range[1]), footer["num_rows"])
-        rng = np.zeros(footer["num_rows"], dtype=bool)
-        rng[lo:hi] = True
-        keep_rows = rng if keep_rows is None else (keep_rows & rng)
-
+        keep_rows = np.zeros(num_rows, dtype=bool)
+        keep_rows[max(int(row_range[0]), 0) : min(int(row_range[1]), num_rows)] = True
     if drop_rows is not None and len(drop_rows):
-        live = np.ones(footer["num_rows"], dtype=bool)
-        live[np.asarray(drop_rows, dtype=np.int64)] = False
-        keep_rows = live if keep_rows is None else (keep_rows & live)
-
+        if keep_rows is None:
+            keep_rows = np.ones(num_rows, dtype=bool)
+        keep_rows[np.asarray(drop_rows, dtype=np.int64)] = False
+    if conjuncts is not None:
+        keep_rows = _stats_keep(buf, groups, num_rows, conjuncts, keep_rows, verify_crc)
     if keep_rows is not None and not keep_rows.any():
         # every group provably predicate-free (or empty range): no decode work
         return _empty_table(groups[0], names)
 
-    arrays = []
-    fields = []
-    for name in decode_names:
-        parts = []
-        row_base = 0
-        for g in groups:
-            chunk = _column_chunk(g, name)
-            keep = (
-                keep_rows[row_base : row_base + g["num_rows"]]
-                if keep_rows is not None
-                else None
-            )
-            parts.append(_decode_dremel(buf, g, chunk, verify_crc, keep)
-                         if "dremel" in chunk else
-                         _decode_chunk(buf, chunk, verify_crc, keep=keep))
-            row_base += g["num_rows"]
-        arr = pa.concat_arrays(parts) if len(parts) > 1 else parts[0]
-        arrays.append(arr)
-        fields.append(pa.field(name, arr.type))
-    table = pa.Table.from_arrays(arrays, schema=pa.schema(fields))
-    if conjuncts is not None:
-        table = predmod.residual_filter(table, conjuncts)
-        if decode_names != names:
-            table = table.select(names)
-    return table
+    def decode(cols):
+        return pa.Table.from_arrays(
+            [_decode_column(buf, groups, n, keep_rows, verify_crc) for n in cols], names=cols)
+
+    if conjuncts is None:
+        return decode(names)
+    cols = _by_cost(groups, conjuncts)
+    rest = [n for n in dict.fromkeys(names) if n not in cols]
+    if any(_pages_kept(groups, n, keep_rows) > 1 for n in [*cols[1:], *rest]):
+        table, keep_rows = _late_tier(buf, groups, num_rows, conjuncts, keep_rows, verify_crc)
+        if not table.num_rows:
+            return _empty_table(groups[0], names)
+        for n in rest:  # projected predicate columns are already decoded
+            table = table.append_column(n, _decode_column(buf, groups, n, keep_rows, verify_crc))
+    else:
+        table = predmod.residual_filter(decode([*cols, *rest]), conjuncts)
+    return table.select(names)

@@ -158,20 +158,3 @@ def residual_filter(table, conjuncts: list[tuple]):
         table = table.filter(_term_mask(table.column(col), op, value))
     return table
 
-
-def match_mask(table, conjuncts: list[tuple]):
-    """AND of every conjunct's mask over a decoded table, nulls folded to
-    False — the positions-of-matching-rows primitive (merge-on-read deletes
-    need POSITIONS, which a sequential filter() destroys)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    out = None
-    for col, op, value in conjuncts:
-        m = _term_mask(table.column(col), op, value)
-        out = m if out is None else pc.and_kleene(out, m)
-    if out is None:
-        return None
-    if isinstance(out, pa.ChunkedArray):
-        out = out.combine_chunks()
-    return pc.fill_null(out, False)
