@@ -64,6 +64,21 @@ def test_xxh64_vectorized_matches_scalar(seed):
     assert (got == ref).all()
 
 
+def test_xxh64_skewed_lengths_match_scalar():
+    """5,000 short values and one 1 MiB value: the stripe loop touches
+    only the lanes that still have a stripe, and every hash stays equal
+    to the scalar reference."""
+    rng = np.random.default_rng(7)
+    vals = [rng.integers(0, 256, int(n), dtype=np.uint8).tobytes()
+            for n in rng.integers(0, 100, 5_000)]
+    vals.insert(1_234, rng.integers(0, 256, 1 << 20, dtype=np.uint8).tobytes())
+    data = np.frombuffer(b"".join(vals), np.uint8)
+    offs = np.zeros(len(vals) + 1, np.int64)
+    offs[1:] = np.cumsum([len(v) for v in vals])
+    got = xxh64_values(offs, data)
+    assert [int(h) for h in got] == [xxh64_scalar(v) for v in vals]
+
+
 def test_spec_bloom_no_false_negatives_and_fpp():
     rng = np.random.default_rng(1)
     vals = [f"k{int(v)}".encode() for v in rng.permutation(10_000)]

@@ -282,6 +282,9 @@ def _encode_chunk(
         "pages": [],
         "dict": None,
     }
+    if not fixed and stats.read:
+        # the statistics the choice read, before the bloom gate reads more
+        chunk["select"] = dict(stats.read)
 
     flat = leaf_pages is None
     # per page: (values start, end, first row, rows, entries, levels)

@@ -52,9 +52,9 @@ def _gather_u32(data: np.ndarray, base: np.ndarray) -> np.ndarray:
 def xxh64_values(offsets: np.ndarray, data: np.ndarray) -> np.ndarray:
     """XXH64(seed=0) of each value ``data[offsets[i]:offsets[i+1]]``.
 
-    Fully vectorized: the 32-byte stripe loop runs max(len)//32 iterations
-    over ALL values with numpy masks, the <32-byte tail phase runs a fixed
-    3+1+3 masked passes. Returns uint64[m]."""
+    Fully vectorized: the 32-byte stripe loop runs max(len)//32 iterations,
+    iteration k over only the values that have a stripe k; the <32-byte
+    tail phase runs a fixed 3+1+3 masked passes. Returns uint64[m]."""
     with np.errstate(over="ignore"):
         return _xxh64_impl(offsets, data)
 
@@ -77,26 +77,23 @@ def _xxh64_impl(offsets: np.ndarray, data: np.ndarray) -> np.ndarray:
     h[~long] = _P5 + n64[~long]
 
     if long.any():
+        # lanes by stripe count, most first: the lanes that still have a
+        # stripe k are a prefix, so the loop's work is the total stripe
+        # count, not lanes x the longest value
         li = np.flatnonzero(long)
+        stripes = lens[li] // 32
+        order = np.argsort(-stripes, kind="stable")
+        li, stripes = li[order], stripes[order]
         ls = starts[li]
-        ln = lens[li]
-        v1 = np.full(len(li), _P1 + _P2, dtype=np.uint64)
-        v2 = np.full(len(li), _P2, dtype=np.uint64)
-        v3 = np.zeros(len(li), dtype=np.uint64)
-        v4 = np.full(len(li), (-int(_P1)) & _M64, dtype=np.uint64)
-        stripes = ln // 32
-        for k in range(int(stripes.max())):
-            act = stripes > k
-            base = ls + 32 * k
-            safe = np.where(act, base, 0)
-            l1 = _gather_u64(data, safe)
-            l2 = _gather_u64(data, safe + 8)
-            l3 = _gather_u64(data, safe + 16)
-            l4 = _gather_u64(data, safe + 24)
-            v1 = np.where(act, _round(v1, l1), v1)
-            v2 = np.where(act, _round(v2, l2), v2)
-            v3 = np.where(act, _round(v3, l3), v3)
-            v4 = np.where(act, _round(v4, l4), v4)
+        acc = np.tile(np.array([_P1 + _P2, _P2, 0, (-int(_P1)) & _M64],
+                               dtype=np.uint64), (len(li), 1))
+        # active[k]: lanes with more than k stripes
+        active = np.searchsorted(-stripes, -np.arange(int(stripes[0])), side="left")
+        word = np.arange(32, dtype=np.int64)
+        for k, c in enumerate(active.tolist()):
+            mat = data[(ls[:c] + 32 * k)[:, None] + word]
+            acc[:c] = _round(acc[:c], mat.view("<u8").astype(np.uint64, copy=False))
+        v1, v2, v3, v4 = acc.T
         hl = _rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)
         for v in (v1, v2, v3, v4):  # merge rounds
             hl = (hl ^ _round(np.zeros_like(v), v)) * _P1 + _P4

@@ -3,7 +3,12 @@
 Two layers (SURVEY.md §2.B, §4.1):
 - a-priori rule table over sampled stats (ndv ratio, mean run length, byte
   entropy, prefix ratio) — our extension, richer than the reference's
-  type-default tables (DefaultV1/V2ValuesWriterFactory, B2/B3);
+  type-default tables (DefaultV1/V2ValuesWriterFactory, B2/B3). The stats
+  are computed on demand, so each rule reads its cheap statistic first
+  (``n`` before the ndv test, ``sortedness`` before ``prefix_ratio``,
+  ``avg_len`` before ``byte_entropy``) and an override reads none; the
+  ndv tests ask ``stats.ndv_below(t)``, which the length bound answers
+  without hashing values when it can;
 - a-posteriori guard with the reference's ``FallbackValuesWriter`` semantics
   (A7): ``isCompressionSatisfying(raw, encoded)`` ⇔ encoded (+ dict page) < raw,
   decided on the first encoded page; on failure the chunk falls back to the
@@ -92,13 +97,13 @@ def choose(column: str, phys: PhysType, stats: SampleStats, config: EncoderConfi
         return Encoding.BYTE_STREAM_SPLIT
 
     if phys in (PhysType.INT32, PhysType.INT64, PhysType.TIMESTAMP_US, PhysType.DATE32):
-        if dict_ok and stats.ndv_ratio < 0.05 and stats.n >= 64:
+        if dict_ok and stats.n >= 64 and stats.ndv_below(0.05):
             return Encoding.DICT
         # FOR + delta + bit-pack wins on sorted/clustered ints (warc_ts)
         return Encoding.DELTA_BINARY_PACKED
 
     if phys in (PhysType.FLOAT32, PhysType.FLOAT64):
-        if dict_ok and stats.ndv_ratio < 0.05 and stats.n >= 64:
+        if dict_ok and stats.n >= 64 and stats.ndv_below(0.05):
             return Encoding.DICT
         # ALP (SIGMOD'23) is total on floats and self-adapts per page:
         # decimal-like data integerizes into FOR+delta+bit-pack (~2 B/value
@@ -108,15 +113,15 @@ def choose(column: str, phys: PhysType, stats: SampleStats, config: EncoderConfi
         return Encoding.ALP
 
     # varlen string/binary
-    if dict_ok and stats.ndv_ratio < 0.10 and stats.n >= 64:
+    if dict_ok and stats.n >= 64 and stats.ndv_below(0.10):
         return Encoding.DICT
-    if stats.prefix_ratio > 0.4 and stats.sortedness > 0.9:
+    if stats.sortedness > 0.9 and stats.prefix_ratio > 0.4:
         return Encoding.DELTA_BYTE_ARRAY  # sorted urls
     if (
         config.use_fsst
         and phys == PhysType.STRING
-        and stats.byte_entropy < 6.0
         and stats.avg_len >= 8
+        and stats.byte_entropy < 6.0
     ):
         # STRING columns only — the chunk-level sample trial
         # (filefmt._fsst_trial) keeps FSST only when final bytes shrink >=10%.

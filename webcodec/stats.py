@@ -6,29 +6,24 @@ Reference parity: min/max/null-count statistics per page/chunk with truncation
 (ndv ratio, mean run length, byte entropy) are our extension per the
 north_star ('codec auto-selector driven by sampled cardinality/run-length/
 entropy statistics'), validated by BtrBlocks (SIGMOD'23, PAPERS.md).
+
+Selector stats are computed on demand: :class:`SampleStats` computes each
+statistic on its first read and caches it, so a choice pays only for the
+statistics it reads. ``ndv_ratio < t`` questions go through
+:meth:`SampleStats.ndv_below`, which answers from the *length bound*
+``ndv_ratio_ge`` (distinct value lengths / n) when that alone settles them.
 """
 
 from __future__ import annotations
 
 import base64
-from dataclasses import dataclass
+from functools import cached_property
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
 from webcodec.types import IS_VARLEN, NUMPY_OF, PhysType
-
-
-@dataclass
-class SampleStats:
-    n: int
-    ndv_ratio: float          # distinct / sampled
-    mean_run_length: float    # consecutive-equal runs
-    byte_entropy: float       # bits/byte over the value bytes (varlen/fixed view)
-    avg_len: float            # bytes per value
-    prefix_ratio: float       # avg adjacent common-prefix / avg_len (varlen only)
-    sortedness: float         # fraction of non-decreasing adjacent pairs
 
 
 def _approx_prefix_lengths(offsets: np.ndarray, data: np.ndarray, cap: int = 64) -> np.ndarray:
@@ -63,37 +58,88 @@ def _entropy_bits(raw: np.ndarray) -> float:
     return float(-(p * np.log2(p)).sum())
 
 
-def sample_stats(arr: pa.Array, phys: PhysType, sample_n: int = 4096) -> SampleStats:
-    """Compute selector statistics from the first ``sample_n`` non-null values."""
-    s = arr.drop_null().slice(0, sample_n)
-    n = len(s)
-    if n == 0:
-        return SampleStats(0, 1.0, 1.0, 8.0, 0.0, 0.0, 0.0)
-    if phys == PhysType.LIST_FLOAT32:  # nested: BSS path, no distinct-count kernel
-        return SampleStats(n, 1.0, 1.0, 8.0, 0.0, 0.0, 0.0)
-    ndv = pc.count_distinct(s).as_py()
-    total_nonnull = len(arr) - arr.null_count
-    ndv_ratio = ndv / n
-    if total_nonnull <= n:
-        ndv_ratio = ndv / max(total_nonnull, 1)
-    elif 0.02 < ndv_ratio < 0.9 and s.nbytes <= n * 256:
-        # sample NDV / sample size systematically MISSES medium-cardinality
-        # dictionary wins: a 600k-row chunk with 2.5k distinct values shows
-        # ~0.5 distinctness in a 4k sample but 0.004 in the chunk. Chao1
-        # (bias-corrected: ndv + f1(f1-1)/2(f2+1), public estimator) scales
-        # the sample NDV to a chunk-total estimate. Gated to the undecided
-        # middle zone: near-0 ratios already pick DICT, near-1 ratios keep
-        # f1 ~ sample size and blow the estimate up anyway, and long blobs
-        # (> 256 B/value) would pay a second full hash pass in value_counts
-        # for columns that are never dictionary candidates. The dict-size
-        # limit and A7 guard backstop bad estimates either way.
-        counts = pc.value_counts(s).field("counts").to_numpy(zero_copy_only=False)
-        f1 = int((counts == 1).sum())
-        f2 = int((counts == 2).sum())
-        ndv_est = ndv + f1 * (f1 - 1) / (2.0 * (f2 + 1))
-        ndv_ratio = min(1.0, ndv_est / total_nonnull)
+def _sample(arr: pa.Array, sample_n: int) -> pa.Array:
+    """``arr.drop_null().slice(0, sample_n)``, reading only a prefix of
+    ``arr``: the window doubles until it holds ``sample_n`` non-null values,
+    so a nullable column is never copied in full."""
+    if arr.null_count == 0:
+        return arr.slice(0, sample_n)
+    w = sample_n
+    while w < len(arr) and w - arr.slice(0, w).null_count < sample_n:
+        w *= 2
+    return arr.slice(0, w).drop_null().slice(0, sample_n)
 
-    if phys in IS_VARLEN:
+
+# every statistic of an empty sample, and of LIST_FLOAT32 (BSS path, no
+# distinct-count kernel)
+_CONSTANT = {"ndv_ratio": 1.0, "mean_run_length": 1.0, "byte_entropy": 8.0,
+             "avg_len": 0.0, "prefix_ratio": 0.0, "sortedness": 0.0}
+
+
+def _stat(name: str, doc: str) -> property:
+    return property(lambda self: self._read(name), doc=doc)
+
+
+class SampleStats:
+    """Selector statistics over the first ``sample_n`` non-null values of a
+    column. Each one is computed on its first read and cached.
+
+    ``read`` maps each statistic a caller read to its value, in read order;
+    the encoder stores it as the chunk's ``select``. ``computed`` holds
+    every statistic computed so far."""
+
+    n = _stat("n", "sampled non-null values")
+    ndv_ratio = _stat("ndv_ratio", "distinct / sampled (Chao1-scaled in the middle zone)")
+    mean_run_length = _stat("mean_run_length", "consecutive-equal runs")
+    byte_entropy = _stat("byte_entropy", "bits/byte over the value bytes (varlen/fixed view)")
+    avg_len = _stat("avg_len", "bytes per value")
+    prefix_ratio = _stat("prefix_ratio", "avg adjacent common-prefix / avg_len (varlen only)")
+    sortedness = _stat("sortedness", "fraction of non-decreasing adjacent pairs")
+
+    def __init__(self, arr: pa.Array, phys: PhysType, sample_n: int) -> None:
+        self._arr = arr
+        self._phys = phys
+        self._sample_n = sample_n
+        self._total = len(arr) - arr.null_count
+        self.computed: dict = {"n": min(sample_n, self._total)}
+        self.read: dict = {}
+
+    def ndv_below(self, t: float) -> bool:
+        """``ndv_ratio < t``. Values wider than the Chao1 gate keep
+        ``ndv_ratio = ndv / n``, and distinct value lengths never outnumber
+        distinct values — so once the length bound reaches ``t`` the value
+        bytes are never hashed."""
+        n = self.computed["n"]
+        if (
+            "ndv_ratio" not in self.computed
+            and self._phys in IS_VARLEN
+            and n > 0
+            and self._s.nbytes > n * 256
+            and self._read("ndv_ratio_ge") >= t
+        ):
+            return False
+        return self.ndv_ratio < t
+
+    def _read(self, name: str):
+        v = self.read[name] = self._value(name)
+        return v
+
+    def _value(self, name: str):
+        if name not in self.computed:
+            if self.computed["n"] == 0 or self._phys == PhysType.LIST_FLOAT32:
+                self.computed[name] = _CONSTANT[name]
+            else:
+                self.computed[name] = getattr(self, "_" + name)()
+        return self.computed[name]
+
+    @cached_property
+    def _s(self) -> pa.Array:
+        return _sample(self._arr, self._sample_n)
+
+    @cached_property
+    def _parts(self) -> tuple[np.ndarray, np.ndarray]:
+        """Varlen sample as (int64 offsets from 0, uint8 value bytes)."""
+        s, n = self._s, self.computed["n"]
         s2 = s.cast(pa.large_binary()) if not pa.types.is_large_binary(s.type) else s
         if isinstance(s2, pa.ChunkedArray):
             s2 = s2.combine_chunks()
@@ -108,38 +154,92 @@ def sample_stats(arr: pa.Array, phys: PhysType, sample_n: int = 4096) -> SampleS
         data = np.frombuffer(
             buffers[2] or b"", dtype=np.uint8, count=int(offsets[-1])
         )[base:]
-        offsets = offsets - base
-        lens = np.diff(offsets)
-        avg_len = float(lens.mean()) if n else 0.0
-        entropy = _entropy_bits(data[: 1 << 16])
-        p = _approx_prefix_lengths(offsets, data)
+        return offsets - base, data
+
+    @cached_property
+    def _v(self) -> np.ndarray:
+        """Fixed-width sample as numpy values."""
+        if self._phys == PhysType.BOOL:
+            return self._s.to_numpy(zero_copy_only=False).astype(np.uint8)
+        return self._s.to_numpy(zero_copy_only=False).view(NUMPY_OF[self._phys])
+
+    def _ndv_ratio(self) -> float:
+        s, n, total_nonnull = self._s, self.computed["n"], self._total
+        ndv = pc.count_distinct(s).as_py()
+        ndv_ratio = ndv / n
+        if total_nonnull <= n:
+            ndv_ratio = ndv / max(total_nonnull, 1)
+        elif 0.02 < ndv_ratio < 0.9 and s.nbytes <= n * 256:
+            # sample NDV / sample size systematically MISSES medium-cardinality
+            # dictionary wins: a 600k-row chunk with 2.5k distinct values shows
+            # ~0.5 distinctness in a 4k sample but 0.004 in the chunk. Chao1
+            # (bias-corrected: ndv + f1(f1-1)/2(f2+1), public estimator) scales
+            # the sample NDV to a chunk-total estimate. Gated to the undecided
+            # middle zone: near-0 ratios already pick DICT, near-1 ratios keep
+            # f1 ~ sample size and blow the estimate up anyway, and long blobs
+            # (> 256 B/value) would pay a second full hash pass in value_counts
+            # for columns that are never dictionary candidates. The dict-size
+            # limit and A7 guard backstop bad estimates either way.
+            counts = pc.value_counts(s).field("counts").to_numpy(zero_copy_only=False)
+            f1 = int((counts == 1).sum())
+            f2 = int((counts == 2).sum())
+            ndv_est = ndv + f1 * (f1 - 1) / (2.0 * (f2 + 1))
+            ndv_ratio = min(1.0, ndv_est / total_nonnull)
+        return ndv_ratio
+
+    def _ndv_ratio_ge(self) -> float:
+        """Length bound: distinct value lengths / n <= distinct values / n."""
+        return len(np.unique(np.diff(self._parts[0]))) / self.computed["n"]
+
+    def _avg_len(self) -> float:
+        if self._phys not in IS_VARLEN:
+            return float(self._v.dtype.itemsize)
+        return float(np.diff(self._parts[0]).mean())
+
+    def _byte_entropy(self) -> float:
+        if self._phys in IS_VARLEN:
+            return _entropy_bits(self._parts[1][: 1 << 16])
+        raw = np.ascontiguousarray(self._v).view(np.uint8)
+        return _entropy_bits(raw[: 1 << 16])
+
+    def _prefix_ratio(self) -> float:
+        if self._phys not in IS_VARLEN:
+            return 0.0
+        n = self.computed["n"]
+        p = _approx_prefix_lengths(*self._parts)
         # prefix win is bounded by avg_len but estimated over <=64B heads;
         # normalize by the capped width so short keys aren't penalized
-        denom = min(avg_len, 64.0)
-        prefix_ratio = float(p[1:].mean() / denom) if n > 1 and denom > 0 else 0.0
+        denom = min(self._value("avg_len"), 64.0)
+        return float(p[1:].mean() / denom) if n > 1 and denom > 0 else 0.0
+
+    def _mean_run_length(self) -> float:
+        n = self.computed["n"]
+        if self._phys not in IS_VARLEN:
+            from webcodec.kernels.rle import mean_run_length
+
+            return mean_run_length(self._v)
+        s = self._s
         # runs / sortedness on hashes-of-values is enough for equality runs
         eq = pc.equal(s.slice(0, n - 1), s.slice(1)).to_numpy(zero_copy_only=False) if n > 1 else np.array([])
         runs = 1 + int((~eq.astype(bool)).sum()) if n > 1 else 1
-        mrl = n / runs
-        sortedness = 0.0
-        if n > 1:
-            le = pc.less_equal(s.slice(0, n - 1), s.slice(1)).to_numpy(zero_copy_only=False)
-            sortedness = float(np.nanmean(le.astype(np.float64)))
-        return SampleStats(n, ndv_ratio, mrl, entropy, avg_len, prefix_ratio, sortedness)
+        return n / runs
 
-    if phys == PhysType.BOOL:
-        v = s.to_numpy(zero_copy_only=False).astype(np.uint8)
-    elif phys == PhysType.LIST_FLOAT32:
-        return SampleStats(n, ndv_ratio, 1.0, 8.0, 0.0, 0.0, 0.0)
-    else:
-        v = s.to_numpy(zero_copy_only=False).view(NUMPY_OF[phys])
-    from webcodec.kernels.rle import mean_run_length
+    def _sortedness(self) -> float:
+        n = self.computed["n"]
+        if self._phys not in IS_VARLEN:
+            v = self._v
+            return float((v[1:] >= v[:-1]).mean()) if n > 1 else 1.0
+        if n <= 1:
+            return 0.0
+        s = self._s
+        le = pc.less_equal(s.slice(0, n - 1), s.slice(1)).to_numpy(zero_copy_only=False)
+        return float(np.nanmean(le.astype(np.float64)))
 
-    mrl = mean_run_length(v)
-    raw = np.ascontiguousarray(v).view(np.uint8)
-    entropy = _entropy_bits(raw[: 1 << 16])
-    sortedness = float((v[1:] >= v[:-1]).mean()) if n > 1 else 1.0
-    return SampleStats(n, ndv_ratio, mrl, entropy, float(v.dtype.itemsize), 0.0, sortedness)
+
+def sample_stats(arr: pa.Array, phys: PhysType, sample_n: int = 4096) -> SampleStats:
+    """Selector statistics over the first ``sample_n`` non-null values,
+    each computed when first read (see :class:`SampleStats`)."""
+    return SampleStats(arr, phys, sample_n)
 
 
 # ---- page/chunk min-max stats (footer) ---------------------------------------
