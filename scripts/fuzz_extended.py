@@ -36,6 +36,7 @@ FAMILIES = [
     ("test_parquet_bloom", "test_bloom_fuzz_no_lost_rows", 4),
     ("test_late_materialization", "test_wcd_predicate_fuzz", 10),
     ("test_selection_on_demand", "test_lazy_selection_matches_eager", 24),
+    ("test_fsst_kernels", "test_fsst_kernels_match_frozen", 16),
 ]
 
 

@@ -79,6 +79,21 @@ def test_xxh64_skewed_lengths_match_scalar():
     assert [int(h) for h in got] == [xxh64_scalar(v) for v in vals]
 
 
+def test_xxh64_scalar_handover_matches_scalar():
+    """Long lanes of mixed stripe counts: the vectorized loop hands the last
+    few lanes to the scalar rounds at different stripes, and every hash
+    still equals the scalar reference."""
+    rng = np.random.default_rng(11)
+    for lens in ([40, 100, 1_000, 1_001, 5_000, 70_000, 3],
+                 [33] * 7 + [64, 95, 96, 2_000],
+                 [31, 32, 63, 64], [300] * 5):
+        vals = [rng.integers(0, 256, n, dtype=np.uint8).tobytes() for n in lens]
+        data = np.frombuffer(b"".join(vals), np.uint8)
+        offs = np.zeros(len(vals) + 1, np.int64)
+        offs[1:] = np.cumsum(lens)
+        assert [int(h) for h in xxh64_values(offs, data)] == [xxh64_scalar(v) for v in vals]
+
+
 def test_spec_bloom_no_false_negatives_and_fpp():
     rng = np.random.default_rng(1)
     vals = [f"k{int(v)}".encode() for v in rng.permutation(10_000)]

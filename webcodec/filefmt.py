@@ -45,7 +45,7 @@ import pyarrow.compute as pc
 
 from webcodec import colcodec, dremel, selector
 from webcodec.config import DEFAULT_CONFIG, EncoderConfig
-from webcodec.kernels import dictionary, rle
+from webcodec.kernels import alp, bloom, dictionary, fsst, rle
 from webcodec.stats import page_stats, raw_byte_size, sample_stats
 from webcodec.types import (
     CODEC_NAMES,
@@ -164,8 +164,6 @@ def _fsst_trial(arr: pa.Array, codec: Codec, level: int | None, sample_bytes: in
     symbol-length variants (8 and 6) and returns the winning table — shorter
     symbols often produce a more codec-friendly code stream — or None when
     FSST is not worth it for this chunk."""
-    from webcodec.kernels import fsst as _fsst
-
     # trial payload is 16x the table-build sample (default 256KB/16KB): at
     # smaller trial sizes the ranking between symbol-length variants flips
     # vs full-page scale (table overhead dominates); both scale with the
@@ -173,13 +171,13 @@ def _fsst_trial(arr: pa.Array, codec: Codec, level: int | None, sample_bytes: in
     payload = colcodec.sample_payload(arr, 4096, sample_bytes * 16)
     if len(payload) < 1024:
         return None
-    base_table = _fsst.build_table(payload[:sample_bytes])
+    base_table = fsst.build_table(payload[:sample_bytes])
     if not base_table.symbols:
         return None
     best, best_size = None, 0.9 * len(compress(payload, codec, level))
     for cap in (8, 6):
-        table = base_table if cap == 8 else _fsst.cap_symbols(base_table, cap)
-        enc = _fsst.encode(payload, table)
+        table = base_table if cap == 8 else fsst.cap_symbols(base_table, cap)
+        enc = fsst.encode(payload, table)
         size = len(compress(enc, codec, level)) + len(table.serialize())
         if size < best_size:
             best, best_size = table, size
@@ -336,10 +334,6 @@ def _encode_chunk(
         and n > 0
         and stats.avg_len <= config.bloom_filter_max_avg_len
     ):
-        import base64
-
-        from webcodec.kernels import bloom
-
         bsrc = dict_values if dict_values is not None else (
             arr.drop_null() if arr.null_count else arr
         )
@@ -371,16 +365,12 @@ def _encode_chunk(
         else:
             nonnull = sl.drop_null() if mask is not None else sl
             if encoding == Encoding.FSST and fsst_table is None:
-                from webcodec.kernels import fsst as _fsst
-
-                fsst_table = _fsst.build_table(
+                fsst_table = fsst.build_table(
                     colcodec.sample_payload(nonnull, 2048, config.fsst_sample_bytes)
                 )
             if encoding == Encoding.ALP and alp_hint is None:
-                from webcodec.kernels import alp as _alp
-
                 whole = arr.drop_null() if arr.null_count else arr
-                alp_hint = _alp.plan(colcodec.fixed_values(whole, phys))
+                alp_hint = alp.plan(colcodec.fixed_values(whole, phys))
             values = colcodec.encode_values(
                 nonnull, phys, encoding, config.fsst_sample_bytes, fsst_table,
                 alp_hint,
@@ -712,8 +702,6 @@ def _stamp_file_crypto(config: EncoderConfig) -> EncoderConfig:
 def _attach_encryption_footer(footer: dict, config: EncoderConfig) -> None:
     if config.encryption_key is None:
         return
-    import base64
-
     from webcodec import crypto as wcrypto
 
     if config.encryption_footer_mode not in (
@@ -750,8 +738,6 @@ def _wrap_footer_for_disk(footer: dict, config: EncoderConfig) -> dict:
     if (config.encryption_key is None
             or config.encryption_footer_mode != wcrypto.FOOTER_MODE_ENCRYPTED):
         return footer
-    import base64
-
     dek = wcrypto.derive_dek(
         bytes(config.encryption_key), bytes(config.encryption_dek_salt)
     )
@@ -780,8 +766,6 @@ def _unwrap_footer(footer: dict, encryption_key: bytes | None) -> dict:
             f"file footer is encrypted (algorithm={enc.get('algorithm')!r}, "
             f"key_id={enc.get('key_id')!r}); pass encryption_key"
         )
-    import base64
-
     from webcodec import crypto as wcrypto
 
     alg = enc.get("algorithm")
@@ -1177,25 +1161,21 @@ def _string_op_hits_dict(
     endswith): exact scan of the dict page values — False means NO value in
     this chunk can match, so the whole chunk skips decode. This is the only
     prune tier available to contains/endswith (min/max is uninformative)."""
-    import pyarrow.compute as _pc
-
     dvals = _decode_dict_page_only(buf, pc_chunk, verify_crc)
     if not (pa.types.is_string(dvals.type) or pa.types.is_large_string(dvals.type)):
         return True
     fn = {
-        "startswith": _pc.starts_with,
-        "contains": _pc.match_substring,
-        "endswith": _pc.ends_with,
+        "startswith": pc.starts_with,
+        "contains": pc.match_substring,
+        "endswith": pc.ends_with,
     }[op]
-    return bool(_pc.any(fn(dvals, pattern=pattern)).as_py())
+    return bool(pc.any(fn(dvals, pattern=pattern)).as_py())
 
 
 def _values_in_dict(buf: memoryview, pc_chunk: dict, values, verify_crc: bool) -> bool:
     """Dictionary-level pruning test (D2 DictionaryFilter parity): True when
     ANY of ``values`` appears in the chunk's dict page — exact, not
     probabilistic."""
-    import pyarrow.compute as _pc
-
     dvals = _decode_dict_page_only(buf, pc_chunk, verify_crc)
     # compare in the ORIGINAL value domain: dict pages decode at the widened
     # storage type (e.g. int64 for uint64 columns), where an untyped
@@ -1217,7 +1197,7 @@ def _values_in_dict(buf: memoryview, pc_chunk: dict, values, verify_crc: bool) -
             except (pa.ArrowInvalid, pa.ArrowNotImplementedError,
                     OverflowError, TypeError):
                 return True  # incomparable: stay conservative
-        if _pc.any(_pc.equal(dvals, scalar)).as_py():
+        if pc.any(pc.equal(dvals, scalar)).as_py():
             return True
     return False
 
@@ -1225,15 +1205,11 @@ def _values_in_dict(buf: memoryview, pc_chunk: dict, values, verify_crc: bool) -
 def _bloom_may_contain(pc_chunk: dict, values) -> bool:
     """Split-block bloom test for ==/in terms: False only when EVERY value
     provably misses (C8 bloom-level pruning)."""
-    import base64
-
-    from webcodec.kernels import bloom as _bloom
-
     if not all(isinstance(v, (str, bytes)) for v in values):
         return True
     fb = base64.b64decode(pc_chunk["bloom"]["b64"])
     return any(
-        _bloom.might_contain(fb, _bloom.hash_one(v.encode() if isinstance(v, str) else v))
+        bloom.might_contain(fb, bloom.hash_one(v.encode() if isinstance(v, str) else v))
         for v in values
     )
 

@@ -5,9 +5,9 @@ specification"). Implemented from the public xxHash specification
 published reference vectors and a scalar re-implementation.
 
 ``xxh64_values(offsets, data)`` hashes m variable-length byte strings in
-O(max_stripes + tail) vectorized numpy passes over all values at once —
-no per-value python loop — which is what the encode path needs when it
-blooms a chunk's distinct values.
+vectorized numpy passes over all values at once — one per 32-byte stripe
+while more than a few values still have one, plus a fixed tail phase — which
+is what the encode path needs when it blooms a chunk's distinct values.
 """
 
 from __future__ import annotations
@@ -49,12 +49,35 @@ def _gather_u32(data: np.ndarray, base: np.ndarray) -> np.ndarray:
     return out
 
 
+# lanes left at which the stripe loop hands over to Python-int rounds: one
+# numpy pass costs ~15 us whatever its width, a scalar stripe ~2 us
+_SCALAR_LANES = 4
+
+
+def _stripes_scalar(acc: np.ndarray, data: np.ndarray, start: int, count: int) -> np.ndarray:
+    """One lane's accumulators after ``count`` more stripes from ``start``."""
+    P1, P2 = int(_P1), int(_P2)
+    v1, v2, v3, v4 = acc.tolist()
+    words = iter(np.ascontiguousarray(data[start : start + 32 * count]).view("<u8").tolist())
+    for a, b, c, d in zip(words, words, words, words):
+        x = (v1 + a * P2) & _M64
+        v1 = (((x << 31) | (x >> 33)) & _M64) * P1 & _M64
+        x = (v2 + b * P2) & _M64
+        v2 = (((x << 31) | (x >> 33)) & _M64) * P1 & _M64
+        x = (v3 + c * P2) & _M64
+        v3 = (((x << 31) | (x >> 33)) & _M64) * P1 & _M64
+        x = (v4 + d * P2) & _M64
+        v4 = (((x << 31) | (x >> 33)) & _M64) * P1 & _M64
+    return np.array([v1, v2, v3, v4], dtype=np.uint64)
+
+
 def xxh64_values(offsets: np.ndarray, data: np.ndarray) -> np.ndarray:
     """XXH64(seed=0) of each value ``data[offsets[i]:offsets[i+1]]``.
 
-    Fully vectorized: the 32-byte stripe loop runs max(len)//32 iterations,
-    iteration k over only the values that have a stripe k; the <32-byte
-    tail phase runs a fixed 3+1+3 masked passes. Returns uint64[m]."""
+    Vectorized: the 32-byte stripe loop's iteration k runs over only the
+    values that have a stripe k, until at most ``_SCALAR_LANES`` are left;
+    those finish their stripes in Python ints. The <32-byte tail phase runs
+    a fixed 3+1+3 masked passes. Returns uint64[m]."""
     with np.errstate(over="ignore"):
         return _xxh64_impl(offsets, data)
 
@@ -91,6 +114,10 @@ def _xxh64_impl(offsets: np.ndarray, data: np.ndarray) -> np.ndarray:
         active = np.searchsorted(-stripes, -np.arange(int(stripes[0])), side="left")
         word = np.arange(32, dtype=np.int64)
         for k, c in enumerate(active.tolist()):
+            if c <= _SCALAR_LANES:
+                for j in range(c):
+                    acc[j] = _stripes_scalar(acc[j], data, int(ls[j]) + 32 * k, int(stripes[j]) - k)
+                break
             mat = data[(ls[:c] + 32 * k)[:, None] + word]
             acc[:c] = _round(acc[:c], mat.view("<u8").astype(np.uint64, copy=False))
         v1, v2, v3, v4 = acc.T
