@@ -37,6 +37,7 @@ FAMILIES = [
     ("test_late_materialization", "test_wcd_predicate_fuzz", 10),
     ("test_selection_on_demand", "test_lazy_selection_matches_eager", 24),
     ("test_fsst_kernels", "test_fsst_kernels_match_frozen", 16),
+    ("test_prefix_kernels", "test_prefix_lengths_match_frozen", 16),
 ]
 
 

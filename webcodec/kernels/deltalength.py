@@ -42,11 +42,23 @@ def decode(data: bytes | memoryview, n: int, arrow_type: pa.DataType | None = No
     return from_parts(lens, payload, n, arrow_type)
 
 
+def checked_total(lens: np.ndarray, avail: int) -> int:
+    """Sum of decoded value lengths, after checking that none is negative and
+    that together they fit the ``avail`` payload bytes (a corrupt or crafted
+    page would otherwise give Arrow offsets out of bounds)."""
+    if len(lens) and (int(lens.min()) < 0 or int(lens.max()) > avail):
+        raise ValueError(f"string lengths outside [0, {avail}]: page corrupt")
+    total = int(lens.sum())
+    if total > avail:
+        raise ValueError(f"string lengths sum to {total} > {avail} payload bytes: page corrupt")
+    return total
+
+
 def from_parts(
     lens: np.ndarray, payload: bytes | memoryview, n: int, arrow_type: pa.DataType | None = None
 ) -> pa.Array:
     arrow_type = arrow_type or pa.binary()
-    total = int(lens.sum()) if n else 0
+    total = checked_total(lens, memoryview(payload).nbytes) if n else 0
     use_large = arrow_type in (pa.large_string(), pa.large_binary()) or total > (1 << 31) - 8
     odtype = np.int64 if use_large else np.int32
     offsets = np.zeros(n + 1, dtype=odtype)

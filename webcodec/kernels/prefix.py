@@ -6,8 +6,16 @@ Big win on sorted URLs — our encode pipeline sorts within partitions by url
 first (SURVEY.md §4.1 'sort-based encode win').
 
 Vectorization notes:
-- Encode: adjacent common-prefix lengths via a padded (n, maxlen) byte-matrix
-  compare — one ``==`` + ``argmin``; suffix bytes gathered with index arith.
+- Encode: adjacent common-prefix lengths by word compares on the pairs
+  still equal. Round k XORs the unaligned little-endian u64 at byte k of
+  value i-1 and of value i (a strided ``<u8`` view over a zero-padded
+  copy); the lowest set byte of the XOR is the first differing byte, and a
+  pair drops out once its words differ or k reaches the shorter length.
+  Pairs still equal after 512 bytes (or the last 8) finish with one slice
+  compare each, so a long shared prefix costs one memory pass, not a round
+  per 8 bytes. The suffixes are the data bytes under a mask built with one
+  ``np.repeat`` of (prefix, suffix) run lengths. ``prefix_lengths`` also
+  serves the parquet exporter and the selector's ``prefix_ratio``.
 - Decode: the naive reconstruction is sequential (each value references the
   previous); we instead resolve per byte-COLUMN k: the owner of column k at
   row i is the last j<=i with prefix_len[j] <= k, computed with
@@ -22,83 +30,75 @@ import pyarrow as pa
 from webcodec.kernels import delta, deltalength
 from webcodec.kernels.varint import read_uvarint, write_uvarint
 
-# Guard: the matrix paths allocate ~3 O(n * maxlen) temporaries (byte
-# matrix + shifted copy/output + boolean mask); cap the SUM at ~512 MB, i.e.
-# one matrix at ~170 MB, and fall back to the sequential path beyond it.
+# Decode guard: the matrix path allocates ~3 O(n * maxlen) temporaries
+# (suffix matrix + output + boolean mask); cap the SUM at ~512 MB, i.e. one
+# matrix at ~170 MB, and fall back to the sequential path beyond it.
 _MATRIX_BYTE_CAP = 512 << 20
 _MATRIX_TEMPORARIES = 3
+# Pairs still equal are finished with one slice compare each once they
+# share this many bytes, or once this few are left: a word round costs a
+# pair ~5 ns per byte, a slice compare ~0.5 ns per byte plus ~4 us
+_SLICE_FROM = 512
+_SLICE_PAIRS = 8
 
 
-def _byte_matrix(offsets: np.ndarray, data: np.ndarray, maxlen: int, fill: int) -> np.ndarray:
-    """Pad variable strings into an (n, maxlen) uint8 matrix."""
-    n = len(offsets) - 1
-    lens = np.diff(offsets)
-    mat = np.full((n, maxlen), fill, dtype=np.uint8)
-    if int(lens.sum()):
-        owner = np.repeat(np.arange(n, dtype=np.int64), lens)
-        within = np.arange(int(offsets[0]), int(offsets[-1]), dtype=np.int64) - offsets[:-1][owner]
-        mat[owner, within] = data[int(offsets[0]) : int(offsets[-1])]
-    return mat
-
-
-def prefix_lengths(offsets: np.ndarray, data: bytes | memoryview) -> np.ndarray:
+def prefix_lengths(offsets: np.ndarray, data: bytes | memoryview | np.ndarray) -> np.ndarray:
     """Common-prefix length of each value with its predecessor (first = 0)."""
     offs = offsets.astype(np.int64, copy=False)
     n = len(offs) - 1
+    out = np.zeros(max(n, 0), dtype=np.int64)
     if n <= 1:
-        return np.zeros(n, dtype=np.int64)
+        return out
+    lo, hi = int(offs[0]), int(offs[-1])
+    # zero-padded copy: the word at any byte of a value stays in bounds
+    buf = np.zeros(hi - lo + 8, dtype=np.uint8)
+    buf[: hi - lo] = np.frombuffer(data, dtype=np.uint8, count=hi)[lo:]
+    words = np.ndarray((hi - lo + 1,), dtype="<u8", buffer=buf, strides=(1,))
+    pair = np.arange(1, n)  # value i against value i - 1
+    a, b = offs[:-2] - lo, offs[1:-1] - lo
     lens = np.diff(offs)
-    maxlen = int(lens.max()) if n else 0
-    if maxlen == 0:
-        return np.zeros(n, dtype=np.int64)
-    raw = np.frombuffer(data, dtype=np.uint8, count=int(offs[-1]))
-    if maxlen * n * _MATRIX_TEMPORARIES > _MATRIX_BYTE_CAP:
-        # one multi-MB outlier value would blow the padded matrices up to
-        # n * maxlen — mirror decode's guard with a sequential fallback
-        return _prefix_lengths_sequential(offs, raw)
-    # distinct fill values so padding never matches (0xFE vs 0xFD)
-    a = _byte_matrix(offs, raw, maxlen, 0xFE)
-    b = _byte_matrix(offs, raw, maxlen, 0xFD)
-    eq = a[:-1] == b[1:]
-    all_eq = eq.all(axis=1)
-    p = np.where(all_eq, maxlen, eq.argmin(axis=1)).astype(np.int64)
-    p = np.minimum(p, np.minimum(lens[:-1], lens[1:]))
-    return np.concatenate(([0], p))
-
-
-def _prefix_lengths_sequential(offs: np.ndarray, raw: np.ndarray) -> np.ndarray:
-    """Cold path for pathologically wide values: O(total bytes) without the
-    padded matrices."""
-    n = len(offs) - 1
-    out = np.zeros(n, dtype=np.int64)
-    for i in range(1, n):
-        a = raw[offs[i - 1]:offs[i]]
-        b = raw[offs[i]:offs[i + 1]]
-        m = min(len(a), len(b))
-        neq = np.flatnonzero(a[:m] != b[:m])
-        out[i] = int(neq[0]) if len(neq) else m
+    lim = np.minimum(lens[:-1], lens[1:])
+    k = 0
+    # every pair left shares its first k bytes, and lim > k once k > 0
+    while len(pair) > _SLICE_PAIRS and k < _SLICE_FROM:
+        x = (words[a + k] ^ words[b + k]).astype("<u8", copy=False)
+        done = (x != 0) | (lim <= k + 8)
+        # the lowest set byte of the XOR is the first differing byte; the
+        # bytes a word reads past lim (next value, padding) are cut by lim
+        xd = x[done]
+        first = (xd.view(np.uint8).reshape(-1, 8) != 0).argmax(axis=1)
+        out[pair[done]] = np.minimum(k + np.where(xd != 0, first, 8), lim[done])
+        keep = ~done
+        pair, a, b, lim = pair[keep], a[keep], b[keep], lim[keep]
+        k += 8
+    for i, ai, bi, m in zip(pair.tolist(), a.tolist(), b.tolist(), lim.tolist()):
+        ne = buf[ai + k : ai + m] != buf[bi + k : bi + m]
+        out[i] = k + int(ne.argmax()) if ne.any() else m
     return out
 
 
-def encode(offsets: np.ndarray, data: bytes | memoryview) -> bytes:
+def split(offsets: np.ndarray, data: bytes | memoryview | np.ndarray
+          ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """DELTA_BYTE_ARRAY's streams before framing: (prefix lengths, suffix
+    lengths, suffix bytes) of Arrow offsets + data."""
     offs = offsets.astype(np.int64, copy=False)
     n = len(offs) - 1
     p = prefix_lengths(offs, data)
-    lens = np.diff(offs)
-    slens = lens - p
-    raw = np.frombuffer(data, dtype=np.uint8, count=int(offs[-1]))
-    total_suffix = int(slens.sum())
-    suffix = np.empty(total_suffix, dtype=np.uint8)
-    if total_suffix:
-        owner = np.repeat(np.arange(n, dtype=np.int64), slens)
-        sstart = np.zeros(n, dtype=np.int64)
-        np.cumsum(slens[:-1], out=sstart[1:])
-        within = np.arange(total_suffix, dtype=np.int64) - sstart[owner]
-        suffix = raw[offs[:-1][owner] + p[owner] + within]
+    slens = np.diff(offs) - p
+    raw = np.frombuffer(data, dtype=np.uint8, count=int(offs[-1]))[int(offs[0]):]
+    # value i's bytes are p[i] prefix bytes, then slens[i] suffix bytes
+    runs = np.empty(2 * n, dtype=np.int64)
+    runs[0::2], runs[1::2] = p, slens
+    keep = np.repeat(np.tile(np.array([False, True]), n), runs)
+    return p, slens, raw[keep]
+
+
+def encode(offsets: np.ndarray, data: bytes | memoryview) -> bytes:
+    p, slens, suffix = split(offsets, data)
     enc_p = delta.encode(p)
     enc_sl = delta.encode(slens)
     return (
-        write_uvarint(n)
+        write_uvarint(len(p))
         + write_uvarint(len(enc_p))
         + enc_p
         + write_uvarint(len(enc_sl))
@@ -118,10 +118,17 @@ def decode(data: bytes | memoryview, n: int, arrow_type: pa.DataType | None = No
     lsl, pos = read_uvarint(buf, pos)
     slens = delta.decode(buf[pos : pos + lsl], n) if n else np.empty(0, np.int64)
     pos += lsl
-    suffix = np.frombuffer(buf[pos:], dtype=np.uint8, count=int(slens.sum()) if n else 0)
     if n == 0:
         return deltalength.from_parts(np.empty(0, np.int64), b"", 0, arrow_type)
+    total = deltalength.checked_total(slens, len(buf) - pos)
+    suffix = np.frombuffer(buf[pos:], dtype=np.uint8, count=total)
+    # value i is value i-1's first p[i] bytes + suffix i: p[0] = 0 and no
+    # p[i] past the previous value (p[i] <= total keeps the sums exact)
+    if p[0] != 0 or int(p.min()) < 0 or int(p.max()) > total:
+        raise ValueError("DELTA_BYTE_ARRAY prefix lengths out of range: page corrupt")
     out_lens = p + slens
+    if (p[1:] > out_lens[:-1]).any():
+        raise ValueError("DELTA_BYTE_ARRAY prefix longer than the previous value: page corrupt")
     maxlen = int(out_lens.max()) if n else 0
     if maxlen * n * _MATRIX_TEMPORARIES > _MATRIX_BYTE_CAP:
         return _decode_sequential(p, slens, suffix, n, arrow_type)

@@ -463,24 +463,12 @@ def _dba_bytes(valid: pa.Array) -> bytes:
     """Spec DELTA_BYTE_ARRAY: DELTA_BINARY_PACKED shared-prefix lengths,
     then the suffixes as spec DELTA_LENGTH_BYTE_ARRAY — the reference v2
     writer's default for strings (parquet-java DeltaByteArrayWriter)."""
-    from webcodec.kernels import delta
-    from webcodec.kernels.prefix import prefix_lengths
+    from webcodec.kernels import delta, prefix
 
     if len(valid) == 0:
         z = delta.encode(np.zeros(0, np.int64))
         return z + z
-    offs, data = _varlen_parts(valid)
-    n = len(valid)
-    p = prefix_lengths(offs, data)
-    slens = np.diff(offs) - p
-    total = int(slens.sum())
-    suffix = np.empty(total, dtype=np.uint8)
-    if total:
-        owner = np.repeat(np.arange(n, dtype=np.int64), slens)
-        sstart = np.zeros(n, dtype=np.int64)
-        np.cumsum(slens[:-1], out=sstart[1:])
-        within = np.arange(total, dtype=np.int64) - sstart[owner]
-        suffix = data[offs[:-1][owner] + p[owner] + within]
+    p, slens, suffix = prefix.split(*_varlen_parts(valid))
     return delta.encode(p) + delta.encode(slens) + suffix.tobytes()
 
 

@@ -23,31 +23,14 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from webcodec.kernels import prefix
 from webcodec.types import IS_VARLEN, NUMPY_OF, PhysType
 
 
 def _approx_prefix_lengths(offsets: np.ndarray, data: np.ndarray, cap: int = 64) -> np.ndarray:
-    """Adjacent common-prefix lengths considering only the first ``cap`` bytes
-    of each value — O(n*cap) regardless of value width. Selector-only
-    approximation; the DELTA_BYTE_ARRAY kernel computes exact prefixes."""
-    n = len(offsets) - 1
-    if n <= 1:
-        return np.zeros(max(n, 0), dtype=np.int64)
-    lens = np.diff(offsets)
-    if data.size == 0:  # all-empty values: keep the gather index 0 in bounds
-        data = np.zeros(1, dtype=np.uint8)
-    w = int(min(max(lens.max(), 1), cap))
-    col = np.arange(w, dtype=np.int64)
-    valid = col[None, :] < lens[:, None]
-    take = np.where(valid, offsets[:-1, None] + col[None, :], 0)
-    mat = data[take]
-    mat[~valid] = 0xFE
-    b = mat.copy()
-    b[~valid] = 0xFD  # distinct fills: padding never matches across rows
-    eq = mat[:-1] == b[1:]
-    p = np.where(eq.all(axis=1), w, eq.argmin(axis=1)).astype(np.int64)
-    p = np.minimum(p, np.minimum(lens[:-1], lens[1:]))
-    return np.concatenate(([0], p))
+    """Adjacent common-prefix lengths capped at ``cap`` bytes: the selector
+    reads prefixes over <=64 B heads (see ``_prefix_ratio``)."""
+    return np.minimum(prefix.prefix_lengths(offsets, data), cap)
 
 
 def _entropy_bits(raw: np.ndarray) -> float:
