@@ -400,9 +400,9 @@ def _rt_import_parquet_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     (list<string>, struct, map<string,string>) from its document rows,
     writes them with the REFERENCE writer (pyarrow, v2 pages), then
     reassembles every column with webcodec's own Dremel assembly
-    (parquet_interop.read_column_arrow — our RLE/bit-pack/level kernels,
-    no pyarrow decode) and emits oracle-checkable scalars. Per-task
-    temp files, zero JVM transfer of the nested payload."""
+    (parquet_interop.read_table_arrow_native — our RLE/bit-pack/level
+    kernels, no pyarrow decode) and emits oracle-checkable scalars.
+    Per-task temp files, zero JVM transfer of the nested payload."""
     _prep(spark)
     df = _src(spark, sf_dir, "documents").select("doc_id", "text", "lang",
                                                  "n_chars")
@@ -415,7 +415,7 @@ def _rt_import_parquet_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        from webcodec.parquet_interop import read_column_arrow
+        from webcodec.parquet_interop import read_table_arrow_native
 
         for b in batches:
             ids = b.column("doc_id").to_pylist()
@@ -441,7 +441,8 @@ def _rt_import_parquet_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
             try:
                 pq.write_table(t, path, data_page_version="2.0",
                                compression="zstd")
-                got = {c: read_column_arrow(path, 0, c)
+                back = read_table_arrow_native(path)
+                got = {c: back.column(c).combine_chunks()
                        for c in t.column_names}
             finally:
                 _os.remove(path)
@@ -475,7 +476,7 @@ def _rt_import_parquet_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes its document rows as a REFERENCE parquet file (pyarrow; small
     PLAIN pages, row groups and page indexes so both pruning tiers have
     something to skip), then reads it back with
-    parquet_interop.read_table_arrow(filters=...) — chunk-Statistics
+    parquet_interop.read_table_arrow_native(filters=...) — chunk-Statistics
     row-group pruning, ColumnIndex/OffsetIndex page-selective decode and
     the exact residual filter all run inside the task — and emits the
     surviving rows. The union across tasks equals a plain SQL WHERE over
@@ -490,7 +491,7 @@ def _rt_import_parquet_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from webcodec.parquet_interop import read_table_arrow
+        from webcodec.parquet_interop import read_table_arrow_native
 
         for b in batches:
             t = pa.Table.from_batches([b])
@@ -500,7 +501,7 @@ def _rt_import_parquet_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pq.write_table(t, path, row_group_size=128,
                                data_page_size=1024, write_page_index=True,
                                use_dictionary=False, compression="zstd")
-                got = read_table_arrow(
+                got = read_table_arrow_native(
                     path, ["doc_id", "lang"],
                     filters=[("lang", "in", ["en", "de"]),
                              ("n_chars", ">", 320)])
@@ -1024,11 +1025,11 @@ def _rt_variant_shredded(spark: SparkSession, sf_dir: str) -> DataFrame:
         import pyarrow as pa
         from pyspark.sql.variant_utils import VariantUtils as VU
 
-        from webcodec.parquet_interop import read_table_arrow
+        from webcodec.parquet_interop import read_table_arrow_native
 
         for b in batches:
             for p in b.column("path").to_pylist():
-                t = read_table_arrow(p)
+                t = read_table_arrow_native(p)
                 ks = []
                 for sv in t.column("v").to_pylist():
                     obj = (None if sv is None else VU.to_python(

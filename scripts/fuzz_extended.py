@@ -33,6 +33,7 @@ FAMILIES = [
     ("test_parquet_writer", "test_nested_export_fuzz", 24),
     ("test_parquet_interop", "test_nested_assembly_fuzz", 12),
     ("test_interop_filters", "test_filter_fuzz_vs_pyarrow", 8),
+    ("test_interop_filters", "test_nested_filter_fuzz_vs_pyarrow", 8),
     ("test_parquet_bloom", "test_bloom_fuzz_no_lost_rows", 4),
     ("test_late_materialization", "test_wcd_predicate_fuzz", 10),
     ("test_selection_on_demand", "test_lazy_selection_matches_eager", 24),

@@ -81,7 +81,7 @@ def test_bitpacked_msb_is_the_default(tmp_path):
     p = str(tmp_path / "bp_msb.parquet")
     _craft(p, bitpack.pack_legacy)
     assert pi.BIT_PACKED_LEVEL_ORDER == "msb"
-    mine = pi.read_table_arrow(p)
+    mine = pi.read_table_arrow_native(p)
     assert mine.column("a").combine_chunks() == EXPECT.column("a").combine_chunks()
 
 
@@ -96,7 +96,7 @@ def test_bitpacked_lsb_knob_matches_pyarrow(tmp_path):
     old = pi.BIT_PACKED_LEVEL_ORDER
     pi.BIT_PACKED_LEVEL_ORDER = "lsb"
     try:
-        mine = pi.read_table_arrow(p)
+        mine = pi.read_table_arrow_native(p)
     finally:
         pi.BIT_PACKED_LEVEL_ORDER = old
     assert mine.column("a").combine_chunks() == EXPECT.column("a").combine_chunks()

@@ -78,7 +78,7 @@ def test_fsb_interop_reader(tmp_path):
     t = pa.table({"u": pa.array(_uuids(20) + [None], pa.binary(16))})
     p = str(tmp_path / "ref.parquet")
     pq.write_table(t, p)
-    assert pi.read_table_arrow(p).equals(t)
+    assert pi.read_table_arrow_native(p).equals(t)
 
 
 def test_fsb_sliced_batches_no_segfault(tmp_path):
@@ -133,7 +133,7 @@ def test_uuid_logical_annotation(tmp_path):
     got = duckdb.sql(
         f"SELECT u FROM '{p}' WHERE u IS NOT NULL ORDER BY x").fetchall()
     assert [r[0].bytes for r in got] == vals[:6]
-    ours = parquet_interop.read_table_arrow(p)
+    ours = parquet_interop.read_table_arrow_native(p)
     assert ours.column("u").to_pylist() == vals
     with pytest.raises(TypeError, match="uuid column"):
         parquet_writer.write_parquet(

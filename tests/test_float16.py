@@ -80,7 +80,7 @@ def test_interop_read_reference_files(tmp_path, version, use_dictionary):
     })
     p = str(tmp_path / "ref.parquet")
     pq.write_table(t, p, version=version, use_dictionary=use_dictionary)
-    ours = parquet_interop.read_table_arrow(p)
+    ours = parquet_interop.read_table_arrow_native(p)
     ref = pq.read_table(p)
     assert ours.schema == ref.schema
     _assert_f16_equal(ours.column("f16"), ref.column("f16"))
@@ -91,5 +91,5 @@ def test_own_writer_to_own_reader(tmp_path):
     t = pa.table({"f16": FLAT})
     p = str(tmp_path / "own.parquet")
     parquet_writer.write_parquet(t, p)
-    ours = parquet_interop.read_table_arrow(p)
+    ours = parquet_interop.read_table_arrow_native(p)
     _assert_f16_equal(ours.column("f16"), t.column("f16"))

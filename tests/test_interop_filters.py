@@ -1,5 +1,6 @@
 """Predicate pushdown in the NATIVE interop reader (SURVEY §2 D2/D3 applied
-across the interop boundary): ``read_table_arrow(path, filters=[...])``
+across the interop boundary): ``read_table_arrow_native(path,
+filters=[...])``
 prunes row groups on chunk Statistics and pages on ColumnIndex/OffsetIndex —
 the tiers parquet-java's StatisticsFilter + ColumnIndexFilter evaluate —
 then re-applies the predicate exactly (webcodec.predicate.residual_filter),
@@ -45,7 +46,7 @@ def _ref_filter(t, filters, cols=None):
 
 
 def _check(path, t, filters, cols=None):
-    got = pi.read_table_arrow(path, cols, filters=filters)
+    got = pi.read_table_arrow_native(path, cols, filters=filters)
     ref = _ref_filter(t, filters, cols)
     assert got.schema == ref.schema
     assert got.equals(ref), (filters, cols)
@@ -128,7 +129,7 @@ def test_page_pruning_actually_skips(tmp_path, monkeypatch):
         return orig(buf, meta, *a, **k)
 
     monkeypatch.setattr(pi, "_read_leaf_entries", counting)
-    got = pi.read_table_arrow(p, filters=[("id", ">=", 61_000),
+    got = pi.read_table_arrow_native(p, filters=[("id", ">=", 61_000),
                                           ("id", "<", 61_100)])
     assert got.num_rows == 100
     decoded = sum(seen)
@@ -149,7 +150,7 @@ def test_rg_pruning_skips_groups(tmp_path, monkeypatch):
         return orig(buf, meta, *a, **k)
 
     monkeypatch.setattr(pi, "_read_leaf_entries", counting)
-    got = pi.read_table_arrow(p, ["url"], filters=[("id", "<", 100)])
+    got = pi.read_table_arrow_native(p, ["url"], filters=[("id", "<", 100)])
     assert got.num_rows == 100
     # only the FIRST row group's url+id chunks decode: 2 x 30k
     assert sum(seen) == 60_000, seen
@@ -162,7 +163,7 @@ def test_encrypted_export_filters_exact(tmp_path):
     p = str(tmp_path / "enc.parquet")
     key = bytes(range(16))
     write_parquet(t, p, row_group_rows=10_000, encryption_key=key)
-    got = pi.read_table_arrow(p, ["id", "lang"],
+    got = pi.read_table_arrow_native(p, ["id", "lang"],
                               filters=[("id", ">=", 19_990)],
                               kms_unwrap=key)
     ref = _ref_filter(t, [("id", ">=", 19_990)], ["id", "lang"])
@@ -189,16 +190,16 @@ def test_filter_column_validation(tmp_path):
     p = str(tmp_path / "t.parquet")
     pq.write_table(t, p)
     with pytest.raises(KeyError, match="nope"):
-        pi.read_table_arrow(p, filters=[("nope", "==", 1)])
+        pi.read_table_arrow_native(p, filters=[("nope", "==", 1)])
     with pytest.raises(ValueError, match="nested"):
-        pi.read_table_arrow(p, filters=[("s", "==", 1)])
+        pi.read_table_arrow_native(p, filters=[("s", "==", 1)])
     with pytest.raises(ValueError, match="unsupported predicate op"):
-        pi.read_table_arrow(p, filters=[("a", "!=", 1)])
+        pi.read_table_arrow_native(p, filters=[("a", "!=", 1)])
 
 
 def test_nested_projection_with_flat_filter(tmp_path):
     """Filtering a flat column while projecting a NESTED one: the nested
-    column takes the decode-then-slice path, rows stay aligned."""
+    column decodes only its overlapping pages, rows stay aligned."""
     n = 30_000
     t = pa.table({
         "id": pa.array(np.arange(n), pa.int64()),
@@ -209,7 +210,7 @@ def test_nested_projection_with_flat_filter(tmp_path):
     p = str(tmp_path / "t.parquet")
     pq.write_table(t, p, row_group_size=10_000, data_page_size=32 * 1024,
                    write_page_index=True)
-    got = pi.read_table_arrow(p, filters=[("id", ">=", 14_000),
+    got = pi.read_table_arrow_native(p, filters=[("id", ">=", 14_000),
                                           ("id", "<", 14_200)])
     ref = _ref_filter(t, [("id", ">=", 14_000), ("id", "<", 14_200)])
     assert got.equals(ref)
@@ -254,5 +255,186 @@ def test_corrupt_column_index_is_conservative(tmp_path):
     raw = bytearray(open(p, "rb").read())
     raw[m.column_index_offset] = 0x00  # empty struct: fields 2/3 missing
     open(p, "wb").write(bytes(raw))
-    got = pi.read_table_arrow(p, ["id"], filters=[("id", "<", 50)])
+    got = pi.read_table_arrow_native(p, ["id"], filters=[("id", "<", 50)])
     assert got.column("id").to_pylist() == list(range(50))
+
+
+def test_corrupt_offset_index_is_conservative(tmp_path):
+    """A damaged OffsetIndex on a projected column: that leaf decodes as one
+    whole-chunk run trimmed to the kept rows, and the result stays exact."""
+    t = _table(20_000)
+    p = str(tmp_path / "t.parquet")
+    pq.write_table(t, p, data_page_size=8 * 1024, write_page_index=True,
+                   use_dictionary=False)
+    ft = pi.read_footer_native(p)
+    off = ft["row_groups"][0][t.column_names.index("url")].offset_index_offset
+    base = open(p, "rb").read()
+    for pos, byte in ((off, 0), (off + 5, base[off + 5] ^ 0x01)):
+        raw = bytearray(base)
+        raw[pos] = byte  # the first byte zeroed, or one bit flipped at +5
+        bad = str(tmp_path / "bad.parquet")
+        open(bad, "wb").write(bytes(raw))
+        got = pi.read_table_arrow_native(bad, ["url"],
+                                         filters=[("id", "<", 50)])
+        assert got.column("url").to_pylist() == \
+            t.column("url").to_pylist()[:50]
+
+
+def _nested_60k(tmp_path):
+    n = 60_000
+    t = pa.table({
+        "id": pa.array(np.arange(n), pa.int64()),
+        "tags": pa.array([None if i % 9 == 4 else
+                          [f"t{i % 31}-{j}" for j in range(i % 4)]
+                          for i in range(n)], pa.list_(pa.string())),
+        "s": pa.array([None if i % 13 == 6 else
+                       {"a": i, "xs": [i, i + 1] if i % 3 else []}
+                       for i in range(n)],
+                      pa.struct([("a", pa.int64()),
+                                 ("xs", pa.list_(pa.int64()))])),
+    })
+    p = str(tmp_path / "n60k.parquet")
+    pq.write_table(t, p, data_page_size=8 * 1024, write_batch_size=256,
+                   write_page_index=True, use_dictionary=False)
+    return p
+
+
+def test_nested_projection_is_page_selective(tmp_path, monkeypatch):
+    """Nested leaves under a selective flat filter decode only the pages
+    that overlap kept rows: each leaf's entries map to rows through
+    cumsum(rep == 0), so no nested chunk decodes whole."""
+    p = _nested_60k(tmp_path)
+    decoded: dict = {}
+    orig = pi._read_leaf_entries
+
+    def counting(buf, meta, *a, **k):
+        out = orig(buf, meta, *a, **k)
+        decoded[meta.path] = decoded.get(meta.path, 0) + len(out[2])
+        return out
+
+    monkeypatch.setattr(pi, "_read_leaf_entries", counting)
+    chunks = {m.path: m.num_values
+              for m in pi.read_footer_native(p)["row_groups"][0]}
+    # one run of pages, then two runs far apart
+    for flt, rows, share in (
+            ([("id", ">=", 31_000), ("id", "<", 31_050)], 50, 0.05),
+            ([("id", "in", [5_000, 55_000])], 2, 0.10)):
+        decoded.clear()
+        got = pi.read_table_arrow_native(p, filters=flt)
+        want = pq.read_table(p, filters=flt)
+        assert got.num_rows == rows
+        assert got.equals(want)
+        assert set(decoded) == set(chunks)
+        for path, entries in decoded.items():
+            assert entries <= share * chunks[path], (flt, path, entries)
+
+
+_NESTED_SHAPES = {
+    "list": lambda leaf: pa.list_(leaf),
+    "struct": lambda leaf: pa.struct([("a", leaf), ("b", pa.int64())]),
+    "map": lambda leaf: pa.map_(pa.string(), leaf),
+    "list_struct": lambda leaf: pa.list_(
+        pa.struct([("a", leaf), ("b", pa.int64())])),
+    "struct_list": lambda leaf: pa.struct(
+        [("a", pa.list_(leaf)), ("b", pa.int64())]),
+}
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_nested_filter_fuzz_vs_pyarrow(tmp_path, seed):
+    """Nested projections (with nulls and empty lists) under a flat filter
+    over random layouts — pyarrow or our writer, v1 or v2 pages, page sizes
+    down to a few rows, page index on or off — equal pyarrow's filtered
+    read."""
+    import random
+    from unittest import mock
+
+    from test_parquet_writer import _rand_nested_value
+
+    from webcodec import parquet_writer
+
+    py = random.Random(31_000 + seed)
+    rng = np.random.default_rng(31_000 + seed)
+    n = py.choice([1, 40, 700, 5_000])
+    leaf = py.choice([pa.int64(), pa.string(), pa.float64(), pa.bool_()])
+    cols = {"id": pa.array(np.arange(n), pa.int64())}
+    for name in py.sample(sorted(_NESTED_SHAPES), py.randint(1, 3)):
+        typ = _NESTED_SHAPES[name](leaf)
+        cols[name] = pa.array([_rand_nested_value(py, rng, typ)
+                               for _ in range(n)], typ)
+    t = pa.table(cols)
+    p = str(tmp_path / "t.parquet")
+    version = py.choice([1, 2])
+    page_bytes = py.choice([64, 512, 4096, 1 << 20])
+    group_rows = py.choice([n, max(n // 3, 1)])
+    if py.random() < 0.5:
+        pq.write_table(t, p, data_page_version=f"{version}.0",
+                       data_page_size=page_bytes,
+                       write_batch_size=py.choice([8, 64, 1024]),
+                       write_page_index=py.random() < 0.7,
+                       use_dictionary=py.random() < 0.5,
+                       row_group_size=group_rows)
+    else:
+        with mock.patch.object(parquet_writer, "_TARGET_PAGE_BYTES",
+                               page_bytes):
+            write_parquet(t, p, data_page_version=version,
+                          row_group_rows=group_rows)
+    lo = int(rng.integers(0, n))
+    flt = py.choice([
+        [("id", ">=", lo), ("id", "<", lo + int(rng.integers(1, 50)))],
+        [("id", "==", lo)],
+        [("id", "in", [int(v) for v in rng.integers(0, n, 4)])],
+        [("id", ">", n - 1)],
+    ])
+    names = [c for c in t.column_names if c != "id" or py.random() < 0.5]
+    got = pi.read_table_arrow_native(p, names, filters=flt)
+    want = pq.read_table(p, columns=names, filters=flt)
+    if got.schema != want.schema:
+        got = got.cast(want.schema)
+    assert got.equals(want), (seed, flt)
+
+
+@pytest.mark.parametrize("lie", ["first_rows_halved", "offsets_one_late"])
+def test_lying_offset_index_is_conservative(tmp_path, monkeypatch, lie):
+    """An OffsetIndex that parses and is ordered but misstates its pages:
+    first rows that disagree with the rows a run decodes, or page offsets
+    that are no longer back to back. The leaf decodes whole and trims, and
+    the result stays exact."""
+    p = _nested_60k(tmp_path)
+    orig = pi._parse_offset_index
+
+    def lying(buf, meta):  # the filter column keeps its true index
+        locs = orig(buf, meta)
+        if meta.path == "id":
+            return locs
+        if lie == "first_rows_halved":
+            return [(off, size, first // 2) for off, size, first in locs]
+        return locs[:1] + [(off + 1, size, first)
+                           for off, size, first in locs[1:]]
+
+    monkeypatch.setattr(pi, "_parse_offset_index", lying)
+    flt = [("id", ">=", 31_000), ("id", "<", 31_050)]
+    got = pi.read_table_arrow_native(p, filters=flt)
+    assert got.num_rows == 50
+    assert got.equals(pq.read_table(p, filters=flt))
+
+
+def test_row_group_row_count_mismatch_raises(tmp_path, monkeypatch):
+    """A footer whose RowGroup.num_rows is one short of the rows its chunks
+    hold: the last page run disagrees with its span, and the whole chunk
+    then holds more rows than the group, which raises instead of dropping
+    the last row."""
+    t = _table(20_000)
+    p = str(tmp_path / "t.parquet")
+    pq.write_table(t, p, data_page_size=8 * 1024, write_page_index=True,
+                   use_dictionary=False)
+    orig = pi.read_footer_native
+
+    def one_short(path, **kw):
+        ft = orig(path, **kw)
+        ft["rg_rows"] = [n - 1 for n in ft["rg_rows"]]
+        return ft
+
+    monkeypatch.setattr(pi, "read_footer_native", one_short)
+    with pytest.raises(ValueError, match="its row group"):
+        pi.read_table_arrow_native(p, ["url"], filters=[("id", ">=", 19_990)])

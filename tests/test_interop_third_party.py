@@ -14,7 +14,7 @@ from webcodec import parquet_interop as pi
 
 def _check(path):
     ref = pq.read_table(path)
-    mine = pi.read_table_arrow(path)
+    mine = pi.read_table_arrow_native(path)
     assert mine.schema == ref.schema
     assert mine.equals(ref)
     return mine

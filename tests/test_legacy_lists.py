@@ -35,7 +35,7 @@ def test_fixtures_present():
     "path", FILES, ids=[os.path.splitext(os.path.basename(p))[0] for p in FILES])
 def test_legacy_layout_matches_pyarrow(path):
     ref = pq.read_table(path)
-    mine = pi.read_table_arrow(path)
+    mine = pi.read_table_arrow_native(path)
     assert mine.schema == ref.schema
     assert mine.equals(ref)
 
@@ -48,7 +48,7 @@ def test_two_level_shape():
     lf = next(l for l in ft["leaves"] if l["path"].startswith("a"))
     assert lf["path"] == "a.element"          # no middle "list" group
     assert lf["max_rep"] == 1 and lf["max_def"] == 2
-    t = pi.read_table_arrow(path)
+    t = pi.read_table_arrow_native(path)
     f = t.schema.field("a")
     assert not f.type.value_field.nullable    # elements required
     assert f.nullable                          # optional LIST group
@@ -56,7 +56,7 @@ def test_two_level_shape():
 
 def test_unannotated_is_required_list():
     """A bare repeated field is a required list of required elements."""
-    t = pi.read_table_arrow(os.path.join(GOLDEN, "unannotated_leaf.parquet"))
+    t = pi.read_table_arrow_native(os.path.join(GOLDEN, "unannotated_leaf.parquet"))
     f = t.schema.field("a")
     assert not f.nullable and not f.type.value_field.nullable
     assert f.type.value_field.name == "a"      # element keeps the node name

@@ -55,7 +55,7 @@ def test_our_pages_carry_valid_crc(tmp_path, pv):
         raw = fh.read()
     assert zlib.crc32(raw[off:off + ln]) == crc % (1 << 32)
     # clean verified read equals the table
-    assert pi.read_table_arrow(p, verify_checksums=True).equals(t)
+    assert pi.read_table_arrow_native(p, verify_checksums=True).equals(t)
     assert pq.read_table(p).equals(t)
 
 
@@ -68,7 +68,7 @@ def test_reader_detects_flipped_byte(tmp_path):
     raw[off + ln // 2] ^= 0x01
     open(p, "wb").write(bytes(raw))
     with pytest.raises(ValueError, match="CRC mismatch"):
-        pi.read_table_arrow(p, verify_checksums=True)
+        pi.read_table_arrow_native(p, verify_checksums=True)
 
 
 def test_verify_spark_written_crcs(tmp_path, spark):
@@ -79,7 +79,7 @@ def test_verify_spark_written_crcs(tmp_path, spark):
         F.concat(F.lit("w"), F.col("id")).alias("s")) \
         .coalesce(1).write.mode("overwrite").parquet(d)
     f = glob.glob(d + "/*.parquet")[0]
-    got = pi.read_table_arrow(f, verify_checksums=True)
+    got = pi.read_table_arrow_native(f, verify_checksums=True)
     assert got.num_rows == 10_000
     off, ln, crc = _first_page_payload_span(f)
     assert crc is not None  # parquet-mr default: crc on
@@ -87,7 +87,7 @@ def test_verify_spark_written_crcs(tmp_path, spark):
     raw[off + 3] ^= 0xFF
     open(f, "wb").write(bytes(raw))
     with pytest.raises(ValueError, match="CRC mismatch"):
-        pi.read_table_arrow(f, verify_checksums=True)
+        pi.read_table_arrow_native(f, verify_checksums=True)
 
 
 def test_spark_verifies_our_crcs(tmp_path, spark):
@@ -135,5 +135,5 @@ def test_dict_page_crc_verified_in_filtered_fast_path(tmp_path):
     raw[p2 + 2] ^= 0x01
     open(p, "wb").write(bytes(raw))
     with pytest.raises(ValueError, match="CRC mismatch"):
-        pi.read_table_arrow(p, ["s"], filters=[("n", "<", 3)],
+        pi.read_table_arrow_native(p, ["s"], filters=[("n", "<", 3)],
                             verify_checksums=True)

@@ -133,7 +133,7 @@ def test_bloom_written_file_still_readable_everywhere(tmp_path):
     assert pq.read_table(p).equals(t)
     assert duckdb.execute(
         f"select count(*) from '{p}'").fetchone()[0] == t.num_rows
-    ours = pi.read_table_arrow(p)
+    ours = pi.read_table_arrow_native(p)
     assert ours.equals(t)
     ft = pi.read_footer_native(p)
     for rg in ft["row_groups"]:
@@ -157,17 +157,17 @@ def test_bloom_prunes_row_group_stats_cannot(tmp_path, monkeypatch):
     monkeypatch.setattr(pi, "_read_leaf_entries", counting)
     # an ODD id lies inside group 0's [0, n-2] stat range; only its bloom
     # proves absence, halving the decode
-    got = pi.read_table_arrow(p, filters=[("id", "==", 33333)])
+    got = pi.read_table_arrow_native(p, filters=[("id", "==", 33333)])
     assert got.num_rows == 1
     assert got.column("url")[0].as_py().endswith("/p33333")
     assert sum(seen) <= n  # one group's two chunks, not two groups'
     # a value in NO group decodes nothing at all
     seen.clear()
-    got = pi.read_table_arrow(p, filters=[("url", "==", "https://nope/")])
+    got = pi.read_table_arrow_native(p, filters=[("url", "==", "https://nope/")])
     assert got.num_rows == 0 and sum(seen) == 0
     # in-list with one present value keeps exactly the groups that hold it
     seen.clear()
-    got = pi.read_table_arrow(p, filters=[("id", "in", [2, 10**9])])
+    got = pi.read_table_arrow_native(p, filters=[("id", "in", [2, 10**9])])
     assert got.column("id").to_pylist() == [2] and sum(seen) <= n
 
 
@@ -193,10 +193,10 @@ def test_bloom_numeric_and_binary_lanes(tmp_path):
               ("ts", t.column("ts")[8].as_py(), None),
               ("fsb", t.column("fsb")[9].as_py(), b"\xff\xfe")]
     for col, present, absent in probes:
-        got = pi.read_table_arrow(p, [col], filters=[(col, "==", present)])
+        got = pi.read_table_arrow_native(p, [col], filters=[(col, "==", present)])
         assert got.num_rows >= 1, col
         if absent is not None:
-            got = pi.read_table_arrow(p, [col],
+            got = pi.read_table_arrow_native(p, [col],
                                       filters=[(col, "==", absent)])
             ref = t.filter(pa.compute.equal(t.column(col),
                                             pa.scalar(absent, t.column(col).type)))
@@ -227,7 +227,7 @@ def test_malformed_bloom_header_is_conservative(tmp_path):
     raw = bytearray(open(p, "rb").read())
     raw[off] ^= 0xFF  # smash the header's first thrift byte
     open(p, "wb").write(bytes(raw))
-    got = pi.read_table_arrow(p, filters=[("id", "==", 1001)])
+    got = pi.read_table_arrow_native(p, filters=[("id", "==", 1001)])
     assert got.column("id").to_pylist() == [1001]
 
 
@@ -281,9 +281,9 @@ def test_parquet_java_written_blooms_probe_exactly(tmp_path, spark):
         _struct.pack("<q", v))) for v in range(1, 40_000, 14))
     assert miss / (40_000 // 14) < 0.05
     # e2e: our filtered reader over the parquet-java file
-    got = pi.read_table_arrow(f, filters=[("url", "==", "u12345")])
+    got = pi.read_table_arrow_native(f, filters=[("url", "==", "u12345")])
     assert got.to_pylist() == [{"url": "u12345", "ev": 24690}]
-    assert pi.read_table_arrow(
+    assert pi.read_table_arrow_native(
         f, filters=[("ev", "==", 39_999)]).num_rows == 0
 
 
@@ -325,7 +325,7 @@ def test_export_parquet_bloom_passthrough(tmp_path, spark):
     blooms = [m.bloom_offset for rg in ft["row_groups"] for m in rg
               if m.path == "u"]
     assert blooms and all(b is not None for b in blooms)
-    got = pi.read_table_arrow(f, filters=[("u", "==", "u4321")])
+    got = pi.read_table_arrow_native(f, filters=[("u", "==", "u4321")])
     assert got.column("id").to_pylist() == [4321]
 
 
@@ -337,9 +337,9 @@ def test_bloom_signed_zero_equality(tmp_path):
                   "y": pa.array([0.0, 0.0, 0.0], pa.float32())})
     p = str(tmp_path / "z.parquet")
     write_parquet(t, p, bloom_filter_columns={"x", "y"})
-    assert pi.read_table_arrow(p, filters=[("x", "==", 0.0)]).num_rows == 3
-    assert pi.read_table_arrow(p, filters=[("x", "==", -0.0)]).num_rows == 3
-    assert pi.read_table_arrow(p, filters=[("y", "==", -0.0)]).num_rows == 3
+    assert pi.read_table_arrow_native(p, filters=[("x", "==", 0.0)]).num_rows == 3
+    assert pi.read_table_arrow_native(p, filters=[("x", "==", -0.0)]).num_rows == 3
+    assert pi.read_table_arrow_native(p, filters=[("y", "==", -0.0)]).num_rows == 3
 
 
 def test_spec_num_bytes_matches_parquet_java_formula():
@@ -393,6 +393,6 @@ def test_bloom_fuzz_no_lost_rows(tmp_path, seed):
 
     present = [v for v in arr.drop_null().to_pylist()[:40]]
     for v in present:
-        got = pi.read_table_arrow(p, filters=[("v", "==", v)])
+        got = pi.read_table_arrow_native(p, filters=[("v", "==", v)])
         ref = t.filter(pc.equal(t.column("v"), pa.scalar(v, arr.type)))
         assert got.num_rows == ref.num_rows, (kind, v)

@@ -72,7 +72,7 @@ def test_encrypted_reference_file_decodes(tmp_path, plaintext_footer):
     p = str(tmp_path / "e.parquet")
     factory = _write(p, t, column_keys={"ck": ["a", "b", "l.list.element"]},
                      plaintext_footer=plaintext_footer, row_groups=2)
-    ours = parquet_interop.read_table_arrow(p, kms_unwrap=_unwrap)
+    ours = parquet_interop.read_table_arrow_native(p, kms_unwrap=_unwrap)
     for c in t.column_names:
         assert ours.column(c).to_pylist() == t.column(c).to_pylist(), c
     # differential: byte-for-value match against the reference's OWN decrypt
@@ -88,7 +88,7 @@ def test_mixed_encrypted_and_plaintext_columns(tmp_path):
     t = _table()
     p = str(tmp_path / "m.parquet")
     _write(p, t, column_keys={"ck": ["a"]})
-    ours = parquet_interop.read_table_arrow(p, kms_unwrap=_unwrap)
+    ours = parquet_interop.read_table_arrow_native(p, kms_unwrap=_unwrap)
     for c in t.column_names:
         assert ours.column(c).to_pylist() == t.column(c).to_pylist(), c
 
@@ -98,7 +98,7 @@ def test_keyless_read_raises(tmp_path):
     p = str(tmp_path / "k.parquet")
     _write(p, t, column_keys={"ck": ["a"]})
     with pytest.raises(ValueError, match="kms_unwrap"):
-        parquet_interop.read_table_arrow(p)
+        parquet_interop.read_table_arrow_native(p)
 
 
 def test_wrong_key_fails_gcm(tmp_path):
@@ -108,7 +108,7 @@ def test_wrong_key_fails_gcm(tmp_path):
     p = str(tmp_path / "w.parquet")
     _write(p, t, column_keys={"ck": ["a"]})
     with pytest.raises(InvalidTag):
-        parquet_interop.read_table_arrow(
+        parquet_interop.read_table_arrow_native(
             p, kms_unwrap=lambda w, m: b"\x00" * 16)
 
 
@@ -173,11 +173,11 @@ def test_own_encrypted_roundtrip_own_reader(tmp_path):
     # material recoverable from the file; reader takes the raw key bytes
     raw = open(p, "rb").read()
     assert key not in raw and base64.b64encode(key) not in raw
-    ours = parquet_interop.read_table_arrow(p, kms_unwrap=key)
+    ours = parquet_interop.read_table_arrow_native(p, kms_unwrap=key)
     for c in t.column_names:
         assert ours.column(c).to_pylist() == t.column(c).to_pylist(), c
     with pytest.raises(InvalidTag):
-        parquet_interop.read_table_arrow(p, kms_unwrap=b"\x01" * 16)
+        parquet_interop.read_table_arrow_native(p, kms_unwrap=b"\x01" * 16)
 
 
 @pytest.mark.spark
@@ -209,7 +209,7 @@ def test_export_parquet_encrypted_output(spark, tmp_path):
     files = [os.path.join(exp, f) for f in os.listdir(exp)
              if f.endswith(".parquet")]
     got = pa.concat_tables(
-        [parquet_interop.read_table_arrow(f, kms_unwrap=out_key)
+        [parquet_interop.read_table_arrow_native(f, kms_unwrap=out_key)
          for f in files])
     assert got.num_rows == 400
     assert sorted(got.column("a").to_pylist()) == list(range(400))
@@ -233,7 +233,7 @@ def test_double_wrapped_default_config(tmp_path):
     p = str(tmp_path / "dw.parquet")
     with pq.ParquetWriter(p, t.schema, encryption_properties=props) as w:
         w.write_table(t)
-    ours = parquet_interop.read_table_arrow(p, kms_unwrap=_unwrap)
+    ours = parquet_interop.read_table_arrow_native(p, kms_unwrap=_unwrap)
     for c in t.column_names:
         assert ours.column(c).to_pylist() == t.column(c).to_pylist(), c
 
@@ -259,7 +259,7 @@ def test_tampered_encrypted_file_never_wrong_data(tmp_path, seed):
         p2 = str(tmp_path / "t.parquet")
         open(p2, "wb").write(bytes(b))
         try:
-            got = parquet_interop.read_table_arrow(p2, kms_unwrap=key)
+            got = parquet_interop.read_table_arrow_native(p2, kms_unwrap=key)
         except Exception:
             continue  # clean failure — the expected outcome
         for c in t.column_names:
@@ -288,7 +288,7 @@ def test_encrypted_multipage_variants(tmp_path, page_version, use_dictionary):
                           data_page_size=4096, use_dictionary=use_dictionary,
                           data_page_version=page_version) as w:
         w.write_table(t)
-    ours = parquet_interop.read_table_arrow(p, kms_unwrap=_unwrap)
+    ours = parquet_interop.read_table_arrow_native(p, kms_unwrap=_unwrap)
     for c in t.column_names:
         assert ours.column(c).to_pylist() == t.column(c).to_pylist(), c
 
@@ -318,7 +318,7 @@ def test_gcm_ctr_encrypted_footer_decodes(tmp_path, column_keys,
                           use_dictionary=use_dictionary) as w:
         w.write_table(t.slice(0, 150))
         w.write_table(t.slice(150))
-    ours = parquet_interop.read_table_arrow(p, kms_unwrap=_unwrap)
+    ours = parquet_interop.read_table_arrow_native(p, kms_unwrap=_unwrap)
     for c in t.column_names:
         assert ours.column(c).to_pylist() == t.column(c).to_pylist(), c
 
@@ -340,7 +340,7 @@ def test_gcm_ctr_multipage_ordinals(tmp_path):
     with pq.ParquetWriter(p, t.schema, encryption_properties=props,
                           data_page_size=4096) as w:
         w.write_table(t)
-    ours = parquet_interop.read_table_arrow(p, kms_unwrap=_unwrap)
+    ours = parquet_interop.read_table_arrow_native(p, kms_unwrap=_unwrap)
     for c in t.column_names:
         assert ours.column(c).to_pylist() == t.column(c).to_pylist(), c
 
@@ -355,7 +355,7 @@ def test_gcm_ctr_keyless_read_raises(tmp_path):
     p = str(tmp_path / "ctrk.parquet")
     pq.write_table(t, p, encryption_properties=props)
     with pytest.raises(ValueError, match="kms_unwrap"):
-        parquet_interop.read_table_arrow(p)
+        parquet_interop.read_table_arrow_native(p)
 
 
 @pytest.mark.parametrize("seed", range(2))
@@ -385,7 +385,7 @@ def test_gcm_ctr_tampered_page_detected_via_crc_or_decode(tmp_path, seed):
         p2 = str(tmp_path / "t.parquet")
         open(p2, "wb").write(bytes(b))
         try:
-            got = parquet_interop.read_table_arrow(p2, kms_unwrap=_unwrap)
+            got = parquet_interop.read_table_arrow_native(p2, kms_unwrap=_unwrap)
             outcomes["read"] += 1
             # whatever decodes must still be a structurally valid table of
             # the SAME schema and row count (CTR has no per-page auth; the

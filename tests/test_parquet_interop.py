@@ -10,14 +10,14 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from webcodec.parquet_interop import read_column_chunk
+from webcodec.parquet_interop import read_table_arrow_native
 
 
 def _roundtrip_column(tmp_path, table: pa.Table, col: int, **write_kw):
     path = str(tmp_path / "t.parquet")
     pq.write_table(table, path, data_page_version="1.0", **write_kw)
     want = table.column(col).to_pylist()
-    got = read_column_chunk(path, 0, col)
+    got = read_table_arrow_native(path).column(col).to_pylist()
     assert len(got) == len(want)
     return got, want
 
@@ -87,7 +87,7 @@ def test_v2_pages_dictionary_and_nulls(tmp_path, codec):
     pq.write_table(t, path, data_page_version="2.0", compression=codec,
                    data_page_size=4096)
     for col in (0, 1):
-        got = read_column_chunk(path, 0, col)
+        got = read_table_arrow_native(path).column(col).to_pylist()
         want = t.column(col).to_pylist()
         got = [v.decode() if isinstance(v, bytes) else v for v in got]
         assert got == want
@@ -98,7 +98,8 @@ def test_v2_pages_plain(tmp_path):
     path = str(tmp_path / "v2p.parquet")
     pq.write_table(t, path, data_page_version="2.0", use_dictionary=False,
                    compression="zstd")
-    assert read_column_chunk(path, 0, 0) == t.column(0).to_pylist()
+    assert (read_table_arrow_native(path).column(0).to_pylist()
+            == t.column(0).to_pylist())
 
 
 # ---------------- spec DELTA / BYTE_STREAM_SPLIT encodings ----------------
@@ -117,7 +118,7 @@ def _encoded_roundtrip(tmp_path, arr: pa.Array, encoding: str, *,
     # prove the writer actually used the requested encoding
     encs = pq.ParquetFile(path).metadata.row_group(0).column(0).encodings
     assert encoding in encs, encs
-    got = read_column_chunk(path, 0, 0)
+    got = read_table_arrow_native(path).column(0).to_pylist()
     want = t.column(0).to_pylist()
     assert len(got) == len(want)
     return got, want
@@ -213,15 +214,14 @@ def test_nested_assembly_reference_files(tmp_path, name, page_version):
     """Dremel ASSEMBLY from pyarrow-written nested files (the read-side
     inverse of the export shredder): list/struct/map at arbitrary depth,
     v1 and v2 pages, dict and plain, reconstructed value-identical by
-    read_column_arrow using only webcodec kernels."""
-    from webcodec.parquet_interop import read_column_arrow
+    read_table_arrow_native using only webcodec kernels."""
 
     arr = _NESTED_CASES[name]
     t = pa.table({"c": arr})
     p = str(tmp_path / "t.parquet")
     pq.write_table(t, p, data_page_version=page_version,
                    use_dictionary=(page_version == "1.0"), compression="zstd")
-    got = read_column_arrow(p, 0, "c")
+    got = read_table_arrow_native(p, ["c"]).column("c").combine_chunks()
     want = t.column("c").combine_chunks()
     if got.type != want.type:
         got = got.cast(want.type)
@@ -231,13 +231,12 @@ def test_nested_assembly_reference_files(tmp_path, name, page_version):
 @pytest.mark.parametrize("seed", range(12))
 def test_nested_assembly_fuzz(tmp_path, seed):
     """Random-SCHEMA assembly fuzz: pyarrow writes random list/struct/map
-    compositions (depth <= 3, random nulls/empties); read_column_arrow must
-    reconstruct them value-identical. Shares the generator with the export
+    compositions (depth <= 3, random nulls/empties); read_table_arrow_native
+    must reconstruct them value-identical. Shares the generator with the export
     fuzz, so BOTH interop directions cover the same shape space."""
     import random
 
     from test_parquet_writer import _rand_nested_type, _rand_nested_value
-    from webcodec.parquet_interop import read_column_arrow
 
     py = random.Random(7_000 + seed)
     rng = np.random.default_rng(7_000 + seed)
@@ -249,7 +248,7 @@ def test_nested_assembly_fuzz(tmp_path, seed):
     pq.write_table(t, p, data_page_version=["1.0", "2.0"][seed % 2],
                    use_dictionary=bool(seed % 3),
                    compression=["zstd", "snappy", "none"][seed % 3])
-    got = read_column_arrow(p, 0, "c")
+    got = read_table_arrow_native(p, ["c"]).column("c").combine_chunks()
     want = t.column("c").combine_chunks()
     if got.type != want.type:
         got = got.cast(want.type)
@@ -259,12 +258,11 @@ def test_nested_assembly_fuzz(tmp_path, seed):
 @pytest.mark.parametrize("seed", range(6))
 def test_own_writer_to_own_reader_nested(tmp_path, seed):
     """Closing the loop: OUR nested export (parquet_writer shredder) read
-    back by OUR nested assembly (read_column_arrow) — no reference code in
-    either direction, still value-identical."""
+    back by OUR nested assembly (read_table_arrow_native) — no reference
+    code in either direction, still value-identical."""
     import random
 
     from test_parquet_writer import _rand_nested_type, _rand_nested_value
-    from webcodec.parquet_interop import read_column_arrow
     from webcodec.parquet_writer import write_parquet
 
     py = random.Random(9_500 + seed)
@@ -275,7 +273,7 @@ def test_own_writer_to_own_reader_nested(tmp_path, seed):
         [_rand_nested_value(py, rng, typ) for _ in range(n)], typ)})
     p = str(tmp_path / "t.parquet")
     write_parquet(t, p, codec=["zstd", "none"][seed % 2])
-    got = read_column_arrow(p, 0, "c")
+    got = read_table_arrow_native(p, ["c"]).column("c").combine_chunks()
     want = t.column("c").combine_chunks()
     if got.type != want.type:
         got = got.cast(want.type)
@@ -285,10 +283,10 @@ def test_own_writer_to_own_reader_nested(tmp_path, seed):
 @pytest.mark.parametrize("page_version", ["1.0", "2.0"])
 def test_decimal_flba_assembly(tmp_path, page_version):
     """FLBA decimals (pyarrow's precision-sized FLBA AND our own FLBA(16)
-    export) decode through read_column_arrow bit-exact, flat and nested."""
+    export) decode through read_table_arrow_native bit-exact, flat and
+    nested."""
     import decimal
 
-    from webcodec.parquet_interop import read_column_arrow
     from webcodec.parquet_writer import write_parquet
 
     t = pa.table({
@@ -302,7 +300,7 @@ def test_decimal_flba_assembly(tmp_path, page_version):
     p = str(tmp_path / "ref.parquet")
     pq.write_table(t, p, data_page_version=page_version)
     for c in t.column_names:
-        got = read_column_arrow(p, 0, c)
+        got = read_table_arrow_native(p, [c]).column(c).combine_chunks()
         want = t.column(c).combine_chunks()
         if got.type != want.type:
             got = got.cast(want.type)
@@ -310,7 +308,7 @@ def test_decimal_flba_assembly(tmp_path, page_version):
     p2 = str(tmp_path / "own.parquet")
     write_parquet(t.select(["d", "ld"]), p2, codec="zstd")
     for c in ("d", "ld"):
-        got = read_column_arrow(p2, 0, c)
+        got = read_table_arrow_native(p2, [c]).column(c).combine_chunks()
         want = t.column(c).combine_chunks()
         if got.type != want.type:
             got = got.cast(want.type)
@@ -320,8 +318,7 @@ def test_decimal_flba_assembly(tmp_path, page_version):
 def test_int96_timestamps_and_read_table_arrow(tmp_path):
     """Legacy INT96 timestamps (parquet-java's historical layout: 8B LE
     nanos-in-day + 4B LE julian day) decode to epoch nanoseconds, and
-    read_table_arrow assembles whole multi-row-group files."""
-    from webcodec.parquet_interop import read_table_arrow
+    read_table_arrow_native assembles whole multi-row-group files."""
 
     t = pa.table({
         "ts": pa.array([1_700_000_000_000_000, 2, None, 0], pa.timestamp("us")),
@@ -329,12 +326,37 @@ def test_int96_timestamps_and_read_table_arrow(tmp_path):
     })
     p = str(tmp_path / "t.parquet")
     pq.write_table(t, p, use_deprecated_int96_timestamps=True, row_group_size=2)
-    got = read_table_arrow(p)
+    got = read_table_arrow_native(p)
     want = pq.read_table(p)  # reference reader, same file
     assert pq.ParquetFile(p).metadata.num_row_groups == 2
     for c in t.column_names:
         g = got.column(c).combine_chunks().cast(want.column(c).type)
         assert g.equals(want.column(c).combine_chunks()), c
+
+
+def test_corrupt_footer_shapes_raise_valueerror(tmp_path):
+    """A chunk path that no longer names its schema leaf, and a footer
+    length that starts the parse 40 bytes late, raise ``ValueError`` naming
+    the file (the first leaked IndexError from the assembly, the second
+    KeyError from the schema parse)."""
+    import struct
+
+    t = pa.table({"alpha": pa.array(range(10), pa.int64()),
+                  "beta": pa.array([f"v{i}" for i in range(10)])})
+    p = str(tmp_path / "base.parquet")
+    pq.write_table(t, p)
+    raw = open(p, "rb").read()
+    (flen,) = struct.unpack("<I", raw[-8:-4])
+    at = raw.rindex(b"beta")  # path_in_schema of the second chunk
+    renamed = raw[:at] + b"bexa" + raw[at + 4:]
+    short = raw[:-8] + struct.pack("<I", flen - 40) + raw[-4:]
+    for name, body, match in (("renamed", renamed, "row group 0 column 1"),
+                              ("short", short, "FileMetaData")):
+        bad = str(tmp_path / f"{name}.parquet")
+        open(bad, "wb").write(body)
+        with pytest.raises(ValueError, match=match) as ei:
+            read_table_arrow_native(bad)
+        assert bad in str(ei.value)
 
 
 @pytest.mark.parametrize("seed", range(4))
@@ -343,7 +365,6 @@ def test_native_footer_corruption_raises_cleanly(tmp_path, seed):
     ignored field) or raise a normal exception — never hang, segfault, or
     loop (the native thrift parser is the attack surface for malformed
     reference files)."""
-    from webcodec.parquet_interop import read_table_arrow
 
     t = pa.table({"a": pa.array(range(100), pa.int64()),
                   "s": pa.array([f"v{i}" for i in range(100)])})
@@ -359,6 +380,6 @@ def test_native_footer_corruption_raises_cleanly(tmp_path, seed):
         p2 = str(tmp_path / "c.parquet")
         open(p2, "wb").write(bytes(b))
         try:
-            read_table_arrow(p2)
+            read_table_arrow_native(p2)
         except Exception:
             pass  # clean raise is the contract

@@ -127,7 +127,7 @@ def test_multipage_encrypted_pyarrow_decrypts(tmp_path):
     ref = pq.ParquetFile(p, decryption_properties=dprops).read()
     assert ref.equals(t)
     # and our own interop reader agrees
-    ours = pi.read_table_arrow(
+    ours = pi.read_table_arrow_native(
         p, kms_unwrap=lambda w, m: base64.b64decode(w))
     assert ours.equals(t)
 
@@ -208,7 +208,7 @@ def test_page_indexes_skipped_for_encrypted_files(tmp_path):
     import struct as st
     buf = memoryview(open(p, "rb").read())
     # plaintext indexes would leak bounds; assert no CC fields 4/6 exist
-    ours = pi.read_table_arrow(p, kms_unwrap=bytes(range(32)))
+    ours = pi.read_table_arrow_native(p, kms_unwrap=bytes(range(32)))
     assert ours.equals(t)
 
 
@@ -308,7 +308,7 @@ def test_v2_export_encrypted_reference_decrypts(tmp_path):
     factory = pe.CryptoFactory(lambda config: _Kms(config))
     dprops = factory.file_decryption_properties(pe.KmsConnectionConfig())
     assert pq.ParquetFile(p, decryption_properties=dprops).read().equals(t)
-    assert pi.read_table_arrow(
+    assert pi.read_table_arrow_native(
         p, kms_unwrap=lambda w, m: base64.b64decode(w)).equals(t)
 
 

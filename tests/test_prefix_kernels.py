@@ -198,6 +198,41 @@ def test_prefix_lengths_short_values_around_two_mib_values():
     assert prefix.prefix_lengths(offs, data).tolist() == want
 
 
+# long values decode through ``prefix.join``'s sequential path (maxlen > n),
+# one step per value instead of one matrix pass per byte column; the parquet
+# reader's DELTA_BYTE_ARRAY pages share the kernel
+
+
+def _decode_both_within_a_second(tmp_path, vals: list[bytes]) -> None:
+    import time
+
+    import pyarrow.parquet as pq
+
+    from webcodec import parquet_interop as pi
+
+    blob = prefix.encode(*_parts(vals))
+    t0 = time.perf_counter()
+    assert prefix.decode(blob, len(vals), pa.binary()).to_pylist() == vals
+    assert time.perf_counter() - t0 <= 1.0
+    p = str(tmp_path / "dba.parquet")
+    pq.write_table(pa.table({"s": pa.array(vals, pa.binary())}), p,
+                   use_dictionary=False, compression="none",
+                   column_encoding={"s": "DELTA_BYTE_ARRAY"})
+    t0 = time.perf_counter()
+    assert pi.read_table_arrow_native(p).column("s").to_pylist() == vals
+    assert time.perf_counter() - t0 <= 1.0
+
+
+def test_decode_two_equal_mib_values(tmp_path):
+    big = np.random.default_rng(1).integers(0, 256, 1 << 20, dtype=np.uint8).tobytes()
+    _decode_both_within_a_second(tmp_path, [big, big])
+
+
+def test_decode_thousand_values_share_64k_head(tmp_path):
+    head = np.random.default_rng(2).integers(0, 256, 1 << 16, dtype=np.uint8).tobytes()
+    _decode_both_within_a_second(tmp_path, [head + b"%06d" % (7 * i) for i in range(1000)])
+
+
 # -- hostile pages -------------------------------------------------------------
 
 

@@ -103,7 +103,7 @@ def test_files_with_size_stats_read_everywhere(tmp_path):
     assert pq.read_table(p).equals(t)
     assert duckdb.execute(
         f"select count(*) from '{p}'").fetchone()[0] == 3_000
-    assert pi.read_table_arrow(p).equals(t)
+    assert pi.read_table_arrow_native(p).equals(t)
 
 
 def test_reader_surfaces_size_statistics(tmp_path, spark):

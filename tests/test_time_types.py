@@ -91,7 +91,7 @@ def test_interop_reads_pyarrow_times(tmp_path):
     t = TIMES.drop_columns(["t32s", "dur"])  # pyarrow writes these two back
     p = str(tmp_path / "ref.parquet")
     pq.write_table(t, p)
-    back = parquet_interop.read_table_arrow(p)
+    back = parquet_interop.read_table_arrow_native(p)
     for name in t.column_names:
         assert back.schema.field(name).type == t.schema.field(name).type
         assert _col(back, name) == _col(t, name)
@@ -100,7 +100,7 @@ def test_interop_reads_pyarrow_times(tmp_path):
 def test_interop_reads_own_export(tmp_path):
     p = str(tmp_path / "own.parquet")
     parquet_writer.write_parquet(TIMES.drop_columns(["t32s", "dur"]), p)
-    back = parquet_interop.read_table_arrow(p)
+    back = parquet_interop.read_table_arrow_native(p)
     for name in ("t32ms", "t64us", "t64ns"):
         assert _col(back, name) == _col(TIMES, name)
 

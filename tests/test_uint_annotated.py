@@ -101,7 +101,7 @@ def test_export_annotated_ints_duckdb(tmp_path):
 def test_interop_reads_own_annotated_ints(tmp_path, kw):
     p = str(tmp_path / "t.parquet")
     parquet_writer.write_parquet(INTS, p, **kw)
-    back = parquet_interop.read_table_arrow(p)
+    back = parquet_interop.read_table_arrow_native(p)
     for name in INTS.column_names:
         assert back.schema.field(name).type == INTS.schema.field(name).type
         assert _col(back, name) == _col(INTS, name)
@@ -110,7 +110,7 @@ def test_interop_reads_own_annotated_ints(tmp_path, kw):
 def test_interop_reads_pyarrow_annotated_ints(tmp_path):
     p = str(tmp_path / "ref.parquet")
     pq.write_table(INTS, p)
-    back = parquet_interop.read_table_arrow(p)
+    back = parquet_interop.read_table_arrow_native(p)
     for name in INTS.column_names:
         assert back.schema.field(name).type == INTS.schema.field(name).type
         assert _col(back, name) == _col(INTS, name)

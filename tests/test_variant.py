@@ -123,7 +123,7 @@ def test_native_interop_reads_variant_export(tmp_path):
     parquet_writer.write_parquet(t, p, variant_columns={"v"})
     with pytest.raises(Exception, match="Thrift|thrift"):
         pq.read_table(p)  # the reference reader cannot even parse the footer
-    ours = parquet_interop.read_table_arrow(p)
+    ours = parquet_interop.read_table_arrow_native(p)
     assert ours.column("id").to_pylist() == [0, 1, 2, 3]
     assert ours.column("v").to_pylist() == t.column("v").to_pylist()
 

@@ -36,7 +36,7 @@ def _spark_ref(spark, path, col="v"):
 
 
 def _ours(path, col="v"):
-    t = pi.read_table_arrow(path)
+    t = pi.read_table_arrow_native(path)
     parts = col.split(".")
     vals = t.column(parts[0]).to_pylist()
     for p in parts[1:]:
@@ -280,7 +280,7 @@ def test_write_parquet_shredded_spark_reads(spark, tmp_path):
 
     ft = pi.read_footer_native(p)
     assert ft["variant_shredded"] == [("v",)]
-    back = pi.read_table_arrow(p)
+    back = pi.read_table_arrow_native(p)
     assert [_py(r) for r in back.column("v").to_pylist()] == \
         [_py(r) for r in rows]
 

@@ -16,10 +16,12 @@ Vectorization notes:
   per 8 bytes. The suffixes are the data bytes under a mask built with one
   ``np.repeat`` of (prefix, suffix) run lengths. ``prefix_lengths`` also
   serves the parquet exporter and the selector's ``prefix_ratio``.
-- Decode: the naive reconstruction is sequential (each value references the
-  previous); we instead resolve per byte-COLUMN k: the owner of column k at
-  row i is the last j<=i with prefix_len[j] <= k, computed with
-  ``np.maximum.accumulate`` — maxlen vectorized passes, no per-row Python.
+- Decode (``join``, shared with the parquet reader): the naive
+  reconstruction is sequential (each value references the previous); we
+  instead resolve per byte-COLUMN k: the owner of column k at row i is the
+  last j<=i with prefix_len[j] <= k, computed with
+  ``np.maximum.accumulate`` — maxlen vectorized passes. Values longer than
+  their count (maxlen > n) take the sequential path, which costs n steps.
 """
 
 from __future__ import annotations
@@ -118,19 +120,31 @@ def decode(data: bytes | memoryview, n: int, arrow_type: pa.DataType | None = No
     lsl, pos = read_uvarint(buf, pos)
     slens = delta.decode(buf[pos : pos + lsl], n) if n else np.empty(0, np.int64)
     pos += lsl
+    total = deltalength.checked_total(slens, len(buf) - pos) if n else 0
+    suffix = np.frombuffer(buf[pos:], dtype=np.uint8, count=total)
+    return join(p, slens, suffix, arrow_type)
+
+
+def join(p: np.ndarray, slens: np.ndarray, suffix: np.ndarray,
+         arrow_type: pa.DataType | None = None) -> pa.Array:
+    """Inverse of :func:`split`: value i is value i-1's first ``p[i]`` bytes
+    followed by its ``slens[i]`` bytes of ``suffix`` (the lengths already
+    checked against ``suffix``). Raises ``ValueError`` for prefix lengths no
+    valid page holds."""
+    n = len(p)
     if n == 0:
         return deltalength.from_parts(np.empty(0, np.int64), b"", 0, arrow_type)
-    total = deltalength.checked_total(slens, len(buf) - pos)
-    suffix = np.frombuffer(buf[pos:], dtype=np.uint8, count=total)
-    # value i is value i-1's first p[i] bytes + suffix i: p[0] = 0 and no
-    # p[i] past the previous value (p[i] <= total keeps the sums exact)
+    total = len(suffix)
+    # p[0] = 0 and no p[i] past the previous value (p[i] <= total keeps the
+    # sums exact)
     if p[0] != 0 or int(p.min()) < 0 or int(p.max()) > total:
         raise ValueError("DELTA_BYTE_ARRAY prefix lengths out of range: page corrupt")
     out_lens = p + slens
     if (p[1:] > out_lens[:-1]).any():
         raise ValueError("DELTA_BYTE_ARRAY prefix longer than the previous value: page corrupt")
-    maxlen = int(out_lens.max()) if n else 0
-    if maxlen * n * _MATRIX_TEMPORARIES > _MATRIX_BYTE_CAP:
+    maxlen = int(out_lens.max())
+    # the matrix path takes maxlen Python steps, the sequential one n
+    if maxlen > n or maxlen * n * _MATRIX_TEMPORARIES > _MATRIX_BYTE_CAP:
         return _decode_sequential(p, slens, suffix, n, arrow_type)
     # suffix byte matrix: row i holds suffix bytes at columns [p_i, p_i + slen_i)
     smat = np.zeros((n, max(maxlen, 1)), dtype=np.uint8)
@@ -152,7 +166,8 @@ def decode(data: bytes | memoryview, n: int, arrow_type: pa.DataType | None = No
 
 
 def _decode_sequential(p, slens, suffix, n, arrow_type):
-    """Fallback for pathologically wide values (cold path)."""
+    """One step per value: values longer than their count, or too wide for
+    the matrix."""
     sstart = np.zeros(n, dtype=np.int64)
     np.cumsum(slens[:-1], out=sstart[1:])
     vals: list[bytes] = []

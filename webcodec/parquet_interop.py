@@ -294,25 +294,14 @@ def _delta_length_byte_array(body: memoryview, n: int):
 
 def _delta_byte_array(body: memoryview, n: int):
     """DELTA_BYTE_ARRAY: prefix lengths (delta stream), then the suffixes as
-    DELTA_LENGTH_BYTE_ARRAY; value i = value[i-1][:prefix_i] + suffix_i."""
-    import pyarrow as pa
-
-    from webcodec.kernels import delta
+    DELTA_LENGTH_BYTE_ARRAY; value i = value[i-1][:prefix_i] + suffix_i,
+    rebuilt by the ``.wcd`` kernel's ``prefix.join``."""
+    from webcodec.kernels import delta, prefix
 
     prefix_lens, off = delta.decode_stream(body, n)
-    suffixes = _delta_length_byte_array(body[off:], n)
-    offsets, _ = _binary_offsets(suffixes)
-    full_lens = prefix_lens + np.diff(offsets)
-    prev_lens = np.concatenate(([0], full_lens[:-1]))
-    if n and ((prefix_lens < 0) | (prefix_lens > prev_lens)).any():
-        raise ValueError(
-            "DELTA_BYTE_ARRAY page: prefix longer than the previous value")
-    vals = []
-    prev = b""
-    for plen, suf in zip(prefix_lens.tolist(), suffixes.to_pylist()):
-        prev = prev[:plen] + suf
-        vals.append(prev)
-    return pa.array(vals, pa.binary())
+    offsets, data = _binary_offsets(_delta_length_byte_array(body[off:], n))
+    suffix = np.frombuffer(data, np.uint8, count=int(offsets[-1]))
+    return prefix.join(prefix_lens, np.diff(offsets), suffix)
 
 
 # Deprecated BIT_PACKED rep/def levels: the ecosystem DIVERGED on bit order.
@@ -541,26 +530,6 @@ def _read_leaf_entries(buf: memoryview, meta, phys: str, max_rep: int,
     return values, reps_all, defs_all
 
 
-def read_column_chunk(path: str, row_group: int, column: int) -> list:
-    """Decode one FLAT column chunk of a real parquet file to a python list
-    (None for nulls; bytes for BYTE_ARRAY / FLBA) using only webcodec
-    kernels for levels/RLE/bit-pack."""
-    import pyarrow as pa
-
-    ft = read_footer_native(path)
-    buf = ft["buf"]
-    lf = ft["leaves"][column]
-    meta = ft["row_groups"][row_group][column]
-    max_def = lf["max_def"]
-    vals, _, defs = _read_leaf_entries(
-        buf, meta, lf["phys"], 0, max_def, type_length=lf["tlen"])
-    vals = vals.to_pylist() if isinstance(vals, pa.Array) else vals.tolist()
-    if defs is None:
-        return vals
-    it = iter(vals)
-    return [next(it) if ok else None for ok in defs == max_def]
-
-
 # ------------------- leaf values for dremel.assemble --------------------------
 
 
@@ -656,55 +625,6 @@ def _leaf_arrow(vals, defs, max_def, target_type):
         full[present] = vals
         arr = pa.array(full, mask=~present)
     return arr.cast(target_type) if arr.type != target_type else arr
-
-
-def read_column_arrow(path: str, row_group: int, column_name: str):
-    """Decode one (possibly NESTED) top-level column of a real parquet file
-    to an arrow array using only webcodec kernels — pages, levels and values
-    decoded by our RLE/bit-pack/delta/BSS machinery, containers reassembled
-    from rep/def levels (the read-side inverse of parquet_writer's Dremel
-    shredding). Works on pyarrow/parquet-java-written files."""
-    ft = read_footer_native(path)
-    buf = ft["buf"]
-    field = next((f for f in ft["fields"] if f.name == column_name), None)
-    if field is None:
-        raise KeyError(f"column {column_name!r} not in {path}")
-    leaf_info = {lf["path"]: lf for lf in ft["leaves"]}
-    streams = []
-    for meta in ft["row_groups"][row_group]:
-        if meta.path.split(".")[0] != column_name:
-            continue
-        lf = leaf_info[meta.path]
-        vals, reps, defs = _read_leaf_entries(
-            buf, meta, lf["phys"], lf["max_rep"], lf["max_def"],
-            type_length=lf["tlen"])
-        if defs is None:  # required flat leaf: synthesize def 0s
-            defs = np.zeros(meta.num_values, np.int64)
-        streams.append({"vals": vals, "rep": reps, "def": defs})
-    arr = dremel.assemble(field.type, streams, _leaf_arrow, field.nullable)
-    for vp in ft.get("variant_shredded", ()):
-        if vp[0] == column_name:
-            from . import variant_shred
-
-            arr = variant_shred.unshred(arr, vp[1:])
-    return arr
-
-
-def read_table_arrow(path: str, columns: list[str] | None = None,
-                     kms_unwrap=None, filters=None,
-                     verify_checksums: bool = False):
-    """Whole-file convenience: every (possibly nested) column of every row
-    group assembled by webcodec kernels into one arrow Table — the
-    interop-reader counterpart of filefmt.read_table for REFERENCE files.
-    Since r5 this is fully self-contained: the footer is parsed by the same
-    thrift compact reader as the page headers (``read_footer_native``), so
-    no pyarrow metadata machinery is involved and files pyarrow's thrift
-    layer rejects (VARIANT-annotated exports) still decode. ``filters``
-    prune row groups (chunk Statistics) and pages (ColumnIndex) before the
-    exact residual filter — see ``read_table_arrow_native``."""
-    return read_table_arrow_native(path, columns, kms_unwrap=kms_unwrap,
-                                   filters=filters,
-                                   verify_checksums=verify_checksums)
 
 
 # ---------------------------- native footer -----------------------------------
@@ -975,10 +895,11 @@ def _leaf_arrow_type(e: dict):
 def _parse_schema_tree(elems: list[dict]):
     """Flattened SchemaElement list -> (top-level arrow fields, leaf infos).
 
-    Returns ``(fields, leaves)`` where ``fields`` is a list of
-    ``pa.field(name, type, nullable)`` for each top-level column and
-    ``leaves`` is the flat per-leaf list in file order:
-    ``{"path", "phys", "tlen", "max_rep", "max_def"}``. Standard 3-level
+    Returns ``(fields, leaves, spans, variant_shredded)`` where ``fields``
+    is a list of ``pa.field(name, type, nullable)`` for each top-level
+    column, ``leaves`` is the flat per-leaf list in file order:
+    ``{"path", "phys", "tlen", "max_rep", "max_def"}`` and ``spans[k]`` is
+    the range of leaf positions under field k. Standard 3-level
     LIST and MAP groups, arbitrary struct nesting, UNSHREDDED VARIANT
     groups (exposed as their storage struct), plus the LogicalTypes.md
     backward-compatibility rules: legacy 2-level lists (repeated leaf
@@ -1090,9 +1011,12 @@ def _parse_schema_tree(elems: list[dict]):
     root = elems[0]
     n_top = root.get(5) or 0
     fields = []
+    spans = []
     i = 1
     for _ in range(n_top):
+        lo = len(leaves)
         t, nullable, i2 = node(i, 0, 0, ())
+        spans.append(range(lo, len(leaves)))
         f = pa.field(name_of(elems[i]), t, nullable)
         i = i2
         # top-level geospatial leaf: carry the annotation as field metadata
@@ -1109,14 +1033,16 @@ def _parse_schema_tree(elems: list[dict]):
             f = f.with_metadata(
                 {b"PARQUET:logical_type": leaves[-1]["annotation"].encode()})
         fields.append(f)
-    return fields, leaves, variant_shredded
+    return fields, leaves, spans, variant_shredded
 
 
 def read_footer_native(path: str, kms_unwrap=None):
     """Parse a parquet footer with webcodec's own thrift compact reader.
-    Returns ``{"fields": [pa.field...], "leaves": [...],
+    Returns ``{"fields": [pa.field...], "leaves": [...], "spans": [...],
     "row_groups": [[_ChunkMeta...]]}`` — everything the nested assembly
-    needs, with no pyarrow metadata involvement.
+    needs, with no pyarrow metadata involvement. Chunk i of every row group
+    is schema leaf i (checked: a footer that breaks this raises
+    ``ValueError``), and ``spans[k]`` holds the leaf positions of field k.
 
     Handles the reference's MODULAR ENCRYPTION (parquet-format
     Encryption.md) in both footer modes: PARE files carry
@@ -1173,22 +1099,34 @@ def read_footer_native(path: str, kms_unwrap=None):
                 footer_gcm = AESGCM(footer_key)
     else:
         raise ValueError(f"not a parquet file: {path}")
-    fields, leaves, variant_shredded = _parse_schema_tree(fmd[2])
-    row_groups = [
+    where = f"corrupt parquet footer in {path}"
+    if not (isinstance(fmd.get(2), list) and isinstance(fmd.get(4), list)):
+        raise ValueError(f"{where}: FileMetaData lacks its schema or row "
+                         "groups")
+    fields, leaves, spans, variant_shredded = _parse_schema_tree(fmd[2])
+    row_groups = []
+    for rg_i, rg in enumerate(fmd[4]):
+        if len(rg.get(1, ())) != len(leaves):
+            raise ValueError(f"{where}: row group {rg_i} does not hold one "
+                             "column chunk per schema leaf")
         # AAD row-group ordinal comes from RowGroup.ordinal (field 7) when
         # written, falling back to the list position (they always agree in
         # practice; the reference reader trusts the field)
-        [_ChunkMeta(*_chunk_crypto(cc, footer_gcm, aad_unique,
-                                   rg.get(7, rg_i), col_i, kms_unwrap,
-                                   footer_encrypted=head == b"PARE",
-                                   footer_key=footer_key, ctr=ctr_pages),
-                    cc=cc)
-         for col_i, cc in enumerate(rg[1])]
-        for rg_i, rg in enumerate(fmd[4])
-    ]
+        row_groups.append([
+            _ChunkMeta(*_chunk_crypto(cc, footer_gcm, aad_unique,
+                                      rg.get(7, rg_i), col_i, kms_unwrap,
+                                      footer_encrypted=head == b"PARE",
+                                      footer_key=footer_key, ctr=ctr_pages),
+                       cc=cc)
+            for col_i, cc in enumerate(rg[1])])
+        for col_i, (m, lf) in enumerate(zip(row_groups[-1], leaves)):
+            if m.path != lf["path"]:
+                raise ValueError(
+                    f"{where}: row group {rg_i} column {col_i} is "
+                    f"{m.path!r}, schema leaf {col_i} is {lf['path']!r}")
     rg_rows = [rg.get(3) for rg in fmd[4]]  # RowGroup.num_rows
-    return {"fields": fields, "leaves": leaves, "row_groups": row_groups,
-            "rg_rows": rg_rows, "buf": buf,
+    return {"fields": fields, "leaves": leaves, "spans": spans,
+            "row_groups": row_groups, "rg_rows": rg_rows, "buf": buf,
             "variant_shredded": variant_shredded}
 
 
@@ -1355,9 +1293,7 @@ def _rg_may_match(rg: list, conj: list, by_name: dict, leaf_info: dict,
     from webcodec import predicate as _pred
 
     for col, op, value in conj:
-        meta = next((m for m in rg if m.path == col), None)
-        if meta is None:
-            continue
+        meta = next(m for m in rg if m.path == col)
         t = by_name[col].type
         cv, ok = _canon_value(value, op, t)
         if not ok:
@@ -1382,66 +1318,63 @@ def _parse_offset_index(buf, meta):
     return [(pl[1], pl[2], pl[3]) for pl in st[1]]
 
 
-def _merge_ranges(ranges):
-    out: list[tuple[int, int]] = []
-    for lo, hi in sorted(ranges):
-        if out and lo <= out[-1][1]:
-            out[-1] = (out[-1][0], max(out[-1][1], hi))
-        else:
-            out.append((lo, hi))
-    return out
+def _data_pages(buf, meta, n_rows):
+    """(offsets, sizes, first rows) of the chunk's data pages from its
+    OffsetIndex. None when there is no usable index: encrypted (page AAD
+    ordinals run from the chunk start), absent, unparseable, or
+    inconsistent (first rows not starting at 0 or not strictly increasing
+    below ``n_rows``; pages not back to back over the chunk's data
+    pages)."""
+    if meta.crypto is not None or meta.offset_index_offset is None:
+        return None
+    try:
+        off, size, first = np.array(_parse_offset_index(buf, meta),
+                                    np.int64).reshape(-1, 3).T
+    except (NotImplementedError, ValueError, IndexError, KeyError,
+            TypeError, OverflowError, struct.error):
+        return None
+    end = (meta.data_page_offset if meta.dictionary_page_offset is None
+           else meta.dictionary_page_offset) + meta.total_compressed_size
+    if (not len(first) or first[0] != 0
+            or (np.diff(first, append=n_rows) <= 0).any()
+            or off[0] != meta.data_page_offset or (size <= 0).any()
+            or (off[1:] != off[:-1] + size[:-1]).any()
+            or off[-1] + size[-1] != end):
+        return None
+    return off, size, first
 
 
-def _intersect_ranges(a, b):
-    out, i, j = [], 0, 0
-    while i < len(a) and j < len(b):
-        lo = max(a[i][0], b[j][0])
-        hi = min(a[i][1], b[j][1])
-        if lo < hi:
-            out.append((lo, hi))
-        if a[i][1] <= b[j][1]:
-            i += 1
-        else:
-            j += 1
-    return out
-
-
-def _rg_page_ranges(buf, rg, conj, by_name, leaf_info, n_rows):
-    """Page tier: ColumnIndex bounds of each FILTER column -> kept global
-    row ranges within this row group. None = no usable page info (decode
-    everything); [] = no page can match (skip the group)."""
+def _rg_row_mask(buf, rg, conj, by_name, leaf_info, n_rows):
+    """Page tier: ColumnIndex bounds of each FILTER column -> boolean mask
+    of the rows this row group may keep. None = no usable page info or
+    every row kept (decode everything)."""
     from webcodec import predicate as _pred
 
-    ranges = [(0, n_rows)]
-    usable = False
+    kept = None
     for col, op, value in conj:
-        meta = next((m for m in rg if m.path == col), None)
-        if (meta is None or meta.crypto is not None
-                or meta.column_index_offset is None
-                or meta.offset_index_offset is None):
-            continue
+        meta = next(m for m in rg if m.path == col)
         t = by_name[col].type
         cv, ok = _canon_value(value, op, t)
-        if not ok:
+        pages = _data_pages(buf, meta, n_rows) if ok else None
+        if pages is None or meta.column_index_offset is None:
             continue
         try:
             ci, _ = _read_struct(buf, meta.column_index_offset)
-            locs = _parse_offset_index(buf, meta)
         except (NotImplementedError, ValueError, IndexError, KeyError,
                 struct.error):
             continue  # unparseable index: ignore, stay conservative
+        firsts = pages[2].tolist()
         null_pages = ci.get(1)
         mins, maxs = ci.get(2), ci.get(3)
         if (null_pages is None or mins is None or maxs is None
                 or not (len(null_pages) == len(mins) == len(maxs)
-                        == len(locs))):
+                        == len(firsts))):
             continue  # malformed index pair: ignore, stay conservative
-        firsts = [loc[2] for loc in locs]
         ends = firsts[1:] + [n_rows]
         ncs = ci.get(5)
         phys = leaf_info[col]["phys"]
-        col_ranges = []
-        for i in range(len(locs)):
+        col_kept = np.zeros(n_rows, bool)
+        for i in range(len(firsts)):
             pr = ends[i] - firsts[i]
             if null_pages[i]:
                 st = {"min": None, "max": None, "null_count": pr}
@@ -1449,15 +1382,10 @@ def _rg_page_ranges(buf, rg, conj, by_name, leaf_info, n_rows):
                 st = {"min": _stat_to_py(mins[i], t, phys),
                       "max": _stat_to_py(maxs[i], t, phys),
                       "null_count": ncs[i] if ncs else None}
-            if _pred.term_matches(st, op, cv, None, pr):
-                col_ranges.append((firsts[i], ends[i]))
-        usable = True
-        ranges = _intersect_ranges(ranges, _merge_ranges(col_ranges))
-        if not ranges:
-            return []
-    if not usable or ranges == [(0, n_rows)]:
-        return None
-    return ranges
+            col_kept[firsts[i]:ends[i]] = _pred.term_matches(
+                st, op, cv, None, pr)
+        kept = col_kept if kept is None else kept & col_kept
+    return None if kept is None or kept.all() else kept
 
 
 def _decode_dict_at(buf, meta, phys: str, tlen: int,
@@ -1477,73 +1405,120 @@ def _decode_dict_at(buf, meta, phys: str, tlen: int,
     return _plain_values(body, header[7][1], phys, tlen)
 
 
-def _read_flat_ranges(buf, meta, field, lf, ranges, n_rows,
-                      verify_crc: bool = False):
-    """Selective page decode of a FLAT unencrypted column restricted to the
-    kept row ranges: only pages overlapping a range are read (contiguous
-    kept pages decode as one run), then each run is sliced to the exact
-    ranges. Row spans come from OffsetIndex.first_row_index, never from
-    page header counts."""
+def _page_runs(buf, meta, kept):
+    """[(byte offset, byte length, first row, end row)] of each run of
+    consecutive data pages holding a ``kept`` row; None without a usable
+    OffsetIndex (``_data_pages``)."""
+    pages = _data_pages(buf, meta, len(kept))
+    if pages is None:
+        return None
+    off, size, first = pages
+    hit = np.logical_or.reduceat(kept, first).astype(np.int8)
+    edges = np.flatnonzero(np.diff(hit, prepend=0, append=0))
+    ends = np.append(first[1:], len(kept))
+    return [(int(off[a]), int(off[b - 1] + size[b - 1] - off[a]),
+             int(first[a]), int(ends[b - 1]))
+            for a, b in zip(edges[0::2], edges[1::2])]
+
+
+def _entry_rows(vals, reps, defs) -> np.ndarray:
+    """Row of each decoded entry, counted from the first: cumsum(rep == 0)
+    - 1 (-1 for entries before the first row start), or the entry index of
+    a flat leaf."""
+    if reps is not None:
+        return np.cumsum(reps == 0) - 1
+    return np.arange(len(defs) if defs is not None else len(vals))
+
+
+def _leaf_stream(buf, meta, lf, kept, verify_crc: bool = False):
+    """The one per-leaf read: one leaf chunk -> its ``{"vals", "rep",
+    "def"}`` entry stream for ``dremel.assemble``, holding only the rows
+    set in the boolean row mask ``kept`` (None keeps every row).
+
+    Page runs: with a mask and a usable OffsetIndex (``_page_runs``) only
+    the runs of pages holding a kept row decode, the dictionary page
+    injected; otherwise the whole chunk is one run. Parquet starts pages at
+    row boundaries when an OffsetIndex is present, so a run that does not
+    start at rep 0, or whose decoded rows differ from its index span, is
+    corrupt: the leaf drops back to the whole-chunk run. Trim: entries map
+    to rows through ``_entry_rows`` and values follow their entries through
+    def == max_def."""
     import types as _types
 
     import pyarrow as pa
 
-    locs = _parse_offset_index(buf, meta)
-    firsts = [loc[2] for loc in locs]
-    ends = firsts[1:] + [n_rows]
-    keep = [i for i in range(len(locs))
-            if any(lo < ends[i] and hi > firsts[i] for lo, hi in ranges)]
-    dict_values = None
-    if meta.dictionary_page_offset is not None:
-        dict_values = _decode_dict_at(buf, meta, lf["phys"], lf["tlen"],
-                                      verify_crc=verify_crc)
-    out = []
-    i = 0
-    while i < len(keep):
-        j = i
-        while j + 1 < len(keep) and keep[j + 1] == keep[j] + 1:
-            j += 1
-        p0, p1 = keep[i], keep[j]
-        run_rows = ends[p1] - firsts[p0]
-        m2 = _types.SimpleNamespace(
+    phys, max_rep, max_def = lf["phys"], lf["max_rep"], lf["max_def"]
+    kw = {"type_length": lf["tlen"], "verify_crc": verify_crc}
+    runs = _page_runs(buf, meta, kept) if kept is not None else None
+    dict_values = (_decode_dict_at(buf, meta, phys, lf["tlen"], verify_crc)
+                   if runs and meta.dictionary_page_offset is not None
+                   else None)
+    decoded = []  # (vals, reps, defs, rows) per run
+    for off, size, first, last in runs or ():
+        run = _types.SimpleNamespace(
             compression=meta.compression, dictionary_page_offset=None,
-            data_page_offset=locs[p0][0],
-            total_compressed_size=(locs[p1][0] + locs[p1][1]) - locs[p0][0],
-            num_values=run_rows, crypto=None, path=meta.path)
+            data_page_offset=off, total_compressed_size=size,
+            num_values=meta.num_values if max_rep else last - first,
+            crypto=None, path=meta.path)
         vals, reps, defs = _read_leaf_entries(
-            buf, m2, lf["phys"], 0, lf["max_def"], type_length=lf["tlen"],
-            dict_values=dict_values, verify_crc=verify_crc)
-        if defs is None:
-            defs = np.zeros(run_rows, np.int64)
-        arr = dremel.assemble(field.type,
-                              [{"vals": vals, "rep": reps, "def": defs}],
-                              _leaf_arrow, field.nullable)
-        s, e = firsts[p0], ends[p1]
-        for lo, hi in ranges:
-            lo2, hi2 = max(lo, s), min(hi, e)
-            if lo2 < hi2:
-                out.append(arr.slice(lo2 - s, hi2 - lo2))
-        i = j + 1
-    return (pa.concat_arrays(out) if out
-            else pa.array([], type=field.type))
+            buf, run, phys, max_rep, max_def, dict_values=dict_values, **kw)
+        rows = first + _entry_rows(vals, reps, defs)
+        if not len(rows) or rows[0] != first or rows[-1] != last - 1:
+            decoded = []  # the index disagrees with these pages
+            break
+        decoded.append((vals, reps, defs, rows))
+    if not decoded:
+        vals, reps, defs = _read_leaf_entries(buf, meta, phys, max_rep,
+                                              max_def, **kw)
+        rows = None if kept is None else _entry_rows(vals, reps, defs)
+        if rows is not None and len(rows) and (
+                rows[0] != 0 or rows[-1] != len(kept) - 1):
+            raise ValueError(f"column chunk {meta.path!r} holds "
+                             f"{rows[-1] + 1} rows, its row group "
+                             f"{len(kept)}")
+        decoded = [(vals, reps, defs, rows)]
+    if len(decoded) == 1:
+        vals, reps, defs, rows = decoded[0]
+    else:
+        vs, rs, ds, rows = zip(*decoded)
+        vals = (_concat_binary(list(vs)) if isinstance(vs[0], pa.Array)
+                else np.concatenate(vs))
+        reps = None if rs[0] is None else np.concatenate(rs)
+        defs = None if ds[0] is None else np.concatenate(ds)
+        rows = np.concatenate(rows)
+    if kept is not None:
+        keep = kept[rows]
+        kept_vals = keep if defs is None else keep[defs == max_def]
+        vals = (vals.filter(pa.array(kept_vals)) if isinstance(vals, pa.Array)
+                else vals[kept_vals])
+        reps = None if reps is None else reps[keep]
+        defs = None if defs is None else defs[keep]
+    if defs is None:  # required flat leaf: synthesize def 0s
+        defs = np.zeros(len(vals), np.int64)
+    return {"vals": vals, "rep": reps, "def": defs}
 
 
 def read_table_arrow_native(path: str, columns: list[str] | None = None,
                             kms_unwrap=None, filters=None,
                             verify_checksums: bool = False):
-    """Whole-file read with ZERO pyarrow-metadata involvement: footer thrift,
-    page headers, levels and values all decoded by webcodec code; pyarrow is
-    used only to hold the output arrays. Reads VARIANT-annotated exports
+    """The parquet reader: every (possibly nested) column of every row
+    group, assembled by webcodec kernels into one arrow Table, with ZERO
+    pyarrow-metadata involvement: footer thrift, page headers, levels and
+    values all decoded by webcodec code; pyarrow is used only to hold the
+    output arrays. Reads VARIANT-annotated exports
     (webcodec.parquet_writer ``variant_columns``) that pyarrow's own thrift
     layer rejects — variant columns come back as their storage struct
-    <value, metadata>.
+    <value, metadata>, shredded variants reassembled.
 
     ``filters`` is a conjunction of ``(column, op, value)`` triples over
     flat top-level columns (webcodec.predicate ops: ==, <, <=, >, >=, in,
     isnull, notnull, startswith, contains, endswith). Row groups prune on
-    chunk Statistics, pages on ColumnIndex/OffsetIndex, and the predicate
-    re-applies exactly after decode — same result as pyarrow reading the
-    whole file and filtering in memory, touching fewer bytes."""
+    chunk Statistics and bloom filters, and the filter columns' ColumnIndex
+    bounds narrow each group to a mask of the rows their pages may hold.
+    Every projected leaf, flat or nested, then decodes only its pages that
+    hold a masked row (``_leaf_stream``), and the predicate re-applies
+    exactly after assembly — same result as pyarrow reading the whole file and
+    filtering in memory, touching fewer bytes."""
     import pyarrow as pa
 
     from webcodec import predicate as _pred
@@ -1565,51 +1540,31 @@ def read_table_arrow_native(path: str, columns: list[str] | None = None,
                     "is nested")
             if col not in read_names:
                 read_names.append(col)
-    kept: list[tuple[list, list | None, int]] = []
+    groups: list[tuple[list, np.ndarray | None]] = []  # (chunks, row mask)
     for rg_i, rg in enumerate(ft["row_groups"]):
         n_rows = ft["rg_rows"][rg_i]
         if n_rows is None:  # RowGroup.num_rows absent: flat leaf count
             n_rows = next((m.num_values for m in rg
                            if leaf_info[m.path]["max_rep"] == 0), 0)
+        rows = None
         if conj:
             if not _rg_may_match(rg, conj, by_name, leaf_info, n_rows,
                                  buf=buf):
                 continue
-            ranges = _rg_page_ranges(buf, rg, conj, by_name, leaf_info,
-                                     n_rows)
-            if ranges == []:
+            rows = _rg_row_mask(buf, rg, conj, by_name, leaf_info, n_rows)
+            if rows is not None and not rows.any():
                 continue
-        else:
-            ranges = None
-        kept.append((rg, ranges, n_rows))
+        groups.append((rg, rows))
+    span = {f.name: sp for f, sp in zip(ft["fields"], ft["spans"])}
     cols = {}
     for name in read_names:
         field = by_name[name]
-        parts = []
-        for rg, ranges, n_rows in kept:
-            metas = [m for m in rg if m.path.split(".")[0] == name]
-            lf0 = leaf_info[metas[0].path] if metas else None
-            if (ranges is not None and len(metas) == 1
-                    and lf0["max_rep"] == 0 and metas[0].crypto is None
-                    and metas[0].offset_index_offset is not None):
-                parts.append(_read_flat_ranges(buf, metas[0], field, lf0,
-                                               ranges, n_rows,
-                                               verify_crc=verify_checksums))
-                continue
-            streams = []
-            for meta in metas:
-                lf = leaf_info[meta.path]
-                vals, reps, defs = _read_leaf_entries(
-                    buf, meta, lf["phys"], lf["max_rep"], lf["max_def"],
-                    type_length=lf["tlen"], verify_crc=verify_checksums)
-                if defs is None:
-                    defs = np.zeros(meta.num_values, np.int64)
-                streams.append({"vals": vals, "rep": reps, "def": defs})
-            arr = dremel.assemble(field.type, streams, _leaf_arrow, field.nullable)
-            if ranges is not None:  # no page index on this column: slice
-                arr = pa.concat_arrays(
-                    [arr.slice(lo, hi - lo) for lo, hi in ranges])
-            parts.append(arr)
+        parts = [
+            dremel.assemble(field.type, [
+                _leaf_stream(buf, rg[i], ft["leaves"][i], rows,
+                             verify_crc=verify_checksums)
+                for i in span[name]], _leaf_arrow, field.nullable)
+            for rg, rows in groups]
         cols[name] = (parts[0] if len(parts) == 1
                       else pa.concat_arrays(parts) if parts
                       else pa.array([], type=field.type))
