@@ -31,6 +31,7 @@ FAMILIES = [
     ("test_fuzz_file", "test_file_roundtrip_fuzz", 36),
     ("test_parquet_writer", "test_deep_nested_export_fuzz", 20),
     ("test_parquet_writer", "test_nested_export_fuzz", 24),
+    ("test_parquet_writer", "test_fingerprint_gate_never_changes_bytes", 10),
     ("test_parquet_interop", "test_nested_assembly_fuzz", 12),
     ("test_interop_filters", "test_filter_fuzz_vs_pyarrow", 8),
     ("test_interop_filters", "test_nested_filter_fuzz_vs_pyarrow", 8),

@@ -17,8 +17,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from webcodec.parquet_writer import (_chunk_stats, _stats_truncated_max,
-                                     write_parquet)
+from webcodec.parquet_writer import (_encode_stats, _stats_truncated_max,
+                                     _value_bounds, write_parquet)
 
 
 def _stats(path, col_idx=0, rg=0):
@@ -194,7 +194,36 @@ def test_spark_reads_stats_annotated_export(tmp_path, spark):
 
 def test_chunk_stats_helper_float16_returns_none():
     arr = pa.array(np.array([1.5, 2.5], dtype=np.float16), pa.float16())
-    assert _chunk_stats(arr, 0) is None
+    assert _encode_stats(arr.type, *_value_bounds(arr), 0) is None
+
+
+def test_chunk_stats_fold_equals_whole_leaf(tmp_path):
+    """Chunk statistics are folded from the pages' raw bounds; on a chunk
+    of several pages they equal the statistics of the whole leaf at once:
+    NaN-only and +-0.0 pages for floats, >64-byte strings whose min and
+    max sit in different pages (truncated min, round-up max), nulls."""
+    from webcodec.parquet_interop import _data_pages, read_footer_native
+
+    n = 160_000  # two ~1 MiB pages of doubles, a dozen of strings
+    rng = np.random.default_rng(3)
+    d = np.abs(rng.standard_normal(n)) + 1
+    d[:60_000] = np.nan  # a whole page without a finite value
+    d[70_000], d[150_000] = -0.0, 0.0
+    s = [("m" * 70 + str(i)) if i % 9 else None for i in range(n)]
+    s[25_000], s[135_000] = "a" * 80, "\U0010ffff" * 70
+    t = pa.table({"d": pa.array(d), "s": pa.array(s),
+                  "k": pa.array(rng.integers(-9, 9, n))})
+    p = str(tmp_path / "fold.parquet")
+    write_parquet(t, p, use_dictionary=False)
+    ft = read_footer_native(p)
+    for i, c in enumerate(t.column_names):
+        m = ft["row_groups"][0][i]
+        leaf = t[c].combine_chunks().drop_null()
+        want = _encode_stats(leaf.type, *_value_bounds(leaf), t[c].null_count)
+        assert len(_data_pages(ft["buf"], m, n)[2]) >= 2, c
+        assert m.statistics["min_value"] == want["min"], c
+        assert m.statistics["max_value"] == want["max"], c
+        assert m.statistics["null_count"] == want["null_count"], c
 
 
 def test_native_footer_parser_surfaces_statistics(tmp_path):

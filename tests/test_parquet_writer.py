@@ -494,3 +494,128 @@ def test_nested_export_fuzz(tmp_path, seed):
     for c in t.column_names:
         assert back.column(c).combine_chunks().equals(
             t.column(c).combine_chunks()), (seed, c)
+
+
+def _wide_values(rng, n: int, ndv: int, where: str, width: int) -> list[str]:
+    """``n`` ASCII values over exactly ``ndv`` distinct ids, ~``width`` bytes
+    each. ``where`` places the id: ``mid`` inside the 16 bytes the export's
+    fingerprint reads, ``edge`` only outside them (equal fingerprints),
+    ``len`` only in the length, ``short`` in a mix of long values and
+    values under 16 bytes (repeats of a few short values among them)."""
+    ids = rng.permutation(np.concatenate(
+        [np.arange(ndv), rng.integers(0, ndv, n - ndv)])).tolist()
+    half = "m" * (width // 2)
+    if where == "mid":
+        return [f"{half}{k:08d}{half}" for k in ids]
+    if where == "edge":
+        return [f"{k:08d}{half}{half}{k:08d}" for k in ids]
+    if where == "len":
+        return ["x" * (width + k) for k in ids]
+    return [f"s{k % 7}" if k % 3 == 0 else f"{half}{k:08d}{half}{half}"
+            for k in ids]
+
+
+@pytest.mark.parametrize("seed", range(10))
+def test_fingerprint_gate_never_changes_bytes(tmp_path, seed):
+    """The PLAIN proof from value fingerprints (``_proves_plain``) only
+    skips hashing: every export equals the one written with the proof
+    switched off. Wide leaves with ndv just under, at and over n/2 (and
+    over 65,536 at seeds ending in 9), values that differ only outside the
+    fingerprint window or only in length, short values among long ones,
+    nulls, sliced inputs, lists of wide strings, v1/v2 pages, row-group
+    cuts and forced column encodings."""
+    from unittest import mock
+
+    from webcodec import parquet_writer
+
+    rng = np.random.default_rng([seed, 12])
+    if seed % 10 == 9:  # over the 65,536-entry dictionary limit
+        n, ndv = 131_076, [65_536, 65_537, 70_000][seed // 10 % 3]
+        ids = rng.permutation(np.concatenate(
+            [np.arange(ndv), rng.integers(0, ndv, n - ndv)]))
+        mat = np.full((n, 264), ord("w"), np.uint8)
+        mat[:, 128:136] = (ids[:, None] // 10 ** np.arange(8) % 10 + 48)
+        t = pa.table({"w": pa.Array.from_buffers(
+            pa.binary(), n, [None, pa.py_buffer(np.arange(n + 1, dtype=np.int32) * 264),
+                             pa.py_buffer(mat)])})
+        kw: dict = {"data_page_version": 1 + seed // 10 % 2}
+    else:
+        n = int(rng.integers(2, 2_500))
+        ndv = max(1, [n // 2 - 1, n // 2, n // 2 + 1, n,
+                      int(rng.integers(1, n + 1))][seed % 5])
+        where = ["mid", "edge", "len", "short"][int(rng.integers(0, 4))]
+        vals = _wide_values(rng, n, ndv, where, int(rng.integers(260, 700)))
+        nulls = rng.random(n) < [0.0, 0.1][seed % 2]
+        w = pa.array([None if z else v for v, z in zip(vals, nulls)],
+                     [pa.string(), pa.binary()][int(rng.integers(0, 2))])
+        lists = pa.array([vals[i:i + int(rng.integers(0, 4))] or None
+                          for i in range(n)], pa.list_(pa.string()))
+        t = pa.table({"w": w, "lw": lists,
+                      "k": pa.array(rng.integers(0, 9, n), pa.int64())})
+        a = int(rng.integers(0, n // 3 + 1))
+        t = t.slice(a, n - a - int(rng.integers(0, n // 3 + 1)))
+        kw = {"data_page_version": int(rng.integers(1, 3)),
+              "row_group_rows": [None, max(1, t.num_rows // 3)][seed % 2]}
+        forced = [None, "delta_length_byte_array", "delta_byte_array"][
+            int(rng.integers(0, 3))]
+        if forced:
+            kw["column_encoding"] = {"lw" if seed % 2 else "w": forced}
+    p = tmp_path / "t.parquet"
+    write_parquet(t, str(p), **kw)
+    got = p.read_bytes()
+    with mock.patch.object(parquet_writer, "_proves_plain",
+                           lambda leaf, limit: False):
+        write_parquet(t, str(p), **kw)
+    assert got == p.read_bytes(), seed
+    assert pq.read_table(str(p)).equals(t.combine_chunks())
+
+
+def test_fingerprint_depends_only_on_value_bytes():
+    """A value's fingerprint is (length, the 16 bytes centred in it, zero
+    past its end) wherever the value sits: at the start or the end of the
+    buffer, between other neighbours, in a sliced array."""
+    from webcodec.parquet_writer import _fingerprints, _varlen_parts
+
+    def expect(v: bytes):
+        c = max((len(v) - 16) // 2, 0)
+        win = v[c:c + 16].ljust(16, b"\0")
+        return [len(v), int.from_bytes(win[:8], "little"),
+                int.from_bytes(win[8:], "little")]
+
+    rng = np.random.default_rng(5)
+    pool = [bytes(rng.integers(1, 256, k, dtype=np.uint8))
+            for k in (0, 1, 7, 8, 9, 15, 16, 17, 23, 24, 31, 40, 300)]
+    for trial in range(40):
+        vals = [pool[i] for i in rng.integers(0, len(pool), 12)]
+        arr = pa.array([b"\xff" * 33] + vals, pa.binary()).slice(1)
+        fp = _fingerprints(*_varlen_parts(arr))
+        assert fp.tolist() == [expect(v) for v in vals], trial
+    # trailing bytes beyond a short value never leak into its fingerprint
+    a = _fingerprints(*_varlen_parts(pa.array([b"ab", b"x" * 20], pa.binary())))
+    b = _fingerprints(*_varlen_parts(pa.array([b"ab", b"y" * 20], pa.binary())))
+    assert a[0].tolist() == b[0].tolist() == expect(b"ab")
+
+
+def test_wide_columns_are_not_hashed(monkeypatch, tmp_path):
+    """On a webpages export the exact dictionary test (one
+    ``pc.dictionary_encode`` per leaf) runs for url, warc_ts and lang, but
+    never for html or text: their fingerprints alone prove PLAIN."""
+    import pyarrow.compute as pc
+
+    from webcodec import fixtures
+
+    t = fixtures.webpages(3_000, seed=7)
+    cols = {c: t[c].combine_chunks() for c in t.column_names}
+    hashed = []
+    real = pc.dictionary_encode
+
+    def counting(arr, *a, **k):
+        hashed.extend(c for c, v in cols.items() if v.equals(arr))
+        return real(arr, *a, **k)
+
+    monkeypatch.setattr(pc, "dictionary_encode", counting)
+    write_parquet(t, str(tmp_path / "w.parquet"))
+    assert sorted(hashed) == ["lang", "url", "warc_ts"]
+    md = pq.ParquetFile(str(tmp_path / "w.parquet")).metadata.row_group(0)
+    assert "PLAIN_DICTIONARY" in md.column(4).encodings  # lang
+    assert "PLAIN_DICTIONARY" not in md.column(2).encodings  # html

@@ -30,25 +30,6 @@ def _round(acc: np.ndarray, lane: np.ndarray) -> np.ndarray:
     return _rotl(acc + lane * _P2, 31) * _P1
 
 
-def _gather_u64(data: np.ndarray, base: np.ndarray) -> np.ndarray:
-    """Little-endian u64 at byte offset ``base[i]`` per value (unaligned)."""
-    idx = base[:, None] + np.arange(8, dtype=np.int64)[None, :]
-    mat = data[idx].astype(np.uint64)
-    out = mat[:, 0]
-    for b in range(1, 8):
-        out = out | (mat[:, b] << np.uint64(8 * b))
-    return out
-
-
-def _gather_u32(data: np.ndarray, base: np.ndarray) -> np.ndarray:
-    idx = base[:, None] + np.arange(4, dtype=np.int64)[None, :]
-    mat = data[idx].astype(np.uint64)
-    out = mat[:, 0]
-    for b in range(1, 4):
-        out = out | (mat[:, b] << np.uint64(8 * b))
-    return out
-
-
 # lanes left at which the stripe loop hands over to Python-int rounds: one
 # numpy pass costs ~15 us whatever its width, a scalar stripe ~2 us
 _SCALAR_LANES = 4
@@ -77,18 +58,22 @@ def xxh64_values(offsets: np.ndarray, data: np.ndarray) -> np.ndarray:
     Vectorized: the 32-byte stripe loop's iteration k runs over only the
     values that have a stripe k, until at most ``_SCALAR_LANES`` are left;
     those finish their stripes in Python ints. The <32-byte tail phase runs
-    a fixed 3+1+3 masked passes. Returns uint64[m]."""
+    3+1+3 passes, each over only the values it applies to. Every word is
+    read through an unaligned ``<u8``/``<u4`` view. Returns uint64[m]."""
     with np.errstate(over="ignore"):
         return _xxh64_impl(offsets, data)
 
 
 def _xxh64_impl(offsets: np.ndarray, data: np.ndarray) -> np.ndarray:
     offsets = np.asarray(offsets, dtype=np.int64)
-    data = np.asarray(data, dtype=np.uint8)
+    data = np.ascontiguousarray(data, dtype=np.uint8)
     if data.size < 8:
-        # masked-out tail gathers still read 8 bytes at offset 0; pad so
-        # they stay in bounds (padding is never part of any active lane)
+        # the word views below need 8 bytes (padding is never part of any
+        # value)
         data = np.concatenate([data, np.zeros(8 - data.size, np.uint8)])
+    # the little-endian u64 / u32 starting at every byte (unaligned views)
+    u64 = np.ndarray((data.size - 7,), dtype="<u8", buffer=data, strides=(1,))
+    u32 = np.ndarray((data.size - 3,), dtype="<u4", buffer=data, strides=(1,))
     starts = offsets[:-1]
     lens = np.diff(offsets)
     m = len(lens)
@@ -112,14 +97,13 @@ def _xxh64_impl(offsets: np.ndarray, data: np.ndarray) -> np.ndarray:
                                dtype=np.uint64), (len(li), 1))
         # active[k]: lanes with more than k stripes
         active = np.searchsorted(-stripes, -np.arange(int(stripes[0])), side="left")
-        word = np.arange(32, dtype=np.int64)
+        word = np.arange(0, 32, 8, dtype=np.int64)  # a stripe's 4 words
         for k, c in enumerate(active.tolist()):
             if c <= _SCALAR_LANES:
                 for j in range(c):
                     acc[j] = _stripes_scalar(acc[j], data, int(ls[j]) + 32 * k, int(stripes[j]) - k)
                 break
-            mat = data[(ls[:c] + 32 * k)[:, None] + word]
-            acc[:c] = _round(acc[:c], mat.view("<u8").astype(np.uint64, copy=False))
+            acc[:c] = _round(acc[:c], u64[(ls[:c] + 32 * k)[:, None] + word])
         v1, v2, v3, v4 = acc.T
         hl = _rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)
         for v in (v1, v2, v3, v4):  # merge rounds
@@ -134,23 +118,19 @@ def _xxh64_impl(offsets: np.ndarray, data: np.ndarray) -> np.ndarray:
     rem = r % 8
     has4 = rem >= 4
     t1 = rem - 4 * has4
+    # each pass runs over only the lanes it applies to
     for w in range(3):
-        act = t8 > w
-        base = np.where(act, tail_base + 8 * w, 0)
-        k1 = _round(np.zeros(m, dtype=np.uint64), _gather_u64(data, base))
-        hw = _rotl(h ^ k1, 27) * _P1 + _P4
-        h = np.where(act, hw, h)
-    base4 = np.where(has4, tail_base + 8 * t8, 0)
-    k4 = _gather_u32(data, base4)
-    h4 = _rotl(h ^ (k4 * _P1), 23) * _P2 + _P3
-    h = np.where(has4, h4, h)
+        i = np.flatnonzero(t8 > w)
+        k1 = _round(np.zeros(len(i), dtype=np.uint64), u64[tail_base[i] + 8 * w])
+        h[i] = _rotl(h[i] ^ k1, 27) * _P1 + _P4
+    i = np.flatnonzero(has4)
+    k4 = u32[tail_base[i] + 8 * t8[i]].astype(np.uint64)
+    h[i] = _rotl(h[i] ^ (k4 * _P1), 23) * _P2 + _P3
     byte_base = tail_base + 8 * t8 + 4 * has4
     for b in range(3):
-        act = t1 > b
-        base = np.where(act, byte_base + b, 0)
-        kb = data[base].astype(np.uint64)
-        hb = _rotl(h ^ (kb * _P5), 11) * _P1
-        h = np.where(act, hb, h)
+        i = np.flatnonzero(t1 > b)
+        kb = data[byte_base[i] + b].astype(np.uint64)
+        h[i] = _rotl(h[i] ^ (kb * _P5), 11) * _P1
 
     # avalanche
     h ^= h >> np.uint64(33)

@@ -116,13 +116,13 @@ def _read_struct(buf: memoryview, pos: int) -> tuple[dict, int]:
                     v = buf[pos] == 1
                     pos += 1
                 else:
-                    raise NotImplementedError(f"thrift list elem type {etype}")
+                    raise ValueError(f"unknown thrift list element type {etype}")
                 items.append(v)
             out[fid] = items
         elif ftype == 12:  # struct
             out[fid], pos = _read_struct(buf, pos)
         else:
-            raise NotImplementedError(f"thrift compact type {ftype}")
+            raise ValueError(f"unknown thrift compact type {ftype}")
 
 
 # ------------------------------- page decode ----------------------------------
@@ -1050,9 +1050,32 @@ def read_footer_native(path: str, kms_unwrap=None):
     footer DEK resolved through ``kms_unwrap``); PAR1 files with
     column-encrypted chunks resolve per-column DEKs from
     ColumnCryptoMetaData and decrypt the redacted ColumnMetaData modules.
-    Page modules decrypt lazily in the chunk walk."""
+    Page modules decrypt lazily in the chunk walk. A footer that does not
+    parse raises ``ValueError`` naming the file."""
     with open(path, "rb") as f:
         buf = memoryview(f.read())
+    try:
+        return _parse_footer(path, buf, kms_unwrap)
+    except (ValueError, IndexError, KeyError, TypeError, AttributeError,
+            OverflowError, struct.error) as e:
+        if isinstance(e, ValueError) and path in str(e):
+            raise
+        raise ValueError(f"unreadable parquet footer in {path}: {e!r}") from e
+
+
+def _encryption_algorithm(alg) -> tuple[bool, bytes]:
+    """(CTR pages?, aad_file_unique) of an EncryptionAlgorithm union: 1 =
+    AesGcmV1, 2 = AesGcmCtrV1 (CTR only changes how pages are ciphered)."""
+    if not (isinstance(alg, dict) and len(alg) == 1
+            and isinstance(alg.get(1, alg.get(2)), dict)):
+        raise ValueError(f"malformed encryption algorithm union {alg!r}")
+    (arm, fields), = alg.items()
+    if fields.get(3):
+        raise NotImplementedError("caller-supplied aad_prefix")
+    return arm == 2, fields.get(2, b"")
+
+
+def _parse_footer(path: str, buf: memoryview, kms_unwrap):
     head, tail = bytes(buf[:4]), bytes(buf[-4:])
     footer_gcm = aad_unique = footer_key = None
     ctr_pages = False
@@ -1062,16 +1085,7 @@ def read_footer_native(path: str, kms_unwrap=None):
         (flen,) = struct.unpack("<I", buf[-8:-4])
         region = len(buf) - 8 - flen
         fcmd, after = _read_struct(buf, region)
-        alg = fcmd[1]
-        # EncryptionAlgorithm union: 1 = AesGcmV1, 2 = AesGcmCtrV1 (same
-        # aad fields; CTR only changes how PAGE modules are ciphered)
-        arm = 1 if 1 in alg else 2
-        if arm not in alg:
-            raise NotImplementedError(f"encryption algorithm union {alg}")
-        ctr_pages = arm == 2
-        aad_unique = alg[arm].get(2, b"")
-        if alg[arm].get(3):
-            raise NotImplementedError("caller-supplied aad_prefix")
+        ctr_pages, aad_unique = _encryption_algorithm(fcmd[1])
         footer_key = _keytools_dek(fcmd[2], kms_unwrap)
         footer_gcm = AESGCM(footer_key)
         (mlen,) = struct.unpack_from("<I", buf, after)
@@ -1086,13 +1100,7 @@ def read_footer_native(path: str, kms_unwrap=None):
         if enc is not None:
             from cryptography.hazmat.primitives.ciphers.aead import AESGCM
 
-            arm = 1 if 1 in enc else 2
-            if arm not in enc:
-                raise NotImplementedError(f"encryption algorithm union {enc}")
-            ctr_pages = arm == 2
-            aad_unique = enc[arm].get(2, b"")
-            if enc[arm].get(3):
-                raise NotImplementedError("caller-supplied aad_prefix")
+            ctr_pages, aad_unique = _encryption_algorithm(enc)
             fk_md = fmd.get(9)  # footer_signing_key_metadata
             if fk_md is not None and kms_unwrap is not None:
                 footer_key = _keytools_dek(fk_md, kms_unwrap)

@@ -524,60 +524,56 @@ def _stats_truncated_max(b: bytes) -> bytes | None:
     return None
 
 
-def _chunk_stats(valid: pa.Array, null_count: int) -> dict | None:
-    """min/max/null_count for ColumnMetaData.statistics (field 12),
-    PLAIN-value-encoded per the column's TypeDefinedOrder (parquet-format.md
-    "Statistics"): BYTE_ARRAY/FLBA compare unsigned-lexicographic (Arrow's
-    byte comparison matches), DECIMAL compares as the signed number, floats
-    exclude NaN and widen zero bounds to (-0.0, +0.0) per the spec note.
-    Returns None for types with no defined order here (float16); the footer
-    writer additionally skips GEOMETRY/GEOGRAPHY columns (their Statistics
-    are undefined — GeospatialStatistics is a different struct)."""
+def _value_bounds(valid: pa.Array) -> tuple:
+    """(min, max) of the values as comparable python values before encoding
+    and truncation (floats without NaN, byte arrays as bytes), or (None,
+    None): a chunk's bounds are the min and max of its pages' bounds."""
     t = valid.type
-    st = {"null_count": null_count, "min": None, "max": None}
-    if len(valid) == 0:
-        return st
-    if pa.types.is_float16(t):
-        return None
+    if len(valid) == 0 or pa.types.is_float16(t):
+        return None, None
     if pa.types.is_floating(t):
         v = valid.to_numpy(zero_copy_only=False)
-        finite = v[~np.isnan(v)]
-        if not len(finite):
-            return st
-        mn, mx = float(finite.min()), float(finite.max())
-        if mn == 0.0:
-            mn = -0.0
-        if mx == 0.0:
-            mx = 0.0
-        fmt = "<f" if pa.types.is_float32(t) else "<d"
-        st["min"], st["max"] = struct.pack(fmt, mn), struct.pack(fmt, mx)
-        return st
+        v = v[~np.isnan(v)]
+        return (float(v.min()), float(v.max())) if len(v) else (None, None)
     try:
         mm = pc.min_max(valid)
     except (pa.lib.ArrowNotImplementedError, pa.lib.ArrowInvalid):
         # no min_max kernel (e.g. decimal128 on some Arrow builds): bounded
-        # python fallback — one pass over this chunk's values, export-only
+        # python fallback — one pass over this page's values, export-only
         vals = [x for x in valid.to_pylist() if x is not None]
-        if not vals:
-            return st
-        lo, hi = min(vals), max(vals)
-        one = lambda x: _plain_bytes(pa.array([x], type=t))  # noqa: E731
-        st["min"], st["max"] = one(lo), one(hi)
-        return st
+        return (min(vals), max(vals)) if vals else (None, None)
     mn, mx = mm["min"], mm["max"]
     if not mn.is_valid or not mx.is_valid:
-        return st
+        return None, None
     if pa.types.is_string(t):
-        st["min"] = mn.as_py().encode()[:_STATS_TRUNC]
-        st["max"] = _stats_truncated_max(mx.as_py().encode())
-    elif pa.types.is_binary(t) or pa.types.is_fixed_size_binary(t):
-        st["min"] = mn.as_py()[:_STATS_TRUNC]
-        st["max"] = _stats_truncated_max(mx.as_py())
+        return mn.as_py().encode(), mx.as_py().encode()
+    return mn.as_py(), mx.as_py()
+
+
+def _encode_stats(t: pa.DataType, mn, mx, null_count: int) -> dict | None:
+    """min/max/null_count of :func:`_value_bounds` for Statistics (field 12)
+    and the ColumnIndex, PLAIN-encoded per the TypeDefinedOrder
+    (parquet-format.md "Statistics"): byte arrays truncated to
+    ``_STATS_TRUNC`` bytes, floats with zero bounds widened to (-0.0, +0.0).
+    None for float16 (no defined order here); the footer writer also skips
+    GEOMETRY/GEOGRAPHY (GeospatialStatistics is a different struct)."""
+    if pa.types.is_float16(t):
+        return None
+    st = {"null_count": null_count, "min": None, "max": None}
+    if mn is None:
+        return st
+    if pa.types.is_floating(t):
+        fmt = "<f" if pa.types.is_float32(t) else "<d"
+        st["min"] = struct.pack(fmt, -0.0 if mn == 0.0 else mn)
+        st["max"] = struct.pack(fmt, 0.0 if mx == 0.0 else mx)
+    elif isinstance(mn, bytes):
+        st["min"] = mn[:_STATS_TRUNC]
+        st["max"] = _stats_truncated_max(mx)
     else:
         # fixed-width scalar (bool/int/ts/date/decimal): PLAIN bytes of the
         # single value — exactly the encoding readers expect for min_value
-        st["min"] = _plain_bytes(pa.array([mn.as_py()], type=t))
-        st["max"] = _plain_bytes(pa.array([mx.as_py()], type=t))
+        st["min"] = _plain_bytes(pa.array([mn], type=t))
+        st["max"] = _plain_bytes(pa.array([mx], type=t))
     return st
 
 
@@ -715,6 +711,46 @@ def _raw_bytes(leaf: pa.Array, n_entries: int) -> int:
     return leaf.nbytes + slots(n_entries) - slots(len(leaf))
 
 
+# low-byte masks: _BYTE_MASKS[k] keeps the first k bytes of a <u8 word
+_BYTE_MASKS = np.array([(1 << 8 * k) - 1 for k in range(9)], np.uint64)
+
+
+def _fingerprints(offs: np.ndarray, data: np.ndarray) -> np.ndarray:
+    """(n, 3) uint64: each value's length and the 16 bytes centred in it,
+    zero past its end — a function of the value's own bytes. Words come
+    from an unaligned ``<u8`` view; windows running past the data's end
+    read a zero-padded copy of its last 16 bytes, not a padded buffer."""
+    lens = np.diff(offs)
+    win = offs[:-1] + np.maximum((lens - 16) // 2, 0)
+    end = int(offs[-1])
+    lo = max(end - 16, 0)
+    tail = np.zeros(32, np.uint8)
+    tail[: end - lo] = data[lo:end]
+    past = np.flatnonzero(win + 16 > end)
+    words = np.ndarray((max(end - 7, 0),), "<u8", buffer=data, strides=(1,))
+    tail_words = np.ndarray((25,), "<u8", buffer=tail, strides=(1,))
+    fp = np.empty((len(lens), 3), np.uint64)
+    fp[:, 0] = lens
+    for j, at in ((1, win), (2, win + 8)):
+        if end >= 16:
+            fp[:, j] = words[np.minimum(at, end - 8)]
+        fp[past, j] = tail_words[at[past] - lo]
+        fp[:, j] &= _BYTE_MASKS[np.clip(lens - 8 * (j - 1), 0, 8)]
+    return fp
+
+
+def _proves_plain(leaf: pa.Array, limit: int) -> bool:
+    """True when a string/binary leaf of > 256 bytes per value (the
+    selector's Chao1 width gate) has more than ``limit`` distinct
+    fingerprints, so more than ``limit`` distinct values."""
+    offs, data = _varlen_parts(leaf)
+    if offs[-1] - offs[0] <= 256 * len(leaf):
+        return False
+    fp = pa.py_buffer(_fingerprints(offs, data))
+    keys = pa.FixedSizeBinaryArray.from_buffers(pa.binary(24), len(leaf), [None, fp])
+    return pc.count_distinct(keys).as_py() > limit
+
+
 def _write_leaf_chunk(out, offset: int, path: list[str], leaf: pa.Array,
                       rep: np.ndarray | None, defs: np.ndarray, max_rep: int,
                       max_def: int, codec: str, use_dictionary: bool,
@@ -729,10 +765,14 @@ def _write_leaf_chunk(out, offset: int, path: list[str], leaf: pa.Array,
     Values are the forced ``encoding`` (a ``_FORCED_ENCODINGS`` name), else
     a PLAIN dictionary page plus bit-packed index pages when the leaf has at
     most 65536 distinct values and no more than half its value count, else
-    PLAIN (RLE booleans on v2 pages). Data pages hold ~1 MiB raw
-    (``_page_bounds``) counted in top-level rows, so every page starts at a
-    ``rep == 0`` entry and OffsetIndex first_row_index is a row number. A v1
-    page body is [u32-prefixed RLE rep levels (max_rep > 0)] [u32-prefixed
+    PLAIN (RLE booleans on v2 pages). As ndv(f(v)) <= ndv(v) for any
+    deterministic f, a wide leaf whose ``_fingerprints`` exceed that limit
+    goes PLAIN unhashed (``_proves_plain``); else the exact
+    ``pc.dictionary_encode`` decides, so the bytes are the same either way.
+    Chunk statistics fold the pages' raw bounds. Data pages hold ~1 MiB
+    raw (``_page_bounds``) counted in top-level rows, so every page starts
+    at a ``rep == 0`` entry and OffsetIndex first_row_index is a row
+    number. A v1 page body is [u32-prefixed RLE rep levels (max_rep > 0)] [u32-prefixed
     RLE def levels] [values]; v2 pages carry the level streams uncompressed
     ahead of the values. num_values counts entries, not rows."""
     t = leaf.type
@@ -740,10 +780,7 @@ def _write_leaf_chunk(out, offset: int, path: list[str], leaf: pa.Array,
     n_entries, n_valid = len(defs), len(leaf)
     meta: dict = {"name": path[0], "path": path, "type": ptype, "conv": conv,
                   "max_rep": max_rep, "max_def": max_def,
-                  "num_values": n_entries, "pv": page_version, "_ectx": ectx,
-                  # null_count counts entries missing at the leaf (null or
-                  # terminated above it), matching parquet-java's num_nulls
-                  "stats": _chunk_stats(leaf, n_entries - n_valid)}
+                  "num_values": n_entries, "pv": page_version, "_ectx": ectx}
     if pa.types.is_decimal(t):
         meta.update(tlen=_decimal_flba_len(t.precision), prec=t.precision,
                     scale=t.scale)
@@ -757,7 +794,7 @@ def _write_leaf_chunk(out, offset: int, path: list[str], leaf: pa.Array,
         meta["def_hist"] = np.bincount(defs, minlength=max_def + 1).tolist()
 
     enc = _ENC_RLE if page_version == 2 and ptype == _T_BOOLEAN else _ENC_PLAIN
-    idx = None
+    idx, limit = None, min(65536, max(n_valid // 2, 1))  # dictionary entries
     if encoding is not None:
         forced = _FORCED_ENCODINGS.get(encoding.lower())
         if forced is None:
@@ -765,10 +802,11 @@ def _write_leaf_chunk(out, offset: int, path: list[str], leaf: pa.Array,
         enc, ptypes, kind = forced
         if ptype not in ptypes:
             raise TypeError(f"{encoding.lower()} needs {kind} column, not {t}")
-    elif use_dictionary and ptype not in (_T_BOOLEAN, _T_FLBA) and n_valid:
-        de = leaf.dictionary_encode()
+    elif (use_dictionary and ptype not in (_T_BOOLEAN, _T_FLBA) and n_valid
+          and not (ptype == _T_BYTE_ARRAY and _proves_plain(leaf, limit))):
+        de = pc.dictionary_encode(leaf)
         ndv = len(de.dictionary)
-        if ndv <= 65536 and ndv <= max(n_valid // 2, 1):
+        if ndv <= limit:
             idx = de.indices.to_numpy(zero_copy_only=False).astype(np.uint64)
             width = max((ndv - 1).bit_length(), 1)
             # v2 writer versions pair a PLAIN dict page with RLE_DICTIONARY
@@ -795,6 +833,7 @@ def _write_leaf_chunk(out, offset: int, path: list[str], leaf: pa.Array,
     n_rows = len(row_entry) - 1 if max_rep else n_entries
     w_rep, w_def = max(max_rep.bit_length(), 1), max(max_def.bit_length(), 1)
     pages: list[dict] = []
+    bounds: list[tuple] = []  # each page's raw (min, max)
     va = 0  # first value of the page
     for pg, (a, b) in enumerate(_page_bounds(n_rows, est)):
         ea, eb = (int(row_entry[a]), int(row_entry[b])) if max_rep else (a, b)
@@ -827,13 +866,18 @@ def _write_leaf_chunk(out, offset: int, path: list[str], leaf: pa.Array,
         offset = _emit_page(out, offset, header, payload, ectx,
                             is_dict=False, page_ord=pg)
         usize += len(header) + usz
+        bounds.append(_value_bounds(vals))
         pages.append({
             "off": page_off, "csize": offset - page_off, "first_row": a,
             "n_valid": vb - va,
-            "stats": _chunk_stats(vals, n_nulls),
+            "stats": _encode_stats(t, *bounds[-1], n_nulls),
             **({"var_bytes": _var_data_bytes(vals)}
                if ptype == _T_BYTE_ARRAY else {})})
         va = vb
+    los, his = zip(*[b for b in bounds if b[0] is not None] or [(None, None)])
+    # null_count counts entries missing at the leaf (null or terminated
+    # above it), matching parquet-java's num_nulls
+    meta["stats"] = _encode_stats(t, min(los), max(his), n_entries - n_valid)
     meta.update(usize=usize, pages=pages, csize=offset - chunk_start,
                 offset=data_offset, dict_offset=dict_offset, enc=enc)
     return meta, offset
@@ -974,13 +1018,7 @@ def _bloom_hashes(arr) -> "np.ndarray":
     t = u.type
     if (pa.types.is_string(t) or pa.types.is_large_string(t)
             or pa.types.is_binary(t) or pa.types.is_large_binary(t)):
-        b = u if pa.types.is_binary(t) else u.cast(pa.binary())
-        offs = np.frombuffer(b.buffers()[1], np.int32)[
-            b.offset: b.offset + len(b) + 1].astype(np.int64)
-        dbuf = b.buffers()[2]
-        data = (np.frombuffer(dbuf, np.uint8) if dbuf is not None
-                else np.zeros(0, np.uint8))
-        return xxh64_values(offs, data)
+        return xxh64_values(*_varlen_parts(u.cast(pa.binary())))
     if pa.types.is_fixed_size_binary(t):
         w = t.byte_width
         data = np.frombuffer(u.buffers()[1], np.uint8)[
