@@ -33,6 +33,7 @@ FAMILIES = [
     ("test_parquet_writer", "test_nested_export_fuzz", 24),
     ("test_parquet_writer", "test_fingerprint_gate_never_changes_bytes", 10),
     ("test_parquet_interop", "test_nested_assembly_fuzz", 12),
+    ("test_parquet_interop", "test_nested_footer_flips_raise_cleanly", 24),
     ("test_interop_filters", "test_filter_fuzz_vs_pyarrow", 8),
     ("test_interop_filters", "test_nested_filter_fuzz_vs_pyarrow", 8),
     ("test_parquet_bloom", "test_bloom_fuzz_no_lost_rows", 4),

@@ -5,6 +5,8 @@ machinery matches reference semantics beyond self-round-trip."""
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -384,3 +386,92 @@ def test_native_footer_corruption_raises_cleanly(tmp_path, seed):
             read_table_arrow_native(p2)
         except ValueError as e:
             assert p2 in str(e)
+
+
+# NotImplementedError a flipped footer may reach: layouts this reader does
+# not implement (read_footer_native / dremel.assemble)
+_DOCUMENTED_NIE = ("non-standard LIST layout", "non-standard MAP layout",
+                   "page type", "encoding", "level encoding", "assembly of")
+
+
+@functools.lru_cache(maxsize=1)
+def _flip_base() -> dict:
+    """Our own nested export of ``gen.nested(200, 5)`` with a url bloom
+    filter: its bytes, parsed footer and rows (built once per process)."""
+    import tempfile
+
+    from perfbench import gen
+    from webcodec.parquet_interop import read_footer_native
+    from webcodec.parquet_writer import write_parquet
+
+    with tempfile.TemporaryDirectory() as d:
+        p = f"{d}/base.parquet"
+        write_parquet(gen.nested(200, 5), p, bloom_filter_columns={"url"})
+        ft = read_footer_native(p)
+        return {"raw": open(p, "rb").read(), "fields": ft["fields"],
+                "leaves": ft["leaves"], "rg_rows": ft["rg_rows"],
+                "table": read_table_arrow_native(p)}
+
+
+@pytest.mark.parametrize("seed", range(24))
+def test_nested_footer_flips_raise_cleanly(tmp_path, seed):
+    """1-3 flipped bits anywhere in the footer of a nested export: the read
+    raises ValueError, raises a documented NotImplementedError, returns the
+    exact rows, or returns other rows only because the flipped footer still
+    parses and describes other data (its schema fields, leaf layout or row
+    group sizes differ) — never a KeyError/TypeError/IndexError/OSError/zlib.error
+    from the page walk or the assembly."""
+    import struct
+
+    from webcodec.parquet_interop import read_footer_native
+
+    base = _flip_base()
+    raw = base["raw"]
+    (flen,) = struct.unpack("<I", raw[-8:-4])
+    lo = len(raw) - 8 - flen
+    rng = np.random.default_rng([seed, 13])
+    p = str(tmp_path / "flipped.parquet")
+    for _ in range(25):
+        b = bytearray(raw)
+        for _f in range(int(rng.integers(1, 4))):
+            b[int(rng.integers(lo, len(raw) - 8))] ^= 1 << int(rng.integers(0, 8))
+        open(p, "wb").write(bytes(b))
+        try:
+            got = read_table_arrow_native(p)
+        except ValueError:
+            continue
+        except NotImplementedError as e:
+            assert str(e).startswith(_DOCUMENTED_NIE), e
+            continue
+        if got.equals(base["table"]):
+            continue
+        ft = read_footer_native(p)
+        assert any(ft[k] != base[k] for k in ("fields", "leaves", "rg_rows"))
+
+
+@pytest.mark.parametrize("codec", ["zstd", "gzip", "snappy"])
+def test_damaged_page_names_file_column_and_offset(tmp_path, codec):
+    """A page header that does not parse and a page payload the codec
+    rejects both raise ValueError naming the file, the column path and the
+    page offset (they used to leak IndexError / OSError / zlib.error)."""
+    from webcodec.parquet_interop import read_footer_native
+    from webcodec.parquet_writer import write_parquet
+
+    p = str(tmp_path / "flat.parquet")
+    t = pa.table({"s": pa.array([f"value-{i % 977}-{i}" for i in range(5000)])})
+    write_parquet(t, p, codec=codec, use_dictionary=False)
+    off = read_footer_native(p)["row_groups"][0][0].data_page_offset
+    raw = open(p, "rb").read()
+    payload = bytearray(raw)
+    for k in range(40, 80):
+        payload[off + k] ^= 0x5A
+    header = bytearray(raw)
+    header[off:off + 2] = b"\x0c\xff"
+    for name, body, what in (("payload", payload, "corrupt compressed"),
+                             ("header", header, "unparseable header")):
+        bad = str(tmp_path / f"{name}.parquet")
+        open(bad, "wb").write(bytes(body))
+        with pytest.raises(ValueError, match=what) as ei:
+            read_table_arrow_native(bad)
+        msg = str(ei.value)
+        assert bad in msg and "'s'" in msg and f"offset {off}" in msg

@@ -619,3 +619,56 @@ def test_wide_columns_are_not_hashed(monkeypatch, tmp_path):
     md = pq.ParquetFile(str(tmp_path / "w.parquet")).metadata.row_group(0)
     assert "PLAIN_DICTIONARY" in md.column(4).encodings  # lang
     assert "PLAIN_DICTIONARY" not in md.column(2).encodings  # html
+
+
+@pytest.mark.parametrize("page_version", [1, 2])
+@pytest.mark.parametrize("seed", range(3))
+def test_single_chunk_export_matches_combined(tmp_path, seed, page_version):
+    """``write_parquet`` takes a one-chunk column as is, so every row group
+    after the first (and a sliced input's first) reaches the leaf writer
+    with a non-zero offset: the file equals the one written from the same
+    rows chunked so that every row group straddles a chunk boundary (which
+    goes through ``combine_chunks``, offset 0). Flat columns with nulls at
+    odd offsets, booleans, dictionary and PLAIN strings, decimals, nested
+    lists/structs/maps, bloom filters, v1 and v2 pages."""
+    from decimal import Decimal
+
+    rng = np.random.default_rng([seed, 1337])
+    n = 2_000
+
+    def maybe(v, p=0.1):
+        return None if rng.random() < p else v
+
+    t = pa.table({
+        "i": pa.array([maybe(int(x)) for x in rng.integers(-1e9, 1e9, n)], pa.int64()),
+        "b": pa.array([maybe(bool(x)) for x in rng.integers(0, 2, n)], pa.bool_()),
+        "f": pa.array([maybe(float(x)) for x in rng.standard_normal(n)], pa.float64()),
+        "lang": pa.array([maybe(["en", "de", "fr"][x]) for x in rng.integers(0, 3, n)]),
+        "url": pa.array([maybe(f"https://h{x % 97}.example/p/{x}")
+                         for x in rng.integers(0, 10**9, n)]),
+        "raw": pa.array([maybe(bytes(rng.integers(0, 256, x % 9, dtype=np.uint8)))
+                         for x in range(n)], pa.binary()),
+        "price": pa.array([maybe(Decimal(int(x)).scaleb(-2))
+                           for x in rng.integers(0, 10**8, n)], pa.decimal128(12, 2)),
+        "tags": pa.array([maybe([int(y) for y in rng.integers(0, 50, x % 4)])
+                          for x in range(n)], pa.list_(pa.int32())),
+        "fetch": pa.array([maybe({"status": int(x), "mime": maybe("text/html")})
+                           for x in rng.integers(200, 500, n)],
+                          pa.struct([("status", pa.int32()), ("mime", pa.string())])),
+        "hdr": pa.array([maybe([("k", f"v{x}")] * (x % 3)) for x in range(n)],
+                        pa.map_(pa.string(), pa.string())),
+        "pos": pa.array([maybe([[int(x)] * (x % 3)] * (x % 2 + 1)) for x in range(n)],
+                        pa.list_(pa.list_(pa.int64()))),
+    })
+    t = t.slice(int(rng.integers(1, 30)), n - 60)  # sliced from the start too
+    rg = int(rng.integers(101, 400)) | 1  # odd: offsets off the bitmap bytes
+    cuts = sorted({0, t.num_rows, *range(rg // 2, t.num_rows, rg)})
+    split = pa.concat_tables([t.slice(a, b - a) for a, b in zip(cuts, cuts[1:])])
+    assert all(c.num_chunks == 1 for c in t.columns)
+    kw = {"row_group_rows": rg, "data_page_version": page_version,
+          "bloom_filter_columns": {"url", "i"}}
+    p1, p2 = tmp_path / "single.parquet", tmp_path / "split.parquet"
+    write_parquet(t, str(p1), **kw)
+    write_parquet(split, str(p2), **kw)
+    assert p1.read_bytes() == p2.read_bytes()
+    assert pq.read_table(str(p1)).equals(t.combine_chunks())

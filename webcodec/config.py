@@ -45,8 +45,6 @@ class EncoderConfig:
     write_page_checksum: bool = True        # reference: DEFAULT_PAGE_WRITE_CHECKSUM_ENABLED
     # Codec auto-selector sampling
     selector_sample_values: int = 4_096
-    # Sort rows within partition by these columns before encoding (None = keep order).
-    sort_columns: tuple[str, ...] | None = None
     # Modular encryption (SURVEY §2 C12, parquet modular-encryption analogue,
     # plaintext-footer mode): AES-GCM per page + signed footer. The key ships
     # inside this config (same trust model as parquet encryption properties);

@@ -966,45 +966,46 @@ def append_files(dst: str, sources: list[str]) -> dict:
     schema): merging a pre-evolution file with an evolved one would silently
     drop/null the added column on read — callers must re-encode instead.
     Encrypted files never byte-merge (each file's pages authenticate against
-    its own random AAD prefix) — rewrite with the key instead."""
+    its own random AAD prefix) — rewrite with the key instead. Every source
+    is checked before anything is written, from one footer parse per source
+    that also drives the offset shift."""
+    footers = []
     for src in sources:
         try:
-            enc = bool(read_footer_path(src).get("encryption"))
+            footer = read_footer_path(src)
         except ValueError as e:
             if "footer is encrypted" not in str(e):
                 raise
-            enc = True  # encrypted-footer mode: same no-merge rule
-        if enc:
+            footer = {"encryption": True}  # encrypted-footer mode: same rule
+        if footer.get("encryption"):
             raise ValueError(
                 "append_files: encrypted files cannot byte-merge (per-file "
                 "AAD prefixes); use rewrite_encoded with the encryption key"
             )
-    sig0 = schema_signature(read_footer_path(sources[0]))
-    for src in sources[1:]:
-        if schema_signature(read_footer_path(src)) != sig0:
+        footers.append(footer)
+    sig0 = schema_signature(footers[0])
+    for src, footer in zip(sources[1:], footers[1:]):
+        if schema_signature(footer) != sig0:
             raise ValueError(
                 "append_files: schema signature mismatch between "
                 f"{sources[0]} and {src} (schema evolution?) — byte-level "
                 "merge would lose data; rewrite/transcode these files instead"
             )
     groups = []
-    first_schema = None
     with open(dst, "wb") as out:
         out.write(MAGIC)
         offset = len(MAGIC)
-        for src in sources:
+        for src, footer in zip(sources, footers):
             with open(src, "rb") as f:
                 data = f.read()
-            footer = read_footer(data)
-            if first_schema is None:
-                first_schema = footer["schema"]  # reuse — no second full read
+            if data[:len(MAGIC)] != MAGIC:
+                raise ValueError(f"not a webcodec file: {src}")
             flen = struct.unpack("<I", data[-12:-8])[0]
             body_start, body_end = len(MAGIC), len(data) - 12 - flen
             out.write(data[body_start:body_end])
             delta = offset - body_start
             for g in footer.get("groups") or [footer]:
-                chunks = json.loads(json.dumps(g["chunks"]))  # deep copy
-                for c in chunks:
+                for c in g["chunks"]:  # each footer is this call's own parse
                     if c.get("dict"):
                         c["dict"]["offset"] += delta
                     for p in c["pages"]:
@@ -1012,7 +1013,7 @@ def append_files(dst: str, sources: list[str]) -> dict:
                 groups.append(
                     {
                         "num_rows": g["num_rows"],
-                        "chunks": chunks,
+                        "chunks": g["chunks"],
                         "raw_bytes": g["raw_bytes"],
                         "compressed_bytes": g["compressed_bytes"],
                     }
@@ -1021,7 +1022,7 @@ def append_files(dst: str, sources: list[str]) -> dict:
         footer = {
             "version": 2,
             "num_rows": int(sum(g["num_rows"] for g in groups)),
-            "schema": first_schema,
+            "schema": footers[0]["schema"],
             "groups": groups,
             "raw_bytes": int(sum(g["raw_bytes"] for g in groups)),
             "compressed_bytes": int(sum(g["compressed_bytes"] for g in groups)),

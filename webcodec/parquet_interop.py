@@ -139,17 +139,58 @@ _BSS_DTYPES = {
 }
 
 
-def _decompress(payload: bytes, codec: str, usize: int) -> bytes:
+def _page_where(meta, off: int) -> str:
+    return (f"{getattr(meta, 'file', '?')} column {meta.path!r} page at "
+            f"offset {off}")
+
+
+def _decompress(payload: bytes, codec: str, usize: int, meta, off: int) -> bytes:
+    """Decompress the page at byte ``off`` of ``meta``'s chunk; a payload
+    the codec rejects raises ``ValueError`` naming file, column and page."""
+    import zlib
+
+    import pyarrow as pa
+
     codec = codec.lower()
     if codec in ("uncompressed", "none"):
         return payload
-    if codec == "gzip":
-        import zlib
+    try:
+        if codec == "gzip":
+            return zlib.decompress(payload, wbits=31)
+        return pa.decompress(payload, decompressed_size=usize, codec=codec,
+                             asbytes=True)
+    except (OSError, zlib.error, pa.ArrowException) as e:
+        raise ValueError(f"corrupt compressed {_page_where(meta, off)}: "
+                         f"{e}") from e
 
-        return zlib.decompress(payload, wbits=31)
-    import pyarrow as pa
 
-    return pa.decompress(payload, decompressed_size=usize, codec=codec, asbytes=True)
+# PageHeader sub-header field of each page type, and the i32 fields of that
+# sub-header the page walk reads (required, optional)
+_PAGE_SUB = {0: (5, (1, 2), (3, 4)), 2: (7, (1,), ()),
+             3: (8, (1, 4), (2, 5, 6))}
+
+
+def _page_header(buf: memoryview, pos: int, meta, off: int) -> tuple[dict, int]:
+    """Parse the thrift PageHeader at ``pos`` of ``buf`` (the chunk itself,
+    or a decrypted header module) for the page at byte ``off``: (header,
+    end). A header that does not parse, or lacks an integer field the page
+    walk reads, raises ``ValueError`` naming file, column and page; an
+    unknown page type passes through to the walk's ``NotImplementedError``."""
+    try:
+        header, end = _read_struct(buf, pos)
+        ints = [header[1], header[2], header[3]]
+        sub, need, opt = _PAGE_SUB.get(header[1], (None, (), ()))
+        if sub is not None:
+            dph = header[sub]
+            if not isinstance(dph, dict):
+                raise TypeError(f"field {sub} is {type(dph).__name__}")
+            ints += [dph[k] for k in need] + [dph[k] for k in opt if k in dph]
+    except (ValueError, IndexError, KeyError, TypeError, struct.error) as e:
+        raise ValueError(f"unparseable header of {_page_where(meta, off)}: "
+                         f"{e!r}") from e
+    if not all(isinstance(v, int) for v in ints) or min(ints[1:3]) < 0:
+        raise ValueError(f"malformed header of {_page_where(meta, off)}")
+    return header, end
 
 
 _U32 = struct.Struct("<I")
@@ -256,7 +297,10 @@ def _plain_values(body: memoryview, n: int, phys: str, tlen: int = 0):
     if phys == "BOOLEAN":  # PLAIN booleans: LSB-first bit-packed
         bits = np.frombuffer(body, dtype=np.uint8, count=(n + 7) // 8)
         return np.unpackbits(bits, bitorder="little")[:n].astype(bool)
-    if phys == "FIXED_LEN_BYTE_ARRAY" and tlen > 0:
+    if phys == "FIXED_LEN_BYTE_ARRAY":
+        if tlen <= 0:
+            raise ValueError(f"FIXED_LEN_BYTE_ARRAY leaf with type_length "
+                             f"{tlen}")
         if n * tlen > len(body):
             raise ValueError(
                 f"FIXED_LEN_BYTE_ARRAY page truncated: {n} values of {tlen} "
@@ -359,6 +403,7 @@ def _read_leaf_entries(buf: memoryview, meta, phys: str, max_rep: int,
             "key was resolved: pass kms_unwrap (and ensure the file "
             "carries footer_signing_key_metadata)")
     while pos < end and entries < meta.num_values:
+        off = pos
         if crypto is not None:
             # every page is TWO length-prefixed AES-GCM modules: the thrift
             # PageHeader, then the (compressed-then-encrypted) page payload;
@@ -379,7 +424,7 @@ def _read_leaf_entries(buf: memoryview, meta, phys: str, max_rep: int,
             hdr_plain = _gcm_decrypt(
                 crypto["gcm"], buf[pos + 4 : pos + 4 + hlen], hdr_aad)
             pos += 4 + hlen
-            header, _ = _read_struct(memoryview(hdr_plain), 0)
+            header, _ = _page_header(memoryview(hdr_plain), 0, meta, off)
             ptype = header[1]
             usize, csize = header[2], header[3]
             (plen,) = struct.unpack_from("<I", buf, pos)
@@ -393,7 +438,7 @@ def _read_leaf_entries(buf: memoryview, meta, phys: str, max_rep: int,
                     crypto["gcm"], buf[pos + 4 : pos + 4 + plen], pg_aad))
             pos += 4 + plen
         else:
-            header, pos = _read_struct(buf, pos)
+            header, pos = _page_header(buf, pos, meta, off)
             ptype = header[1]
             usize, csize = header[2], header[3]
             raw_page = buf[pos : pos + csize]
@@ -408,7 +453,8 @@ def _read_leaf_entries(buf: memoryview, meta, phys: str, max_rep: int,
                         "page bytes are corrupt")
         if ptype == _PAGE_DICT:
             dph = header[7]
-            body = memoryview(_decompress(bytes(raw_page), codec, usize))
+            body = memoryview(_decompress(bytes(raw_page), codec, usize,
+                                          meta, off))
             dict_values = _plain_values(body, dph[1], phys, type_length)
             continue
         reps = defs = None
@@ -417,7 +463,8 @@ def _read_leaf_entries(buf: memoryview, meta, phys: str, max_rep: int,
             n_values = dph[1]
             enc = dph[2]
             lvl_enc = dph.get(3, _ENC_RLE)  # definition_level_encoding
-            body = memoryview(_decompress(bytes(raw_page), codec, usize))
+            body = memoryview(_decompress(bytes(raw_page), codec, usize,
+                                          meta, off))
             if max_rep:
                 if dph.get(4, _ENC_RLE) == 4:  # deprecated BIT_PACKED reps
                     from webcodec.kernels import bitpack
@@ -461,7 +508,8 @@ def _read_leaf_entries(buf: memoryview, meta, phys: str, max_rep: int,
             lvl_bytes = raw_page[: rep_len + def_len]
             vals_bytes = bytes(raw_page[rep_len + def_len :])
             if compressed:
-                vals_bytes = _decompress(vals_bytes, codec, usize - rep_len - def_len)
+                vals_bytes = _decompress(vals_bytes, codec,
+                                         usize - rep_len - def_len, meta, off)
             body = memoryview(vals_bytes)
             if max_rep:
                 reps = rle.decode_spec(lvl_bytes[:rep_len], w_rep, n_values)
@@ -651,12 +699,13 @@ class _ChunkMeta:
     pages are AES-GCM modules."""
 
     __slots__ = ("compression", "dictionary_page_offset", "data_page_offset",
-                 "total_compressed_size", "num_values", "path", "crypto",
+                 "total_compressed_size", "num_values", "path", "file", "crypto",
                  "statistics", "offset_index_offset", "column_index_offset",
                  "bloom_offset", "size_statistics", "geo_statistics")
 
     def __init__(self, md: dict, crypto: dict | None = None,
-                 cc: dict | None = None):
+                 cc: dict | None = None, file: str = "?"):
+        self.file = file  # for error messages
         self.compression = _CODEC_NAMES.get(md.get(4, 0), "uncompressed")
         self.dictionary_page_offset = md.get(11)
         self.data_page_offset = md[9]
@@ -664,6 +713,11 @@ class _ChunkMeta:
         self.num_values = md[5]
         self.path = ".".join(
             p.decode() if isinstance(p, bytes) else p for p in md[3])
+        if not all(isinstance(v, int) and v >= 0 for v in (
+                self.data_page_offset, self.total_compressed_size,
+                self.num_values, self.dictionary_page_offset or 0)):
+            raise ValueError(f"column chunk {self.path!r} has a malformed "
+                             "page offset, size or value count")
         self.crypto = crypto
         # Statistics (field 12): raw PLAIN-encoded bounds + null_count —
         # callers interpret min/max bytes per the leaf's physical type
@@ -1125,7 +1179,7 @@ def _parse_footer(path: str, buf: memoryview, kms_unwrap):
                                       rg.get(7, rg_i), col_i, kms_unwrap,
                                       footer_encrypted=head == b"PARE",
                                       footer_key=footer_key, ctr=ctr_pages),
-                       cc=cc)
+                       cc=cc, file=path)
             for col_i, cc in enumerate(rg[1])])
         for col_i, (m, lf) in enumerate(zip(row_groups[-1], leaves)):
             if m.path != lf["path"]:
@@ -1399,7 +1453,10 @@ def _rg_row_mask(buf, rg, conj, by_name, leaf_info, n_rows):
 def _decode_dict_at(buf, meta, phys: str, tlen: int,
                     verify_crc: bool = False):
     """Decode ONLY the chunk's dictionary page (unencrypted path)."""
-    header, pos = _read_struct(buf, meta.dictionary_page_offset)
+    off = meta.dictionary_page_offset
+    header, pos = _page_header(buf, off, meta, off)
+    if header[1] != _PAGE_DICT:
+        raise ValueError(f"{_page_where(meta, off)} is not a dictionary page")
     usize, csize = header[2], header[3]
     raw = buf[pos:pos + csize]
     if verify_crc and header.get(4) is not None:
@@ -1409,7 +1466,8 @@ def _decode_dict_at(buf, meta, phys: str, tlen: int,
             raise ValueError(
                 f"page CRC mismatch in chunk {meta.path!r}: the "
                 "compressed dictionary page bytes are corrupt")
-    body = memoryview(_decompress(bytes(raw), meta.compression, usize))
+    body = memoryview(_decompress(bytes(raw), meta.compression, usize,
+                                  meta, off))
     return _plain_values(body, header[7][1], phys, tlen)
 
 
@@ -1467,7 +1525,7 @@ def _leaf_stream(buf, meta, lf, kept, verify_crc: bool = False):
             compression=meta.compression, dictionary_page_offset=None,
             data_page_offset=off, total_compressed_size=size,
             num_values=meta.num_values if max_rep else last - first,
-            crypto=None, path=meta.path)
+            crypto=None, path=meta.path, file=meta.file)
         vals, reps, defs = _read_leaf_entries(
             buf, run, phys, max_rep, max_def, dict_values=dict_values, **kw)
         rows = first + _entry_rows(vals, reps, defs)
@@ -1526,7 +1584,15 @@ def read_table_arrow_native(path: str, columns: list[str] | None = None,
     Every projected leaf, flat or nested, then decodes only its pages that
     hold a masked row (``_leaf_stream``), and the predicate re-applies
     exactly after assembly — same result as pyarrow reading the whole file and
-    filtering in memory, touching fewer bytes."""
+    filtering in memory, touching fewer bytes.
+
+    Damaged files raise ``ValueError``: a footer that does not parse, a
+    page header that does not parse and a page the codec rejects name the
+    file (page errors also the column path and page offset). Layouts this
+    reader does not implement raise ``NotImplementedError``. A footer has
+    no checksum, though, so a damaged footer that still parses and agrees
+    with itself — a renamed field, another type length or logical type —
+    describes other data, and the read returns what it describes."""
     import pyarrow as pa
 
     from webcodec import predicate as _pred

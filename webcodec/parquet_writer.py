@@ -1334,7 +1334,10 @@ def write_parquet(table: pa.Table, path: str, codec: str = "zstd",
             for name in sl.column_names:
                 arr = sl.column(name)
                 if isinstance(arr, pa.ChunkedArray):
-                    arr = arr.combine_chunks()
+                    # a lone chunk is taken as is (combine_chunks copies
+                    # it), so row groups after the first arrive sliced
+                    arr = (arr.chunk(0) if arr.num_chunks == 1
+                           else arr.combine_chunks())
                 t = arr.type
                 ck = col_keys.get(name)
                 if pa.types.is_nested(t):

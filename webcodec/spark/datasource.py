@@ -219,19 +219,13 @@ class WebcodecPushdownReader(WebcodecReader):
 
 @dataclass
 class _CommitMsg(WriterCommitMessage):
-    lineage: str  # json: manifest entry dict, or a LIST of them (fanout)
+    lineage: str  # json list of the task's manifest entries ("" = none)
 
 
 def _lineage_entries(messages) -> list[dict]:
-    """Flatten commit messages: each carries one manifest entry (plain write)
-    or a list of them (partitioned fanout)."""
-    out: list[dict] = []
-    for m in messages:
-        if m is None or not m.lineage:
-            continue
-        loaded = json.loads(m.lineage)
-        out.extend(loaded if isinstance(loaded, list) else [loaded])
-    return out
+    """Flatten the manifest entries of the tasks' commit messages."""
+    return [e for m in messages if m is not None and m.lineage
+            for e in json.loads(m.lineage)]
 
 
 def _split_transforms(s: str) -> list[str]:
@@ -303,133 +297,34 @@ class WebcodecWriter(DataSourceArrowWriter):
             encryption_footer_mode=self.encryption_footer_mode,
         )
 
-    def _lineage_of(self, pid: int, fname: str, footer: dict,
-                    partition: dict | None = None) -> dict:
-        groups = footer.get("groups") or [footer]
-        col_stats: dict = {}
-        for g in groups:
-            for c in g["chunks"]:
-                st = c.get("stats") or {}
-                cur = col_stats.setdefault(
-                    c["name"], {"min": None, "max": None, "null_count": 0}
-                )
-                if st.get("min") is not None:
-                    cur["min"] = st["min"] if cur["min"] is None else min(cur["min"], st["min"])
-                if st.get("max") is not None:
-                    cur["max"] = st["max"] if cur["max"] is None else max(cur["max"], st["max"])
-                cur["null_count"] += int(st.get("null_count", 0))
-        from webcodec import filefmt as _ff
-
-        out = {
-            "partition_id": pid,
-            "path": os.path.join("data", fname),
-            "rows": footer["num_rows"],
-            "raw_bytes": footer["raw_bytes"],
-            "compressed_bytes": footer["compressed_bytes"],
-            "codec_choices": {c["name"]: c["encoding"] for c in groups[0]["chunks"]},
-            "column_stats": col_stats,
-            "schema_sig": _ff.schema_signature_str(footer),
-        }
-        if footer.get("encryption"):
-            out["encrypted"] = True
-        if partition is not None:
-            out["partition"] = partition
-        return out
-
-    def _write_tuple_file(self, data_dir: str, pid: int, parts: list,
-                          values: dict, cfg) -> dict:
-        import pyarrow as pa
-        from webcodec import filefmt
-
-        table = pa.concat_tables(parts)
-        if self.sort_key:
-            idx = filefmt.sort_indices_for_key(table, self.sort_key)
-            if idx is not None:
-                table = table.take(idx)
-        fname = f"part-{pid:05d}-{uuid.uuid4().hex[:12]}.wcd"
-        fpath = os.path.join(data_dir, fname)
-        tmp = fpath + ".tmp"
-        footer = filefmt.write_table(table, tmp, cfg)
-        os.rename(tmp, fpath)
-        return self._lineage_of(pid, fname, footer, values)
-
-    def _write_partitioned(self, iterator, data_dir: str):
-        """Fanout writer: route each batch's rows into per-tuple buffers and
-        flush a tuple's buffer as its own .wcd file whenever it passes
-        ``fanout_flush_bytes`` (bounded memory per open tuple, the Iceberg
-        fanout-writer shape) — a tuple seen across many batches may thus
-        produce several files; pruning treats them identically."""
-        import pyarrow as pa
-        from pyspark import TaskContext
-        from webcodec.spark.partition import PID_SHIFT, split_by_partition
-
-        task_pid = TaskContext.get().partitionId()
-        cfg = self._make_config()
-        buffers: dict[str, dict] = {}
-        lineages: list[dict] = []
-        seq = 0
-        for batch in iterator:
-            table = pa.Table.from_batches([batch])
-            for values, sub in split_by_partition(table, self.partition_spec):
-                key = json.dumps(values, sort_keys=True, default=str)
-                buf = buffers.setdefault(key, {"values": values, "parts": [],
-                                               "bytes": 0})
-                buf["parts"].append(sub)
-                buf["bytes"] += sub.nbytes
-                if buf["bytes"] >= self.fanout_flush_bytes:
-                    if seq >= (1 << PID_SHIFT):
-                        # same guard as encode_job._fanout_stream: a carry
-                        # into the next task's pid namespace would make the
-                        # manifest's overwrite-by-pid drop files silently
-                        raise ValueError(
-                            f"partition fanout exceeded 2^{PID_SHIFT} files "
-                            "in one task; coarsen the partition spec"
-                        )
-                    pid = (task_pid << PID_SHIFT) + seq
-                    seq += 1
-                    lineages.append(self._write_tuple_file(
-                        data_dir, pid, buf["parts"], buf["values"], cfg))
-                    buf["parts"], buf["bytes"] = [], 0
-        for buf in buffers.values():
-            if buf["parts"]:
-                if seq >= (1 << PID_SHIFT):
-                    raise ValueError(
-                        f"partition fanout exceeded 2^{PID_SHIFT} files "
-                        "in one task; coarsen the partition spec"
-                    )
-                pid = (task_pid << PID_SHIFT) + seq
-                seq += 1
-                lineages.append(self._write_tuple_file(
-                    data_dir, pid, buf["parts"], buf["values"], cfg))
-        return _CommitMsg(lineage=json.dumps(lineages) if lineages else "")
-
     def write(self, iterator):
+        """One task's files through the job API's writers: one streamed
+        file (a row group every ~128MB raw, so a skewed Spark partition
+        never materializes; sort_key sorts within each group), or the fanout
+        writer under ``partition_by``. The commit message carries their
+        manifest entries."""
         from pyspark import TaskContext
-        from webcodec import filefmt
+        from webcodec.spark.encode_job import (
+            _fanout_stream,
+            _manifest_entries,
+            _write_one_batches,
+        )
 
         data_dir = os.path.join(self.table_dir, "data")
         os.makedirs(data_dir, exist_ok=True)
-        if self.partition_spec:
-            return self._write_partitioned(iterator, data_dir)
         pid = TaskContext.get().partitionId()
-        fname = f"part-{pid:05d}-{uuid.uuid4().hex[:12]}.wcd"
-        fpath = os.path.join(data_dir, fname)
         cfg = self._make_config()
-        tmp = fpath + ".tmp"
-        # streamed: a new row GROUP every ~128MB raw, so one skewed Spark
-        # partition never materializes in executor memory (sort_key sorts
-        # within each group — global order comes from the upstream shuffle)
-        footer = filefmt.write_batches(iterator, tmp, cfg, sort_key=self.sort_key)
-        if footer is None:
-            # empty partition (routine under aggregations with many shuffle
-            # partitions): nothing to write, empty commit message
-            try:
-                os.remove(tmp)
-            except OSError:
-                pass
-            return _CommitMsg(lineage="")
-        os.rename(tmp, fpath)
-        return _CommitMsg(lineage=json.dumps(self._lineage_of(pid, fname, footer)))
+        if self.partition_spec:
+            entries = [e for b in _fanout_stream(
+                data_dir, pid, iterator, cfg, self.sort_key,
+                self.partition_spec, flush_bytes=self.fanout_flush_bytes)
+                for e in _manifest_entries(b)]
+        else:
+            # an empty partition (routine under aggregations with many
+            # shuffle partitions) writes no file
+            entries = _manifest_entries(_write_one_batches(
+                data_dir, pid, iterator, cfg, self.sort_key))
+        return _CommitMsg(lineage=json.dumps(entries) if entries else "")
 
     def _props(self) -> dict:
         props = {"sort_key": self.sort_key or ""}
@@ -448,9 +343,9 @@ class WebcodecWriter(DataSourceArrowWriter):
         # namespace partition ids by the new snapshot so repeated appends
         # never collide in the manifest (append means APPEND, not upsert —
         # the job API's stable ids are a resume feature; this writer has
-        # none). Fanout pids already use (task << 20) + seq, so partitioned
-        # commits shift the namespace ABOVE that layout instead of the flat
-        # 1e6 stride.
+        # none). Fanout pids already use FANOUT_FLAG | (task << 20) + seq,
+        # so partitioned commits shift the namespace ABOVE that layout
+        # (below the flag bit) instead of the flat 1e6 stride.
         sid = (tbl.current_snapshot_id() or 0) + 1
         base = (sid << 44) if self.partition_spec else sid * 1_000_000
         for f in files:

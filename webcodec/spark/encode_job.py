@@ -138,6 +138,34 @@ def _sig_of(footer: dict) -> str:
     return filefmt.schema_signature_str(footer)
 
 
+def _manifest_entry(row) -> dict:
+    """The manifest entry of one committed file, built from its lineage row
+    (:func:`_lineage_row`, as a collected Spark Row or a dict): the one
+    builder every Spark write path commits through. ``schema_sig`` and
+    ``encrypted`` are always present, so compaction bin-packs from the
+    manifest alone; ``partition`` only when the file holds one tuple."""
+    entry = {
+        "partition_id": row["partition_id"],
+        "path": os.path.join("data", row["file"]),
+        "rows": row["rows"],
+        "raw_bytes": row["raw_bytes"],
+        "compressed_bytes": row["compressed_bytes"],
+        "codec_choices": json.loads(row["codec_choices"]),
+        "column_stats": json.loads(row["column_stats"]),
+        "schema_sig": row["schema_sig"],
+        "encrypted": bool(row["encrypted"]),
+    }
+    if row["partition"]:
+        entry["partition"] = json.loads(row["partition"])
+    return entry
+
+
+def _manifest_entries(lineage) -> list[dict]:
+    """Manifest entries of a task-side lineage table or batch (None = no
+    file written)."""
+    return [] if lineage is None else [_manifest_entry(r) for r in lineage.to_pylist()]
+
+
 def _write_one(data_dir: str, pid: int, table: pa.Table, config: EncoderConfig,
                sort_key: str | None, input_desc: str | None = None,
                partition: dict | None = None) -> pa.Table:
@@ -158,37 +186,18 @@ def _write_one(data_dir: str, pid: int, table: pa.Table, config: EncoderConfig,
     return _lineage_row(pid, fname, footer, secs, attempt, input_desc, partition)
 
 
-def _write_fanout(data_dir: str, base_pid: int, table: pa.Table,
-                  config: EncoderConfig, sort_key: str | None, spec: list[dict],
-                  input_desc: str | None = None):
-    """Iceberg-style fanout writer: one .wcd file PER partition tuple seen in
-    this task's rows — no shuffle; pid = (task id << PID_SHIFT) + tuple rank
-    (ranks are deterministic: tuples sorted by canonical JSON). Yields
-    lineage batches."""
-    from webcodec.spark.partition import FANOUT_FLAG, PID_SHIFT, split_by_partition
-
-    groups = split_by_partition(table, spec)
-    if len(groups) >= (1 << PID_SHIFT):
-        raise ValueError(
-            f"partition fanout of {len(groups)} tuples in one task exceeds "
-            f"the pid layout (2^{PID_SHIFT}); coarsen the partition spec"
-        )
-    for rank, (values, sub) in enumerate(groups):
-        pid = FANOUT_FLAG | ((base_pid << PID_SHIFT) + rank)
-        yield from _write_one(
-            data_dir, pid, sub, config, sort_key, input_desc, partition=values
-        ).to_batches()
-
-
 def _fanout_stream(data_dir: str, base_pid: int, batches, config: EncoderConfig,
                    sort_key: str | None, spec: list[dict],
-                   flush_bytes: int = 128 << 20):
-    """Streamed fanout for scan partitions: route each incoming batch's rows
-    into per-tuple buffers and flush a tuple as its own file whenever its
-    buffer passes ``flush_bytes`` — peak memory is one open buffer per live
-    tuple, never the whole Spark partition (scan mode feeds from shuffles,
-    whose partition sizes are unbounded by maxPartitionBytes). A tuple may
-    thus emit several files per task; pruning treats them identically."""
+                   flush_bytes: int = 128 << 20, input_desc: str | None = None):
+    """The one Iceberg-style fanout writer (scan partitions, file splits and
+    the DataSource writers): route each incoming batch's rows into
+    per-tuple buffers and flush a tuple as its own file whenever its buffer
+    passes ``flush_bytes`` — peak memory is one open buffer per live tuple,
+    never the whole Spark partition (scan mode feeds from shuffles, whose
+    partition sizes are unbounded by maxPartitionBytes). A tuple may thus
+    emit several files per task; pruning treats them identically. pid =
+    FANOUT_FLAG | (base_pid << PID_SHIFT) + file sequence number. Yields
+    lineage batches."""
     from webcodec.spark.partition import FANOUT_FLAG, PID_SHIFT, split_by_partition
 
     buffers: dict[str, dict] = {}
@@ -206,7 +215,7 @@ def _fanout_stream(data_dir: str, base_pid: int, batches, config: EncoderConfig,
         table = pa.concat_tables(buf["parts"])
         buf["parts"], buf["bytes"] = [], 0
         return _write_one(data_dir, pid, table, config, sort_key,
-                          partition=buf["values"])
+                          input_desc, partition=buf["values"])
 
     for batch in batches:
         table = pa.Table.from_batches([batch])
@@ -328,7 +337,7 @@ def _make_file_encode_fn(data_dir: str, config: EncoderConfig, sort_key: str | N
     DIRECTLY via pyarrow C++ and encodes — table bytes never cross the JVM.
     (The JVM->Python Arrow bridge moves ~4 MB/s/core; direct pyarrow reads
     run at hundreds of MB/s/core, so this is the scale path.) With a
-    partition spec, each split fans out into one file per tuple."""
+    partition spec, each split goes through :func:`_fanout_stream`."""
 
     def encode_split(batches):
         import pyarrow.parquet as pq
@@ -341,9 +350,9 @@ def _make_file_encode_fn(data_dir: str, config: EncoderConfig, sort_key: str | N
                 table = pq.ParquetFile(s["path"]).read_row_groups(rgs)
                 desc = f"{s['path']}#rg{rgs}"
                 if spec:
-                    yield from _write_fanout(
-                        data_dir, s["split_id"], table, config, sort_key, spec, desc
-                    )
+                    yield from _fanout_stream(
+                        data_dir, s["split_id"], table.to_batches(), config,
+                        sort_key, spec, input_desc=desc)
                 else:
                     yield from _write_one(
                         data_dir, s["split_id"], table, config, sort_key, desc
@@ -744,7 +753,7 @@ def _make_bucket_encode_fn(data_dir: str, shuffle_dir: str, config: EncoderConfi
 
 def _completed_ids(tbl: SnapshotTable, partitioned: bool) -> frozenset[int]:
     """Resume skip-set, aliasing-safe: fanout pids ((split << PID_SHIFT) +
-    rank) and plain split ids share the integer domain (fanout split 0 emits
+    seq) and plain split ids share the integer domain (fanout split 0 emits
     pids 0..k too), so the skip-set must only consider manifest entries of
     the SAME kind — entries WITH a partition tuple for a partitioned run
     (collapsed to their split id), entries WITHOUT one otherwise."""
@@ -997,25 +1006,7 @@ def _commit(
     write_metrics: bool,
     spec: list[dict] | None = None,
 ) -> dict:
-    files = []
-    for r in rows:
-        entry = {
-            "partition_id": r["partition_id"],
-            "path": os.path.join("data", r["file"]),
-            "rows": r["rows"],
-            "raw_bytes": r["raw_bytes"],
-            "compressed_bytes": r["compressed_bytes"],
-            "codec_choices": json.loads(r["codec_choices"]),
-            "column_stats": json.loads(r["column_stats"]),
-        }
-        part = r["partition"] if "partition" in r else ""
-        if part:
-            entry["partition"] = json.loads(part)
-        if "schema_sig" in r and r["schema_sig"]:
-            entry["schema_sig"] = r["schema_sig"]
-        if "encrypted" in r and r["encrypted"]:
-            entry["encrypted"] = True
-        files.append(entry)
+    files = [_manifest_entry(r) for r in rows]
     schema = [{"name": f.name, "type": f.dataType.simpleString(), "nullable": f.nullable} for f in df.schema.fields]
     props = {"sort_key": sort_key or ""}
     if spec:

@@ -23,20 +23,6 @@ from webcodec.config import EncoderConfig
 from webcodec.spark.table import SnapshotTable
 
 
-def _merged_stats(entries: list[dict]) -> dict:
-    """Roll up per-file column_stats across compaction sources."""
-    out: dict = {}
-    for e in entries:
-        for col, st in (e.get("column_stats") or {}).items():
-            cur = out.setdefault(col, {"min": None, "max": None, "null_count": 0})
-            if st.get("min") is not None:
-                cur["min"] = st["min"] if cur["min"] is None else min(cur["min"], st["min"])
-            if st.get("max") is not None:
-                cur["max"] = st["max"] if cur["max"] is None else max(cur["max"], st["max"])
-            cur["null_count"] += st.get("null_count", 0)
-    return out
-
-
 def _aliases_of(snap: dict) -> dict:
     """Rename provenance map (current name -> older chunk names) of a
     snapshot's schema — threaded into every file-scanning op so predicates
@@ -62,8 +48,6 @@ def compact(table_dir: str, target_bytes: int = 128 << 20) -> dict:
     Encrypted files (C12) never byte-merge — per-file AAD prefixes make a
     page copy fail authentication — so they stay in single-file bins here
     (safe no-op); materialize their compaction via ``rewrite_encoded``."""
-    import json as _json
-
     from webcodec import filefmt
 
     tbl = SnapshotTable(table_dir)
@@ -74,7 +58,7 @@ def compact(table_dir: str, target_bytes: int = 128 << 20) -> dict:
     # then by pid for deterministic merge order
     files = sorted(
         snap["files"],
-        key=lambda f: (_json.dumps(f.get("partition"), sort_keys=True, default=str),
+        key=lambda f: (json.dumps(f.get("partition"), sort_keys=True, default=str),
                        f["partition_id"]),
     )
 
@@ -84,8 +68,9 @@ def compact(table_dir: str, target_bytes: int = 128 << 20) -> dict:
     acc = 0
     sig = None
     for f in files:
-        # metadata-only when the writer recorded signature+encrypted (r3+);
-        # footer read only as a fallback for pre-flag manifests
+        # metadata-only: every Spark write path records signature and
+        # encrypted (encode_job._manifest_entry); a footer is read only for
+        # entries of manifests written before that
         enc = f.get("encrypted")
         if f.get("schema_sig") and enc is not None:
             sig_str = f["schema_sig"]
@@ -102,7 +87,7 @@ def compact(table_dir: str, target_bytes: int = 128 << 20) -> dict:
                 # compact can't inspect it — single-file bin (safe no-op)
                 enc, sig_str = True, f.get("schema_sig") or f["path"]
         s = (sig_str,
-             _json.dumps(f.get("partition"), sort_keys=True, default=str))
+             json.dumps(f.get("partition"), sort_keys=True, default=str))
         # files with merge-on-read delete sidecars never byte-merge: a byte
         # copy would resurrect their deleted rows (materialize them via
         # rewrite_encoded first). Encrypted files never byte-merge either
@@ -126,28 +111,22 @@ def compact(table_dir: str, target_bytes: int = 128 << 20) -> dict:
     if all(len(b) <= 1 for b in bins):
         return snap  # nothing to do
 
+    from webcodec.spark.encode_job import _lineage_row, _manifest_entries
+
     new_files = []
     for b in bins:
         if len(b) == 1:
             new_files.append(b[0])
             continue
         pid = b[0]["partition_id"]
-        fname = f"part-{pid:05d}-{uuid.uuid4().hex[:12]}.wcd"
+        attempt = uuid.uuid4().hex[:12]
+        fname = f"part-{pid:05d}-{attempt}.wcd"
         srcs = [os.path.join(table_dir, f["path"]) for f in b]
         footer = filefmt.append_files(os.path.join(tbl.data_dir, fname), srcs)
-        new_files.append(
-            {
-                "partition_id": pid,
-                "path": os.path.join("data", fname),
-                "rows": footer["num_rows"],
-                "raw_bytes": footer["raw_bytes"],
-                "compressed_bytes": footer["compressed_bytes"],
-                "codec_choices": b[0].get("codec_choices", {}),
-                "column_stats": _merged_stats(b),
-            }
-        )
-        if b[0].get("partition") is not None:
-            new_files[-1]["partition"] = b[0]["partition"]
+        # the merged entry comes from the merged footer, like every written
+        # file's: stats roll up across its groups (one per source)
+        new_files += _manifest_entries(_lineage_row(
+            pid, fname, footer, 0.0, attempt, partition=b[0].get("partition")))
     props = dict(snap.get("properties", {}))
     props["compacted"] = "true"
     return tbl.commit(new_files, snap["schema"], properties=props, replace=True)
@@ -393,6 +372,7 @@ def upsert(
     from webcodec.spark.encode_job import (
         LINEAGE_SCHEMA,
         _make_scan_encode_fn,
+        _manifest_entry,
     )
 
     tbl = SnapshotTable(table_dir)
@@ -422,20 +402,9 @@ def upsert(
         # upserts/appends never collide in the manifest (same stance as the
         # DataSource writer)
         base = ((tbl.current_snapshot_id() or 0) + 1) * 1_000_000
-        new_entries = []
-        for r in lineage:
-            e = {
-                "partition_id": base + r["partition_id"],
-                "path": os.path.join("data", r["file"]),
-                "rows": r["rows"],
-                "raw_bytes": r["raw_bytes"],
-                "compressed_bytes": r["compressed_bytes"],
-                "codec_choices": json.loads(r["codec_choices"]),
-                "column_stats": json.loads(r["column_stats"]),
-            }
-            if "encrypted" in r and r["encrypted"]:
-                e["encrypted"] = True
-            new_entries.append(e)
+        new_entries = [_manifest_entry(r) for r in lineage]
+        for e in new_entries:
+            e["partition_id"] += base
 
         # -- stage 2: positional deletes for superseded rows --
         candidates = snap["files"]
@@ -578,16 +547,23 @@ def rewrite_encoded(
         raise FileNotFoundError(f"no snapshot in {src_dir}")
     dst = SnapshotTable(dst_dir)
     dst.init()
-    paths = [
-        (f["partition_id"], os.path.join(src_dir, f["path"]),
-         tuple(os.path.join(src_dir, d) for d in f.get("delete_files") or ()))
-        for f in snap["files"]
-    ]
-    data_dir = dst.data_dir
     # ALWAYS project the current schema: columns=None must still EXCLUDE
     # dropped columns' chunks (drop_column's contract is that rewrite
     # physically purges them) and rename-localize per file
     cols = columns if columns is not None else [f["name"] for f in snap["schema"]]
+    # the rewrite is 1:1 per source file, so partition tuples stay valid —
+    # carry them (and the spec) unless a projection dropped a source column
+    # the spec transforms
+    spec = (snap.get("properties") or {}).get("partition_spec")
+    if spec and cols and not all(f["col"] in cols for f in spec):
+        spec = None
+    paths = [
+        (f["partition_id"], os.path.join(src_dir, f["path"]),
+         tuple(os.path.join(src_dir, d) for d in f.get("delete_files") or ()),
+         f.get("partition") if spec else None)
+        for f in snap["files"]
+    ]
+    data_dir = dst.data_dir
     aliases = _aliases_of(snap)
     types = {f["name"]: f["type"] for f in snap["schema"]}
     mask = frozenset(mask_columns or ())
@@ -615,7 +591,7 @@ def rewrite_encoded(
         items = bc.value
         for b in batches:
             for i in b.column("id").to_pylist():
-                pid, path, dels = items[i]
+                pid, path, dels, part = items[i]
                 # per-file rename localization (same resolution the read
                 # path uses): current names map to this file's chunk names;
                 # columns ADDED after the file null-fill
@@ -675,10 +651,10 @@ def rewrite_encoded(
                             arrays.append(pa.nulls(table.num_rows, type=at))
                     table = pa.Table.from_arrays(arrays, names=cols)
                 yield from _write_one(
-                    data_dir, pid, table, config, None
+                    data_dir, pid, table, config, None, partition=part
                 ).to_batches()
 
-    from webcodec.spark.encode_job import LINEAGE_SCHEMA, _commit
+    from webcodec.spark.encode_job import LINEAGE_SCHEMA, _manifest_entry
 
     pdf = spark.range(0, len(paths), 1, len(paths))
     rows = pdf.mapInArrow(rewrite_fn, LINEAGE_SCHEMA).collect()
@@ -686,33 +662,7 @@ def rewrite_encoded(
     schema = snap["schema"]
     if cols:
         schema = [f for f in schema if f["name"] in cols]
-    # the rewrite is 1:1 per source file, so partition tuples stay valid —
-    # carry them (and the spec) unless a projection dropped a source column
-    # the spec transforms
-    spec = (snap.get("properties") or {}).get("partition_spec")
-    if spec and cols and not all(f["col"] in cols for f in spec):
-        spec = None
-    part_by_pid = (
-        {f["partition_id"]: f.get("partition") for f in snap["files"]}
-        if spec else {}
-    )
-    files = []
-    for r in rows:
-        entry = {
-            "partition_id": r["partition_id"],
-            "path": os.path.join("data", r["file"]),
-            "rows": r["rows"],
-            "raw_bytes": r["raw_bytes"],
-            "compressed_bytes": r["compressed_bytes"],
-            "codec_choices": json.loads(r["codec_choices"]),
-            "column_stats": json.loads(r["column_stats"]),
-        }
-        part = part_by_pid.get(r["partition_id"])
-        if part is not None:
-            entry["partition"] = part
-        if "encrypted" in r and r["encrypted"]:
-            entry["encrypted"] = True
-        files.append(entry)
+    files = [_manifest_entry(r) for r in rows]
     props = {"rewritten_from": src_dir}
     if spec:
         props["partition_spec"] = spec

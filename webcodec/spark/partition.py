@@ -36,8 +36,8 @@ import pyarrow.compute as pc
 _US_PER_DAY = 86_400_000_000
 _US_PER_HOUR = 3_600_000_000
 
-# fanout pid layout: FANOUT_FLAG | (task/split id << PID_SHIFT) + rank. 2^20
-# partition tuples per task is far beyond any sane fanout (Iceberg's own
+# fanout pid layout: FANOUT_FLAG | (task/split id << PID_SHIFT) + seq. 2^20
+# fanout files per task is far beyond any sane fanout (Iceberg's own
 # fanout writers cap open files in the hundreds). The high flag bit keeps
 # fanout pids disjoint from plain split ids in one manifest — task 0's
 # fanout pids 0..k would otherwise SHADOW a previous plain commit's entries
@@ -202,7 +202,7 @@ def transform_array(arr: pa.Array, field: dict) -> pa.Array:
 
 def split_by_partition(table: pa.Table, spec: list[dict]) -> list[tuple[dict, pa.Table]]:
     """Fanout split: [(partition_values_dict, sub_table)] sorted by canonical
-    tuple key (deterministic pid ranks for resume). One dictionary-encode per
+    tuple key (deterministic file order). One dictionary-encode per
     field + one stable argsort over combined codes — no per-row python."""
     n = table.num_rows
     if n == 0:
