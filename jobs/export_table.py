@@ -1,4 +1,5 @@
-"""spark-submit entry point: transcode a webcodec table into STANDARD
+"""spark-submit entry point: transcode the current snapshot of a webcodec
+table (the rows and columns read_encoded returns) into STANDARD
 parquet files (webcodec kernels decode, webcodec's own parquet writer
 re-serializes — any reference reader consumes the result; Spark VariantType
 columns come out as VARIANT(1)-annotated groups).

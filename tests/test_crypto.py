@@ -306,7 +306,8 @@ def test_delete_where_and_export_on_encrypted(spark, tmp_path):
     # export decrypts into plaintext interchange parquet
     exp = str(tmp_path / "exp")
     export_parquet(spark, out, exp, encryption_key=KEY)
-    assert pq.read_table(exp).num_rows == t.num_rows  # deletes are merge-on-read
+    # the export is the current snapshot: deleted rows stay deleted
+    assert pq.read_table(exp).num_rows == t.num_rows - n_pt
 
 
 def test_streaming_source_encrypted(spark, tmp_path):

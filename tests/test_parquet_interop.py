@@ -416,7 +416,7 @@ def _flip_base() -> dict:
 @pytest.mark.parametrize("seed", range(24))
 def test_nested_footer_flips_raise_cleanly(tmp_path, seed):
     """1-3 flipped bits anywhere in the footer of a nested export: the read
-    raises ValueError, raises a documented NotImplementedError, returns the
+    raises ValueError naming the file, raises a documented NotImplementedError, returns the
     exact rows, or returns other rows only because the flipped footer still
     parses and describes other data (its schema fields, leaf layout or row
     group sizes differ) — never a KeyError/TypeError/IndexError/OSError/zlib.error
@@ -438,7 +438,8 @@ def test_nested_footer_flips_raise_cleanly(tmp_path, seed):
         open(p, "wb").write(bytes(b))
         try:
             got = read_table_arrow_native(p)
-        except ValueError:
+        except ValueError as e:
+            assert p in str(e), e
             continue
         except NotImplementedError as e:
             assert str(e).startswith(_DOCUMENTED_NIE), e

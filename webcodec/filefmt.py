@@ -1215,6 +1215,23 @@ def _bloom_may_contain(pc_chunk: dict, values) -> bool:
     )
 
 
+def local_names(present, names, aliases) -> dict:
+    """Map each CURRENT column name to the name its chunk carries in one
+    specific file — identity when present, else the newest resolvable entry
+    of its rename chain (``aliases``: current name -> older names, oldest
+    first). Names unresolvable in this file are absent from the result."""
+    out = {}
+    for n in names:
+        if n in present:
+            out[n] = n
+            continue
+        for old in reversed(list((aliases or {}).get(n) or ())):
+            if old in present:
+                out[n] = old
+                break
+    return out
+
+
 def match_positions(
     source: str | bytes | memoryview, predicate, aliases=None,
     encryption_key: bytes | None = None,
@@ -1227,7 +1244,6 @@ def match_positions(
     localizes renamed columns to this file's chunk names; a column with no
     chunk here (added after the file) matches as all-null — no positions."""
     from webcodec import predicate as predmod
-    from webcodec.spark.decode_job import local_names
 
     conjuncts = predmod.normalize(predicate)
     if conjuncts is None:
@@ -1417,8 +1433,9 @@ def read_table(
     buf, footer, groups = _open(source, encryption_key)
     num_rows = footer["num_rows"]
     # Dremel leaf chunks are footer-internal, not columns.
-    # columns=[] means ZERO columns (e.g. a pure null-fill read of columns
-    # added after this file) — `or` would silently decode the whole file
+    # columns=[] means ZERO columns that still carry the surviving row count
+    # (e.g. a pure null-fill read of columns added after this file) — `or`
+    # would silently decode the whole file
     names = columns if columns is not None else [
         c["name"] for c in groups[0]["chunks"] if _LEAF_SEP not in c["name"]
     ]
@@ -1450,6 +1467,9 @@ def read_table(
         return _empty_table(groups[0], names)
 
     def decode(cols):
+        if not cols:  # no page is read: the keep mask alone counts the rows
+            n = num_rows if keep_rows is None else int(keep_rows.sum())
+            return pa.table([pa.nulls(n)], names=[_POS]).select([])
         return pa.Table.from_arrays(
             [_decode_column(buf, groups, n, keep_rows, verify_crc) for n in cols], names=cols)
 

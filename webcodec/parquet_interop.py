@@ -44,6 +44,7 @@ read-side inverse of parquet_writer's nested export (SURVEY §2 E2).
 
 from __future__ import annotations
 
+import contextlib
 import struct
 
 import numpy as np
@@ -1564,6 +1565,19 @@ def _leaf_stream(buf, meta, lf, kept, verify_crc: bool = False):
     return {"vals": vals, "rep": reps, "def": defs}
 
 
+@contextlib.contextmanager
+def _located(path: str, where: str):
+    """Page data a damaged footer mis-describes fails in the kernels or in
+    Arrow's own checks; re-raise such a ``ValueError`` (``ArrowInvalid``
+    included) naming the file and ``where`` in it."""
+    try:
+        yield
+    except ValueError as e:
+        if path in str(e):
+            raise
+        raise ValueError(f"{path}: {where}: {e}") from e
+
+
 def read_table_arrow_native(path: str, columns: list[str] | None = None,
                             kms_unwrap=None, filters=None,
                             verify_checksums: bool = False):
@@ -1586,9 +1600,11 @@ def read_table_arrow_native(path: str, columns: list[str] | None = None,
     exactly after assembly — same result as pyarrow reading the whole file and
     filtering in memory, touching fewer bytes.
 
-    Damaged files raise ``ValueError``: a footer that does not parse, a
-    page header that does not parse and a page the codec rejects name the
-    file (page errors also the column path and page offset). Layouts this
+    Damaged files raise ``ValueError`` naming the file: a footer that does
+    not parse, a page header that does not parse and a page the codec
+    rejects (these also name the column path and page offset), and page
+    data the kernels or the Arrow assembly reject (also the column and row
+    group). Layouts this
     reader does not implement raise ``NotImplementedError``. A footer has
     no checksum, though, so a damaged footer that still parses and agrees
     with itself — a renamed field, another type length or logical type —
@@ -1628,17 +1644,19 @@ def read_table_arrow_native(path: str, columns: list[str] | None = None,
             rows = _rg_row_mask(buf, rg, conj, by_name, leaf_info, n_rows)
             if rows is not None and not rows.any():
                 continue
-        groups.append((rg, rows))
+        groups.append((rg_i, rg, rows))
+
     span = {f.name: sp for f, sp in zip(ft["fields"], ft["spans"])}
     cols = {}
     for name in read_names:
         field = by_name[name]
-        parts = [
-            dremel.assemble(field.type, [
-                _leaf_stream(buf, rg[i], ft["leaves"][i], rows,
-                             verify_crc=verify_checksums)
-                for i in span[name]], _leaf_arrow, field.nullable)
-            for rg, rows in groups]
+        parts = []
+        for rg_i, rg, rows in groups:
+            with _located(path, f"column {name!r}, row group {rg_i}"):
+                parts.append(dremel.assemble(field.type, [
+                    _leaf_stream(buf, rg[i], ft["leaves"][i], rows,
+                                 verify_crc=verify_checksums)
+                    for i in span[name]], _leaf_arrow, field.nullable))
         cols[name] = (parts[0] if len(parts) == 1
                       else pa.concat_arrays(parts) if parts
                       else pa.array([], type=field.type))
@@ -1653,7 +1671,8 @@ def read_table_arrow_native(path: str, columns: list[str] | None = None,
                                       f.metadata)
     # carry per-field nullability/metadata (pa.table(dict) would default
     # every field to nullable, diverging from pyarrow on required columns)
-    tbl = pa.table(cols, schema=pa.schema([by_name[n] for n in read_names]))
+    with _located(path, "table assembly"):
+        tbl = pa.table(cols, schema=pa.schema([by_name[n] for n in read_names]))
     if conj:
         tbl = _pred.residual_filter(tbl, conj)
         if read_names != names:  # filter-only columns drop from the output

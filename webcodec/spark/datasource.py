@@ -89,6 +89,19 @@ def _spark_schema_of(table_dir: str, snapshot_id: int | None = None) -> str:
     return _schema_ddl(snap["schema"], None)
 
 
+def _table_aliases(table_dir: str, snapshot_id: int | None) -> dict:
+    """Rename provenance of the snapshot a reader plans against, resolved
+    driver-side and shipped to executors with the reader ({} without a
+    table)."""
+    from webcodec.spark.decode_job import _aliases_of
+    from webcodec.spark.table import SnapshotTable
+
+    try:
+        return _aliases_of(SnapshotTable(table_dir).read_snapshot_meta(snapshot_id))
+    except OSError:
+        return {}
+
+
 @dataclass
 class _FileSplit(InputPartition):
     path: str
@@ -97,6 +110,9 @@ class _FileSplit(InputPartition):
     row_hi: int | None = None
     # merge-on-read positional-delete sidecars (absolute paths)
     deletes: tuple = ()
+
+    def row_range(self) -> tuple[int, int] | None:
+        return None if self.row_lo is None else (self.row_lo, self.row_hi)
 
 
 class WebcodecReader(DataSourceReader):
@@ -120,15 +136,7 @@ class WebcodecReader(DataSourceReader):
         self.predicate: list[tuple] | None = None
         # rename provenance (current name -> older chunk names), resolved
         # driver-side at plan time and shipped to executors with the reader
-        try:
-            from webcodec.spark.table import SnapshotTable
-
-            snap = SnapshotTable(self.table_dir).read_snapshot_meta(self.snapshot_id)
-            self.aliases = {f["name"]: f["renamed_from"]
-                            for f in (snap or {}).get("schema") or []
-                            if f.get("renamed_from")}
-        except OSError:
-            self.aliases = {}
+        self.aliases = _table_aliases(self.table_dir, self.snapshot_id)
 
     def partitions(self):
         from webcodec.spark.decode_job import plan_decode_splits
@@ -149,21 +157,12 @@ class WebcodecReader(DataSourceReader):
         ]
 
     def read(self, partition: _FileSplit):
-        # evolved-schema-aware decode: files older than an added column
-        # return it as nulls
-        from webcodec.spark.decode_job import decode_file_evolved
+        from webcodec.spark.decode_job import _normalize_ts_for_spark, read_file
 
-        want = self.columns or list(self.types)
-        rng = (
-            (partition.row_lo, partition.row_hi)
-            if partition.row_lo is not None
-            else None
-        )
-        yield from decode_file_evolved(
-            partition.path, want, self.types, self.predicate, row_range=rng,
-            delete_paths=partition.deletes, aliases=self.aliases,
-            encryption_key=self.encryption_key,
-        )
+        t = read_file(partition.path, self.columns or list(self.types),
+                      self.types, self.predicate, partition.row_range(),
+                      partition.deletes, self.aliases, self.encryption_key)
+        yield from _normalize_ts_for_spark(t).to_batches(8_192)
 
 
 class WebcodecPushdownReader(WebcodecReader):
@@ -425,6 +424,7 @@ class WebcodecStreamReader(DataSourceStreamReader):
         # C12: key for streaming over encrypted tables
         ekh = options.get("encryption_key_hex")
         self.encryption_key = bytes.fromhex(ekh) if ekh else None
+        self.aliases = _table_aliases(self.table_dir, None)
 
     def initialOffset(self) -> dict:  # noqa: N802 (API name)
         off = {"snapshot_id": self.start_snapshot, "pos": -1}
@@ -595,24 +595,18 @@ class WebcodecStreamReader(DataSourceStreamReader):
     def read(self, partition: _FileSplit):
         # executor-side decode: Arrow batches straight from the page files
         # (evolved-schema-aware: pre-evolution files null-fill added columns)
-        rng = (
-            (partition.row_lo, partition.row_hi)
-            if partition.row_lo is not None
-            else None
-        )
         if self.types:
-            from webcodec.spark.decode_job import decode_file_evolved
+            from webcodec.spark.decode_job import _normalize_ts_for_spark, read_file
 
-            yield from decode_file_evolved(
-                partition.path, list(self.types), self.types, None, row_range=rng,
-                encryption_key=self.encryption_key,
-            )
+            t = _normalize_ts_for_spark(read_file(
+                partition.path, list(self.types), self.types, None,
+                partition.row_range(), (), self.aliases, self.encryption_key))
         else:
             from webcodec import filefmt
 
-            t = filefmt.read_table(partition.path, row_range=rng,
+            t = filefmt.read_table(partition.path, row_range=partition.row_range(),
                                    encryption_key=self.encryption_key)
-            yield from t.to_batches(max_chunksize=8192)
+        yield from t.to_batches(8_192)
 
     def commit(self, end: dict) -> None:
         # snapshots are immutable — nothing to clean up. Persist the committed

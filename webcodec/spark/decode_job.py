@@ -93,38 +93,36 @@ def _arrow_type_of_spark(spark_type: str) -> pa.DataType:
         # Spark VariantType's physical storage shape as handed to Python
         # data sources (tests/test_variant.py) — needed wherever a null
         # column of the CURRENT table schema is synthesized (added-column
-        # null fill here, mask/evolution fill in maintenance.rewrite_encoded)
+        # null fill in read_file, mask fill in maintenance.rewrite_encoded)
         return pa.struct([pa.field("value", pa.binary()),
                           pa.field("metadata", pa.binary())])
     raise ValueError(f"unsupported Spark type string: {spark_type!r}")
 
 
-def local_names(present, names, aliases) -> dict:
-    """Map each CURRENT column name to the name its chunk carries in one
-    specific file — identity when present, else the newest resolvable entry
-    of its rename chain (``aliases``: current name -> older names, oldest
-    first). Names unresolvable in this file are absent from the result."""
-    out = {}
-    for n in names:
-        if n in present:
-            out[n] = n
-            continue
-        for old in reversed(list((aliases or {}).get(n) or ())):
-            if old in present:
-                out[n] = old
-                break
-    return out
+def _aliases_of(snap: dict | None) -> dict:
+    """Rename provenance map (current name -> older chunk names) of a
+    snapshot's schema — threaded into every per-file read so projections,
+    predicates and keys localize against pre-rename files."""
+    return {f["name"]: f["renamed_from"] for f in (snap or {}).get("schema") or []
+            if f.get("renamed_from")}
 
 
-def _chunk_names(data, encryption_key: bytes | None = None) -> set:
-    """Top-level chunk names of a .wcd file (path or bytes)."""
-    from webcodec import filefmt
+def _local_chunks(footer: dict, names, aliases) -> dict:
+    """Current column name -> its chunk meta in one file (first row group),
+    resolved through the rename chains in ``aliases``; names the file has no
+    chunk for (columns added after it was written) are absent."""
+    from webcodec.filefmt import local_names
 
-    if isinstance(data, str):
-        footer = filefmt.read_footer_path(data, encryption_key)
-    else:
-        footer = filefmt.read_footer(memoryview(data), encryption_key)
-    return {c["name"] for c in (footer.get("groups") or [footer])[0]["chunks"]}
+    chunks = {c["name"]: c for c in (footer.get("groups") or [footer])[0]["chunks"]}
+    return {n: chunks[loc] for n, loc in local_names(chunks, names, aliases).items()}
+
+
+def _file_refs(files: list[dict], table_dir: str) -> list[tuple]:
+    """(partition_id, absolute path, absolute delete-sidecar paths) of each
+    manifest entry — the descriptor every per-file Spark task receives."""
+    return [(f["partition_id"], os.path.join(table_dir, f["path"]),
+             tuple(os.path.join(table_dir, d) for d in f.get("delete_files") or ()))
+            for f in files]
 
 
 # (path, sidecars, aliases) -> positions; sidecar files and .wcd files are
@@ -196,17 +194,19 @@ def load_delete_positions(delete_paths, data=None, aliases=None,
             raise ValueError(
                 "equality-delete sidecars need the data file (path or bytes)"
             )
-        present = _chunk_names(data, encryption_key=encryption_key)
+        footer = (filefmt.read_footer_path(data, encryption_key)
+                  if isinstance(data, str)
+                  else filefmt.read_footer(memoryview(data), encryption_key))
         for p in eq_paths:
             keys = pq.read_table(p).to_pandas().drop_duplicates()
             kcols = list(keys.columns)
             # renamed key columns: read this file's local chunk names; a key
             # column with no chunk here (added later) can never match
-            lmap = local_names(present, kcols, aliases)
-            if len(lmap) != len(kcols):
+            local = _local_chunks(footer, kcols, aliases)
+            if len(local) != len(kcols):
                 continue
             fk = filefmt.read_table(
-                data, columns=[lmap[k] for k in kcols], verify_crc=False,
+                data, columns=[local[k]["name"] for k in kcols], verify_crc=False,
                 encryption_key=encryption_key,
             ).to_pandas()
             fk.columns = kcols
@@ -217,65 +217,48 @@ def load_delete_positions(delete_paths, data=None, aliases=None,
     return np.unique(np.concatenate(parts)) if parts else None
 
 
-def decode_file_evolved(path: str, want: list[str], types: dict[str, str],
-                        predicate, batch_rows: int = 8_192,
-                        row_range: tuple[int, int] | None = None,
-                        delete_paths=(), aliases=None,
-                        encryption_key: bytes | None = None):
-    """Decode one .wcd file to Arrow batches with Iceberg schema-evolution
-    semantics: columns added to the table AFTER this file was written decode
-    as nulls, and columns RENAMED after it was written decode from their
+def read_file(path: str, want: list[str], types: dict[str, str],
+              predicate=None, row_range: tuple[int, int] | None = None,
+              delete_paths=(), aliases=None,
+              encryption_key: bytes | None = None) -> pa.Table:
+    """One data file as its snapshot sees it — the executor-side read of
+    every Spark job (``read_encoded``, the DataSource readers,
+    ``rewrite_encoded``, ``export_parquet``). Iceberg schema-evolution
+    semantics: columns RENAMED after the file was written decode from their
     old chunk name (``aliases`` maps current name -> older names, newest
-    last; predicates on a renamed column translate to the file-local name).
-    ``types`` maps column name -> Spark type string. Shared by the job
-    reader and the DataSource reader (executor-side). ``row_range``
-    restricts decode to a half-open row slice — intra-file parallelism for
-    large files (page-level skip keeps IO proportional to the slice).
-    ``delete_paths``: merge-on-read delete sidecars to subtract."""
+    last; predicate terms translate to the file-local name too), columns
+    added after it decode as typed nulls (``types``: current name -> Spark
+    type string), and columns the table widened promote losslessly. The
+    result holds exactly the ``want`` columns under their current names;
+    ``want=[]`` decodes only the predicate's columns and still carries the
+    surviving row count.
+    ``row_range`` restricts decode to a half-open row slice (intra-file
+    parallelism; page-level skip keeps IO proportional to the slice) and
+    ``delete_paths`` are the merge-on-read sidecars to subtract.
+    Timestamps keep their written unit: only the Spark boundary truncates
+    them (:func:`_normalize_ts_for_spark`)."""
     from webcodec import filefmt
+    from webcodec import predicate as predmod
 
     with open(path, "rb") as f:
         data = f.read()
-    footer = filefmt.read_footer(memoryview(data), encryption_key)
-    present = {c["name"] for c in (footer.get("groups") or [footer])[0]["chunks"]}
-    from webcodec import predicate as predmod
-
-    conj = predmod.normalize(predicate) if predicate is not None else None
-    pred_cols = [c for c, _, _ in conj] if conj else []
-    # current -> file-local chunk name, covering projection AND predicate
-    local_of = local_names(
-        present, list(dict.fromkeys([*want, *pred_cols])), aliases
-    )
-    if conj and any(local_of.get(c, c) != c for c in pred_cols):
-        predicate = [(local_of.get(c, c), op, v) for c, op, v in conj]
-    cols_here = [local_of[c] for c in want if c in local_of]
-    if want and not cols_here:
-        # pure null-fill read (every projected column was added after this
-        # file): read_table(columns=[]) now correctly decodes NOTHING, so
-        # decode the file's cheapest chunk just to get the surviving row
-        # count under predicate/row_range/deletes
-        groups0 = (footer.get("groups") or [footer])[0]
-        tops = [c for c in groups0["chunks"] if "\x1f" not in c["name"]]
-        cheapest = min(tops, key=lambda c: c.get("compressed_bytes", 0))
-        cols_here = [cheapest["name"]]
+    conj = predmod.normalize(predicate) or []
+    local = _local_chunks(filefmt.read_footer(memoryview(data), encryption_key),
+                          [*want, *(c for c, _, _ in conj)], aliases)
+    name = {n: c["name"] for n, c in local.items()}
     t = filefmt.read_table(
-        data, columns=cols_here, predicate=predicate, row_range=row_range,
+        data, columns=[name[n] for n in want if n in name],
+        predicate=[(name.get(c, c), op, v) for c, op, v in conj] or None,
+        row_range=row_range,
         drop_rows=cached_delete_positions(path, delete_paths, data,
                                           aliases=aliases,
                                           encryption_key=encryption_key),
         encryption_key=encryption_key)
-    if cols_here != want:
-        arrays = []
-        for name in want:
-            if name in local_of:
-                arrays.append(t.column(local_of[name]))
-            else:
-                at = _arrow_type_of_spark(types.get(name, "string"))
-                arrays.append(pa.nulls(t.num_rows, type=at))
-        t = pa.Table.from_arrays(arrays, names=want)
-    t = _promote_for_evolution(t, types)
-    t = _normalize_ts_for_spark(t)
-    yield from t.to_batches(max_chunksize=batch_rows)
+    out = t.select([])
+    for n in want:
+        out = out.append_column(n, t.column(name[n]) if n in name else pa.nulls(
+            t.num_rows, type=_arrow_type_of_spark(types.get(n, "string"))))
+    return _promote_for_evolution(out, types)
 
 
 def _promote_for_evolution(t: pa.Table, types: dict[str, str]) -> pa.Table:
@@ -334,9 +317,7 @@ def plan_decode_splits(
     API and the DataSource reader so a table of few huge files parallelizes
     identically through both."""
     splits: list[tuple[str, int, int, tuple[str, ...]]] = []
-    for f in files:
-        path = os.path.join(table_dir, f["path"])
-        dels = tuple(os.path.join(table_dir, d) for d in f.get("delete_files") or ())
+    for f, (_, path, dels) in zip(files, _file_refs(files, table_dir)):
         rows = int(f.get("rows") or 0)
         cbytes = int(f.get("compressed_bytes") or 0)
         n = max(1, -(-cbytes // target_split_bytes)) if rows else 1
@@ -397,20 +378,17 @@ def read_encoded(
     # the pattern is exactly how a 100-TB listing should ship anyway)
     bc = spark.sparkContext.broadcast(splits)
 
-    aliases = {f["name"]: f["renamed_from"] for f in snap["schema"]
-               if f.get("renamed_from")}
+    aliases = _aliases_of(snap)
 
     def decode_fn(batches):
         sps = bc.value
         for b in batches:
             for i in b.column("id").to_pylist():
                 path, lo, hi, dels = sps[i]
-                rng = (lo, hi) if lo >= 0 else None
-                yield from decode_file_evolved(
-                    path, want, types, predicate, batch_rows, row_range=rng,
-                    delete_paths=dels, aliases=aliases,
-                    encryption_key=encryption_key,
-                )
+                t = read_file(path, want, types, predicate,
+                              (lo, hi) if lo >= 0 else None, dels, aliases,
+                              encryption_key)
+                yield from _normalize_ts_for_spark(t).to_batches(batch_rows)
 
     pdf = spark.range(0, len(splits), 1, len(splits))
     return pdf.mapInArrow(decode_fn, ddl)

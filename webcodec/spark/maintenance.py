@@ -12,6 +12,7 @@ Spark job: one task per source file, path-list parallelism (no JVM transfer).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -20,15 +21,15 @@ import uuid
 from pyspark.sql import SparkSession
 
 from webcodec.config import EncoderConfig
+from webcodec.spark.decode_job import (
+    _aliases_of,
+    _arrow_type_of_spark,
+    _file_refs,
+    _local_chunks,
+    load_delete_positions,
+    read_file,
+)
 from webcodec.spark.table import SnapshotTable
-
-
-def _aliases_of(snap: dict) -> dict:
-    """Rename provenance map (current name -> older chunk names) of a
-    snapshot's schema — threaded into every file-scanning op so predicates
-    and keys localize against pre-rename files."""
-    return {f["name"]: f["renamed_from"] for f in snap.get("schema") or []
-            if f.get("renamed_from")}
 
 
 def compact(table_dir: str, target_bytes: int = 128 << 20) -> dict:
@@ -147,6 +148,7 @@ def delete_where(spark: SparkSession, table_dir: str, predicate,
 
     Positions accumulate across calls (sidecars union at read). Returns
     ``{"deleted_rows": n, "files_touched": k}`` plus the new snapshot id."""
+    from webcodec import filefmt
     from webcodec import predicate as predmod
 
     conjuncts = predmod.normalize(predicate)
@@ -156,38 +158,50 @@ def delete_where(spark: SparkSession, table_dir: str, predicate,
     snap = tbl.read_snapshot()
     if snap is None:
         raise FileNotFoundError(f"no snapshot in {table_dir}")
-    by_pid = {f["partition_id"]: f for f in snap["files"]}
-    candidates = tbl.data_files(conjuncts)  # stats-pruned: only files that MAY match
-    if not candidates:
+    # stats-pruned: only files that MAY match
+    updated, total = _write_deletes(
+        spark, table_dir, snap, tbl.data_files(conjuncts),
+        functools.partial(filefmt.match_positions, predicate=conjuncts,
+                          aliases=_aliases_of(snap), encryption_key=encryption_key),
+        encryption_key)
+    if not updated:
         return {"deleted_rows": 0, "files_touched": 0,
                 "snapshot_id": snap["snapshot_id"]}
+    new = _commit_deletes(tbl, snap, updated)
+    return {"deleted_rows": total, "files_touched": len(updated),
+            "snapshot_id": new["snapshot_id"]}
+
+
+def _write_deletes(spark: SparkSession, table_dir: str, snap: dict,
+                   candidates: list[dict], positions_of,
+                   encryption_key: bytes | None) -> tuple[list[dict], int]:
+    """The positional-delete stage of ``delete_where`` and ``upsert``: one
+    Spark task per candidate file takes ``positions_of(path)`` (GLOBAL row
+    positions, or None), subtracts the file's earlier sidecars and writes
+    what is left as a sorted int64 LE sidecar under ``deletes/``. Returns
+    the touched files' manifest entries with the sidecar and its row count
+    merged in, and the number of rows newly deleted."""
+    items = _file_refs(candidates, table_dir)
+    if not items:
+        return [], 0
     del_dir = os.path.join(table_dir, "deletes")
     os.makedirs(del_dir, exist_ok=True)
     aliases = _aliases_of(snap)
-    items = [
-        (f["partition_id"], os.path.join(table_dir, f["path"]),
-         tuple(os.path.join(table_dir, d) for d in f.get("delete_files") or ()))
-        for f in candidates
-    ]
     bc = spark.sparkContext.broadcast(items)
 
     def find_fn(batches):
         import numpy as np
         import pyarrow as pa
 
-        from webcodec import filefmt
-        from webcodec.spark.decode_job import load_delete_positions
-
         for b in batches:
             for i in b.column("id").to_pylist():
                 pid, path, existing = bc.value[i]
-                pos = filefmt.match_positions(path, conjuncts, aliases=aliases,
-                                              encryption_key=encryption_key)
+                pos = positions_of(path)
                 prior = load_delete_positions(existing, path, aliases=aliases,
                                               encryption_key=encryption_key)
-                if prior is not None:
+                if pos is not None and prior is not None:
                     pos = np.setdiff1d(pos, prior)  # already-deleted rows don't recount
-                if not len(pos):
+                if pos is None or not len(pos):
                     continue
                 name = f"del-{pid:05d}-{uuid.uuid4().hex[:12]}.bin"
                 with open(os.path.join(del_dir, name), "wb") as f:
@@ -198,27 +212,40 @@ def delete_where(spark: SparkSession, table_dir: str, predicate,
                     "n_deleted": pa.array([len(pos)], pa.int64()),
                 })
 
-    pdf = spark.range(0, len(items), 1, len(items))
-    rows = pdf.mapInArrow(
+    rows = spark.range(0, len(items), 1, len(items)).mapInArrow(
         find_fn, "partition_id long, delete_file string, n_deleted long"
     ).collect()
-    if not rows:
-        return {"deleted_rows": 0, "files_touched": 0,
-                "snapshot_id": snap["snapshot_id"]}
+    by_pid = {f["partition_id"]: f for f in snap["files"]}
     updated = []
-    total = 0
     for r in rows:
         e = dict(by_pid[r["partition_id"]])
         e["delete_files"] = list(e.get("delete_files") or []) + [r["delete_file"]]
         e["deleted_rows"] = int(e.get("deleted_rows") or 0) + int(r["n_deleted"])
-        total += int(r["n_deleted"])
         updated.append(e)
-    new = tbl.commit(updated, snap["schema"],
-                     properties=dict(snap.get("properties") or {}),
-                     operation="delete", materialize=False,
-                     require_visible={e["partition_id"] for e in updated})
-    return {"deleted_rows": total, "files_touched": len(updated),
-            "snapshot_id": new["snapshot_id"]}
+    return updated, sum(int(r["n_deleted"]) for r in rows)
+
+
+def _commit_deletes(tbl: SnapshotTable, snap: dict, updated: list[dict],
+                    added=(), operation: str = "delete") -> dict:
+    """Commit re-pointed entries (plus ``added`` new files) on top of
+    ``snap``; every re-pointed file must still be live at commit time."""
+    return tbl.commit([*updated, *added], snap["schema"],
+                      properties=dict(snap.get("properties") or {}),
+                      operation=operation, materialize=False,
+                      require_visible={e["partition_id"] for e in updated})
+
+
+def _key_candidates(tbl: SnapshotTable, snap: dict, df, key_cols: list[str]) -> list[dict]:
+    """Files that may hold a key of ``df``: with a single key column the
+    manifest min/max stats prune against the keys' [min, max] envelope."""
+    if len(key_cols) == 1:
+        from pyspark.sql import functions as F
+
+        k = key_cols[0]
+        lohi = df.agg(F.min(k).alias("lo"), F.max(k).alias("hi")).collect()[0]
+        if lohi["lo"] is not None:
+            return tbl.data_files([(k, ">=", lohi["lo"]), (k, "<=", lohi["hi"])])
+    return snap["files"]
 
 
 def rename_column(table_dir: str, old: str, new: str) -> dict:
@@ -303,26 +330,12 @@ def delete_by_key(
     rel = os.path.join("deletes", f"eq-{uuid.uuid4().hex[:12]}")
     keys_df.select(*key_cols).distinct().write.parquet(os.path.join(table_dir, rel))
 
-    candidates = snap["files"]
-    if len(key_cols) == 1:
-        from pyspark.sql import functions as F
-
-        k = key_cols[0]
-        lohi = keys_df.agg(F.min(k).alias("lo"), F.max(k).alias("hi")).collect()[0]
-        if lohi["lo"] is not None:
-            candidates = tbl.data_files([(k, ">=", lohi["lo"]), (k, "<=", lohi["hi"])])
-    if not candidates:
+    updated = [{**f, "delete_files": [*(f.get("delete_files") or ()), rel]}
+               for f in _key_candidates(tbl, snap, keys_df, key_cols)]
+    if not updated:
         return {"files_touched": 0, "snapshot_id": snap["snapshot_id"],
                 "sidecar": rel}
-    updated = []
-    for f in candidates:
-        e = dict(f)
-        e["delete_files"] = list(e.get("delete_files") or []) + [rel]
-        updated.append(e)
-    new = tbl.commit(updated, snap["schema"],
-                     properties=dict(snap.get("properties") or {}),
-                     operation="delete", materialize=False,
-                     require_visible={e["partition_id"] for e in updated})
+    new = _commit_deletes(tbl, snap, updated)
     return {"files_touched": len(updated), "snapshot_id": new["snapshot_id"],
             "sidecar": rel}
 
@@ -367,8 +380,6 @@ def upsert(
     """
     import shutil
 
-    from pyspark.sql import functions as F
-
     from webcodec.spark.encode_job import (
         LINEAGE_SCHEMA,
         _make_scan_encode_fn,
@@ -406,98 +417,18 @@ def upsert(
         for e in new_entries:
             e["partition_id"] += base
 
-        # -- stage 2: positional deletes for superseded rows --
-        candidates = snap["files"]
-        if len(key_cols) == 1:
-            k = key_cols[0]
-            lohi = df.agg(F.min(k).alias("lo"), F.max(k).alias("hi")).collect()[0]
-            if lohi["lo"] is not None:
-                candidates = tbl.data_files([(k, ">=", lohi["lo"]), (k, "<=", lohi["hi"])])
-        del_dir = os.path.join(table_dir, "deletes")
-        os.makedirs(del_dir, exist_ok=True)
-        items = [
-            (f["partition_id"], os.path.join(table_dir, f["path"]),
-             tuple(os.path.join(table_dir, d) for d in f.get("delete_files") or ()))
-            for f in candidates
-        ]
-        updated = []
-        total_superseded = 0
-        if items:
-            bc = spark.sparkContext.broadcast(items)
-            kcols = list(key_cols)
-            aliases = _aliases_of(snap)
-            read_key = (encryption_key if encryption_key is not None
-                        else getattr(config, "encryption_key", None))
-
-            def find_fn(batches):
-                import numpy as np
-                import pyarrow as pa
-                import pyarrow.parquet as pq
-
-                from webcodec import filefmt
-                from webcodec.spark.decode_job import (
-                    _chunk_names,
-                    load_delete_positions,
-                    local_names,
-                )
-
-                keys = pq.read_table(keys_dir, columns=kcols).to_pandas()
-                for b in batches:
-                    for i in b.column("id").to_pylist():
-                        pid, path, existing = bc.value[i]
-                        # renamed key columns localize to this file's chunk
-                        # names; a key column with no chunk (added later)
-                        # can never match -> skip the file
-                        lmap = local_names(
-                            _chunk_names(path, encryption_key=read_key),
-                            kcols, aliases)
-                        if len(lmap) != len(kcols):
-                            continue
-                        fk = filefmt.read_table(
-                            path, columns=[lmap[k] for k in kcols],
-                            verify_crc=False, encryption_key=read_key,
-                        ).to_pandas()
-                        fk.columns = kcols
-                        fk["__pos"] = np.arange(len(fk), dtype="<i8")
-                        pos = np.unique(
-                            fk.merge(keys, on=kcols, how="inner")["__pos"].to_numpy()
-                        )
-                        prior = load_delete_positions(existing, path, aliases=aliases,
-                                                      encryption_key=read_key)
-                        if prior is not None:
-                            pos = np.setdiff1d(pos, prior)
-                        if not len(pos):
-                            continue
-                        name = f"del-{pid:05d}-{uuid.uuid4().hex[:12]}.bin"
-                        with open(os.path.join(del_dir, name), "wb") as f:
-                            f.write(pos.astype("<i8").tobytes())
-                        yield pa.RecordBatch.from_pydict({
-                            "partition_id": pa.array([pid], pa.int64()),
-                            "delete_file": pa.array([os.path.join("deletes", name)]),
-                            "n_deleted": pa.array([len(pos)], pa.int64()),
-                        })
-
-            pdf = spark.range(0, len(items), 1, len(items))
-            rows = pdf.mapInArrow(
-                find_fn, "partition_id long, delete_file string, n_deleted long"
-            ).collect()
-            by_pid = {f["partition_id"]: f for f in snap["files"]}
-            for r in rows:
-                e = dict(by_pid[r["partition_id"]])
-                e["delete_files"] = list(e.get("delete_files") or []) + [r["delete_file"]]
-                e["deleted_rows"] = int(e.get("deleted_rows") or 0) + int(r["n_deleted"])
-                total_superseded += int(r["n_deleted"])
-                updated.append(e)
+        # -- stage 2: positional deletes for superseded rows: the staged
+        # keys directory already is an equality-delete sidecar --
+        read_key = (encryption_key if encryption_key is not None
+                    else getattr(config, "encryption_key", None))
+        updated, total_superseded = _write_deletes(
+            spark, table_dir, snap, _key_candidates(tbl, snap, df, key_cols),
+            functools.partial(load_delete_positions, (keys_dir,),
+                              aliases=_aliases_of(snap), encryption_key=read_key),
+            read_key)
 
         # -- stage 3: ONE commit covering both --
-        new = tbl.commit(
-            updated + new_entries,
-            snap["schema"],
-            properties=dict(snap.get("properties") or {}),
-            operation="upsert",
-            materialize=False,
-            require_visible={e["partition_id"] for e in updated},
-        )
+        new = _commit_deletes(tbl, snap, updated, new_entries, operation="upsert")
         return {
             "inserted_rows": int(sum(e["rows"] for e in new_entries)),
             "superseded_rows": total_superseded,
@@ -557,99 +488,38 @@ def rewrite_encoded(
     spec = (snap.get("properties") or {}).get("partition_spec")
     if spec and cols and not all(f["col"] in cols for f in spec):
         spec = None
-    paths = [
-        (f["partition_id"], os.path.join(src_dir, f["path"]),
-         tuple(os.path.join(src_dir, d) for d in f.get("delete_files") or ()),
-         f.get("partition") if spec else None)
-        for f in snap["files"]
-    ]
+    paths = [(*ref, f.get("partition") if spec else None)
+             for ref, f in zip(_file_refs(snap["files"], src_dir), snap["files"])]
     data_dir = dst.data_dir
     aliases = _aliases_of(snap)
     types = {f["name"]: f["type"] for f in snap["schema"]}
     mask = frozenset(mask_columns or ())
-    unknown_mask = [m for m in mask if m not in {f["name"] for f in snap["schema"]}]
+    unknown_mask = [m for m in mask if m not in types]
     if unknown_mask:
         raise ValueError(f"mask_columns not in table schema: {unknown_mask}")
-    from webcodec import predicate as _predmod
-
-    conj = _predmod.normalize(predicate)
-
     bc = spark.sparkContext.broadcast(paths)
 
     def rewrite_fn(batches):
-        import pyarrow as pa
-
-        from webcodec import filefmt
-        from webcodec.spark.decode_job import (
-            _arrow_type_of_spark,
-            _chunk_names,
-            load_delete_positions,
-            local_names,
-        )
         from webcodec.spark.encode_job import _write_one
 
-        items = bc.value
         for b in batches:
             for i in b.column("id").to_pylist():
-                pid, path, dels, part = items[i]
-                # per-file rename localization (same resolution the read
-                # path uses): current names map to this file's chunk names;
-                # columns ADDED after the file null-fill
-                present = _chunk_names(
-                    path, encryption_key=source_encryption_key)
-                pred_cols = [c for c, _, _ in conj] if conj else []
-                lmap = local_names(
-                    present, list(dict.fromkeys([*cols, *pred_cols])), aliases
-                )
-                pred_here = None
-                if conj:
-                    terms = []
-                    skip_file = False
-                    for c, op, v in conj:
-                        if c in lmap:
-                            terms.append((lmap[c], op, v))
-                        elif op != "isnull":
-                            skip_file = True  # all-null column matches nothing
-                            break
-                    if skip_file:
-                        continue
-                    pred_here = terms or None
+                pid, path, dels, part = bc.value[i]
                 # masked columns are NEVER read/decrypted/decoded — their
                 # values are destroyed anyway, so a blob-column takedown
-                # costs zero decode (nulls are synthesized from the schema
-                # type below); predicate columns still reach read_table via
-                # pred_here regardless of projection
-                cols_here = [lmap[c] for c in cols if c in lmap and c not in mask]
-                if not cols_here:
-                    # all-masked projection: read one narrow column purely as
-                    # the row-count carrier
-                    cols_here = [lmap[c] for c in cols if c in lmap][:1]
-                # merge-on-read deletes MATERIALIZE here: the rewritten file
-                # contains only live rows and carries no sidecars
-                table = filefmt.read_table(
-                    path, columns=cols_here, predicate=pred_here,
-                    drop_rows=load_delete_positions(
-                        dels, path, aliases=aliases,
-                        encryption_key=source_encryption_key),
-                    encryption_key=source_encryption_key)
+                # costs zero decode; merge-on-read deletes MATERIALIZE here:
+                # the rewritten file holds only live rows and no sidecars
+                table = read_file(path, [c for c in cols if c not in mask], types,
+                                  predicate, None, dels, aliases,
+                                  source_encryption_key)
                 if table.num_rows == 0:
                     continue
-                if cols_here != cols or mask:
-                    arrays = []
-                    for name in cols:
-                        if name in mask:
-                            # MaskMode.NULLIFY: schema keeps the column,
-                            # values are destroyed; the type comes from the
-                            # CURRENT table schema (the column was excluded
-                            # from the read set, so no decode was paid)
-                            at = _arrow_type_of_spark(types.get(name, "string"))
-                            arrays.append(pa.nulls(table.num_rows, type=at))
-                        elif name in lmap:
-                            arrays.append(table.column(lmap[name]))
-                        else:
-                            at = _arrow_type_of_spark(types.get(name, "string"))
-                            arrays.append(pa.nulls(table.num_rows, type=at))
-                    table = pa.Table.from_arrays(arrays, names=cols)
+                for j, name in enumerate(cols):
+                    if name in mask:
+                        # MaskMode.NULLIFY: schema keeps the column, values
+                        # are destroyed; the type is the CURRENT schema's
+                        table = table.add_column(j, name, pa.nulls(
+                            table.num_rows, type=_arrow_type_of_spark(types[name])))
                 yield from _write_one(
                     data_dir, pid, table, config, None, partition=part
                 ).to_batches()
@@ -681,11 +551,15 @@ def export_parquet(
     data_page_version: int = 1,
     shred_variants: bool = False,
 ) -> dict:
-    """Transcode a webcodec table into STANDARD parquet files — decoded with
-    webcodec kernels AND re-serialized with webcodec's own parquet writer
-    (thrift headers, v1 pages, spec RLE levels; webcodec.parquet_writer) —
-    so any reference reader can consume the result. One Spark task per
-    source file, bytes never cross the JVM. Scope: flat primitive columns
+    """Transcode the CURRENT snapshot of a webcodec table into STANDARD
+    parquet files: exactly the rows and columns ``read_encoded`` returns —
+    deleted rows subtracted, dropped columns left out, renamed columns under
+    their current names, added columns null-filled, widened columns
+    promoted (timestamps keep their written unit). Decoded with webcodec
+    kernels AND re-serialized with webcodec's own parquet writer (thrift
+    headers, v1 pages, spec RLE levels; webcodec.parquet_writer) — so any
+    reference reader can consume the result. One Spark task per source
+    file (one output file each), bytes never cross the JVM. Scope: flat primitive columns
     plus ARBITRARY-depth nesting — any composition of list/struct/map
     (full Dremel rep/def shredding, webcodec.dremel.shred),
     decimal128 as FLBA(16) (SURVEY §2.E1, C5). With ``carry_encodings``
@@ -715,23 +589,21 @@ def export_parquet(
     if snap is None:
         raise FileNotFoundError(f"no snapshot in {table_dir}")
     os.makedirs(out_dir, exist_ok=True)
-    paths = [
-        (f["partition_id"], os.path.join(table_dir, f["path"])) for f in snap["files"]
-    ]
-
+    paths = _file_refs(snap["files"], table_dir)
     bc = spark.sparkContext.broadcast(paths)
+    want = [f["name"] for f in snap["schema"]]
+    types = {f["name"]: f["type"] for f in snap["schema"]}
+    aliases = _aliases_of(snap)
     # Spark VariantType columns (snapshot schema type string "variant",
     # stored as struct<value,metadata>) export as VARIANT(1)-annotated
     # groups so Spark's parquet reader restores the variant type
-    variant_cols = frozenset(
-        f["name"] for f in snap["schema"] if f["type"] == "variant")
+    variant_cols = frozenset(n for n in want if types[n] == "variant")
 
     def export_fn(batches):
         import pyarrow as pa
 
         from webcodec import filefmt
         from webcodec.parquet_writer import write_parquet
-
         from webcodec.types import Encoding as _Enc
 
         carry = {
@@ -740,40 +612,35 @@ def export_parquet(
             int(_Enc.DELTA_LENGTH): "delta_length_byte_array",
             int(_Enc.DELTA_BYTE_ARRAY): "delta_byte_array",
         }
-        items = bc.value
+
+        def _ok(at: pa.DataType, enc: str) -> bool:
+            # only types the parquet spec allows for the encoding
+            # (narrow .wcd types decode as int8/16 etc. — skip)
+            wide = (pa.types.is_int32(at) or pa.types.is_int64(at)
+                    or (pa.types.is_timestamp(at) and at.unit == "us")
+                    or pa.types.is_date32(at))
+            if enc == "delta_binary_packed":
+                return wide
+            if enc in ("delta_length_byte_array", "delta_byte_array"):
+                return pa.types.is_string(at) or pa.types.is_binary(at)
+            return wide or pa.types.is_float32(at) or pa.types.is_float64(at)
+
         for b in batches:
             for i in b.column("id").to_pylist():
-                pid, path = items[i]
-                t = filefmt.read_table(path, encryption_key=encryption_key)
+                pid, path, dels = bc.value[i]
+                # the snapshot exactly as read_encoded sees it: current
+                # names, no dropped column, no deleted row
+                t = read_file(path, want, types, None, None, dels, aliases,
+                              encryption_key)
                 col_enc = None
                 if carry_encodings:
-                    import pyarrow as _pa
-
-                    footer = filefmt.read_footer_path(path, encryption_key)
-                    g0 = (footer.get("groups") or [footer])[0]
-
-                    def _ok(name: str, enc: str) -> bool:
-                        # only types the parquet spec allows for the encoding
-                        # (narrow .wcd types decode as int8/16 etc. — skip)
-                        if name not in t.column_names:
-                            return False
-                        at = t.column(name).type
-                        wide = (_pa.types.is_int32(at) or _pa.types.is_int64(at)
-                                or (_pa.types.is_timestamp(at) and at.unit == "us")
-                                or _pa.types.is_date32(at))
-                        if enc == "delta_binary_packed":
-                            return wide
-                        if enc in ("delta_length_byte_array",
-                                   "delta_byte_array"):
-                            return (_pa.types.is_string(at)
-                                    or _pa.types.is_binary(at))
-                        return wide or _pa.types.is_float32(at) or _pa.types.is_float64(at)
-
+                    # the chunk each current column was decoded from
+                    local = _local_chunks(filefmt.read_footer_path(path, encryption_key),
+                                          want, aliases)
                     col_enc = {
-                        c["name"]: carry[c["encoding"]]
-                        for c in g0["chunks"]
+                        n: carry[c["encoding"]] for n, c in local.items()
                         if c.get("encoding") in carry
-                        and _ok(c["name"], carry[c["encoding"]])
+                        and _ok(t.column(n).type, carry[c["encoding"]])
                     } or None
                 out = os.path.join(out_dir, f"part-{pid:05d}.parquet")
                 # ~64MB row groups so downstream readers parallelize (C4)
