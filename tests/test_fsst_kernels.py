@@ -182,6 +182,54 @@ def test_fsst_kernels_match_frozen(tmp_path, seed):
     assert fsst.decompress(blob) == data
 
 
+def _adversarial(rng: np.random.Generator) -> tuple[bytes, SymbolTable]:
+    """Data and a table built against the walk's one masked compare of the
+    8-byte window: 5-8-byte symbols that agree with the data at a position on
+    their first 4 or more bytes and then differ, symbols over 0x00 and 0xFF,
+    and symbols whose head ends a segment and whose NUL tail would match the
+    zero padding past it."""
+    n = int(rng.choice([4096, _SEG, _SEG + (_SEG >> 2), 2 * _SEG + 4096, 20_000]))
+    data = bytearray(_data(rng, n + int(rng.integers(0, 9))))
+    n = len(data)
+    ends = np.cumsum([len(s) for s in _segments(bytes(data))]).tolist()
+    syms = []
+    for end in ends:  # NUL-tailed symbols whose heads end each segment
+        k = int(rng.integers(2, 4))
+        syms.append(bytes(data[end - k : end]) + b"\0" * int(rng.integers(1, 9 - k)))
+        syms.append(bytes(data[end - 1 : end]) + b"\0")
+    near = []
+    for p in rng.integers(0, n - 8, 80).tolist():
+        ln = int(rng.integers(5, 9))
+        s = bytearray(data[p : p + ln])
+        s[int(rng.integers(4, ln))] ^= int(rng.integers(1, 256))  # first 4+ bytes agree
+        near.append(bytes(s))
+    pool = np.array([0, 0xFF, data[0], data[n // 2]], dtype=np.uint8)
+    edge = [rng.choice(pool, int(rng.integers(1, 9))).tobytes() for _ in range(40)]
+    order = rng.permutation(len(near) + len(edge))
+    syms += [(near + edge)[i] for i in order.tolist()]
+    table = SymbolTable(fsst._dedupe_prefixes(list(dict.fromkeys(syms))))
+    # plant whole symbols (so long matches hit too), then restore the heads
+    # that end each segment
+    heads = [bytes(data[end - 3 : end]) for end in ends]
+    for at in rng.integers(0, n - 8, n // 64).tolist():
+        sym = table.symbols[int(rng.integers(0, len(table.symbols)))]
+        data[at : at + len(sym)] = sym
+    for end, head in zip(ends, heads):
+        data[end - 3 : end] = head
+    return bytes(data), table
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_fsst_adversarial_tables_match_regex(tmp_path, seed):
+    """Tables built to defeat the masked window compare still encode exactly
+    as the regex encoder does, segment by segment, and round-trip."""
+    rng = np.random.default_rng(19_000 + seed)
+    data, table = _adversarial(rng)
+    enc = fsst.encode(data, table)
+    assert enc == b"".join(fsst.encode_regex(s, table) for s in _segments(data))
+    assert fsst.decode(enc, table) == data
+
+
 # -- hostile bytes -------------------------------------------------------------
 
 
@@ -247,3 +295,5 @@ def test_fsst_last_byte_ignores_the_padding():
     data = b"xa" * 3000 + b"a"
     assert fsst.encode(data, table) == fsst.encode_regex(data, table)
     assert fsst.decode(fsst.encode(data, table), table) == data
+    sample = b"a\x00" * 200 + b"a"  # the build's walk counts a 1-byte last token
+    assert fsst.build_table(sample).symbols == _frozen_build_table(sample)

@@ -91,8 +91,10 @@ class EncoderConfig:
         north_star's raw fallback with a deeper zstd pass (level 11) instead
         — FSST on opaque blobs bought ~15% size for ~13x the encode cost,
         while zstd-11 on the blob pages matches FSST's size at a fraction of
-        it. ~0.47x the reference writer's bytes on web text at ~1.2x its
-        encode wall."""
+        it. On the perfbench webpages workload (8,000 rows, one thread) it
+        writes ~0.32x the pyarrow zstd reference's bytes
+        (``archive_size_vs_ref``) in ~7.5x its write time
+        (``archive_encode_vs_ref``)."""
         kw.setdefault("use_fsst", True)
         kw.setdefault("binary_compression_level", 11)
         return cls(**kw)

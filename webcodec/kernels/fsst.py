@@ -119,15 +119,21 @@ def _padded(data: bytes) -> tuple[np.ndarray, np.ndarray]:
     return raw, padded
 
 
+def _window(padded: np.ndarray, dtype: str) -> np.ndarray:
+    """The little-endian word that starts at each data byte: an unaligned
+    strided view over ``padded``, whose 8 zero bytes cover the last words."""
+    return np.ndarray((len(padded) - 8,), dtype, buffer=padded, strides=(1,))
+
+
 _LEN_MASK = np.array([0] + [(1 << (8 * k)) - 1 for k in range(1, MAX_SYMBOL_LEN + 1)], dtype=np.uint64)
 
 
-def _ranked_gains(padded: np.ndarray, tok: np.ndarray, tlen: np.ndarray, limit: int) -> list[bytes]:
+def _ranked_gains(w8: np.ndarray, tok: np.ndarray, tlen: np.ndarray, limit: int) -> list[bytes]:
     """The ``limit`` best keys among tokens and adjacent token pairs of at
     most 8 bytes, by gain (occurrences x length), ties by first occurrence
     with tokens before pairs — ``Counter.most_common`` order over a counter
     filled with all tokens, then all pairs."""
-    val = padded[tok[:, None] + np.arange(8)].view("<u8").reshape(-1) & _LEN_MASK[tlen]
+    val = w8[tok] & _LEN_MASK[tlen]
     plen = tlen[:-1] + tlen[1:]
     ok = np.flatnonzero(plen <= MAX_SYMBOL_LEN)
     pval = val[ok] | (val[ok + 1] << (tlen[ok].astype(np.uint64) * np.uint64(8)))
@@ -150,9 +156,10 @@ def _ranked_gains(padded: np.ndarray, tok: np.ndarray, tlen: np.ndarray, limit: 
 
 # Samples shorter than this are tokenized by the regex, which finds the same
 # tokens as the walk: there its compile costs less than the walk's fixed
-# cost (lookup tables, ~50 numpy calls). Measured per 4-round build on web
-# text, walk vs cold regex: 64 B 3.3 vs 2.4 ms, 256 B 3.5 vs 4.0 ms.
-_BUILD_WALK_MIN = 256
+# cost (lookup tables, ~45 numpy calls). Measured per 4-round build on
+# webpages text, one thread, median of 15, walk vs cold regex: 8 B 0.79 vs
+# 0.62 ms, 16 B 0.76 vs 0.76 ms, 32 B 0.79 vs 1.00 ms, 256 B 1.09 vs 2.91 ms.
+_BUILD_WALK_MIN = 32
 
 
 def build_table(sample: bytes, iterations: int = 5) -> SymbolTable:
@@ -165,14 +172,14 @@ def build_table(sample: bytes, iterations: int = 5) -> SymbolTable:
     symbols = [bytes([int(b)]) for b in order if counts[b] > 0][:MAX_SYMBOLS]
     table = SymbolTable(symbols)
     raw, padded = _padded(sample)
+    w8 = _window(padded, "<u8")
     for _ in range(iterations - 1):
         if len(sample) < _BUILD_WALK_MIN:
             tlen = np.fromiter(map(len, _regex(table)[0].findall(sample)), dtype=np.uint8)
             tok = np.cumsum(tlen, dtype=np.intp) - tlen
         else:
             tok, tlen, _ = _walk(raw, padded, table)
-            np.maximum(tlen, 1, out=tlen)  # an escaped byte is a 1-byte token
-        table = SymbolTable(_dedupe_prefixes(_ranked_gains(padded, tok, tlen, MAX_SYMBOLS * 4)))
+        table = SymbolTable(_dedupe_prefixes(_ranked_gains(w8, tok, tlen, MAX_SYMBOLS * 4)))
     return table
 
 
@@ -189,8 +196,9 @@ def encode_regex(data: bytes, table: SymbolTable) -> bytes:
 
 
 _CHASE_STRIDE = 16  # anchor spacing for the vectorized greedy chase
-# (measured sweep on the text corpus: 16 edges out 32 — one fewer full
-# pointer-doubling gather buys more than the 2x-longer anchor walk costs)
+# (measured sweep, encode of 34 segments of webpages text, one thread,
+# median of 15: 8 / 16 / 32 ran 129 / 128 / 132 ms — one more doubling
+# round costs about what halving the anchor walk saves)
 
 _POS_CACHE = np.empty(0, dtype=np.int32)
 
@@ -205,12 +213,12 @@ def _pos(n: int) -> np.ndarray:
 
 def _encode_luts(table: "SymbolTable"):
     """Per-table lookup tables, built once and cached on the table. Indexed
-    by the 2-byte window: the unique >= 3-byte candidate's low-dword key and
-    mask (key 1 under mask 0 when there is none: never matches), length and
-    code; the fallback's length (2-byte symbol, else the first byte's 1-byte
-    symbol, else 0 = escape) and code. Indexed by byte: the 1-byte symbol's
-    length and code (the last position of a segment has no second byte).
-    Indexed by code: the high-dword key and mask."""
+    by the 2-byte window: the unique >= 3-byte candidate's u64 key and mask
+    (key 1 under mask 0 when there is none: never matches), length and code;
+    the fallback's length (2-byte symbol, else the first byte's 1-byte
+    symbol or its escape, both 1 byte long) and code. Indexed by byte: the
+    1-byte token's code (the last position of a segment has no second
+    byte)."""
     if table._enc_luts is not None:
         return table._enc_luts
     syms = table.symbols
@@ -219,29 +227,25 @@ def _encode_luts(table: "SymbolTable"):
     codes = np.arange(len(syms), dtype=np.uint8)
     w = (vals & np.uint64(0xFFFF)).astype(np.intp)
 
-    one_len = np.zeros(256, dtype=np.uint8)
     one_code = np.full(256, ESCAPE, dtype=np.uint8)
     one = lens == 1
-    one_len[w[one]] = 1
     one_code[w[one]] = codes[one]
-    fb_len = np.tile(one_len, 256)  # window w2 = first byte | second byte << 8
-    fb_code = np.tile(one_code, 256)
+    fb_len = np.ones(65536, dtype=np.uint8)
+    fb_code = np.tile(one_code, 256)  # window w2 = first byte | second byte << 8
     two = lens == 2
     fb_len[w[two]] = 2
     fb_code[w[two]] = codes[two]
 
     lg = lens >= 3
-    long_key = np.ones(65536, dtype=np.uint32)
-    long_mask = np.zeros(65536, dtype=np.uint32)
+    long_key = np.ones(65536, dtype=np.uint64)
+    long_mask = np.zeros(65536, dtype=np.uint64)
     long_len = np.zeros(65536, dtype=np.uint8)
     long_code = np.full(65536, ESCAPE, dtype=np.uint8)
-    long_key[w[lg]] = vals[lg] & np.uint64(0xFFFFFFFF)
-    long_mask[w[lg]] = _LEN_MASK[lens[lg]] & np.uint64(0xFFFFFFFF)
+    long_key[w[lg]] = vals[lg]
+    long_mask[w[lg]] = _LEN_MASK[lens[lg]]
     long_len[w[lg]] = lens[lg]
     long_code[w[lg]] = codes[lg]
-    key_hi = (vals >> np.uint64(32)).astype(np.uint32)
-    mask_hi = (_LEN_MASK[lens] >> np.uint64(32)).astype(np.uint32)
-    out = (long_key, long_mask, long_len, long_code, fb_len, fb_code, one_len, one_code, key_hi, mask_hi)
+    out = (long_key, long_mask, long_len, long_code, fb_len, fb_code, one_code)
     table._enc_luts = out
     return out
 
@@ -252,57 +256,45 @@ def _walk(raw: np.ndarray, padded: np.ndarray, table: SymbolTable):
 
     Because every table keeps at most one >=3-byte symbol per 2-byte prefix,
     longest-match at a position is resolved with direct lookups on its
-    2-byte window: the unique long candidate (verified against its key — low
-    4 bytes everywhere, high bytes on the surviving subset only), else the
-    2-byte symbol, else the 1-byte symbol, else escape. The greedy token walk
-    is vectorized with pointer doubling to stride-S anchors + lockstep chain
-    advance. Returns (token positions, token match lengths — 0 for an
-    escaped byte, token codes — ESCAPE for an escaped byte).
+    2-byte window: the unique long candidate (one masked compare of the
+    position's 8-byte window against its key), else the 2-byte symbol, else
+    the 1-byte symbol, else escape. The greedy token walk is vectorized with
+    pointer doubling to stride-S anchors + lockstep chain advance. Every
+    gather clips instead of bounds-checking: its indices are in range by
+    construction (windows < 65536, jumps <= n). Returns (token positions,
+    token lengths in bytes — 1 for an escaped byte, token codes — ESCAPE for
+    an escaped byte).
     """
     n = len(raw)
-    (long_key, long_mask, long_len, long_code, fb_len, fb_code, one_len, one_code,
-     key_hi, mask_hi) = _encode_luts(table)
+    long_key, long_mask, long_len, long_code, fb_len, fb_code, one_code = _encode_luts(table)
 
-    # contiguous windows via shift-or of aligned loads (no unaligned views)
-    w2 = raw.astype(np.uint16)
-    w2 |= padded[1 : n + 1].astype(np.uint16) << np.uint16(8)
-    w2i = w2.astype(np.intp)  # one cast, reused by all 64K-table gathers
-    w4 = w2.astype(np.uint32)
-    w4 |= padded[2 : n + 2].astype(np.uint32) << np.uint32(16)
-    w4 |= padded[3 : n + 3].astype(np.uint32) << np.uint32(24)
-
-    cl = long_len[w2i]
+    w2 = _window(padded, "<u2").astype(np.intp)  # one cast, reused by all 64K-table gathers
+    masked = long_mask.take(w2, mode="clip")
+    masked &= _window(padded, "<u8")
+    long_hit = masked == long_key.take(w2, mode="clip")
+    cl = long_len.take(w2, mode="clip")
     pos = _pos(n)
-    long_hit = (w4 & long_mask[w2i]) == long_key[w2i]
     # a match may not run past the end — only the last 8 positions can,
     # so fix them up instead of paying a full-array compare
     tail = max(n - MAX_SYMBOL_LEN, 0)
     long_hit[tail:] &= pos[tail:] + cl[tail:] <= n
-    # high-dword verify only where the low dword already matched a >4-byte symbol
-    sub = np.flatnonzero(long_hit & (cl > 4))
-    if len(sub):
-        w4h = padded[sub + 4].astype(np.uint32)
-        w4h |= padded[sub + 5].astype(np.uint32) << np.uint32(8)
-        w4h |= padded[sub + 6].astype(np.uint32) << np.uint32(16)
-        w4h |= padded[sub + 7].astype(np.uint32) << np.uint32(24)
-        ci = long_code[w2i[sub]]
-        long_hit[sub[(w4h & mask_hi[ci]) != key_hi[ci]]] = False
+    cl *= long_hit
 
-    best_len = fb_len[w2i]
-    best_len[-1] = one_len[raw[-1]]  # its window's second byte is padding
-    np.putmask(best_len, long_hit, cl)
+    best_len = fb_len.take(w2, mode="clip")
+    best_len[-1] = 1  # its window's second byte is padding
+    np.maximum(best_len, cl, out=best_len)  # a long match (>= 3) beats the fallback (<= 2)
 
-    # jump table with sentinel at n (escape advances 1; no match runs past n)
+    # jump table with sentinel at n (no match runs past n)
     j1 = np.empty(n + 1, dtype=np.int32)
     j1[n] = n
-    np.add(pos, np.maximum(best_len, 1), out=j1[:n])
+    np.add(pos, best_len, out=j1[:n])
     # pointer doubling with np.take(out=) ping-pong buffers: the naive
-    # js = js[js] allocates a fresh n-array per round (~9% of segment wall)
+    # js = js[js] allocates a fresh n-array per round
     js = j1.copy()  # j1 itself feeds the chain advance below
     tmp = np.empty_like(js)
     s = 1
     while s < _CHASE_STRIDE:
-        np.take(js, js, out=tmp)
+        np.take(js, js, out=tmp, mode="clip")
         js, tmp = tmp, js
         s *= 2
     anchors = [0]
@@ -313,20 +305,20 @@ def _walk(raw: np.ndarray, padded: np.ndarray, table: SymbolTable):
         if a >= n:
             break
         anchors.append(a)
-    A = np.array(anchors, dtype=np.int32)
-    chains = np.empty((_CHASE_STRIDE, len(A)), dtype=np.int32)
-    chains[0] = A
+    chains = np.empty((_CHASE_STRIDE, len(anchors)), dtype=np.int32)
+    chains[0] = anchors
     for t in range(1, _CHASE_STRIDE):
-        chains[t] = j1[chains[t - 1]]
+        np.take(j1, chains[t - 1], out=chains[t], mode="clip")
     tok = chains.T.reshape(-1)
     tok = tok[tok < n].astype(np.intp)
 
     # per-token codes (subset gathers only)
-    w2t = w2i[tok]
-    code = np.where(long_hit[tok], long_code[w2t], fb_code[w2t])
+    w2t = w2.take(tok, mode="clip")
+    code = np.where(long_hit.take(tok, mode="clip"), long_code.take(w2t, mode="clip"),
+                    fb_code.take(w2t, mode="clip"))
     if tok[-1] == n - 1:  # no long symbol fits there
         code[-1] = one_code[raw[-1]]
-    return tok, best_len[tok], code
+    return tok, best_len.take(tok, mode="clip"), code
 
 
 # Segment size: smaller segments keep ~15 temporaries cache/allocator-warm.
@@ -356,8 +348,8 @@ def _encode_segment(data: bytes, table: SymbolTable) -> bytes:
     if n < 4096 or not table.symbols:
         return encode_regex(data, table)
     raw, padded = _padded(data)
-    tok, tlen, code = _walk(raw, padded, table)
-    esc = tlen == 0
+    tok, _, code = _walk(raw, padded, table)
+    esc = code == ESCAPE
     out_off = np.empty(len(tok), dtype=np.int64)
     out_off[0] = 0
     np.cumsum(esc[:-1].astype(np.int64) + 1, out=out_off[1:])
